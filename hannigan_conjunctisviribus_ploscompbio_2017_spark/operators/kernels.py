@@ -19,6 +19,15 @@ bin/compareTwins.R:95-104 in /root/reference).  Two scale regimes:
 
 Edges are directed (src, dst [, weight]); kernels that need the
 undirected view symmetrize internally.
+
+Read-once rule: a kernel derives each input exactly once per call.
+Inputs are usually lazy plans (a Q5 join, a pipeline stage), and every
+extra reference to one is a full recomputation.  `symmetrize` reads
+its input in one pass, and the superstep kernels build their static
+graph once through `_static_graph` — symmetrize, weight, the kernel's
+per-group constants (eigenvector's shift as self-loops of A + sI,
+PageRank's transition weights and group sizes), one checkpoint — so
+each superstep moves only the score/label messages.
 """
 
 from __future__ import annotations
@@ -39,25 +48,38 @@ def _gcols(group_cols: list[str] | None) -> list[str]:
 
 
 def symmetrize(edges: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
-    """Undirected view: union of both directions, deduped.
+    """Undirected view: both directions of every edge, deduped.
+
+    One pass over `edges`: each row explodes into (src, dst) and
+    (dst, src).  A union of a forward and a reversed projection would
+    make Catalyst plan the whole upstream twice, so every kernel that
+    symmetrizes a lazy input (a Q5 join, a pipeline stage) would
+    compute it twice per read.
 
     Weighted edges reduce by MAX per (src, dst) — a deterministic rule
     for inputs that carry both (a,b,w1) and (b,a,w2); dropDuplicates
     would keep whichever row a shuffle happened to order first."""
     g = _gcols(group_cols)
-    has_w = "weight" in edges.columns
-    cols = [*g, "src", "dst"] + (["weight"] if has_w else [])
-    fwd = edges.select(*cols)
-    rev = edges.select(
+    w = ["weight"] if "weight" in edges.columns else []
+    both = edges.select(
         *g,
-        F.col("dst").alias("src"),
-        F.col("src").alias("dst"),
-        *([F.col("weight")] if has_w else []),
-    )
-    both = fwd.unionByName(rev)
-    if has_w:
+        F.explode(
+            F.array(
+                F.struct(F.col("src").alias("src"), F.col("dst").alias("dst")),
+                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+            )
+        ).alias("_e"),
+        *w,
+    ).select(*g, "_e.src", "_e.dst", *w)
+    if w:
         return both.groupBy(*g, "src", "dst").agg(F.max("weight").alias("weight"))
     return both.dropDuplicates([*g, "src", "dst"])
+
+
+def _by_group(df: DataFrame, per_group: DataFrame, g: list[str]) -> DataFrame:
+    """Attach a per-group table (one row per group; one row in all when
+    there are no group columns) to every row of `df`."""
+    return df.join(per_group, g) if g else df.crossJoin(per_group)
 
 
 _RELIABLE_ENV = "SPARK_GRAFT_RELIABLE_CHECKPOINT"
@@ -85,7 +107,9 @@ def _checkpoint(df: DataFrame) -> DataFrame:
     frame that is already small (frontier / score vectors, never the
     input).  Every iterative loop in this module funnels through this
     one helper, so the switch covers power iteration, BFS frontiers,
-    LPA, and the Brandes pivots alike.  Set
+    LPA, and the Brandes pivots alike, as well as the static graphs
+    built by _static_graph and the tables interpersonal_diversity
+    materializes.  Set
     spark.cleaner.referenceTracking.cleanCheckpoints=true to have
     out-of-scope checkpoint files garbage-collected.
 
@@ -228,9 +252,9 @@ class _loop_shuffle_width:
 
     def __init__(self, edges: DataFrame, rows_per_partition: int = 50_000):
         self.spark = edges.sparkSession
-        n = edges.count()
+        self.n = edges.count()
         default = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        self.width = max(1, min(default, -(-n // rows_per_partition)))
+        self.width = max(1, min(default, -(-self.n // rows_per_partition)))
 
     def __enter__(self):
         self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
@@ -240,6 +264,30 @@ class _loop_shuffle_width:
     def __exit__(self, *exc):
         self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
         return False
+
+
+def _static_graph(
+    edges: DataFrame,
+    g: list[str],
+    weight_col: str | None = None,
+    prep=None,
+) -> tuple[DataFrame, _loop_shuffle_width]:
+    """Set-up shared by the superstep kernels: the static graph, built
+    once per call (the Pregel split — only messages move per superstep).
+
+    One read of `edges`: symmetrize, weight column `w` (1.0 when
+    `weight_col` is None or absent), then `prep` — the kernel's own
+    static columns, which must also read their input once (a window,
+    not a self-join with its own aggregate) — and one checkpoint.
+    Without it a lazy input (a Q5 join, a pipeline stage) is recomputed
+    by every job that reads it.  Returns the checkpointed adjacency and
+    the loop's shuffle-width pin, whose `n` is the adjacency's row
+    count."""
+    und = symmetrize(edges, g)
+    w = F.col(weight_col) if (weight_col and weight_col in und.columns) else F.lit(1.0)
+    adj = und.select(*g, "src", "dst", w.cast("double").alias("w"))
+    adj = _checkpoint(prep(adj) if prep else adj)
+    return adj, _loop_shuffle_width(adj)
 
 
 # --------------------------------------------------------------------------
@@ -277,7 +325,7 @@ def graph_size(edges: DataFrame, group_cols: list[str] | None = None) -> DataFra
     e = und.groupBy(*g).agg(
         ((F.count(F.lit(1)) + F.sum(loop)) / 2).cast("long").alias("n_edges")
     )
-    return nodes.join(e, g) if g else nodes.crossJoin(e)
+    return _by_group(nodes, e, g)
 
 
 # --------------------------------------------------------------------------
@@ -327,60 +375,45 @@ def eigenvector_centrality(
     message passing is a join+aggregate per superstep. 100 TB shape:
     max_iter shuffles total, independent of #groups.
 
-    Iterates on A + sI (s = per-group max weighted degree): same leading
-    eigenvector as A, but convergent on bipartite graphs where plain
-    power iteration oscillates between the ±λ₁ eigenpair (the reference's
-    phage↔bacteria graphs are exactly bipartite).
+    Iterates on the one matrix A + sI (s = per-group max weighted
+    degree, the Gershgorin bound s ≥ λ₁): same leading eigenvector as
+    A, but convergent on bipartite graphs where plain power iteration
+    oscillates between the ±λ₁ eigenpair (the reference's
+    phage↔bacteria graphs are exactly bipartite).  The shift is stored
+    as one self-loop entry per node in the checkpointed matrix, so a
+    superstep is one join, one aggregate and the per-group norm.
     """
     g = _gcols(group_cols)
-    und = symmetrize(edges, g)
-    w = F.col(weight_col) if (weight_col and weight_col in und.columns) else F.lit(1.0)
-    adj = und.select(*g, "src", "dst", w.cast("double").alias("w"))
-
-    # materialize the (possibly expensive) upstream DAG ONCE — without
-    # this, a pipeline-fed adjacency recomputes its whole lineage every
-    # superstep (checkpointing `scores` alone doesn't protect `adj`)
-    adj = _checkpoint(adj)
-
-    # spectral shift: s ≥ λ₁ via max weighted degree (Gershgorin bound)
+    adj, width = _static_graph(edges, g, weight_col)
     wdeg = adj.groupBy(*g, "src").agg(F.sum("w").alias("_wd"))
-    shift = _checkpoint(wdeg.groupBy(*g).agg(F.max("_wd").alias("_shift")))
+    shift = wdeg.groupBy(*g).agg(F.max("_wd").alias("_s"))
+    loops = _by_group(wdeg, shift, g).select(
+        *g, "src", F.col("src").alias("dst"), F.col("_s").alias("w")
+    )
+    m = _checkpoint(adj.unionByName(loops))
+    _release(adj)
 
     scores = (
-        adj.select(*g, F.col("src").alias("node"))
+        m.select(*g, F.col("src").alias("node"))
         .distinct()
         .withColumn("score", F.lit(1.0))
     )
-    with _loop_shuffle_width(adj):
+    with width:
         for _ in range(max_iter):
-            msgs = adj.join(
+            raw = m.join(
                 scores.withColumnRenamed("node", "src"), [*g, "src"]
             ).groupBy(*g, F.col("dst").alias("node")).agg(
-                F.sum(F.col("w") * F.col("score")).alias("_ax")
-            )
-            msgs = (
-                (msgs.join(shift, g) if g else msgs.crossJoin(shift))
-                .join(scores, [*g, "node"])
-                .select(
-                    *g,
-                    "node",
-                    (F.col("_ax") + F.col("_shift") * F.col("score")).alias("raw"),
-                )
+                F.sum(F.col("w") * F.col("score")).alias("raw")
             )
             # L2-normalize per group (power iteration stability)
-            norm = msgs.groupBy(*g).agg(F.sqrt(F.sum(F.col("raw") ** 2)).alias("_n"))
-            new_scores = (
-                (msgs.join(norm, g) if g else msgs.crossJoin(norm))
-                .select(*g, "node", (F.col("raw") / F.col("_n")).alias("score"))
+            norm = raw.groupBy(*g).agg(F.sqrt(F.sum(F.col("raw") ** 2)).alias("_n"))
+            new_scores = _by_group(raw, norm, g).select(
+                *g, "node", (F.col("raw") / F.col("_n")).alias("score")
             )
             prev, scores = scores, _checkpoint(new_scores)
             _release(prev)
     # igraph scale: max = 1 per group
-    mx = scores.groupBy(*g).agg(F.max("score").alias("_mx")) if g else None
-    if g:
-        scores = scores.join(mx, g)
-    else:
-        scores = scores.crossJoin(scores.agg(F.max("score").alias("_mx")))
+    scores = _by_group(scores, scores.groupBy(*g).agg(F.max("score").alias("_mx")), g)
     return scores.select(
         *g, "node", F.round(F.col("score") / F.col("_mx"), 6).alias("centrality")
     )
@@ -422,40 +455,41 @@ def pagerank(
 ) -> DataFrame:
     """Weighted PageRank on the undirected view (igraph::page_rank,
     bin/compareTwins.R:98-100). Same joint-iteration shape as
-    eigenvector_centrality."""
-    g = _gcols(group_cols)
-    und = symmetrize(edges, g)
-    w = F.col(weight_col) if (weight_col and weight_col in und.columns) else F.lit(1.0)
-    adj = und.select(*g, "src", "dst", w.cast("double").alias("w"))
-    # out-weight normalization; materialize once (see eigenvector note)
-    outw = adj.groupBy(*g, "src").agg(F.sum("w").alias("_ow"))
-    adj = _checkpoint(
-        adj.join(outw, [*g, "src"]).withColumn("p", F.col("w") / F.col("_ow"))
-    )
+    eigenvector_centrality.
 
-    nodes = _checkpoint(adj.select(*g, F.col("src").alias("node")).distinct())
-    counts = nodes.groupBy(*g).agg(F.count(F.lit(1)).alias("_n"))
-    ranks = (nodes.join(counts, g) if g else nodes.crossJoin(counts)).select(
-        *g, "node", (F.lit(1.0) / F.col("_n")).alias("rank")
+    The transition weights p = w / Σw (Σ over the source's edges, a
+    window on (group, src)) are columns of the checkpointed adjacency,
+    and the group size n rides in the checkpointed node table, so a
+    superstep is one join and one aggregate plus the teleport term.
+    """
+    g = _gcols(group_cols)
+    adj, width = _static_graph(
+        edges,
+        g,
+        weight_col,
+        prep=lambda a: a.withColumn(
+            "p", F.col("w") / F.sum("w").over(W.partitionBy(*g, "src"))
+        ),
     )
-    with _loop_shuffle_width(adj):
+    nodes = adj.select(*g, F.col("src").alias("node")).distinct()
+    nodes = _checkpoint(
+        _by_group(nodes, nodes.groupBy(*g).agg(F.count(F.lit(1)).alias("_n")), g)
+    )
+    ranks = nodes.select(*g, "node", (F.lit(1.0) / F.col("_n")).alias("rank"))
+    with width:
         for _ in range(max_iter):
             contrib = adj.join(
                 ranks.withColumnRenamed("node", "src"), [*g, "src"]
             ).groupBy(*g, F.col("dst").alias("node")).agg(
                 F.sum(F.col("p") * F.col("rank")).alias("_in")
             )
-            base = nodes.join(counts, g) if g else nodes.crossJoin(counts)
-            new_ranks = (
-                base.join(contrib, [*g, "node"], "left")
-                .select(
-                    *g,
-                    "node",
-                    (
-                        (1 - damping) / F.col("_n")
-                        + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
-                    ).alias("rank"),
-                )
+            new_ranks = nodes.join(contrib, [*g, "node"], "left").select(
+                *g,
+                "node",
+                (
+                    (1 - damping) / F.col("_n")
+                    + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
+                ).alias("rank"),
             )
             prev, ranks = ranks, _checkpoint(new_ranks)
             _release(prev)
@@ -484,9 +518,7 @@ def katz_centrality(
     aggregate) broadcast into the plan — no driver-side collect.
     """
     g = _gcols(group_cols)
-    und = symmetrize(edges, g)
-    w = F.col(weight_col) if (weight_col and weight_col in und.columns) else F.lit(1.0)
-    adj = _checkpoint(und.select(*g, "src", "dst", w.cast("double").alias("w")))
+    adj, width = _static_graph(edges, g, weight_col)
     nodes = adj.select(*g, F.col("src").alias("node")).distinct()
     if isinstance(alpha, DataFrame):
         acol = alpha.columns[0]
@@ -497,7 +529,7 @@ def katz_centrality(
         nodes = nodes.withColumn("_alpha", F.lit(float(alpha)))
     nodes = _checkpoint(nodes)
     x = nodes.withColumn("katz", F.lit(float(beta)))
-    with _loop_shuffle_width(adj):
+    with width:
         for _ in range(max_iter):
             msgs = adj.join(
                 x.select(*g, F.col("node").alias("src"), "katz"), [*g, "src"]
@@ -592,18 +624,22 @@ def connected_components(
     scale the fixed per-superstep cost dominates; set local_cutoff=0 to
     force the superstep path."""
     g = _gcols(group_cols)
-    und = symmetrize(edges, g).withColumns(
-        {"src": F.col("src").cast("string"), "dst": F.col("dst").cast("string")}
+    # the size probe (width.n) and either path read this one checkpoint
+    und, width = _static_graph(
+        edges,
+        g,
+        prep=lambda a: a.select(
+            *g, F.col("src").cast("string"), F.col("dst").cast("string")
+        ),
     )
-    if local_cutoff and und.count() <= local_cutoff:
+    if local_cutoff and width.n <= local_cutoff:
         return _cc_local(und, g)
     labels = (
         und.select(*g, F.col("src").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
     )
-    und = _checkpoint(und)  # see eigenvector note: freeze upstream DAG
-    with _loop_shuffle_width(und):
+    with width:
         for _ in range(max_iter):
             nbr_min = (
                 und.join(labels.withColumnRenamed("node", "src"), [*g, "src"])
@@ -739,7 +775,7 @@ def bfs_distances(
         "dist", F.lit(0)
     )
     frontier = visited
-    und = _checkpoint(und)  # see eigenvector note: freeze upstream DAG
+    und = _checkpoint(und)  # freeze the upstream DAG (see _static_graph)
     with _loop_shuffle_width(und):
         for depth in range(1, max_depth + 1):
             neighbors = (
@@ -844,14 +880,13 @@ def label_propagation(
     updates with min-label seeds.
     """
     g = _gcols(group_cols)
-    und = symmetrize(edges, g)
+    und, width = _static_graph(edges, g, prep=lambda a: a.select(*g, "src", "dst"))
     labels = (
         und.select(*g, F.col("src").alias("node"))
         .distinct()
         .withColumn("community", F.col("node"))
     )
-    und = _checkpoint(und)  # see eigenvector note: freeze upstream DAG
-    with _loop_shuffle_width(und):
+    with width:
         for _ in range(max_iter):
             votes = (
                 und.join(labels.withColumnRenamed("node", "src"), [*g, "src"])
@@ -894,7 +929,7 @@ def modularity(
         F.count(F.lit(1)).alias("_d_c")
     )
     per_c = deg.join(intra, [*g, "community"], "left").fillna(0, subset=["_e_c2"])
-    per_c = per_c.join(m2, g) if g else per_c.crossJoin(m2)
+    per_c = _by_group(per_c, m2, g)
     q = per_c.withColumn(
         "_q_c",
         F.col("_e_c2") / F.col("_m2") - (F.col("_d_c") / F.col("_m2")) ** 2,

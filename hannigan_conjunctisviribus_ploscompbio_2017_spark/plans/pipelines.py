@@ -3,9 +3,11 @@ points as single Catalyst DAGs).
 
 Entry point A (bin/interpersonaldiversity.R in /root/reference): the
 reference splits this across Neo4j (Cypher over REST) and single-threaded
-R; here it is ONE lazy plan from the edge tables to the final statistics
-table — Catalyst optimizes across every stage boundary, and only the
-final small stats frame ever reaches the driver.
+R; here it is one Spark job graph from the edge tables to the final
+statistics table, and only the final small stats frame ever reaches the
+driver.  Tables that more than one later stage reads (the normalized
+edge table, the rarefied abundances, the kernel's static graph) are
+materialized once, so no stage recomputes the Q5 join.
 
 Stage trace (reference line cites):
  1. Q5 sample-network join (bin/interpersonaldiversity.R:18-36)
@@ -26,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.functions.scalar import edge_weight, length_normalize
-from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.kernels import eigenvector_centrality
+from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.kernels import _checkpoint, eigenvector_centrality
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.relational import anti_filter
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.stats import bray_curtis, rarefy
 
@@ -49,7 +51,8 @@ def interpersonal_diversity(
       removal_list: optional (phage,) anti-filter list.
       sample_class: optional (sample, cls) grouping for the final stats.
 
-    Returns dict of lazy DataFrames:
+    Returns a dict of DataFrames.  `rarefied` is materialized (a
+    checkpoint); the others are lazy:
       rarefied   — per (sample, phage) rarefied abundances
       centrality — per (sample, node) eigenvector centrality
       distances  — per (sample_a, sample_b) Bray-Curtis + class label
@@ -81,6 +84,9 @@ def interpersonal_diversity(
     # 3. anti-filter (P8)
     if removal_list is not None:
         e = anti_filter(e, removal_list, "phage")
+    # e feeds both the rarefaction and the weighted join: materialize it
+    # once, or each branch recomputes the whole upstream (the Q5 join)
+    e = _checkpoint(e)
 
     # 4-5. rarefy per-sample phage abundances to the global min depth (A7+M1)
     # deterministic canonical abundance per (sample, phage): the edge
@@ -109,8 +115,9 @@ def interpersonal_diversity(
     # oracle pins a specific draw REALIZATION, and the facade would
     # switch realizations when the data crosses its volume threshold.
     # The Arrow route is the at-scale default anyway.
-    rarefied = rarefy(
-        ab, "sample", "phage", "phage_abundance", depth=depth_df, seed=seed
+    # materialized once: it feeds the weighted join and is returned
+    rarefied = _checkpoint(
+        rarefy(ab, "sample", "phage", "phage_abundance", depth=depth_df, seed=seed)
     )
 
     # 6. weighted per-sample interaction graph (F7): join rarefied phage

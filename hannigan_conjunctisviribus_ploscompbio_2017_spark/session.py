@@ -11,10 +11,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Shuffle partition count: ~cores locally; on a real cluster this is
-# overridden by AQE coalescing (initial partition num stays high so AQE can
-# split skewed stages).
-_LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Local defaults come from the host: the CPUs this process may run on
+# (also the shuffle partition count; on a real cluster AQE coalescing
+# overrides it) and a share of physical memory as the driver heap, which
+# on local[N] holds every executor.  SPARK_GRAFT_CPUS and
+# SPARK_GRAFT_DRIVER_MEM override them.
+_LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+_DRIVER_MEM_SHARE = 0.5  # of MemTotal; the rest is Python workers and page cache
+
+
+def _driver_memory() -> str:
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{int(kb * _DRIVER_MEM_SHARE) // 1024}m"
 
 
 def get_spark(app_name: str = "hannigan-cvb-spark", cpus: str | None = None) -> SparkSession:
@@ -77,9 +88,7 @@ def get_spark(app_name: str = "hannigan-cvb-spark", cpus: str | None = None) -> 
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
         builder = builder.master(master)
         if master.startswith("local"):
-            builder = builder.config(
-                "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-            )
+            builder = builder.config("spark.driver.memory", _driver_memory())
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -12,7 +12,7 @@ SF001 = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", cpus="8")
+    s = get_spark("pytest")
     yield s
 
 

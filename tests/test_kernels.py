@@ -186,6 +186,46 @@ def test_connectivity_summary(spark):
     assert K.is_connected(edges_df(spark, [("a", "b"), ("b", "a")]), "strong") is True
 
 
+def _symmetrize_union(edges, g):
+    """The two-projection union form of symmetrize (forward ∪ reversed,
+    then the MAX-weight or dedup rule): the rows symmetrize must keep."""
+    w = ["weight"] if "weight" in edges.columns else []
+    fwd = edges.select(*g, "src", "dst", *w)
+    rev = edges.select(*g, F.col("dst").alias("src"), F.col("src").alias("dst"), *w)
+    both = fwd.unionByName(rev)
+    if w:
+        return both.groupBy(*g, "src", "dst").agg(F.max("weight").alias("weight"))
+    return both.dropDuplicates([*g, "src", "dst"])
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["self_loops", "max_rule", "unweighted_duplicates", "int_ids", "grouped"],
+)
+def test_symmetrize_matches_union_form(spark, case):
+    g = []
+    if case == "self_loops":
+        e = edges_df(spark, [("a", "a"), ("a", "b"), ("b", "b")], weights=[4.0, 1.0, 2.0])
+    elif case == "max_rule":
+        # (a,b,w1) and (b,a,w2) both present: MAX of the two, both ways
+        e = edges_df(spark, [("a", "b"), ("b", "a"), ("a", "b"), ("c", "a")],
+                     weights=[1.0, 3.0, 2.0, 5.0])
+    elif case == "unweighted_duplicates":
+        e = edges_df(spark, [("a", "b"), ("a", "b"), ("b", "a"), ("c", "c"), ("c", "c")])
+    elif case == "int_ids":
+        e = spark.createDataFrame([(2, 10), (10, 2), (3, 3), (3, 5)], "src long, dst long")
+    else:
+        g = ["g"]
+        e = edges_df(spark, [("a", "b"), ("b", "a")], weights=[1.0, 2.0], group="g1").unionByName(
+            edges_df(spark, [("a", "b"), ("b", "c")], weights=[7.0, 1.0], group="g2"))
+    got, want = K.symmetrize(e, g), _symmetrize_union(e, g)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    if case == "max_rule":
+        ws = {(r.src, r.dst): r.weight for r in got.collect()}
+        assert ws == {("a", "b"): 3.0, ("b", "a"): 3.0, ("a", "c"): 5.0, ("c", "a"): 5.0}
+
+
 def test_eigenvector_star(spark):
     # star: hub has max centrality 1; leaves all equal at 1/sqrt(k) for S_k
     cen = as_map(
@@ -625,29 +665,36 @@ def test_reliable_checkpoint_mode_identical(spark, tmp_path, monkeypatch):
     the iterative kernels must run their loops through df.checkpoint()
     (files actually land in the DFS dir — the executor-loss-surviving
     path) and produce results identical to the localCheckpoint default.
-    Covers a power-iteration kernel (pagerank) and a BFS kernel
-    (diameter/radius) end-to-end."""
+    Covers the power-iteration kernels (pagerank, eigenvector with its
+    A + sI set-up checkpoint), a BFS kernel (diameter/radius) and the
+    interpersonal-diversity pipeline's materialized tables end-to-end."""
+    from hannigan_conjunctisviribus_ploscompbio_2017_spark.plans import pipelines as P
+    from tests.test_pipelines import _q5_edges
+
     e = edges_df(spark, P5)
-    base_pr = sorted(
-        (r.node, round(r.pagerank, 10)) for r in K.pagerank(e).collect()
-    )
-    base_dr = K.diameter_radius(K.bfs_distances(e)).collect()[0]
+    we = edges_df(spark, BIPARTITE_33, weights=[1, 2, 3, 4, 5, 6, 7, 8, 9])
+
+    def run():
+        pr = sorted((r.node, round(r.pagerank, 10)) for r in K.pagerank(e).collect())
+        ev = sorted((r.node, r.centrality) for r in K.eigenvector_centrality(we).collect())
+        dr = K.diameter_radius(K.bfs_distances(e)).collect()[0]
+        out = P.interpersonal_diversity(_q5_edges(spark), eigen_iter=4)
+        div = {k: sorted(map(tuple, out[k].collect())) for k in ("rarefied", "centrality", "stats")}
+        return pr, ev, (dr.diameter, dr.radius), div
+
+    base = run()
 
     cdir = str(tmp_path / "reliable_ckpt")
     monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", cdir)
     try:
-        rel_pr = sorted(
-            (r.node, round(r.pagerank, 10)) for r in K.pagerank(e).collect()
-        )
-        rel_dr = K.diameter_radius(K.bfs_distances(e)).collect()[0]
+        rel = run()
     finally:
         # session-scoped fixture: later tests must go back to the local
         # default (env is restored by monkeypatch; the dir is harmless)
         monkeypatch.undo()
 
-    assert rel_pr == base_pr
-    assert (rel_dr.diameter, rel_dr.radius) == (base_dr.diameter, base_dr.radius)
+    assert rel == base
     import os as _os
 
     assert _os.path.isdir(cdir) and any(_os.scandir(cdir)), (
@@ -662,9 +709,24 @@ def test_superstep_checkpoints_released(spark):
     max_iter-N loop retains N frames — at probe scale (K=64 stratified
     betweenness: ~5 GB per forward superstep) that accumulation OOMed
     a 48g single-JVM heap.  Pin the bound: after a 10-iteration
-    pagerank and a BFS sweep, the number of persistent RDDs grows by a
-    small constant (live inputs + final state), not per iteration."""
+    pagerank, eigenvector runs and a BFS sweep, the number of persistent
+    RDDs grows by a small constant (live inputs + final state), not per
+    iteration."""
     jsc = spark.sparkContext._jsc
+
+    def growth(run):
+        before = jsc.getPersistentRDDs().size()
+        run()
+        return jsc.getPersistentRDDs().size() - before
+
+    # eigenvector: the superseded weighted adjacency is released once
+    # A + sI is materialized, and no frame is kept per superstep
+    ev = [
+        growth(lambda k=k: K.eigenvector_centrality(edges_df(spark, P5), max_iter=k).count())
+        for k in (2, 10)
+    ]
+    assert max(ev) <= 3, f"eigenvector retained {ev} persistent frames"
+
     before = jsc.getPersistentRDDs().size()
 
     pr = K.pagerank(edges_df(spark, P5), max_iter=10)

@@ -580,3 +580,20 @@ def test_minhash_ingest_store_scan_never_shuffles(spark, tmp_path):
             break
     assert any("Join" in l for l in to_join), to_join
     assert not any("Exchange" in l for l in to_join), to_join
+
+
+def test_symmetrize_scans_input_once(spark):
+    # both directions come from one pass: a forward/reversed union would
+    # plan the whole upstream (here a parquet scan) twice
+    import re
+
+    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.kernels import symmetrize
+
+    edges = load_table(spark, SF0001, "lineitem").select(
+        F.col("l_partkey").alias("src"),
+        F.col("l_suppkey").alias("dst"),
+        F.col("l_quantity").alias("weight"),
+    )
+    for df in (symmetrize(edges), symmetrize(edges.drop("weight"))):
+        scans = re.findall(r"^\(\d+\) Scan parquet", plan_of(df), re.M)
+        assert len(scans) == 1, scans

@@ -24,6 +24,9 @@ from hannigan_conjunctisviribus_ploscompbio_2017_spark.session import get_spark 
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     only = set(sys.argv[2:])
+    unknown = sorted(only - set(QUERIES))
+    if unknown:
+        sys.exit(f"unknown query names: {', '.join(unknown)}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", os.environ.get("SPARK_GRAFT_PLANS_DIR", "r13"))
     os.makedirs(out_dir, exist_ok=True)

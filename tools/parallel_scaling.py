@@ -139,7 +139,6 @@ def main() -> None:
         return {"total_min": min(r["total"] for r in sides), "queries": qs}
 
     lo, hi = best(8), best(32)
-    names = runs[0].get("queries", {})
     ratios = {
         q: round(lo["queries"][q] / max(hi["queries"][q], 1e-9), 2)
         for q in lo["queries"]

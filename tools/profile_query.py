@@ -24,6 +24,10 @@ from pyspark.sql import SparkSession  # noqa: E402
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.queries_testdata import (  # noqa: E402
     QUERIES,
 )
+from hannigan_conjunctisviribus_ploscompbio_2017_spark.session import (  # noqa: E402
+    _LOCAL_CPUS,
+    _driver_memory,
+)
 
 
 def get_profiling_spark(cpus: str) -> SparkSession:
@@ -42,7 +46,7 @@ def get_profiling_spark(cpus: str) -> SparkSession:
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "4045")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", _driver_memory())
         .getOrCreate()
     )
 
@@ -56,7 +60,7 @@ def main() -> None:
     name = sys.argv[1]
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _LOCAL_CPUS
     spark = get_profiling_spark(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
