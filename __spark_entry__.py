@@ -4,10 +4,12 @@
 (the reference's bin/GetSkinGraphs.R:55-98 pattern) on sf0.001.
 
 `queries()` / `oracle_sql()` enumerate every implemented operator from
-SURVEY.md §2 as (PySpark builder, DuckDB oracle SQL) pairs over the driver
+SURVEY.md §2 as (PySpark builder, DuckDB oracle SQL) pairs over the
 testdata tables.  Column names/aliases match exactly between both sides;
-float aggregates are rounded identically on both sides so the driver's
-order-insensitive value hash is stable.
+float aggregates are rounded identically on both sides so the
+order-insensitive value comparison is stable.  tests/test_entry_sweep.py
+compares every entry with its oracle: entries whose oracle is a frozen
+fixture table at sf0.01 (the scale it was frozen at), the rest at sf0.001.
 """
 
 from __future__ import annotations
@@ -24,126 +26,6 @@ from hannigan_conjunctisviribus_ploscompbio_2017_spark.queries_testdata import (
 
 SF0001 = "/root/testdata/sf0.001"
 
-# The driver gate executes the first ~50 registered entries, so
-# registration order decides what gets driver-gate credit.
-# r13 rotation: mandatory set = the 44-entry newest-green==r10 cohort
-# (rotation_audit.py's named list), backfilled to the 50-cap with the
-# six r11-cohort entries this optimization round touched. After this
-# round the histogram is 44 r11 / 50 r12 / 50 r13 → r14's mandatory
-# set is the 44 r11 cohort.  Historical r12 rationale kept below for
-# the audit trail.  r12 order
-# (oldest-measurement-first — the rotation contract: every entry's
-# newest green row stays within the last three measured rounds; the
-# arithmetic is mechanized in tools/rotation_audit.py and enforced by
-# tests/test_rotation_contract.py):
-# (1) the entry NEW this round: dd_ingest_versioned_store — the
-#     driver-visible evidence the r11 verdict asked for (ask #6) that
-#     the versioned (object-store-safe) store layout is
-#     query-invisible: the full gate → append → MANIFEST-FLIP compact
-#     → gate lifecycle through a versioned root, same feed and same
-#     oracle as the plain-layout dd_ingest_store_append it RETIRES
-#     (ask #5, the m13/m4/dd_minhash_sig/ev_semantic_ingest_2batch
-#     retire-one-per-add precedent: identical statistic, identical
-#     oracle SQL, equivalence pinned row-for-row in
-#     tests/test_entry_sweep.py::test_store_layout_family_equivalence,
-#     retired builder kept unregistered for it and for
-#     tools/gen_fixture_oracles.py's getattr fallback);
-# (2) ALL 43 entries last driver-measured in r09 — the r11 verdict's
-#     ask #1 mandatory set (audited: exactly the newest-green==r09
-#     cohort rotation_audit.py names);
-# (3) six oldest-side r10 backfills to the 50-cap, per the r11
-#     forward note (so r13's mandatory set is 44, not the full
-#     50-entry r10 cohort): dd_minhash_store_append + dd_ingest_dedup
-#     from the store/gate family this round's claim-payload work
-#     touches, and the four 2batch streaming entries
-#     (ev_ingest_dedup_2batch, ev_first_seen_2batch,
-#     ev_chunk_first_seen_2batch, ev_stream_pack_2batch) so the slow
-#     streaming re-measures stay spread across rounds.
-# All entries pass the identical local gate (tools/check_oracle.py).
-# Rotation arithmetic: 143 entries / 3-round window = ~47.7 re-measures
-# per round minimum; after this round the histogram is 44 r10 / 49 r11
-# / 50 r12, so r13's mandatory set is 44 (slack 6 — spend it on the
-# oldest r11 entries).
-# SUSTAINABILITY CEILING: at 150 entries the contract consumes the
-# whole cap — growth past ~146 must retire a redundant entry per
-# addition.  r12: +dd_ingest_versioned_store −dd_ingest_store_append,
-# net 143 (retire-one-per-add applied; headroom 3 holds).
-# This round's claim/maintenance changes are NOT gate-protocol changes
-# for measured entries: the r12 claim PAYLOAD (timestamp/pid/host
-# JSON inside the transient claim file) changes bookkeeping that is
-# created before and deleted after each write with zero persistent
-# trace; sweep_stale_claims / read_store / the s3a CAS gate are new
-# surfaces exercised by pytest, not changes to what measured entries
-# write — happy-path plans, parquet writes, and outputs are
-# byte-identical (the r10 marker-check / r11 claims adjudication
-# precedent).  The store-append/gate entries most adjacent to the
-# claim code are in the measured window anyway (the new entry plus
-# the two family backfills in (3)).
-_PRIORITY = [
-    # -- r13 rotation (optimization round — no new entries).
-    # (1) ALL 44 entries last driver-measured in r10 — the mandatory
-    #     set rotation_audit.py names at r13 start (newest green == 3
-    #     rounds old). Several are exactly this round's optimization
-    #     targets (gq5 long keys, the LSH score-first family, the
-    #     spread/stats fix consumers), so the driver re-verifies them.
-    "a10_frequency_table",
-    "dd_contamination",
-    "dd_cut_spans",
-    "dd_dup_clusters",
-    "dd_duplicate_spans",
-    "dd_embedding_near_dup",
-    "dd_exact_dedup",
-    "dd_jaccard_pairs",
-    "dd_kmer_minhash",
-    "dd_minhash_lsh",
-    "dd_simhash",
-    "ev_hourly_agg",
-    "ev_sessionize",
-    "g10_node_entropy",
-    "g12_simplify",
-    "g1_degree_per_node",
-    "g5_degree_distribution",
-    "gb_gene_network",
-    "gk_alpha_centrality",
-    "gk_betweenness",
-    "gk_betweenness_distributed",
-    "gk_betweenness_stratified",
-    "gk_connected_components",
-    "gk_connectivity",
-    "gk_eccentricity_closeness",
-    "gk_greedy_modularity",
-    "gq5_sample_network",
-    "gq6_label_scan",
-    "gq7_disease_scope",
-    "graph_build_e2e",
-    "mm_blob_stats",
-    "ss_cosine_topk",
-    "ss_ivf_pq_topk",
-    "ss_ivf_topk",
-    "ss_ivf_trained_topk",
-    "ss_pq_topk",
-    "ss_srp_lsh_topk",
-    "tx_corpus_summary",
-    "tx_dsir_sample",
-    "tx_dsir_weights",
-    "tx_fingerprint",
-    "tx_quality_langid",
-    "tx_token_stats",
-    "w3_global_sort_limit",
-    # (2) six oldest-side r11 backfills to the 50-cap (slack 6),
-    #     spent on the r11-cohort entries whose code paths THIS round
-    #     optimized, so the changes get driver-gate re-verification:
-    #     gq4 (bigint-key rewrite), m13 curve (rarefy_hash candidate
-    #     projection), dd_chunk_dedup + tx twins (norm_tokens
-    #     consolidation), dd_semantic_dedup (spread stats-first fix).
-    "gq4_study_network",
-    "m13_rarefaction_curve_portable",
-    "dd_chunk_dedup",
-    "dd_semantic_dedup",
-    "tx_tfidf_top_terms",
-    "tx_unigram_logprob",
-]
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
@@ -151,17 +33,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2: the
-    never-yet-driver-measured entries and this round's additions first,
-    then every remaining oracle-backed entry, then the rest."""
-    oracle_names = set(ORACLES)
-    ordered = {n: QUERIES[n] for n in _PRIORITY if n in QUERIES}
-    ordered.update({n: f for n, f in QUERIES.items() if n in oracle_names})
-    ordered.update(QUERIES)
-    return ordered
+    """One entry per implemented operator from SURVEY.md §2, in
+    registration order."""
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per queries() key (omitted for the
-    non-SQL-expressible iterative/stateful/ML ops → rows-only check)."""
+    """DuckDB-equivalent SQL per queries() key (every key has one)."""
     return dict(ORACLES)

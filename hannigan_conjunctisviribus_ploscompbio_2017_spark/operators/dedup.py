@@ -126,9 +126,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 # below this plan-stat size an item table is broadcast-scale: one encode
 # task beats paying an exchange + a stage of latency
 _SPREAD_MIN_BYTES = 256 * 1024
-# plan-stat sizes at or above this are the planner's "unknown" default
-# (spark.sql.defaultSizeInBytes ≈ Long.MaxValue), not a real measurement
-_SPREAD_STATS_UNKNOWN = 1 << 50
 
 
 def _spread_if_undersplit(df: DataFrame) -> DataFrame:
@@ -153,26 +150,24 @@ def _spread_if_undersplit(df: DataFrame) -> DataFrame:
     the plan-stat size is at least _SPREAD_MIN_BYTES (an item table
     small enough to broadcast encodes fine on one task; this also keeps
     the sf0.001 single-exchange plan pins meaningful). Frames whose
-    stats are UNKNOWN (the planner's defaultSizeInBytes max) skip: the
-    win was only ever measured on file-scan inputs, which report real
-    sizes — repartitioning a stats-opaque in-memory relation on spec
-    would add an exchange nothing justifies (r13, ADVICE). The cheap
-    stats check also runs FIRST so the expensive plan-to-RDD partition
-    count (a full physical-planning round trip on every call) is only
-    paid by frames that could actually fire (r13, guide §7.3
-    driver-latency note). SPARK_GRAFT_ANN_SPREAD=off disables it
-    outright."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_ANN_SPREAD", "auto") == "off":
-        return df
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
+    stats are UNKNOWN skip: the planner reports those at (or, after
+    join multiplication, above) the session's
+    spark.sql.defaultSizeInBytes, read at call time. The win was only
+    ever measured on file-scan inputs, which report real sizes —
+    repartitioning a stats-opaque in-memory relation on spec would add
+    an exchange nothing justifies (r13, ADVICE). The cheap stats check
+    also runs FIRST so the expensive plan-to-RDD partition count (a
+    full physical-planning round trip on every call) is only paid by
+    frames that could actually fire (r13, guide §7.3 driver-latency
+    note)."""
+    session = df.sparkSession
+    cores = session.sparkContext.defaultParallelism
     try:
         stat_bytes = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-        if not (_SPREAD_MIN_BYTES <= stat_bytes < _SPREAD_STATS_UNKNOWN):
+        unknown = session._jsparkSession.sessionState().conf().defaultSizeInBytes()
+        if not (_SPREAD_MIN_BYTES <= stat_bytes < unknown):
             return df
         parts = df.rdd.getNumPartitions()
     except Exception:

@@ -91,10 +91,10 @@ def feature_merge(
     are score tables — one row per key tuple, non-null keys (both
     callers feed grouped aggregates; "≤1 edge per pair").
 
-    Non-null keys are ENFORCED on the union path (raise_error inside
-    the key projection — r13): NULL keys are where the union+pivot and
-    full-outer forms diverge, so they fail loudly instead of silently
-    merging (test_feature_merge_null_key_raises).
+    Non-null keys are ENFORCED on both the union and the join-cascade
+    path (a raise_error filter on every input — r13): NULL keys are
+    where the union+pivot and full-outer forms diverge, so they fail
+    loudly instead of silently merging (test_feature_merge_null_key_raises).
 
     Executed as tag + union + ONE grouped pivot-aggregate rather than
     the equivalent full-outer join cascade (r12 optimization round,
@@ -117,34 +117,31 @@ def feature_merge(
     if len(names) == 1:
         out = tables[names[0]].select(*keys, F.col(value_col).alias(names[0]))
         return out.fillna(fill, subset=names) if fill is not None else out
-    vtypes = {dict(df.dtypes).get(value_col) for df in tables.values()}
-    if len(vtypes) == 1:
-        # non-null-key contract, enforced loudly (r13, ADVICE): a
-        # USING-keys full-outer join never matches NULL keys (each
-        # side's NULL-key rows stay separate), while groupBy would
-        # silently merge them into one row — so a NULL key here is a
-        # caller bug and must fail, not change semantics. Enforced as a
-        # FILTER predicate (per-row null test inside codegen, no extra
-        # action) rather than by rewriting the key expressions: a
-        # CASE-WHEN-wrapped key is a new expression, which breaks
-        # output-partitioning alias propagation and re-introduced the
-        # final exchange the union form exists to avoid (caught in the
-        # r13 plan diff: Exchange 4 -> 5).
-        guard = None
-        for k in keys:
-            ok = F.when(
-                F.col(k).isNotNull(), F.lit(True)
-            ).otherwise(
-                F.raise_error(
-                    F.lit(
-                        f"feature_merge: NULL join key '{k}' — the union+pivot "
-                        "form requires non-null keys (a full-outer cascade "
-                        "leaves NULL keys unmatched; groupBy would merge them)"
-                    )
+    # non-null-key contract, enforced loudly on both paths (r13, ADVICE):
+    # a USING-keys full-outer join never matches NULL keys (each side's
+    # NULL-key rows stay separate), while groupBy would silently merge
+    # them into one row — so a NULL key is a caller bug and must fail
+    # whichever path the value dtypes pick. Enforced as a FILTER
+    # predicate (per-row null test inside codegen, no extra action)
+    # rather than by rewriting the key expressions: a CASE-WHEN-wrapped
+    # key is a new expression, which breaks output-partitioning alias
+    # propagation and re-introduced the final exchange the union form
+    # exists to avoid (caught in the r13 plan diff: Exchange 4 -> 5).
+    guard = None
+    for k in keys:
+        ok = F.when(F.col(k).isNotNull(), F.lit(True)).otherwise(
+            F.raise_error(
+                F.lit(
+                    f"feature_merge: NULL join key '{k}' — merged inputs "
+                    "require non-null keys (a full-outer cascade leaves NULL "
+                    "keys unmatched; groupBy would merge them)"
                 )
             )
-            guard = ok if guard is None else guard & ok
+        )
+        guard = ok if guard is None else guard & ok
 
+    vtypes = {dict(df.dtypes).get(value_col) for df in tables.values()}
+    if len(vtypes) == 1:
         tagged = None
         for name, df in tables.items():
             cur = df.where(guard).select(
@@ -162,7 +159,7 @@ def feature_merge(
     else:
         out = None
         for name, df in tables.items():
-            cur = df.select(*keys, F.col(value_col).alias(name))
+            cur = df.where(guard).select(*keys, F.col(value_col).alias(name))
             out = cur if out is None else out.join(cur, keys, "full_outer")
     if fill is not None:
         out = out.fillna(fill, subset=names)

@@ -2,13 +2,14 @@
 against the driver testdata tables, each with a DuckDB oracle SQL twin.
 
 Registry pattern: `@query(name, oracle=...)` adds a (spark, sf_dir) →
-DataFrame builder to QUERIES and its oracle to ORACLES.  Builders with no
-oracle (seeded resampling, ML, streaming-stateful, and iterative kernels
-whose per-step state isn't SQL-replayable) get the driver's weaker
-rows-only check; fixed-iteration power-iteration kernels (PageRank,
-eigenvector centrality) unroll into chained CTEs and get the full check.
+DataFrame builder to QUERIES and its oracle to ORACLES.  Every builder
+has an oracle, and tests/test_entry_sweep.py compares each one with it.
+Fixed-iteration power-iteration kernels (PageRank, eigenvector
+centrality) unroll into chained CTEs; solvers that are not
+SQL-expressible compare against frozen fixture tables
+(oracle_fixtures.py, frozen at sf0.01).
 
-Parity rules (driver hashes values order-insensitively, columns sorted by
+Parity rules (values compare order-insensitively, columns sorted by
 name):
 - alias every computed column identically on both sides;
 - round float aggregates identically (4-6 dp) on both sides;
@@ -1684,10 +1685,9 @@ def dd_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ingest_dedup(incoming, fingerprint_store(store_docs))
 
 
-# Shared by dd_ingest_versioned_store (registered) and the retired
-# dd_ingest_store_append it supersedes: the two builders run the same
-# gate → append → gate statistic over the same feed, so the layout
-# (plain vs versioned) being query-invisible IS the assertion.
+# The gate → append → gate statistic in pure SQL: the store layout
+# never appears in it, so the versioned layout being query-invisible
+# IS the assertion.
 _STORE_APPEND_ORACLE = f"""
     WITH store0 AS (
       SELECT DISTINCT {_INGEST_FP} AS fingerprint
@@ -1728,84 +1728,13 @@ _STORE_APPEND_ORACLE = f"""
     """
 
 
-def dd_ingest_store_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The admission-gate store MAINTENANCE loop end-to-end (r08,
-    gate_maintenance.py — the incremental replacement for the
-    reference's drop-and-rebuild loads, Makefile:461-473): run 1 gates
-    a delta against the persisted fingerprint store (docs with doc_id%10
-    in {6,7} plus re-idded store clones), append_admitted_fingerprints
-    persists exactly its 'new' fingerprints back into the store path,
-    and run 2 (doc_id%10 >= 8, salted with re-idded clones of run-1
-    docs and of itself) gates against the APPENDED store read back from
-    parquet.  Returned: run 2's decisions — the run-1 clones flag
-    dup_store, which only happens through the append.  The oracle
-    replays both runs; run 1's admitted set is the delta fingerprints
-    minus store0, so store1 collapses to a set union.
-
-    REGISTRY ENTRY RETIRED r12 (registry-ceiling management per the
-    r11 verdict ask #5, the m13/m4/dd_minhash_sig/ev_semantic_ingest
-    precedent): dd_ingest_versioned_store runs the IDENTICAL gate →
-    append → gate statistic over the identical feed against the
-    identical oracle (`_STORE_APPEND_ORACLE`), but through a
-    VERSIONED store root with a manifest-flip rewrite between the
-    runs — the strictly wider entry (it additionally proves the r11
-    layout is query-invisible, the r11 verdict ask #6), so it carries
-    the oracle-bearing driver row.  The plain-layout family
-    equivalence is pinned row-for-row in
-    tests/test_entry_sweep.py::test_store_layout_family_equivalence,
-    which replays THIS builder against the surviving entry; the
-    builder stays unregistered for that test and
-    tools/gen_fixture_oracles.py's getattr fallback."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.dedup import (
-        fingerprint_store,
-        ingest_dedup,
-    )
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.gate_maintenance import (
-        append_admitted_fingerprints,
-    )
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    d = F.col("doc_id")
-    t = tempfile.mkdtemp(prefix="sg_storeappend_")
-    atexit.register(shutil.rmtree, t, ignore_errors=True)
-    store_path = f"{t}/fp_store"
-    fingerprint_store(docs.filter(d % 10 < 6)).write.parquet(store_path)
-
-    run1_fresh = docs.filter((d % 10 >= 6) & (d % 10 < 8))
-    run1 = run1_fresh.unionByName(
-        docs.filter((d % 10 < 6) & (d % 37 == 0)).select(
-            (d + 1000000).alias("doc_id"), "text"
-        )
-    )
-    # checkpoint before the append: the r09 require_materialized default
-    # enforces the gate-maintenance caveat (an un-materialized gate
-    # output would re-run the gate — store pass included — inside the
-    # append job); values are unchanged, the gate just runs once
-    dec1 = ingest_dedup(run1, spark.read.parquet(store_path)).localCheckpoint(eager=False)
-    append_admitted_fingerprints(dec1, store_path)
-
-    run2_fresh = docs.filter(d % 10 >= 8)
-    run2 = run2_fresh.unionByName(
-        run1_fresh.filter(d % 23 == 0).select((d + 2000000).alias("doc_id"), "text")
-    ).unionByName(
-        run2_fresh.filter(d % 31 == 0).select((d + 3000000).alias("doc_id"), "text")
-    )
-    return ingest_dedup(run2, spark.read.parquet(store_path))
-
-
 @query("dd_ingest_versioned_store", oracle=_STORE_APPEND_ORACLE)
 def dd_ingest_versioned_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The admission-gate store lifecycle through a VERSIONED
-    (object-store-safe) store root — the driver-visible evidence the
-    r11 verdict asked for (ask #6) that the r11 manifest/pointer-swap
-    layout is QUERY-INVISIBLE: same feed, same oracle, same decisions
-    as the plain-layout dd_ingest_store_append it supersedes (retired
-    r12, equivalence pinned row-for-row in
-    tests/test_entry_sweep.py::test_store_layout_family_equivalence).
+    """The admission-gate store maintenance loop end-to-end through a
+    VERSIONED (object-store-safe) store root — the evidence that the
+    manifest/pointer-swap layout is QUERY-INVISIBLE: the oracle
+    replays the plain gate → append → gate statistic, so any layout
+    effect on the decisions would mismatch it.
 
     Flow (gate_maintenance.py): `convert_store_to_versioned` on the
     empty path creates the root versioned from day one (no rename,
@@ -2068,13 +1997,12 @@ def dd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# dd_minhash_sig RETIRED in r07 (registry-ceiling management, r06
-# verdict ask #2): it verified the 16-perm portable signature math in
-# isolation, but dd_minhash_lsh's oracle recomputes the SAME affine
+# No standalone signature entry: the 16-perm portable signature math
+# needs none, because dd_minhash_lsh's oracle recomputes the SAME affine
 # signatures (identical seeded coefficients, Mersenne modulus, md5-60
-# base hash) as the first CTEs of its banding+estimation replay — the
-# signature check is strictly contained in the surviving entry, so the
-# standalone row bought no extra coverage.  See _lsh_oracle_tail below.
+# base hash) as the first CTEs of its banding+estimation replay, so the
+# signature check is strictly contained in that entry.  See
+# _lsh_oracle_tail below.
 
 
 def _lsh_oracle_tail(
@@ -2455,7 +2383,7 @@ def _minhash_two_run_oracle(
 def dd_minhash_store_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The NEAR-DUP admission-gate store MAINTENANCE loop end-to-end
     (r10 — the minhash member of the append trio, completing driver
-    coverage next to dd_ingest_store_append and ss_semantic_store_append
+    coverage next to dd_ingest_versioned_store and ss_semantic_store_append
     per the r09 verdict ask #7): run 1 gates a delta against the
     persisted banded-signature store, append_admitted_minhash recomputes
     the admitted docs' signatures with the store's exact hash geometry
@@ -3593,10 +3521,10 @@ def _semantic_ingest_oracle(
     cosine, ties smallest store id) and the tau admission flag,
     NULL-cosine pairs excluded exactly as the engine's isNotNull
     filter does.  with_ts adds the synthetic
-    event-time column the STREAMING twin (ev_semantic_ingest_2batch)
+    event-time column the STREAMING twin (ev_semantic_ingest_foreach)
     emits — the streamed answer collapses to the batch one because a
     doc's candidate pairs are identical in whichever micro-batch
-    delivers it first, and state suppresses every later delivery."""
+    delivers it first, and every later delivery is suppressed."""
     cos = """SUM(CAST(t.v[j] AS DOUBLE) * CAST(c.cv[j] AS DOUBLE))
                / (SQRT(SUM(CAST(t.v[j] AS DOUBLE) * CAST(t.v[j] AS DOUBLE)))
                   * SQRT(SUM(CAST(c.cv[j] AS DOUBLE) * CAST(c.cv[j] AS DOUBLE))))"""
@@ -3705,76 +3633,13 @@ def ss_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semantic_ingest_dedup(delta, store, cents, dim=64, tau=0.38)
 
 
-def ev_semantic_ingest_2batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming semantic admission gate across TWO real micro-batches —
-    the streaming twin of ss_semantic_ingest: the delta docs (vec_id <
-    20) arrive even-ids-first, with the five even ids < 10 RE-DELIVERED
-    in batch 1; first-seen state must suppress the re-deliveries (
-    dropped state would re-emit them and change the row count), while
-    each doc's first batch reproduces the batch operator's best-match
-    answer exactly (the candidate pairs against the static store are
-    identical whichever batch delivers the doc).  Store never shuffles
-    the stream (stream-static broadcast LEFT join on cell).
-
-    REGISTRY ENTRY RETIRED r10 (registry-ceiling management per the r09
-    verdict ask #7, the m13/m4/dd_minhash_sig precedent): this entry
-    and ev_semantic_ingest_foreach verify against the IDENTICAL oracle
-    SQL (`_semantic_ingest_oracle(with_ts=True)`) — same statistic,
-    same feed, two execution families (applyInPandasWithState
-    stream-static broadcast here, foreachBatch + decisions log there) —
-    so the corpus-scale foreachBatch entry carries the oracle-bearing
-    driver row and the family equivalence is pinned in pytest
-    (tests/test_entry_sweep.py::test_semantic_gate_family_equivalence,
-    which replays THIS builder against the surviving entry row-for-
-    row).  The stateful operator itself stays covered by
-    test_sources_streaming_mm (state/nulls/string-ids), and the builder
-    stays unregistered for the equivalence test and
-    tools/gen_fixture_oracles.py's getattr fallback."""
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.similarity import (
-        sampled_centroids,
-        semantic_store,
-    )
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.streaming.events import (
-        streaming_semantic_ingest,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    v = F.col("vec_id")
-    store_docs = emb.filter(v >= 20)
-    cents = sampled_centroids(store_docs, n_cells=16)
-    store = semantic_store(store_docs, dim=64, n_cells=16, centroids=cents)
-    delta = emb.filter(v < 20).select(
-        "vec_id",
-        F.timestamp_seconds(F.lit(1700000000) + v).alias("ts"),
-        "embedding",
-    )
-    b0 = delta.filter(v % 2 == 0)
-    b1 = delta.filter(v % 2 == 1).unionByName(delta.filter((v % 2 == 0) & (v < 10)))
-    out = streaming_semantic_ingest(
-        _bounded_stream_batches(spark, [b0, b1], "semingest2"),
-        store,
-        cents,
-        dim=64,
-        tau=0.38,
-        watermark="87600 hours",
-    )
-    res = _run_stream(spark, out, "semantic_ingest_2batch_gate")
-    return res.select(
-        "id",
-        "status",
-        "match_id",
-        "cosine",
-        F.date_format("first_ts", "yyyy-MM-dd HH:mm:ss").alias("first_ts"),
-    )
-
-
 @query(
     "ev_semantic_ingest_foreach",
     oracle=_semantic_ingest_oracle(with_ts=True),
 )
 def ev_semantic_ingest_foreach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CORPUS-SCALE streaming semantic admission gate (r07) — the
-    foreachBatch twin of ev_semantic_ingest_2batch for stores too big
+    foreachBatch form of streaming_semantic_ingest for stores too big
     to broadcast: each of the TWO real micro-batches runs the BATCH
     semantic_ingest_dedup with the parquet store (partitionBy(cell))
     as the join's PROBE side, so dynamic partition pruning bounds the
@@ -3967,7 +3832,7 @@ def _semantic_two_run_oracle(
 @query("ss_semantic_store_append", oracle=_semantic_two_run_oracle())
 def ss_semantic_store_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SEMANTIC admission-gate store MAINTENANCE loop end-to-end
-    (r09 — the embedding twin of dd_ingest_store_append, promoted to a
+    (r09 — the embedding twin of dd_ingest_versioned_store, promoted to a
     driver entry per the r08 verdict ask #4 because it carries the
     DPP-preservation claim): run 1 gates ids [20, 40) against the
     persisted cell-partitioned store of ids >= 40,
@@ -5392,13 +5257,11 @@ def m13_rarefaction_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M13 — rarefaction/accumulation curve (bin/OpfRarefaction.R:12-18):
     per-sample richness at increasing depths, seeded deterministic draw.
 
-    REGISTRY ENTRY RETIRED r09 (registry-ceiling management per the r08
-    verdict ask #4, the m4_permutation_test precedent): this computes
-    the same statistic over the same derivation as
-    m13_rarefaction_curve_portable — the two differ ONLY in the draw
-    family realizing the exact multivariate-hypergeometric subsample
-    (seeded numpy via rarefy here, md5 hash-rank there) — so the
-    portable entry carries the oracle-bearing driver row and the family
+    Not registered: this computes the same statistic over the same
+    derivation as m13_rarefaction_curve_portable — the two differ ONLY
+    in the draw family realizing the exact multivariate-hypergeometric
+    subsample (seeded numpy via rarefy here, md5 hash-rank there) — so
+    the portable entry carries the registry row and the family
     equivalence is pinned in pytest (tests/test_stats.py::
     test_rarefaction_curve_family_equivalence).  The builder stays
     unregistered for tools/gen_fixture_oracles.py and the independent
@@ -5486,13 +5349,11 @@ def m4_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M4 — permutation test: does avg order value differ between two
     mktsegments? (ANOSIM/permutest family, bin/CompareSkin.R:336-423).
 
-    REGISTRY ENTRY RETIRED r08 (registry-ceiling management per the r07
-    verdict, the dd_minhash_sig precedent): this computes the same
-    statistic over the same derivation as m4_permutation_portable —
-    the two differ ONLY in the hash family generating the null
-    permutations (xxhash64 here, md5-60 there) — so the portable entry
-    carries the oracle-bearing driver row and the family equivalence is
-    pinned in pytest (tests/test_stats.py::
+    Not registered: this computes the same statistic over the same
+    derivation as m4_permutation_portable — the two differ ONLY in the
+    hash family generating the null permutations (xxhash64 here, md5-60
+    there) — so the portable entry carries the registry row and the
+    family equivalence is pinned in pytest (tests/test_stats.py::
     test_permutation_family_equivalence).  The builder stays
     unregistered for tools/gen_fixture_oracles.py and the independent
     xxhash-null replay (tests/test_fixture_independent.py), which keep

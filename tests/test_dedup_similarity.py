@@ -1714,10 +1714,7 @@ def test_pq_exprs_match_per_subspace_form(spark):
 def test_spread_if_undersplit_is_scale_adaptive(spark):
     """r12 optimization pin for the encode-scan spread: fires only on
     (undersplit AND fact-sized) frames; a well-split frame and a
-    broadcast-sized frame pass through untouched; the env kill-switch
-    works."""
-    import os
-
+    broadcast-sized frame pass through untouched."""
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.similarity import (
         _spread_if_undersplit,
     )
@@ -1732,12 +1729,15 @@ def test_spread_if_undersplit_is_scale_adaptive(spark):
     # broadcast-sized → untouched even when undersplit
     small = spark.range(1_000).coalesce(1)
     assert _spread_if_undersplit(small) is small
-    # kill switch
-    os.environ["SPARK_GRAFT_ANN_SPREAD"] = "off"
-    try:
-        assert _spread_if_undersplit(big_narrow) is big_narrow
-    finally:
-        del os.environ["SPARK_GRAFT_ANN_SPREAD"]
+    # huge real stats (2^48 rows x 8 bytes = 2^51 bytes) still spread:
+    # only the session's defaultSizeInBytes means "unknown". Checked on
+    # the logical plan — reading the partition count of the repartitioned
+    # frame would run its shuffle.
+    huge = spark.range(1 << 48).coalesce(1)
+    stats = huge._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(stats) == 1 << 51
+    spread = _spread_if_undersplit(huge)._jdf.queryExecution().logical()
+    assert spread.nodeName() == "Repartition" and spread.numPartitions() == cores
 
 
 def test_shingles_duplicate_id_contract(spark):

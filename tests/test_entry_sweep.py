@@ -1,43 +1,111 @@
-"""Execute every driver-facing queries() entry against the real testdata.
+"""Value-check every queries() entry against its DuckDB oracle.
 
-The driver's correctness gate runs each query at sf0.01 against the real
-parquet files; locally most operators are tested on synthetic fixtures
-whose schemas can drift from the testdata's (e.g. parquet TIMESTAMP_NTZ vs
-an in-memory TIMESTAMP fixture). This sweep catches any analysis-time or
-runtime failure against the actual tables before the driver does.
+Each entry's Spark frame and its oracle SQL run over the same testdata
+parquet and must agree on row count, sorted column names and
+order-insensitive values. Floats must match exactly: a FLOAT-CLOSE
+difference (equal to 1e-9 but not bit-exact) fails too, because it means
+the two sides round differently.
 
-Runs at sf0.001 (smoke scale) and skips only the deliberately expensive
-iterative entries, which have their own fixture tests.
+Scale: the entries whose oracle is a frozen fixture table
+(tools/gen_fixture_oracles.FIXTURES) run at sf0.01, the scale their
+values were frozen at; every other entry runs at sf0.001.
+
+Check a subset with `python -m pytest tests/test_entry_sweep.py -k <name>`.
 """
 
+import duckdb
+import numpy as np
+import pandas as pd
 import pytest
 
-from tests.conftest import SF0001
+from tests.conftest import SF001, SF0001
+from tools.gen_fixture_oracles import FIXTURES
 
 from __spark_entry__ import entry, oracle_sql, queries
-
-# Iterative / ML entries that take minutes even at smoke scale; each has a
-# dedicated fixture test (test_kernels.py / test_ml.py / test_stats.py /
-# test_pipelines.py).
-SLOW = {
-    "ml_rf_interactions",
-    "ml_nested_cv",
-    "ml_roc_points",
-    "pipeline_interpersonal_diversity",
-    "pipeline_compare_skin",
-    "pipeline_altered_diet",
-    "pipeline_compare_twins",
-}
+from hannigan_conjunctisviribus_ploscompbio_2017_spark.schemas import TESTDATA_TABLES
 
 ALL = sorted(queries())
+FROZEN = {name for name, _ in FIXTURES} & set(ALL)
 
 
-@pytest.mark.parametrize("name", [n for n in ALL if n not in SLOW])
-def test_query_runs_on_testdata(spark, name):
-    df = queries()[name](spark, SF0001)
-    # count() executes the full plan; every query must run and have a schema
-    assert df.columns, f"{name}: empty schema"
-    df.count()
+def duck_con(sf_dir: str):
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def normalize(df: pd.DataFrame) -> pd.DataFrame:
+    df = df[sorted(df.columns)].copy()
+    for c in df.columns:
+        if pd.api.types.is_datetime64_any_dtype(df[c]):
+            df[c] = df[c].astype("datetime64[us]").astype(str)
+        elif pd.api.types.is_float_dtype(df[c]):
+            df[c] = df[c].astype(np.float64)
+        elif pd.api.types.is_integer_dtype(df[c]):
+            df[c] = df[c].astype("Int64")
+    return df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
+
+
+def compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
+    """Problems found comparing a Spark result with its oracle; empty
+    when they agree."""
+    if len(spark_pdf) != len(duck_pdf):
+        return [f"rowcount spark={len(spark_pdf)} duck={len(duck_pdf)}"]
+    sc, dc = sorted(spark_pdf.columns), sorted(duck_pdf.columns)
+    if sc != dc:
+        return [f"columns spark={sc} duck={dc}"]
+    problems = []
+    s, d = normalize(spark_pdf), normalize(duck_pdf)
+    for c in s.columns:
+        sv, dv = s[c], d[c]
+        if pd.api.types.is_float_dtype(sv) and pd.api.types.is_float_dtype(dv):
+            both_nan = sv.isna() & dv.isna()
+            exact = ((sv == dv) | both_nan).all()
+            if not exact:
+                close = bool(
+                    np.allclose(
+                        sv.fillna(0).to_numpy(),
+                        dv.fillna(0).to_numpy(),
+                        rtol=1e-9,
+                        atol=1e-12,
+                    )
+                    and (sv.isna() == dv.isna()).all()
+                )
+                diffs = (sv - dv).abs().max()
+                tag = "FLOAT-CLOSE (not bit-exact)" if close else "VALUES DIFFER"
+                problems.append(f"col {c}: {tag} maxdiff={diffs}")
+        else:
+            sv2 = sv.astype(str).where(~sv.isna(), "<NA>")
+            dv2 = dv.astype(str).where(~dv.isna(), "<NA>")
+            if not (sv2 == dv2).all():
+                bad = sv2 != dv2
+                i = int(bad.idxmax())
+                problems.append(
+                    f"col {c}: VALUES DIFFER e.g. row {i}: spark={sv2[i]!r} "
+                    f"duck={dv2[i]!r} ({int(bad.sum())} rows)"
+                )
+    return problems
+
+
+@pytest.fixture(scope="module")
+def duck():
+    cons = {sf: duck_con(sf) for sf in (SF0001, SF001)}
+    yield cons
+    for con in cons.values():
+        con.close()
+
+
+@pytest.mark.parametrize("name", ALL)
+def test_query_runs_on_testdata(spark, duck, name):
+    """The oracle gate: the entry's rows equal its oracle's."""
+    sf_dir = SF001 if name in FROZEN else SF0001
+    got = queries()[name](spark, sf_dir).toPandas()
+    want = duck[sf_dir].execute(oracle_sql()[name]).fetchdf()
+    problems = compare(got, want)
+    assert not problems, f"{name} at {sf_dir}: " + "; ".join(problems)
 
 
 def test_entry_runs(spark):
@@ -47,8 +115,11 @@ def test_entry_runs(spark):
 
 
 def test_oracle_keys_subset_of_queries():
+    """Oracle keys and query keys are the same set: no oracle without a
+    query, and no query that the sweep could not value-check."""
     qs, orc = set(queries()), set(oracle_sql())
     assert orc <= qs, f"oracles without queries: {sorted(orc - qs)}"
+    assert qs <= orc, f"queries without oracles: {sorted(qs - orc)}"
 
 
 def test_bench_labels_frozen():
@@ -94,74 +165,11 @@ def test_bench_labels_frozen():
     assert set(got.values()) <= set(queries())
 
 
-def test_semantic_gate_family_equivalence(spark):
-    """r10 retirement adjudication (ev_semantic_ingest_2batch → the
-    surviving ev_semantic_ingest_foreach, the m13/m4 precedent): the
-    two streaming semantic gates verified against the IDENTICAL oracle
-    SQL — the stateful applyInPandasWithState twin (retired builder,
-    kept unregistered) and the corpus-scale foreachBatch twin (keeps
-    the driver row) — must produce row-for-row identical decisions on
-    the same two-batch feed.  This pins the family equivalence the
-    retirement relies on; if the operators ever diverge, the retired
-    family loses its coverage-by-proxy and this fails."""
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.queries_testdata import (
-        QUERIES,
-        ev_semantic_ingest_2batch,
-    )
-
-    assert "ev_semantic_ingest_2batch" not in QUERIES  # really retired
-    a = ev_semantic_ingest_2batch(spark, SF0001)
-    b = QUERIES["ev_semantic_ingest_foreach"](spark, SF0001)
-    cols = sorted(a.columns)
-    assert cols == sorted(b.columns)
-    stateful = sorted(map(tuple, a.select(*cols).collect()))
-    foreach = sorted(map(tuple, b.select(*cols).collect()))
-    assert stateful == foreach and len(stateful) == 20
-
-
-def test_store_layout_family_equivalence(spark):
-    """r12 retirement adjudication (dd_ingest_store_append → the
-    surviving dd_ingest_versioned_store, the ev_semantic_ingest_2batch
-    precedent): the two store-append lifecycles verify against the
-    IDENTICAL oracle SQL (`_STORE_APPEND_ORACLE`) — the plain-layout
-    twin (retired builder, kept unregistered) and the versioned-root
-    twin with a manifest-flip compact between the runs (keeps the
-    driver row) — and must produce row-for-row identical run-2
-    decisions on the same feed: the store layout is query-invisible by
-    design, and THIS is where that design claim is pinned.  If the
-    versioned rewrite ever drops/duplicates rows or the layouts
-    diverge, the retired family loses its coverage-by-proxy and this
-    fails."""
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.queries_testdata import (
-        QUERIES,
-        dd_ingest_store_append,
-    )
-
-    assert "dd_ingest_store_append" not in QUERIES  # really retired
-    a = dd_ingest_store_append(spark, SF0001)
-    b = QUERIES["dd_ingest_versioned_store"](spark, SF0001)
-    cols = sorted(a.columns)
-    assert cols == sorted(b.columns)
-    plain = sorted(map(tuple, a.select(*cols).collect()))
-    versioned = sorted(map(tuple, b.select(*cols).collect()))
-    assert plain == versioned and len(plain) > 0
-
-
-@pytest.mark.parametrize("name", sorted(oracle_sql()))
-def test_oracle_sql_executes_in_duckdb(name):
-    """Every oracle must at least run in DuckDB against the real tables —
-    catches SQL syntax drift, CTE-inlining blowups, and file-handle
-    exhaustion in seconds, without Spark and without the driver."""
-    import duckdb
-
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.schemas import TESTDATA_TABLES
-
-    con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF0001}/{t}.parquet')"
-        )
-    cur = con.execute(oracle_sql()[name])
+@pytest.mark.parametrize("name", ALL)
+def test_oracle_sql_executes_in_duckdb(duck, name):
+    """Every oracle runs in DuckDB without Spark: a fast first signal
+    for SQL syntax drift, CTE-inlining blowups and file-handle
+    exhaustion, ahead of the full comparison above."""
+    cur = duck[SF0001].execute(oracle_sql()[name])
     assert cur.description, f"{name}: no result schema"
     cur.fetchall()
-    con.close()

@@ -313,7 +313,7 @@ def test_feature_merge_null_key_raises(spark):
     """r13 contract pin (ADVICE): NULL join keys are the one input where
     the union+pivot form and the full-outer cascade diverge (the cascade
     leaves NULL keys unmatched per table; groupBy would merge them), so
-    the union path must fail loudly instead of silently merging."""
+    both paths must fail loudly instead of silently merging."""
     from pyspark.sql import functions as F
     from pyspark.errors import PySparkException
 
@@ -335,3 +335,10 @@ def test_feature_merge_null_key_raises(spark):
         {"a": t2, "b": t2}, ["src", "dst"], fill=0.0
     ).collect()
     assert [tuple(r) for r in ok] == [("p1", "b1", 2.0, 2.0)]
+    # mixed value dtypes take the full-outer cascade: same loud error
+    t3 = spark.createDataFrame([("p1", "b1", 2)], "src string, dst string, score int")
+    mixed = feature_merge({"a": t1, "c": t3}, ["src", "dst"], fill=0.0)
+    with pytest.raises(PySparkException, match="feature_merge: NULL join key"):
+        mixed.collect()
+    ok = feature_merge({"b": t2, "c": t3}, ["src", "dst"], fill=0.0).collect()
+    assert [tuple(r) for r in ok] == [("p1", "b1", 2.0, 2)]

@@ -5,9 +5,10 @@ These queries are exact deterministic computations — CNM agglomeration
 with ordered tie-breaks, numpy dense solves, pandas Brandes, seeded
 hypergeometric draws, hash-keyed permutations — but their algorithms
 are not SQL-expressible, so their DuckDB oracles are literal expected
-tables for the driver's sf0.01 gate (the technique ss_srp_lsh_topk uses
-for its literal hyperplanes).  The generator runs every query TWICE and
-refuses to freeze anything that is not run-to-run identical.  Re-run
+tables (the technique ss_srp_lsh_topk uses for its literal
+hyperplanes), compared at sf0.01 by tests/test_entry_sweep.py.  The
+generator runs every query TWICE and refuses to freeze anything that
+is not run-to-run identical.  Re-run
 whenever the kernel semantics (NOT the testdata — that is
 driver-frozen) intentionally change, and eyeball the diff.
 
@@ -15,10 +16,11 @@ The double-run check catches within-session nondeterminism only; the
 real hazard is PARTITION-LAYOUT dependence (sampleBy, RF bagging, CV
 folds, dropDuplicates all draw per-partition), which a same-session
 re-run cannot see.  After regenerating, always cross-check the frozen
-entries under perturbed parallelism:
+entries under perturbed parallelism (the sweep runs every registered
+FIXTURES entry at sf0.01):
 
     for c in 5 8 12; do SPARK_GRAFT_CPUS=$c \
-      python tools/check_oracle.py /root/testdata/sf0.01 <names...>; done
+      python -m pytest tests/test_entry_sweep.py -q -k "<name> or <name>"; done
 
 (the round-3 sweep caught exactly this: sampleBy-based RF splits and a
 dropDuplicates abundance canon both drifted with core count and were
