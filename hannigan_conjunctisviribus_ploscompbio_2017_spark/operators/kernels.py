@@ -2,15 +2,25 @@
 
 The reference computes these with igraph on tiny per-sample subgraphs
 (bin/interpersonaldiversity.R:98-114, bin/CompareNetworkGroups.R:108-126,
-bin/compareTwins.R:95-104 in /root/reference).  Two scale regimes:
+bin/compareTwins.R:95-104 in the reference code).  Three scale regimes:
 
-1. **Per-group kernels** (hundreds/thousands of per-sample subgraphs):
-   NEVER one job per subgraph — every kernel here takes a `group_cols`
-   argument and computes ALL subgraphs in one shuffle by keying every
-   intermediate on the group columns.  This is the §7 risk-register
-   design: per-sample fan-out as grouped aggregation.
+1. **Per-group, in-task** (many small per-sample subgraphs): every
+   kernel takes a `group_cols` argument and NEVER runs one job per
+   subgraph.  When the whole static graph has at most `_IN_TASK_ROWS`
+   adjacency rows, eigenvector centrality, PageRank and components
+   solve each group's whole iteration inside one applyInPandas task
+   (`_in_task`): a fixed handful of Spark jobs, however many
+   iterations.  A superstep costs several jobs whatever the graph's
+   size, so at this scale the job overhead is the whole cost.
 
-2. **Global iterative kernels** (one big graph): power iteration /
+2. **Per-group, superstep** (grouped graphs above the cutoff): the
+   same kernels compute ALL subgraphs jointly, keying every
+   intermediate on the group columns, one shuffle per superstep
+   whatever the number of groups — the §7 risk-register design:
+   per-sample fan-out as grouped aggregation.  Both per-group regimes
+   give the same rounded output.
+
+3. **Global iterative kernels** (one big graph): power iteration /
    frontier expansion expressed as a DataFrame loop with per-superstep
    lineage truncation — the Pregel pattern without GraphX,
    shuffle-per-superstep, executor-parallel.  Truncation is
@@ -23,7 +33,7 @@ undirected view symmetrize internally.
 Read-once rule: a kernel derives each input exactly once per call.
 Inputs are usually lazy plans (a Q5 join, a pipeline stage), and every
 extra reference to one is a full recomputation.  `symmetrize` reads
-its input in one pass, and the superstep kernels build their static
+its input in one pass, and the iterative kernels build their static
 graph once through `_static_graph` — symmetrize, weight, the kernel's
 per-group constants (eigenvector's shift as self-loops of A + sI,
 PageRank's transition weights and group sizes), one checkpoint — so
@@ -290,6 +300,56 @@ def _static_graph(
     return adj, _loop_shuffle_width(adj)
 
 
+# Static graphs (symmetrized adjacency rows over all groups, the
+# `_static_graph` size probe) at or below this size take the in-task
+# regime.  A superstep costs several Spark jobs whatever the graph's
+# size, so on small grouped graphs the job overhead is the whole cost.
+_IN_TASK_ROWS = 500_000
+
+
+def _in_task(adj: DataFrame, g: list[str], width: _loop_shuffle_width, out: str, solve):
+    """Small-graph regime shared by the grouped iterative kernels: each
+    group's whole solve runs inside one applyInPandas task, a fixed
+    handful of jobs instead of a loop of supersteps.
+
+    `solve` gets one group's adjacency rows as a pandas frame and
+    returns a frame with `node` and the kernel's value column; `out`
+    declares that column ("<name> <type>").  Group and node columns
+    keep their native types (copied from `adj`), so the output schema
+    matches the superstep path.  The output is checkpointed under the
+    kernel's shuffle-width pin: left lazy, every consumer would re-run
+    the Python solve.  `adj` is released once the output is
+    materialized.  Callers round JVM-side, so HALF_UP rounding matches
+    the superstep path."""
+    import pandas as pd
+
+    g_eff = g or ["_g"]
+    rows = adj if g else adj.withColumn("_g", F.lit(1))
+    types = {f.name: f.dataType.simpleString() for f in rows.schema.fields}
+    schema = ", ".join(f"{c} {types[c]}" for c in g_eff) + f", node {types['src']}, {out}"
+
+    def _per_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        res = solve(pdf)
+        for c in g_eff:
+            res[c] = pdf[c].iloc[0]
+        return res
+
+    with width:
+        res = _checkpoint(rows.groupBy(*g_eff).applyInPandas(_per_group, schema=schema))
+    _release(adj)
+    return res
+
+
+def _node_codes(pdf):
+    """One group's adjacency as integer codes: (src codes, dst codes,
+    node ids), every node id coded once."""
+    import pandas as pd
+
+    codes, nodes = pd.factorize(pd.concat([pdf["src"], pdf["dst"]], ignore_index=True))
+    m = len(pdf)
+    return codes[:m], codes[m:], nodes
+
+
 # --------------------------------------------------------------------------
 # G1 — degree / graph size
 # --------------------------------------------------------------------------
@@ -370,21 +430,45 @@ def eigenvector_centrality(
     bin/interpersonaldiversity.R:98-114), normalized to max=1 per group
     (igraph's `scale=TRUE` default).
 
-    Joint power iteration: ONE DataFrame loop computes every group's
-    leading eigenvector simultaneously — scores keyed by (group, node),
-    message passing is a join+aggregate per superstep. 100 TB shape:
-    max_iter shuffles total, independent of #groups.
-
     Iterates on the one matrix A + sI (s = per-group max weighted
     degree, the Gershgorin bound s ≥ λ₁): same leading eigenvector as
     A, but convergent on bipartite graphs where plain power iteration
     oscillates between the ±λ₁ eigenpair (the reference's
-    phage↔bacteria graphs are exactly bipartite).  The shift is stored
-    as one self-loop entry per node in the checkpointed matrix, so a
-    superstep is one join, one aggregate and the per-group norm.
+    phage↔bacteria graphs are exactly bipartite).  Scores are
+    L2-normalized per iteration and scaled to max 1 at the end.
+
+    Static graphs of at most _IN_TASK_ROWS adjacency rows run every
+    group's whole iteration inside one task (_in_task); the job count
+    then does not grow with max_iter.  Larger graphs run a joint power
+    iteration: ONE DataFrame loop computes every group's leading
+    eigenvector simultaneously — scores keyed by (group, node), message
+    passing a join+aggregate per superstep, max_iter shuffles total,
+    independent of #groups.  There the shift is stored as one
+    self-loop entry per node in the checkpointed matrix, so a superstep
+    is one join, one aggregate and the per-group norm.  Both paths give
+    the same rounded output.
     """
+    import numpy as np
+    import pandas as pd
+
     g = _gcols(group_cols)
     adj, width = _static_graph(edges, g, weight_col)
+    if width.n <= _IN_TASK_ROWS:
+
+        def _solve(pdf: pd.DataFrame) -> pd.DataFrame:
+            src, dst, nodes = _node_codes(pdf)
+            n = len(nodes)
+            # a NULL weight adds nothing to the superstep's sums either
+            w = pdf["w"].fillna(0.0).to_numpy()
+            s = np.bincount(src, weights=w, minlength=n).max()
+            x = np.ones(n)
+            for _ in range(max_iter):
+                raw = np.bincount(dst, weights=w * x[src], minlength=n) + s * x
+                x = raw / np.sqrt(np.sum(raw * raw))
+            return pd.DataFrame({"node": nodes, "centrality": x / x.max()})
+
+        res = _in_task(adj, g, width, "centrality double", _solve)
+        return res.select(*g, "node", F.round("centrality", 6).alias("centrality"))
     wdeg = adj.groupBy(*g, "src").agg(F.sum("w").alias("_wd"))
     shift = wdeg.groupBy(*g).agg(F.max("_wd").alias("_s"))
     loops = _by_group(wdeg, shift, g).select(
@@ -454,14 +538,20 @@ def pagerank(
     max_iter: int = 20,
 ) -> DataFrame:
     """Weighted PageRank on the undirected view (igraph::page_rank,
-    bin/compareTwins.R:98-100). Same joint-iteration shape as
-    eigenvector_centrality.
+    bin/compareTwins.R:98-100). Same two regimes as
+    eigenvector_centrality: in-task per group up to _IN_TASK_ROWS
+    adjacency rows, joint supersteps above, the same rounded output.
 
     The transition weights p = w / Σw (Σ over the source's edges, a
     window on (group, src)) are columns of the checkpointed adjacency,
-    and the group size n rides in the checkpointed node table, so a
-    superstep is one join and one aggregate plus the teleport term.
+    read by both paths; the teleport term is (1 − d)/n for a group of n
+    nodes.  On the superstep path n rides in the checkpointed node
+    table, so a superstep is one join and one aggregate plus the
+    teleport term.
     """
+    import numpy as np
+    import pandas as pd
+
     g = _gcols(group_cols)
     adj, width = _static_graph(
         edges,
@@ -471,6 +561,22 @@ def pagerank(
             "p", F.col("w") / F.sum("w").over(W.partitionBy(*g, "src"))
         ),
     )
+    if width.n <= _IN_TASK_ROWS:
+
+        def _solve(pdf: pd.DataFrame) -> pd.DataFrame:
+            src, dst, nodes = _node_codes(pdf)
+            n = len(nodes)
+            # a NULL p adds nothing to the superstep's sums either
+            p = pdf["p"].fillna(0.0).to_numpy()
+            r = np.full(n, 1.0 / n)
+            for _ in range(max_iter):
+                r = (1 - damping) / n + damping * np.bincount(
+                    dst, weights=p * r[src], minlength=n
+                )
+            return pd.DataFrame({"node": nodes, "pagerank": r})
+
+        res = _in_task(adj, g, width, "pagerank double", _solve)
+        return res.select(*g, "node", F.round("pagerank", 8).alias("pagerank"))
     nodes = adj.select(*g, F.col("src").alias("node")).distinct()
     nodes = _checkpoint(
         _by_group(nodes, nodes.groupBy(*g).agg(F.count(F.lit(1)).alias("_n")), g)
@@ -556,73 +662,29 @@ def katz_centrality(
 # --------------------------------------------------------------------------
 
 
-def _cc_local(und: DataFrame, g: list[str]) -> DataFrame:
-    """Small-graph fast path for connected_components: min-root
-    union-find inside applyInPandas (one task per group). Identical
-    output — component label = lexicographic-min member — without the
-    per-superstep job overhead that dominates at small scale (measured
-    ~7s of fixed cost for a tiny dup-pair graph)."""
-    import pandas as pd
-
-    if not g:
-        und = und.withColumn("_g", F.lit(1))
-        g_eff = ["_g"]
-    else:
-        g_eff = g
-    # group columns keep their NATIVE types (schema copied from the
-    # input), matching the superstep path exactly; node/component are
-    # string on both paths (connected_components casts before choosing)
-    gtypes = {f.name: f.dataType.simpleString() for f in und.schema.fields}
-    schema = ", ".join(f"{c} {gtypes[c]}" for c in g_eff) + ", node string, component string"
-
-    def _solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for s, d in zip(pdf["src"], pdf["dst"]):
-            s, d = str(s), str(d)
-            parent.setdefault(s, s)
-            parent.setdefault(d, d)
-            rs, rd = find(s), find(d)
-            if rs != rd:
-                lo, hi = (rs, rd) if rs < rd else (rd, rs)
-                parent[hi] = lo  # min root survives → min-label semantics
-        nodes = list(parent)
-        rows = {c: [pdf[c].iloc[0]] * len(nodes) for c in g_eff}
-        rows["node"] = nodes
-        rows["component"] = [find(v) for v in nodes]
-        return pd.DataFrame(rows)
-
-    out = und.groupBy(*g_eff).applyInPandas(_solve, schema=schema)
-    return out.select(*g, "node", "component")
-
-
 def connected_components(
     edges: DataFrame,
     group_cols: list[str] | None = None,
     max_iter: int = 50,
-    local_cutoff: int = 500_000,
 ) -> DataFrame:
     """Weak connectivity (igraph components,
-    bin/GeneralNetworkProperties.R:68-84): iterative min-label
-    propagation to convergence, all groups jointly — O(diameter)
-    supersteps (labels advance one hop per round; no pointer-doubling).
-    Exhausting max_iter without converging RAISES rather than returning
-    a silently over-split partition.
+    bin/GeneralNetworkProperties.R:68-84); the component label is the
+    lexicographic-min member.
+
+    Static graphs of at most _IN_TASK_ROWS adjacency rows run a min-root
+    union-find per group inside one task (_in_task) — at small scale the
+    fixed per-superstep cost dominates (measured ~7s for a tiny
+    dup-pair graph).  Larger graphs run iterative min-label propagation
+    to convergence, all groups jointly — O(diameter) supersteps (labels
+    advance one hop per round; no pointer-doubling).  Exhausting
+    max_iter without converging RAISES rather than returning a silently
+    over-split partition.
 
     Node ids (and component labels) are strings on BOTH paths, so the
-    local fast path and the superstep path return identical labels and
-    schemas — min-label always means lexicographic min.
+    two paths return identical labels and schemas — min-label always
+    means lexicographic min."""
+    import pandas as pd
 
-    Edge lists at or below local_cutoff rows short-circuit to a
-    semantically identical single-task union-find (_cc_local) — at small
-    scale the fixed per-superstep cost dominates; set local_cutoff=0 to
-    force the superstep path."""
     g = _gcols(group_cols)
     # the size probe (width.n) and either path read this one checkpoint
     und, width = _static_graph(
@@ -632,8 +694,29 @@ def connected_components(
             *g, F.col("src").cast("string"), F.col("dst").cast("string")
         ),
     )
-    if local_cutoff and width.n <= local_cutoff:
-        return _cc_local(und, g)
+    if width.n <= _IN_TASK_ROWS:
+
+        def _solve(pdf: pd.DataFrame) -> pd.DataFrame:
+            parent: dict[str, str] = {}
+
+            def find(x: str) -> str:
+                while parent[x] != x:
+                    parent[x] = parent[parent[x]]
+                    x = parent[x]
+                return x
+
+            for s, d in zip(pdf["src"], pdf["dst"]):
+                parent.setdefault(s, s)
+                parent.setdefault(d, d)
+                rs, rd = find(s), find(d)
+                if rs != rd:
+                    lo, hi = (rs, rd) if rs < rd else (rd, rs)
+                    parent[hi] = lo  # min root survives → min-label semantics
+            nodes = list(parent)
+            return pd.DataFrame({"node": nodes, "component": [find(v) for v in nodes]})
+
+        res = _in_task(und, g, width, "component string", _solve)
+        return res.select(*g, "node", "component")
     labels = (
         und.select(*g, F.col("src").alias("node"))
         .distinct()

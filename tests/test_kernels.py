@@ -80,19 +80,85 @@ def test_connected_components_grouped_local(spark):
     assert comp[("g2", "b")] == comp[("g2", "x")] == "b"
 
 
-def test_connected_components_local_matches_superstep(spark):
-    for fixture in (TWO_COMP, P5, K5, S10):
-        local = as_map(
-            K.connected_components(edges_df(spark, fixture)).collect(),
-            "node",
-            "component",
+# in-task vs superstep parity: (kernel, case) pairs; cc has no
+# max_iter=0 case (its max_iter caps convergence, 0 always raises)
+_PARITY_KERNELS = {
+    "cc": lambda e, g, it: K.connected_components(e, g),
+    "eigenvector": lambda e, g, it: K.eigenvector_centrality(e, g, max_iter=it),
+    "pagerank": lambda e, g, it: K.pagerank(e, g, weight_col="weight", max_iter=it),
+}
+_PARITY_CASES = [
+    "two_comp", "p5", "k5", "s10", "bipartite33_weighted",
+    "grouped_int_ids", "self_loop", "one_edge_group", "max_iter0",
+]
+
+
+def _parity_case(spark, case):
+    """(edges, group_cols, max_iter of the power-iteration kernels)."""
+    plain = {"two_comp": TWO_COMP, "p5": P5, "k5": K5, "s10": S10}
+    if case in plain:
+        return edges_df(spark, plain[case]), None, 10
+    if case in ("bipartite33_weighted", "max_iter0"):
+        e = edges_df(spark, BIPARTITE_33, weights=[1, 2, 3, 4, 5, 6, 7, 8, 9])
+        return e, None, (0 if case == "max_iter0" else 10)
+    if case == "grouped_int_ids":
+        e = spark.createDataFrame(
+            [(1, 2, 10, 1.5), (1, 10, 7, 2.0), (1, 7, 2, 0.5), (1, 7, 3, 1.0),
+             (2, 3, 5, 1.0), (2, 5, 8, 3.0), (2, 8, 3, 2.0)],
+            "grp int, src long, dst long, weight double",
         )
-        superstep = as_map(
-            K.connected_components(edges_df(spark, fixture), local_cutoff=0).collect(),
-            "node",
-            "component",
-        )
-        assert local == superstep, fixture
+        return e, ["grp"], 10
+    if case == "self_loop":
+        e = edges_df(spark, [("a", "a"), ("a", "b"), ("b", "c")], weights=[4.0, 1.0, 2.0])
+        return e, None, 10
+    # one_edge_group: a one-edge group next to a P5 group
+    e = edges_df(spark, P5, weights=[1, 2, 3, 4], group="g1").unionByName(
+        edges_df(spark, [("x", "y")], weights=[2.0], group="g2")
+    )
+    return e, ["g"], 10
+
+
+@pytest.mark.parametrize(
+    "kernel,case",
+    [(k, c) for k in _PARITY_KERNELS for c in _PARITY_CASES if (k, c) != ("cc", "max_iter0")],
+)
+def test_in_task_matches_superstep(spark, monkeypatch, kernel, case):
+    """The in-task regime (each group solved inside one task) and the
+    superstep regime give EQUAL rounded outputs and schemas — not
+    merely close ones."""
+    e, g, it = _parity_case(spark, case)
+    run = _PARITY_KERNELS[kernel]
+    calls = []
+    real = K._in_task
+    monkeypatch.setattr(K, "_in_task", lambda *a: calls.append(1) or real(*a))
+    local = run(e, g, it)
+    local_rows = sorted(map(tuple, local.collect()))
+    assert calls, "the small graph did not take the in-task path"
+    monkeypatch.setattr(K, "_IN_TASK_ROWS", 0)
+    superstep = run(e, g, it)
+    assert len(calls) == 1, "_IN_TASK_ROWS = 0 did not force the superstep path"
+    assert local.schema == superstep.schema
+    assert local_rows == sorted(map(tuple, superstep.collect()))
+
+
+@pytest.mark.parametrize("kernel", ["eigenvector", "pagerank"])
+def test_in_task_job_count_independent_of_max_iter(spark, kernel):
+    """On a small grouped graph the whole iteration runs in-task, so
+    the number of Spark jobs does not grow with max_iter (each
+    superstep adds jobs)."""
+    sc = spark.sparkContext
+    e, g, _ = _parity_case(spark, "one_edge_group")
+
+    def jobs(max_iter):
+        gid = f"in_task_jobs_{kernel}_{max_iter}"
+        sc.setJobGroup(gid, gid)
+        try:
+            _PARITY_KERNELS[kernel](e, g, max_iter).collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+    assert jobs(2) == jobs(12)
 
 
 def test_approx_betweenness_exact_when_all_pivots(spark):
@@ -461,17 +527,15 @@ def test_self_loop_degree_and_gsize(spark):
     assert gs2.n_nodes == 1 and gs2.n_edges == 1  # was 0 via (1/2).cast(long)
 
 
-def test_connected_components_paths_agree_on_int_ids(spark):
+def test_connected_components_paths_agree_on_int_ids(spark, monkeypatch):
     """Local union-find and superstep min-label must return the SAME
     labels and schema for integer node ids (both stringify)."""
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators import kernels as K
 
     e = spark.createDataFrame([(2, 10), (10, 7), (3, 5)], "src long, dst long")
     local = {r.node: r.component for r in K.connected_components(e).collect()}
-    superstep = {
-        r.node: r.component
-        for r in K.connected_components(e, local_cutoff=0).collect()
-    }
+    monkeypatch.setattr(K, "_IN_TASK_ROWS", 0)
+    superstep = {r.node: r.component for r in K.connected_components(e).collect()}
     assert local == superstep
     # lexicographic min on stringified ids: "10" < "2" < "7"
     assert local["2"] == "10" and local["7"] == "10" and local["5"] == "3"
@@ -665,7 +729,8 @@ def test_reliable_checkpoint_mode_identical(spark, tmp_path, monkeypatch):
     the iterative kernels must run their loops through df.checkpoint()
     (files actually land in the DFS dir — the executor-loss-surviving
     path) and produce results identical to the localCheckpoint default.
-    Covers the power-iteration kernels (pagerank, eigenvector with its
+    Covers the power-iteration kernels on both regimes (the in-task
+    output checkpoint, and the superstep loops with eigenvector's
     A + sI set-up checkpoint), a BFS kernel (diameter/radius) and the
     interpersonal-diversity pipeline's materialized tables end-to-end."""
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.plans import pipelines as P
@@ -674,13 +739,20 @@ def test_reliable_checkpoint_mode_identical(spark, tmp_path, monkeypatch):
     e = edges_df(spark, P5)
     we = edges_df(spark, BIPARTITE_33, weights=[1, 2, 3, 4, 5, 6, 7, 8, 9])
 
-    def run():
+    def power_iteration():
         pr = sorted((r.node, round(r.pagerank, 10)) for r in K.pagerank(e).collect())
         ev = sorted((r.node, r.centrality) for r in K.eigenvector_centrality(we).collect())
+        return pr, ev
+
+    def run():
+        in_task = power_iteration()
+        with monkeypatch.context() as m:
+            m.setattr(K, "_IN_TASK_ROWS", 0)
+            superstep = power_iteration()
         dr = K.diameter_radius(K.bfs_distances(e)).collect()[0]
         out = P.interpersonal_diversity(_q5_edges(spark), eigen_iter=4)
         div = {k: sorted(map(tuple, out[k].collect())) for k in ("rarefied", "centrality", "stats")}
-        return pr, ev, (dr.diameter, dr.radius), div
+        return in_task, superstep, (dr.diameter, dr.radius), div
 
     base = run()
 
@@ -702,7 +774,7 @@ def test_reliable_checkpoint_mode_identical(spark, tmp_path, monkeypatch):
     )
 
 
-def test_superstep_checkpoints_released(spark):
+def test_superstep_checkpoints_released(spark, monkeypatch):
     """Iterative loops must RELEASE superseded superstep checkpoints
     (kernels._release): every eager localCheckpoint pins blocks in the
     block manager until the session dies, so without the release a
@@ -711,13 +783,18 @@ def test_superstep_checkpoints_released(spark):
     a 48g single-JVM heap.  Pin the bound: after a 10-iteration
     pagerank, eigenvector runs and a BFS sweep, the number of persistent
     RDDs grows by a small constant (live inputs + final state), not per
-    iteration."""
+    iteration.  The in-task regime keeps only its output: the static
+    graph it solved from is released.  The fixtures are tiny, so the
+    superstep path is forced after that check."""
     jsc = spark.sparkContext._jsc
 
     def growth(run):
         before = jsc.getPersistentRDDs().size()
         run()
         return jsc.getPersistentRDDs().size() - before
+
+    assert growth(lambda: K.eigenvector_centrality(edges_df(spark, P5)).count()) == 1
+    monkeypatch.setattr(K, "_IN_TASK_ROWS", 0)
 
     # eigenvector: the superseded weighted adjacency is released once
     # A + sI is materialized, and no frame is kept per superstep
