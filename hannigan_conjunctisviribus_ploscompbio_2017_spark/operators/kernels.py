@@ -6,15 +6,21 @@ bin/compareTwins.R:95-104 in the reference code).  Three scale regimes:
 
 1. **Per-group, in-task** (many small per-sample subgraphs): every
    kernel takes a `group_cols` argument and NEVER runs one job per
-   subgraph.  When the whole static graph has at most `_IN_TASK_ROWS`
-   adjacency rows, eigenvector centrality, PageRank and components
-   solve each group's whole iteration inside one applyInPandas task
-   (`_in_task`): a fixed handful of Spark jobs, however many
-   iterations.  A superstep costs several jobs whatever the graph's
-   size, so at this scale the job overhead is the whole cost.
+   subgraph.  One helper, `_per_group`, runs a kernel's solve on each
+   group inside one applyInPandas task, with the group and node
+   columns in their input types.  Exact betweenness, alpha centrality
+   and greedy modularity always solve this way (lazily, in the
+   consumer's job), as does approx_betweenness below
+   `_LOCAL_BRANDES_NODES` nodes.  When the whole static graph has at
+   most `_IN_TASK_ROWS` adjacency rows, eigenvector centrality,
+   PageRank and components also solve each group's whole iteration
+   this way (`_in_task`, which checkpoints the output): a fixed
+   handful of Spark jobs, however many iterations.  A superstep costs
+   several jobs whatever the graph's size, so at this scale the job
+   overhead is the whole cost.
 
 2. **Per-group, superstep** (grouped graphs above the cutoff): the
-   same kernels compute ALL subgraphs jointly, keying every
+   iterative kernels compute ALL subgraphs jointly, keying every
    intermediate on the group columns, one shuffle per superstep
    whatever the number of groups — the §7 risk-register design:
    per-sample fan-out as grouped aggregation.  Both per-group regimes
@@ -27,6 +33,13 @@ bin/compareTwins.R:95-104 in the reference code).  Three scale regimes:
    `localCheckpoint` locally and, opt-in for real clusters, a reliable
    DFS `checkpoint()` that survives executor loss (see `_checkpoint`).
 
+The superstep paths of eigenvector, PageRank, Katz, LPA and components
+supply only their per-step algebra: `_gather` sends each node's state
+along the adjacency, and `_supersteps` is the one loop (checkpoint,
+convergence probe, release of the superseded state).  BFS and
+approx_betweenness keep frontier loops of their own: they carry a
+visited/frontier pair, and betweenness a backward pass.
+
 Edges are directed (src, dst [, weight]); kernels that need the
 undirected view symmetrize internally.
 
@@ -37,11 +50,14 @@ its input in one pass, and the iterative kernels build their static
 graph once through `_static_graph` — symmetrize, weight, the kernel's
 per-group constants (eigenvector's shift as self-loops of A + sI,
 PageRank's transition weights and group sizes), one checkpoint — so
-each superstep moves only the score/label messages.
+each superstep moves only the score/label messages.  BFS and
+approx_betweenness checkpoint their adjacency first too, and derive
+their node set and roots from that checkpoint.
 """
 
 from __future__ import annotations
 
+import math
 import os
 import warnings
 
@@ -300,44 +316,97 @@ def _static_graph(
     return adj, _loop_shuffle_width(adj)
 
 
+def _str_ids(und: DataFrame, g: list[str], *keep: str) -> DataFrame:
+    """`und` with string node ids (plus the `keep` columns): the kernels
+    whose per-group solve compares or hashes node ids return string node
+    and label columns, whatever the input's id type."""
+    return und.select(*g, F.col("src").cast("string"), F.col("dst").cast("string"), *keep)
+
+
 # Static graphs (symmetrized adjacency rows over all groups, the
 # `_static_graph` size probe) at or below this size take the in-task
 # regime.  A superstep costs several Spark jobs whatever the graph's
 # size, so on small grouped graphs the job overhead is the whole cost.
 _IN_TASK_ROWS = 500_000
+# approx_betweenness solves graphs of at most this many nodes in one
+# task (see its docstring); 0 forces the superstep path.
+_LOCAL_BRANDES_NODES = 8192
 
 
-def _in_task(adj: DataFrame, g: list[str], width: _loop_shuffle_width, out: str, solve):
-    """Small-graph regime shared by the grouped iterative kernels: each
-    group's whole solve runs inside one applyInPandas task, a fixed
-    handful of jobs instead of a loop of supersteps.
+def _per_group(rows: DataFrame, g: list[str], out: str, solve) -> DataFrame:
+    """Run `solve` once per group inside one applyInPandas task — the
+    one per-group solve path of the module, lazy.
 
-    `solve` gets one group's adjacency rows as a pandas frame and
-    returns a frame with `node` and the kernel's value column; `out`
-    declares that column ("<name> <type>").  Group and node columns
-    keep their native types (copied from `adj`), so the output schema
-    matches the superstep path.  The output is checkpointed under the
-    kernel's shuffle-width pin: left lazy, every consumer would re-run
-    the Python solve.  `adj` is released once the output is
-    materialized.  Callers round JVM-side, so HALF_UP rounding matches
-    the superstep path."""
-    import pandas as pd
-
+    `solve` gets one group's rows as a pandas frame and returns a frame
+    with `node` and the kernel's value columns; `out` declares those
+    columns ("<name> <type>, ...").  Group and node columns keep their
+    native types (read off `rows`), and the group values are copied
+    into every output row, so the solve never sees them.  Without group
+    columns the whole graph is one group (the `_g` stand-in, dropped by
+    the caller's select).  Kernels with a superstep path round
+    JVM-side, so HALF_UP rounding matches on both paths."""
     g_eff = g or ["_g"]
-    rows = adj if g else adj.withColumn("_g", F.lit(1))
+    if not g:
+        rows = rows.withColumn("_g", F.lit(1))
     types = {f.name: f.dataType.simpleString() for f in rows.schema.fields}
     schema = ", ".join(f"{c} {types[c]}" for c in g_eff) + f", node {types['src']}, {out}"
 
-    def _per_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _solve_group(pdf):
         res = solve(pdf)
         for c in g_eff:
             res[c] = pdf[c].iloc[0]
         return res
 
+    return rows.groupBy(*g_eff).applyInPandas(_solve_group, schema=schema)
+
+
+def _in_task(adj: DataFrame, g: list[str], width: _loop_shuffle_width, out: str, solve):
+    """Small-graph regime of the grouped iterative kernels: each group's
+    whole iteration runs in `_per_group`, a fixed handful of jobs
+    instead of a loop of supersteps.  The output is checkpointed under
+    the kernel's shuffle-width pin (left lazy, every consumer would
+    re-run the Python solve), then the static graph `adj` is
+    released."""
     with width:
-        res = _checkpoint(rows.groupBy(*g_eff).applyInPandas(_per_group, schema=schema))
+        res = _checkpoint(_per_group(adj, g, out, solve))
     _release(adj)
     return res
+
+
+def _gather(adj: DataFrame, state: DataFrame, g: list[str], *aggs, by=()) -> DataFrame:
+    """One superstep's messages: join the per-node `state` on the
+    adjacency's `src` and aggregate `aggs` at each `dst` (as `node`,
+    and per `by` column of the state)."""
+    return (
+        adj.join(state.withColumnRenamed("node", "src"), [*g, "src"])
+        .groupBy(*g, F.col("dst").alias("node"), *by)
+        .agg(*aggs)
+    )
+
+
+def _supersteps(state: DataFrame, width: _loop_shuffle_width, max_iter: int, step, until=None):
+    """The superstep loop of eigenvector, PageRank, Katz, LPA and
+    components: `state` ← checkpoint(step(state)) up to `max_iter`
+    times under the shuffle-width pin, releasing each superseded state
+    once its successor is materialized.  `until(new, old)` is the
+    convergence probe; it runs before the old state is released and
+    stops the loop when true.  A loop with a probe that exhausts
+    `max_iter` raises."""
+    with width:
+        for _ in range(max_iter):
+            new = _checkpoint(step(state))
+            done = until is not None and until(new, state)
+            _release(state)
+            state = new
+            if done:
+                return state
+    if until is not None:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} "
+            "supersteps (graph diameter exceeds max_iter); raise "
+            "max_iter — returning would silently over-split components"
+        )
+    return state
 
 
 def _node_codes(pdf):
@@ -477,25 +546,20 @@ def eigenvector_centrality(
     m = _checkpoint(adj.unionByName(loops))
     _release(adj)
 
-    scores = (
-        m.select(*g, F.col("src").alias("node"))
-        .distinct()
-        .withColumn("score", F.lit(1.0))
+    def step(scores: DataFrame) -> DataFrame:
+        raw = _gather(m, scores, g, F.sum(F.col("w") * F.col("score")).alias("raw"))
+        # L2-normalize per group (power iteration stability)
+        norm = raw.groupBy(*g).agg(F.sqrt(F.sum(F.col("raw") ** 2)).alias("_n"))
+        return _by_group(raw, norm, g).select(
+            *g, "node", (F.col("raw") / F.col("_n")).alias("score")
+        )
+
+    scores = _supersteps(
+        m.select(*g, F.col("src").alias("node")).distinct().withColumn("score", F.lit(1.0)),
+        width,
+        max_iter,
+        step,
     )
-    with width:
-        for _ in range(max_iter):
-            raw = m.join(
-                scores.withColumnRenamed("node", "src"), [*g, "src"]
-            ).groupBy(*g, F.col("dst").alias("node")).agg(
-                F.sum(F.col("w") * F.col("score")).alias("raw")
-            )
-            # L2-normalize per group (power iteration stability)
-            norm = raw.groupBy(*g).agg(F.sqrt(F.sum(F.col("raw") ** 2)).alias("_n"))
-            new_scores = _by_group(raw, norm, g).select(
-                *g, "node", (F.col("raw") / F.col("_n")).alias("score")
-            )
-            prev, scores = scores, _checkpoint(new_scores)
-            _release(prev)
     # igraph scale: max = 1 per group
     scores = _by_group(scores, scores.groupBy(*g).agg(F.max("score").alias("_mx")), g)
     return scores.select(
@@ -581,24 +645,24 @@ def pagerank(
     nodes = _checkpoint(
         _by_group(nodes, nodes.groupBy(*g).agg(F.count(F.lit(1)).alias("_n")), g)
     )
-    ranks = nodes.select(*g, "node", (F.lit(1.0) / F.col("_n")).alias("rank"))
-    with width:
-        for _ in range(max_iter):
-            contrib = adj.join(
-                ranks.withColumnRenamed("node", "src"), [*g, "src"]
-            ).groupBy(*g, F.col("dst").alias("node")).agg(
-                F.sum(F.col("p") * F.col("rank")).alias("_in")
-            )
-            new_ranks = nodes.join(contrib, [*g, "node"], "left").select(
-                *g,
-                "node",
-                (
-                    (1 - damping) / F.col("_n")
-                    + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            prev, ranks = ranks, _checkpoint(new_ranks)
-            _release(prev)
+
+    def step(ranks: DataFrame) -> DataFrame:
+        contrib = _gather(adj, ranks, g, F.sum(F.col("p") * F.col("rank")).alias("_in"))
+        return nodes.join(contrib, [*g, "node"], "left").select(
+            *g,
+            "node",
+            (
+                (1 - damping) / F.col("_n")
+                + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
+            ).alias("rank"),
+        )
+
+    ranks = _supersteps(
+        nodes.select(*g, "node", (F.lit(1.0) / F.col("_n")).alias("rank")),
+        width,
+        max_iter,
+        step,
+    )
     return ranks.select(*g, "node", F.round("rank", 8).alias("pagerank"))
 
 
@@ -634,26 +698,21 @@ def katz_centrality(
     else:
         nodes = nodes.withColumn("_alpha", F.lit(float(alpha)))
     nodes = _checkpoint(nodes)
-    x = nodes.withColumn("katz", F.lit(float(beta)))
-    with width:
-        for _ in range(max_iter):
-            msgs = adj.join(
-                x.select(*g, F.col("node").alias("src"), "katz"), [*g, "src"]
-            ).groupBy(*g, F.col("dst").alias("node")).agg(
-                F.sum(F.col("w") * F.col("katz")).alias("_in")
-            )
-            prev, x = x, _checkpoint(
-                nodes.join(msgs, [*g, "node"], "left").select(
-                    *g,
-                    "node",
-                    "_alpha",
-                    (
-                        F.lit(float(beta))
-                        + F.col("_alpha") * F.coalesce(F.col("_in"), F.lit(0.0))
-                    ).alias("katz"),
-                )
-            )
-            _release(prev)
+
+    def step(x: DataFrame) -> DataFrame:
+        msgs = _gather(adj, x, g, F.sum(F.col("w") * F.col("katz")).alias("_in"))
+        return nodes.join(msgs, [*g, "node"], "left").select(
+            *g,
+            "node",
+            (
+                F.lit(float(beta))
+                + F.col("_alpha") * F.coalesce(F.col("_in"), F.lit(0.0))
+            ).alias("katz"),
+        )
+
+    x = _supersteps(
+        nodes.select(*g, "node", F.lit(float(beta)).alias("katz")), width, max_iter, step
+    )
     return x.select(*g, "node", F.round("katz", 6).alias("katz"))
 
 
@@ -687,13 +746,7 @@ def connected_components(
 
     g = _gcols(group_cols)
     # the size probe (width.n) and either path read this one checkpoint
-    und, width = _static_graph(
-        edges,
-        g,
-        prep=lambda a: a.select(
-            *g, F.col("src").cast("string"), F.col("dst").cast("string")
-        ),
-    )
+    und, width = _static_graph(edges, g, prep=lambda a: _str_ids(a, g))
     if width.n <= _IN_TASK_ROWS:
 
         def _solve(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -717,41 +770,30 @@ def connected_components(
 
         res = _in_task(und, g, width, "component string", _solve)
         return res.select(*g, "node", "component")
-    labels = (
-        und.select(*g, F.col("src").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
+
+    def step(labels: DataFrame) -> DataFrame:
+        nbr_min = _gather(und, labels, g, F.min("component").alias("_nbr"))
+        return labels.join(nbr_min, [*g, "node"], "left").select(
+            *g, "node", F.least(F.col("component"), F.col("_nbr")).alias("component")
+        )
+
+    def converged(new: DataFrame, old: DataFrame) -> bool:
+        return (
+            new.alias("n")
+            .join(old.alias("o"), [*g, "node"])
+            .filter(F.col("n.component") != F.col("o.component"))
+            .limit(1)
+            .count()
+        ) == 0
+
+    labels = und.select(*g, F.col("src").alias("node")).distinct()
+    return _supersteps(
+        labels.withColumn("component", F.col("node")),
+        width,
+        max_iter,
+        step,
+        until=converged,
     )
-    with width:
-        for _ in range(max_iter):
-            nbr_min = (
-                und.join(labels.withColumnRenamed("node", "src"), [*g, "src"])
-                .groupBy(*g, F.col("dst").alias("node"))
-                .agg(F.min("component").alias("_nbr"))
-            )
-            new_labels = labels.join(nbr_min, [*g, "node"], "left").select(
-                *g, "node", F.least(F.col("component"), F.col("_nbr")).alias("component")
-            )
-            new_labels = _checkpoint(new_labels)
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), [*g, "node"])
-                .filter(F.col("n.component") != F.col("o.component"))
-                .limit(1)
-                .count()
-            )
-            # the convergence probe above is old labels' last reader
-            _release(labels)
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                "supersteps (graph diameter exceeds max_iter); raise "
-                "max_iter — returning would silently over-split components"
-            )
-    return labels
 
 
 def connectivity_summary(edges: DataFrame, max_depth: int = 30) -> DataFrame:
@@ -842,15 +884,17 @@ def bfs_distances(
     level for every root simultaneously, never a per-root job.
     """
     g = _gcols(group_cols)
+    # checkpoint first: the node set, the roots and every superstep read
+    # this one copy of the input (read-once rule)
     if directed:
-        und = edges.select(*g, "src", "dst").dropDuplicates([*g, "src", "dst"])
+        und = _checkpoint(edges.select(*g, "src", "dst").dropDuplicates([*g, "src", "dst"]))
         all_nodes = (
             und.select(*g, F.col("src").alias("node"))
             .unionByName(und.select(*g, F.col("dst").alias("node")))
             .distinct()
         )
     else:
-        und = symmetrize(edges, g)
+        und = _checkpoint(symmetrize(edges, g))
         all_nodes = und.select(*g, F.col("src").alias("node")).distinct()
     roots = sources if sources is not None else all_nodes.select(*g, F.col("node").alias("root"))
 
@@ -858,7 +902,6 @@ def bfs_distances(
         "dist", F.lit(0)
     )
     frontier = visited
-    und = _checkpoint(und)  # freeze the upstream DAG (see _static_graph)
     with _loop_shuffle_width(und):
         for depth in range(1, max_depth + 1):
             neighbors = (
@@ -964,27 +1007,23 @@ def label_propagation(
     """
     g = _gcols(group_cols)
     und, width = _static_graph(edges, g, prep=lambda a: a.select(*g, "src", "dst"))
-    labels = (
-        und.select(*g, F.col("src").alias("node"))
-        .distinct()
-        .withColumn("community", F.col("node"))
+    w = W.partitionBy(*g, "node").orderBy(F.desc("_votes"), F.asc("community"))
+
+    def step(labels: DataFrame) -> DataFrame:
+        votes = _gather(und, labels, g, F.count(F.lit(1)).alias("_votes"), by=("community",))
+        return (
+            votes.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select(*g, "node", "community")
+        )
+
+    labels = und.select(*g, F.col("src").alias("node")).distinct()
+    return _supersteps(
+        labels.withColumn("community", F.col("node")),
+        width,
+        max_iter,
+        step,
     )
-    with width:
-        for _ in range(max_iter):
-            votes = (
-                und.join(labels.withColumnRenamed("node", "src"), [*g, "src"])
-                .groupBy(*g, F.col("dst").alias("node"), "community")
-                .agg(F.count(F.lit(1)).alias("_votes"))
-            )
-            w = W.partitionBy(*g, "node").orderBy(F.desc("_votes"), F.asc("community"))
-            winner = (
-                votes.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .select(*g, "node", "community")
-            )
-            prev, labels = labels, _checkpoint(winner)
-            _release(prev)
-    return labels
 
 
 def modularity(
@@ -1031,14 +1070,15 @@ def greedy_modularity(
     (bin/CompareNetworkGroups.R:66-69, bin/TriadicClosures.R:58-61).
 
     Scale regime: each GROUP's subgraph is merged greedily inside one
-    applyInPandas task (CNM heap, O(m log² n) per group), so thousands
+    task (_per_group; CNM heap, O(m log² n) per group), so thousands
     of per-sample subgraphs still run as ONE Spark job — but a single
     group must fit one task (the reference's use case: per-study
     networks of 10²-10³ nodes). For one big graph use
     label_propagation, the O(supersteps) scale path.
 
     Deterministic: ΔQ ties break on the lexicographically smallest
-    community pair; community ids are each community's minimum node id.
+    community pair; community ids are each community's minimum node id
+    (node ids are compared as strings).
     Returns (group_cols..., node, community, modularity) — modularity is
     the final Q of the group's partition (same value the modularity()
     aggregate computes for these labels).
@@ -1050,31 +1090,18 @@ def greedy_modularity(
     g = _gcols(group_cols)
     und = symmetrize(edges, g)
     has_w = weight_col and weight_col in und.columns
-    if not g:
-        und = und.withColumn("_g", F.lit(1))
-        g_eff = ["_g"]
-    else:
-        g_eff = g
-    out_schema = (
-        ", ".join(f"{c} string" for c in g_eff)
-        + ", node string, community string, modularity double"
-    )
+    und = _str_ids(und, g, *([weight_col] if has_w else []))
 
     def _cnm(pdf: pd.DataFrame) -> pd.DataFrame:
         # one undirected edge per (src<dst) pair; symmetrize emitted both
         w_ser = pdf[weight_col] if has_w else [1.0] * len(pdf)
         wmap: dict[tuple[str, str], float] = {}
         for s, d, wv in zip(pdf["src"], pdf["dst"], w_ser):
-            s, d = str(s), str(d)
             if s < d:
                 wmap[(s, d)] = float(wv)
-        nodes = sorted({n for p in wmap for n in p} | set(map(str, pdf["src"])))
+        nodes = sorted({n for p in wmap for n in p} | set(pdf["src"]))
         if not wmap:
-            rows = {c: [str(pdf[c].iloc[0])] * len(nodes) for c in g_eff}
-            rows["node"] = nodes
-            rows["community"] = nodes
-            rows["modularity"] = [0.0] * len(nodes)
-            return pd.DataFrame(rows)
+            return pd.DataFrame({"node": nodes, "community": nodes, "modularity": 0.0})
         two_m = 2.0 * sum(wmap.values())
         # e[i][j]: fraction of edge weight between communities (symmetric,
         # both directions summed → w/(2m) per direction)
@@ -1118,23 +1145,18 @@ def greedy_modularity(
                 lo, hi = (i, n_) if i < n_ else (n_, i)
                 dq = 2.0 * (f_ - a[i] * a[n_])
                 heapq.heappush(heap, (-dq, lo, hi, stamp[lo], stamp[hi]))
-        rows: dict[str, list] = {c: [] for c in g_eff}
         out_nodes: list[str] = []
         out_comm: list[str] = []
-        gvals = [str(pdf[c].iloc[0]) for c in g_eff]
-        for root, ms in members.items():
+        for ms in members.values():
             label = min(ms)
             for n_ in ms:
                 out_nodes.append(n_)
                 out_comm.append(label)
-        for c, v in zip(g_eff, gvals):
-            rows[c] = [v] * len(out_nodes)
-        rows["node"] = out_nodes
-        rows["community"] = out_comm
-        rows["modularity"] = [round(q, 6)] * len(out_nodes)
-        return pd.DataFrame(rows)
+        return pd.DataFrame(
+            {"node": out_nodes, "community": out_comm, "modularity": round(q, 6)}
+        )
 
-    res = und.groupBy(*g_eff).applyInPandas(_cnm, schema=out_schema)
+    res = _per_group(und, g, "community string, modularity double", _cnm)
     return res.select(*g, "node", "community", "modularity")
 
 
@@ -1173,68 +1195,19 @@ def betweenness_centrality(
 
     Brandes is O(VE) with sequential dependency accumulation — not
     shuffle-decomposable. The reference runs it driver-side on collected
-    subgraphs; here each GROUP's subgraph runs inside applyInPandas, so
-    thousands of per-sample graphs compute in parallel across executors
-    and only the per-group edge list (tiny, SURVEY §6: ≤~40k edges) is
-    ever materialized in one place. For one global giant graph, use
-    sampled-source approximation: pass a pre-filtered edge set.
+    subgraphs; here each GROUP's subgraph runs inside one task
+    (_per_group), so thousands of per-sample graphs compute in parallel
+    across executors and only the per-group edge list (tiny, SURVEY §6:
+    ≤~40k edges) is ever materialized in one place.  The solve is
+    approx_betweenness's one-task Brandes (_brandes) with every node a
+    pivot and no depth cap, so the two agree exactly.  Lazy: the solve
+    runs in the consumer's job.  Node ids come back as strings, group
+    columns in their input types.  For one global giant graph, use
+    approx_betweenness.
     """
-    import pandas as pd
-
     g = _gcols(group_cols)
-    und = symmetrize(edges, g)
-    if not g:
-        und = und.withColumn("_g", F.lit(1))
-        g_eff = ["_g"]
-    else:
-        g_eff = g
-    out_schema = (
-        ", ".join(f"{c} string" for c in g_eff)
-        + ", node string, betweenness double"
-    )
-
-    def _brandes(pdf: pd.DataFrame) -> pd.DataFrame:
-        from collections import deque
-
-        adj: dict[str, list[str]] = {}
-        # str() the node values: the declared schema says node string,
-        # and Arrow rejects an int64 column against it
-        for s, d in zip(pdf["src"], pdf["dst"]):
-            adj.setdefault(str(s), []).append(str(d))
-        nodes = list(adj.keys())
-        bc = dict.fromkeys(nodes, 0.0)
-        for s in nodes:
-            # single-source shortest-path counts
-            dist = {s: 0}
-            sigma = {s: 1.0}
-            order = []
-            preds: dict[str, list[str]] = {s: []}
-            q = deque([s])
-            while q:
-                v = q.popleft()
-                order.append(v)
-                for w in adj[v]:
-                    if w not in dist:
-                        dist[w] = dist[v] + 1
-                        preds[w] = []
-                        sigma[w] = 0.0
-                        q.append(w)
-                    if dist[w] == dist[v] + 1:
-                        sigma[w] += sigma[v]
-                        preds[w].append(v)
-            delta = dict.fromkeys(order, 0.0)
-            for w in reversed(order):
-                for v in preds[w]:
-                    delta[v] += sigma[v] / sigma[w] * (1 + delta[w])
-                if w != s:
-                    bc[w] += delta[w]
-        rows = {c: [str(pdf[c].iloc[0])] * len(nodes) for c in g_eff}
-        rows["node"] = nodes
-        # undirected: every pair counted from both endpoints → halve
-        rows["betweenness"] = [bc[n] / 2.0 for n in nodes]
-        return pd.DataFrame(rows)
-
-    res = und.groupBy(*g_eff).applyInPandas(_brandes, schema=out_schema)
+    und = _str_ids(symmetrize(edges, g), g)
+    res = _per_group(und, g, "betweenness double", _brandes(None, math.inf, False))
     return res.select(*g, "node", F.round("betweenness", 6).alias("betweenness"))
 
 
@@ -1247,19 +1220,14 @@ def _stratified_quota(n_pivots: int, comp_size: int, n_nodes: int) -> int:
     return max(1, (n_pivots * comp_size) // n_nodes)
 
 
-def _pivot_brandes_local(
-    und: DataFrame,
-    n_pivots: int | None,
-    max_depth: int,
-    stratify_components: bool = False,
-) -> DataFrame:
-    """Small-graph fast path for approx_betweenness: the SAME
-    pivot-restricted truncated Brandes (same md5-ordered pivot set, same
-    V/k scaling, same max_depth BFS cap) computed inside ONE
-    applyInPandas task instead of 2·diameter shuffle supersteps — at
-    small scale the per-superstep job overhead dominates wall-clock by
-    >10× (r01 verdict: 189 s at sf0.01 vs seconds exact). Numerically
-    identical to the distributed path on the same input."""
+def _brandes(n_pivots: int | None, max_depth: float, stratify_components: bool):
+    """The module's one Brandes: a per-group solve (for _per_group) of
+    the pivot-restricted, depth-capped Brandes betweenness of one
+    symmetrized graph with string node ids.  Same md5-ordered pivot
+    set, V/k scaling and depth cap as approx_betweenness's superstep
+    path, so the two are numerically identical; `n_pivots=None` and
+    `max_depth=math.inf` give exact Brandes (every scale factor is
+    exactly 1.0)."""
     import hashlib
 
     import pandas as pd
@@ -1269,7 +1237,7 @@ def _pivot_brandes_local(
 
         adj: dict[str, list[str]] = {}
         for s, d in zip(pdf["src"], pdf["dst"]):
-            adj.setdefault(str(s), []).append(str(d))
+            adj.setdefault(s, []).append(d)
         nodes = list(adj.keys())
         pivot_scale: dict[str, float] = {}
         if n_pivots is None or n_pivots >= len(nodes):
@@ -1337,6 +1305,7 @@ def _pivot_brandes_local(
                     delta[v] += sigma[v] / sigma[w] * (1 + delta[w])
                 if w != s:
                     bc[w] += delta[w] * s_scale
+        # undirected: every pair counted from both endpoints → halve
         return pd.DataFrame(
             {
                 "node": nodes,
@@ -1344,22 +1313,13 @@ def _pivot_brandes_local(
             }
         )
 
-    # round JVM-side so HALF_UP semantics match the distributed path
-    return (
-        und.withColumn("_g", F.lit(1))
-        .groupBy("_g")
-        .applyInPandas(
-            lambda pdf: _solve(pdf), schema="node string, betweenness double"
-        )
-        .select("node", F.round("betweenness", 6).alias("betweenness"))
-    )
+    return _solve
 
 
 def approx_betweenness(
     edges: DataFrame,
     n_pivots: int | None = 64,
     max_depth: int = 20,
-    local_cutoff: int = 8192,
     stratify_components: bool = False,
 ) -> DataFrame:
     """Distributed Brandes betweenness with pivot sampling — the 100 TB
@@ -1378,11 +1338,15 @@ def approx_betweenness(
     Undirected semantics (symmetrized, halved) matching
     betweenness_centrality.
 
-    Graphs with ≤ local_cutoff nodes short-circuit to a numerically
-    identical single-task solve (_pivot_brandes_local): at small scale
-    the fixed cost of ~2·diameter shuffle supersteps dominates, and the
-    whole edge list fits one executor comfortably. Set local_cutoff=0 to
-    force the superstep path (e.g. for plan testing).
+    The input is read once: symmetrized, node ids cast to strings and
+    checkpointed, and the node count, the pivots and every superstep
+    read that checkpoint.  Graphs of at most _LOCAL_BRANDES_NODES nodes
+    short-circuit to a numerically identical single-task solve (the
+    module's one Brandes, _brandes, through _per_group; lazy): at small
+    scale the fixed cost of ~2·diameter shuffle supersteps dominates,
+    and the whole edge list fits one executor comfortably.  Setting the
+    module constant to 0 forces the superstep path (e.g. for plan
+    testing).  Node ids come back as strings on both paths.
 
     `stratify_components=True` allocates the pivot budget
     proportionally across connected components (≥1 per component, md5
@@ -1401,11 +1365,13 @@ def approx_betweenness(
     n_pivots by up to the component count.  Reduces exactly to Brandes
     when the budget covers every node, and the local/superstep paths
     stay numerically identical."""
-    und = symmetrize(edges)
+    und = _checkpoint(_str_ids(symmetrize(edges), []))
     all_nodes = und.select(F.col("src").alias("node")).distinct()
     n_nodes = all_nodes.count()
-    if n_nodes <= local_cutoff:
-        return _pivot_brandes_local(und, n_pivots, max_depth, stratify_components)
+    if n_nodes <= _LOCAL_BRANDES_NODES:
+        solve = _brandes(n_pivots, max_depth, stratify_components)
+        res = _per_group(und, [], "betweenness double", solve)
+        return res.select("node", F.round("betweenness", 6).alias("betweenness"))
     root_scale = None  # per-root scale frame (stratified mode only)
     if n_pivots is None or n_pivots >= n_nodes:
         roots = all_nodes.select(F.col("node").alias("root"))
@@ -1442,7 +1408,6 @@ def approx_betweenness(
         )
         scale = n_nodes / n_pivots
 
-    und = _checkpoint(und)
     visited = _checkpoint(
         roots.select(
             "root", F.col("root").alias("node"), F.lit(0).alias("dist"),
@@ -1541,7 +1506,8 @@ def alpha_centrality(
     """Alpha (Katz-Bonacich) centrality x = (I − αAᵀ)⁻¹·e per subgraph
     (igraph::alpha_centrality, bin/compareTwins.R:95-97;
     bin/CompareNetworkGroups.R:123-124). Per-group dense solve inside
-    applyInPandas — same distribution argument as betweenness.
+    one task (_per_group) — same distribution argument as betweenness;
+    node ids come back as strings, group columns in their input types.
 
     cap_alpha=True clamps α per subgraph to 0.5/max_row_sum(|A|) — the
     Gershgorin bound on λ₁ of the (possibly weighted) adjacency — so
@@ -1553,35 +1519,23 @@ def alpha_centrality(
     g = _gcols(group_cols)
     und = symmetrize(edges, g)
     has_w = weight_col and weight_col in und.columns
-    if not g:
-        und = und.withColumn("_g", F.lit(1))
-        g_eff = ["_g"]
-    else:
-        g_eff = g
-    out_schema = (
-        ", ".join(f"{c} string" for c in g_eff) + ", node string, alpha_centrality double"
-    )
+    und = _str_ids(und, g, *([weight_col] if has_w else []))
 
     def _solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        # str() node ids up front: the declared schema says node string,
-        # and Arrow rejects an int64 column against it
-        nodes = sorted({str(v) for v in pdf["src"]} | {str(v) for v in pdf["dst"]})
+        nodes = sorted(set(pdf["src"]) | set(pdf["dst"]))
         idx = {n: i for i, n in enumerate(nodes)}
         n = len(nodes)
         A = np.zeros((n, n))
         w = pdf[weight_col] if has_w else [1.0] * len(pdf)
         for s, d, wv in zip(pdf["src"], pdf["dst"], w):
-            A[idx[str(d)], idx[str(s)]] = float(wv)  # transpose: incoming influence
+            A[idx[d], idx[s]] = float(wv)  # transpose: incoming influence
         a_eff = alpha
         if cap_alpha:
             row_sum = np.abs(A).sum(axis=1).max()
             if row_sum > 0:
                 a_eff = min(alpha, 0.5 / float(row_sum))
         x = np.linalg.solve(np.eye(n) - a_eff * A, np.ones(n))
-        rows = {c: [str(pdf[c].iloc[0])] * n for c in g_eff}
-        rows["node"] = nodes
-        rows["alpha_centrality"] = x.tolist()
-        return pd.DataFrame(rows)
+        return pd.DataFrame({"node": nodes, "alpha_centrality": x})
 
-    res = und.groupBy(*g_eff).applyInPandas(_solve, schema=out_schema)
+    res = _per_group(und, g, "alpha_centrality double", _solve)
     return res.select(*g, "node", F.round("alpha_centrality", 6).alias("alpha_centrality"))

@@ -161,6 +161,73 @@ def test_in_task_job_count_independent_of_max_iter(spark, kernel):
     assert jobs(2) == jobs(12)
 
 
+def test_connected_components_superstep_raises_unconverged(spark, monkeypatch):
+    """The superstep path never returns an over-split partition: P5
+    needs 5 supersteps, so max_iter=1 must raise."""
+    monkeypatch.setattr(K, "_IN_TASK_ROWS", 0)
+    with pytest.raises(RuntimeError, match="did not converge in 1 supersteps"):
+        K.connected_components(edges_df(spark, P5), max_iter=1)
+
+
+def _counted_p5(spark):
+    """P5 as a lazy input whose every row read (by any job) counts on
+    an accumulator."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def read(row):
+        acc.add(1)
+        return row
+
+    rdd = spark.sparkContext.parallelize(P5, 1).map(read)
+    return spark.createDataFrame(rdd, "src string, dst string"), acc
+
+
+_READ_ONCE_KERNELS = {
+    "eigenvector": K.eigenvector_centrality,
+    "pagerank": K.pagerank,
+    "katz": K.katz_centrality,
+    "lpa": K.label_propagation,
+    "cc": K.connected_components,
+    "bfs": K.bfs_distances,
+    "bfs_directed": lambda e: K.bfs_distances(e, directed=True),
+    "approx_betweenness": lambda e: K.approx_betweenness(e, n_pivots=None),
+    "betweenness": K.betweenness_centrality,
+    "alpha": K.alpha_centrality,
+    "greedy_modularity": K.greedy_modularity,
+}
+
+
+@pytest.mark.parametrize("kernel", list(_READ_ONCE_KERNELS))
+def test_kernel_reads_input_once(spark, kernel):
+    """Read-once rule: a kernel reads its (lazy) input once per call,
+    set-up, every superstep and the consumer's job included."""
+    e, reads = _counted_p5(spark)
+    _READ_ONCE_KERNELS[kernel](e).collect()
+    assert reads.value == len(P5)
+
+
+@pytest.mark.parametrize("kernel", ["betweenness", "alpha", "greedy_modularity"])
+def test_per_group_kernels_keep_group_types(spark, kernel):
+    """One output contract for every per-group solve: group columns keep
+    their input type, node ids are strings, and the values do not
+    depend on the group column's type."""
+    from pyspark.sql.types import StringType
+
+    e, g, _ = _parity_case(spark, "grouped_int_ids")
+    run = {
+        "betweenness": lambda e: K.betweenness_centrality(e, g),
+        "alpha": lambda e: K.alpha_centrality(e, 0.05, g, weight_col="weight"),
+        "greedy_modularity": lambda e: K.greedy_modularity(e, g, weight_col="weight"),
+    }[kernel]
+    native = run(e)
+    strings = run(e.withColumn("grp", F.col("grp").cast("string")))
+    assert native.schema["grp"].dataType == e.schema["grp"].dataType
+    assert native.schema["node"].dataType == StringType()
+    assert sorted((str(r[0]), *r[1:]) for r in native.collect()) == sorted(
+        map(tuple, strings.collect())
+    )
+
+
 def test_approx_betweenness_exact_when_all_pivots(spark):
     # pivots=None → every node is a source → exactly Brandes
     for fixture in (P5, S10):
@@ -184,7 +251,7 @@ def test_approx_betweenness_exact_when_all_pivots(spark):
     assert p5 == {"a": 0.0, "b": 3.0, "c": 4.0, "d": 3.0, "e": 0.0}
 
 
-def test_approx_betweenness_local_matches_superstep_path(spark):
+def test_approx_betweenness_local_matches_superstep_path(spark, monkeypatch):
     # the small-graph single-task solve and the distributed superstep
     # path must be numerically identical: same md5 pivot set, same V/k
     # scaling, same depth cap — on exact AND sampled runs, and when the
@@ -206,16 +273,15 @@ def test_approx_betweenness_local_matches_superstep_path(spark):
             "node",
             "betweenness",
         )
-        superstep = as_map(
-            K.approx_betweenness(
-                edges_df(spark, fixture),
-                n_pivots=n_pivots,
-                max_depth=max_depth,
-                local_cutoff=0,
-            ).collect(),
-            "node",
-            "betweenness",
-        )
+        with monkeypatch.context() as m:
+            m.setattr(K, "_LOCAL_BRANDES_NODES", 0)
+            superstep = as_map(
+                K.approx_betweenness(
+                    edges_df(spark, fixture), n_pivots=n_pivots, max_depth=max_depth
+                ).collect(),
+                "node",
+                "betweenness",
+            )
         assert local == superstep, (fixture, n_pivots, max_depth)
 
 
@@ -670,7 +736,7 @@ def test_approx_betweenness_error_bound_bench_scale(spark):
         assert overlap >= min_overlap, ("stratified", n_pivots, overlap)
 
 
-def test_stratified_betweenness_coverage_parity_exactness(spark):
+def test_stratified_betweenness_coverage_parity_exactness(spark, monkeypatch):
     """The three contracts of stratify_components: (1) COVERAGE — every
     component gets >= 1 pivot, so no component's estimate is
     identically zero (the global estimator's structural failure mode on
@@ -692,12 +758,12 @@ def test_stratified_betweenness_coverage_parity_exactness(spark):
     assert max(strat[n] for n in ("b", "c")) > 0.0
     assert strat["x"] > 0.0
     # superstep path identical to the local fast path
-    sup = {
-        r.node: r.betweenness
-        for r in approx_betweenness(
-            e, n_pivots=2, stratify_components=True, local_cutoff=0
-        ).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(K, "_LOCAL_BRANDES_NODES", 0)
+        sup = {
+            r.node: r.betweenness
+            for r in approx_betweenness(e, n_pivots=2, stratify_components=True).collect()
+        }
     assert sup == strat
     # full budget == exact Brandes, stratified or not
     exact = {
@@ -803,6 +869,23 @@ def test_superstep_checkpoints_released(spark, monkeypatch):
         for k in (2, 10)
     ]
     assert max(ev) <= 3, f"eigenvector retained {ev} persistent frames"
+
+    # the shared superstep loop keeps no frame per superstep: at
+    # max_iter 2 and 10 alike, Katz retains its adjacency, node table
+    # and final state, LPA its adjacency and final labels
+    for name, run, live in (
+        ("katz", lambda k: K.katz_centrality(edges_df(spark, P5), max_iter=k), 3),
+        ("lpa", lambda k: K.label_propagation(edges_df(spark, P5), max_iter=k), 2),
+    ):
+        grown = [growth(lambda k=k: run(k).count()) for k in (2, 10)]
+        assert max(grown) <= live, f"{name} retained {grown} persistent frames"
+    # components stops at convergence: K5 converges within max_iter 2,
+    # P5 runs 5 supersteps of max_iter 10; both keep adjacency + labels
+    cc = [
+        growth(lambda: K.connected_components(edges_df(spark, K5), max_iter=2).count()),
+        growth(lambda: K.connected_components(edges_df(spark, P5), max_iter=10).count()),
+    ]
+    assert max(cc) <= 2, f"connected_components retained {cc} persistent frames"
 
     before = jsc.getPersistentRDDs().size()
 

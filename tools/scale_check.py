@@ -152,20 +152,19 @@ def bench_betweenness(k: int, dst: str) -> dict:
     strictly conservative; a real 100 TB run would grow pivots far
     slower than data and land well below this measured factor.
 
-    local_cutoff=0 forces the 2·diameter-superstep engine on BOTH
-    sides so the probe times the distributed path, not the small-graph
-    single-task short-circuit."""
+    kernels._LOCAL_BRANDES_NODES = 0 forces the 2·diameter-superstep
+    engine on BOTH sides so the probe times the distributed path, not
+    the small-graph single-task short-circuit."""
     from pyspark.sql import functions as F
 
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.kernels import (
-        approx_betweenness,
-    )
+    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators import kernels
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.plans.testdata_graph import (
         infects_edges,
     )
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.session import get_spark
 
     spark = get_spark("scale-betweenness")
+    kernels._LOCAL_BRANDES_NODES = 0
     out: dict = {"k": k, "probes": {}}
     for name, strat, base_pivots in [
         ("gk_betweenness_distributed", False, 32),
@@ -178,11 +177,10 @@ def bench_betweenness(k: int, dst: str) -> dict:
         ]:
             e = infects_edges(spark, sf_dir).select("src", "dst")
             t0 = time.time()
-            bc = approx_betweenness(
+            bc = kernels.approx_betweenness(
                 e,
                 n_pivots=pivots,
                 max_depth=8,
-                local_cutoff=0,
                 stratify_components=strat,
             )
             n = bc.agg(F.count(F.lit(1))).first()[0]
