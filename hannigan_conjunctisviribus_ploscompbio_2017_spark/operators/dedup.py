@@ -285,32 +285,78 @@ def _sig_from_shingles(
     return sig.select("id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
 
 
+def _bands(df: DataFrame, bands: int, bucket, *keep) -> DataFrame:
+    """The one LSH band explode, shared by every family (MinHash,
+    SimHash, SRP — batch and streaming): the `keep` columns plus one
+    (band, bucket) row per band, where bucket(i) is the i-th band's key
+    expression. Each family supplies only its bucket."""
+    bb = F.array(
+        *[F.struct(F.lit(i).alias("band"), bucket(i).alias("bucket")) for i in range(bands)]
+    )
+    return df.select(*keep, F.explode(bb).alias("bb")).select(
+        *keep, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    )
+
+
+def _bit_bands(col: str, total_bits: int, bands: int, what: str):
+    """Bucket expression for a packed bit signature (SimHash, SRP): band
+    i is the i-th run of total_bits/bands bits of the long `col`."""
+    bits = validate_banding(total_bits, bands, what)
+    return lambda i: F.shiftright(F.col(col), i * bits).bitwiseAND(
+        F.lit((1 << bits) - 1)
+    )
+
+
 def _band_explode(
     sig: DataFrame, num_hashes: int, bands: int, bucket_by_hash: bool
 ) -> DataFrame:
-    """(id, sig) → (id, sig, band, bucket): one row per band, the banded
-    LSH key layout shared by the pair self-join, the persisted
-    minhash_store artifact, and the ingest gate's delta probes.
-    bucket_by_hash=False keys on the band's raw value array — wider
-    key, but collision-free and oracle-replayable."""
+    """(id, sig) → (id, sig, band, bucket): the MinHash band layout
+    shared by the pair self-join, the persisted minhash_store artifact,
+    and the ingest gate's delta probes. A band's bucket is its slice of
+    the signature; bucket_by_hash=False keys on that raw value array —
+    wider key, but collision-free and oracle-replayable."""
     rows_per_band = validate_banding(num_hashes, bands, "MinHash banding")
 
-    def _bucket(i: int):
+    def bucket(i: int):
         band_vals = F.slice("sig", i * rows_per_band + 1, rows_per_band)
         return F.xxhash64(band_vals) if bucket_by_hash else band_vals
 
-    return sig.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("band"), _bucket(i).alias("bucket"))
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "sig", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    return _bands(sig, bands, bucket, "id", "sig")
+
+
+def _band_pairs(a: DataFrame, b: DataFrame, keep, cols) -> DataFrame:
+    """The one banded-candidate pair step: a ⋈ b on (band, bucket), the
+    rows passing `keep`, projected to `cols` (two aliased ids, then the
+    aliased score), then one row per id pair with its max score.
+
+    r13 optimization (guide §2.3 shuffle metadata, not payloads): the
+    score is computed BEFORE the per-pair dedup. A pair colliding in
+    several bands scores identically each time (the same two rows), so
+    max == the value, and the dedup exchange carries (id, id, score)
+    instead of both payloads (signatures, fingerprints or vectors),
+    with a codegen HashAggregate replacing the SortAggregate that an
+    array first() forced. Measured on the SRP top-k dedup exchange: 2.7
+    MiB for 10 k candidates (~276 B/row, all vector bytes) before;
+    isolated interleaved noop-sink A/B (best of 6) 1.71 s -> 1.46 s.
+    MinHash at sf0.1 was flat (1.45 vs 1.53 s: the per-duplicate
+    re-score costs about what the payload cut saves at that size); it
+    is kept for the exchange-byte cut, which is what matters when
+    candidates are shuffle-bound."""
+    out = a.join(b, ["band", "bucket"]).filter(keep).select(*cols)
+    *ids, score = out.columns
+    return out.groupBy(*ids).agg(F.max(score).alias(score))
+
+
+def _est_jaccard(sig_a: str, sig_b: str, num_hashes: int):
+    """MinHash Jaccard estimate: the share of agreeing signature slots,
+    rounded to 6 places (the form the oracles replay)."""
+    agree = F.size(
+        F.filter(
+            F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
+            lambda v: v == 1,
+        )
+    )
+    return F.round(agree / F.lit(num_hashes), 6)
 
 
 def _lsh_pairs_from_sig(
@@ -328,42 +374,16 @@ def _lsh_pairs_from_sig(
     # the in-engine analog of persisting the bucketed signature table at
     # scale; (id, num_hashes longs) per doc, far smaller than the text.
     sig = sig.localCheckpoint(eager=False)
-
     banded = _band_explode(sig, num_hashes, bands, bucket_by_hash)
-    a, b = banded.alias("a"), banded.alias("b")
-    agree = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
-    # r13 optimization (guide §2.3 shuffle metadata, not payloads):
-    # estimate Jaccard BEFORE the per-pair dedup — a pair colliding in
-    # several bands estimates identically each time (same signatures),
-    # so max == the value, and the dedup exchange carries
-    # (long, long, double) instead of BOTH num_hashes-long signature
-    # arrays (a ~40x per-row byte cut), with a codegen HashAggregate
-    # replacing the SortAggregate that array first() forced. Isolated
-    # interleaved noop-sink A/B at sf0.1: FLAT locally (1.45 vs 1.53
-    # best-of-6 — the per-duplicate zip_with re-score costs about what
-    # the payload cut saves at this size); kept for the exchange-byte
-    # cut, which is what matters when candidates are shuffle-bound.
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
+    return _band_pairs(
+        banded.alias("a"),
+        banded.alias("b"),
+        F.col("a.id") < F.col("b.id"),
+        [
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.round(agree / F.lit(num_hashes), 6).alias("est_jaccard"),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.max("est_jaccard").alias("est_jaccard"))
+            _est_jaccard("a.sig", "b.sig", num_hashes).alias("est_jaccard"),
+        ],
     )
 
 
@@ -513,50 +533,23 @@ def simhash_pairs(
             f"bands={bands} only guarantees recall for hamming ≤ {bands - 1}; "
             f"raise bands to ≥ {max_hamming + 1} for max_hamming={max_hamming}"
         )
-    bits_per_band = validate_banding(64, bands, "SimHash banding")
+    bucket = _bit_bands("simhash", 64, bands, "SimHash banding")
     # the fingerprint build (64-way bit-sum groupBy over exploded
     # tokens) would derive once per self-join side — materialize the
     # (id, simhash) table once
     fp = simhash(df, id_col, text_col).localCheckpoint(eager=False)
-    mask = (1 << bits_per_band) - 1
-    banded = fp.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("simhash"), i * bits_per_band)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("chunk"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "simhash", F.col("bb.band").alias("band"), F.col("bb.chunk").alias("chunk"))
-    a, b = banded.alias("a"), banded.alias("b")
-    hamming = F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb")))
-    # r13: hamming computed BEFORE the per-pair dedup (identical per
-    # duplicate band collision → max == the value), so the dedup
-    # exchange drops the two simhash longs — same rewrite as
-    # _lsh_pairs_from_sig, marginal here but uniform across the family
-    return (
-        a.join(b, ["band", "chunk"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
+    banded = _bands(fp, bands, bucket, "id", "simhash")
+    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    return _band_pairs(
+        banded.alias("a"),
+        banded.alias("b"),
+        F.col("a.id") < F.col("b.id"),
+        [
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("_ha"),
-            F.col("b.simhash").alias("_hb"),
-        )
-        .select("id_a", "id_b", hamming.cast("int").alias("hamming"))
-        .groupBy("id_a", "id_b")
-        .agg(F.max("hamming").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+            hamming.cast("int").alias("hamming"),
+        ],
+    ).filter(F.col("hamming") <= max_hamming)
 
 
 def char_shingles(
@@ -1039,16 +1032,10 @@ def minhash_ingest_dedup(
     probes = _band_explode(sig, num_hashes, bands, bucket_by_hash).select(
         F.col("id").alias("q_id"), F.col("sig").alias("q_sig"), "band", "bucket"
     )
-    agree = F.size(
-        F.filter(
-            F.zip_with("q_sig", "sig", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
     scored = store_banded.join(F.broadcast(probes), ["band", "bucket"]).select(
         "q_id",
         F.col("id").alias("match_id"),
-        F.round(agree / F.lit(num_hashes), 6).alias("est_jaccard"),
+        _est_jaccard("q_sig", "sig", num_hashes).alias("est_jaccard"),
     )
     best = scored.groupBy("q_id").agg(
         F.max("est_jaccard").alias("est_jaccard"),

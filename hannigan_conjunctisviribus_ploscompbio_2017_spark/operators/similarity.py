@@ -21,6 +21,13 @@ oracle-replayable:
 - semantic_dedup        SemDeDup cells + within-cell cosine clumps
 - embedding_near_dup_pairs / embedding_health
 
+Every top-k tier is one skeleton (REPOSE's partition, prune, local
+top-k, merge): _candidates builds the broadcast candidate pairs (IVF
+tiers add cells), the tier's codec scores them, and _rank_topk keeps
+each query's k best. A tier supplies only its codec: item columns,
+query columns, score and direction. The banded searches share
+dedup._bands and dedup._band_pairs with the MinHash/SimHash family.
+
 Dot products run JVM-side via F.zip_with + F.aggregate; every sampled
 artifact (centroids, hyperplanes, codebooks) is an md5-derived plan
 literal, so results are partition-invariant and the DuckDB oracles
@@ -36,9 +43,11 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.dedup import (
+    _band_pairs,
+    _bands,
+    _bit_bands,
     _spread_if_undersplit,
     portable_token_hash,
-    validate_banding,
 )
 
 
@@ -158,22 +167,150 @@ def _py_norm(v: list[float]) -> float:
     return math.sqrt(acc)
 
 
-def _band_cols(num_planes: int, bands: int):
-    """(band, bucket) struct array from a packed `sig` column — the one
-    definition of SRP banding used by every consumer. Validation lives
-    in dedup.validate_banding, shared by every LSH family."""
-    bits_per_band = validate_banding(num_planes, bands, "SRP banding")
-    return F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftright(F.col("sig"), i * bits_per_band)
-                .bitwiseAND(F.lit((1 << bits_per_band) - 1))
-                .alias("bucket"),
-            )
-            for i in range(bands)
-        ]
+def _usable(vec_col: str, dim: int | None = None, nonzero: bool = False):
+    """THE usable-vector row predicate: a non-NULL vector with no NULL
+    element, plus exactly `dim` elements when `dim` is given, plus a
+    nonzero norm when `nonzero`. Degenerate rows must be EXCLUDED before
+    any distance: zip_with pads a short vector with NULLs, so every dot
+    product and subspace L2² goes NULL, and array_sort puts NULL struct
+    fields FIRST. A degenerate item would silently take cell/code 0 in
+    every subspace, a wrong-dim SRP vector would land in bucket 0 of
+    every band, and a degenerate QUERY would rank k arbitrary neighbors
+    with a NULL score (first under an ascending rank). Centroid samples
+    also need `nonzero`: a zero-norm centroid gives every item a NULL
+    cosine distance, which sorts first and would swallow the whole
+    corpus into one cell."""
+    v = F.col(vec_col)
+    ok = v.isNotNull() & ~F.array_contains(F.transform(v, lambda x: x.isNull()), True)
+    if dim is not None:
+        ok = ok & (F.size(vec_col) == dim)
+    if nonzero:
+        ok = ok & (_norm(v) > 0)
+    return ok
+
+
+def _rcos(va: str, vb: str, na: str, nb: str, round_to: int):
+    """The rounded-cosine score of a candidate pair: cosine_pre over two
+    vector columns and their precomputed norm columns, rounded to
+    `round_to` places — the form every oracle replays."""
+    return F.round(cosine_pre(_dot(F.col(va), F.col(vb)), F.col(na), F.col(nb)), round_to)
+
+
+def _cos_cols(side: str, v):
+    """A cosine side's columns: `<side>_vec` and its norm `<side>_nrm`.
+    The norm is a per-ROW column computed upstream of the join, so the
+    per-pair rerank is ONE zip_with pass instead of five array
+    aggregates (cosine() would re-derive each norm twice per pair)."""
+    return [v.alias(f"{side}_vec"), _norm(v).alias(f"{side}_nrm")]
+
+
+def _cosine_codec(v, round_to: int):
+    """Exact-cosine codec of brute_force_topk, srp_lsh_topk and ivf_topk:
+    (item columns, query columns, score, ascending)."""
+    score = _rcos("q_vec", "n_vec", "q_nrm", "n_nrm", round_to).alias("cosine_sim")
+    return _cos_cols("n", v), _cos_cols("q", v), score, False
+
+
+# The top-k skeleton — REPOSE's partition, prune, local top-k, merge.
+# Every tier supplies only a codec: its item columns, its query
+# columns, its score and the score's direction. The IVF tiers add cells
+# (_cell_exprs); SRP swaps the broadcast candidate join for band buckets.
+
+
+def _not_self():
+    """A pair of a query with itself is never a candidate."""
+    return F.col("q_id") != F.col("n_id")
+
+
+def _sides(
+    items: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int | None,
+    n_cols: list,
+    q_cols: list,
+    spread: bool = True,
+) -> tuple[DataFrame, DataFrame]:
+    """Item rows (n_id, *n_cols) and query rows (q_id, *q_cols). A tier
+    that takes `dim` keeps only usable vectors (_usable) on both sides.
+    The item scan is spread when undersplit: a codec's per-row encode is
+    far heavier than the scan itself (_spread_if_undersplit)."""
+    if dim is not None:
+        items = items.filter(_usable(vec_col, dim))
+        queries = queries.filter(_usable(vec_col, dim))
+    if spread:
+        items = _spread_if_undersplit(items)
+    return (
+        items.select(F.col(id_col).alias("n_id"), *n_cols),
+        queries.select(F.col(id_col).alias("q_id"), *q_cols),
     )
+
+
+def _candidates(
+    items: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int | None,
+    codec: tuple,
+    cells: tuple | None = None,
+    n_probe: int | None = None,
+) -> DataFrame:
+    """Candidate pairs of the broadcast tiers, minus self-pairs. A flat
+    tier pairs every item with every broadcast query (one nested-loop
+    pass, never |Q|x|N| cartesian partitions). An IVF tier is its flat
+    codec plus cells (_cell_exprs): the item's assigned cell and the
+    query's n_probe probed cells, joined on the cell, so each query
+    scans n_probe/n_cells of the corpus. The probe array is computed
+    once per query row and exploded after (_explode_probes), so
+    per-query codec columns are not recomputed per probe."""
+    n_cols, q_cols = codec[:2]
+    if cells is not None:
+        cell, probes = cells
+        v = F.col(vec_col)
+        n_cols = [*n_cols, cell(v).alias("cell")]
+        q_cols = [*q_cols, probes(v, n_probe).alias("_cells")]
+    n, q = _sides(items, queries, id_col, vec_col, dim, n_cols, q_cols)
+    if cells is None:
+        pairs = n.crossJoin(F.broadcast(q))
+    else:
+        pairs = n.join(F.broadcast(_explode_probes(q)), "cell")
+    return pairs.filter(_not_self())
+
+
+def _pairs(score, *carry) -> list:
+    """A scored candidate: (query_id, neighbor_id, score, *carry)."""
+    return [F.col("q_id").alias("query_id"), F.col("n_id").alias("neighbor_id"), score, *carry]
+
+
+def _rank_topk(scored: DataFrame, score: str, k: int, ascending: bool) -> DataFrame:
+    """The one per-query top-k: a row-number window over query_id,
+    ordered by (score, neighbor_id) so ties break deterministically. A
+    window on purpose: Spark pushes `rank <= k` into a Partial
+    WindowGroupLimit below the query_id exchange, which then ships at
+    most k rows per (query, partition)."""
+    order = F.asc(score) if ascending else F.desc(score)
+    w = W.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _topk(
+    items: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int | None,
+    k: int,
+    codec: tuple,
+    cells: tuple | None = None,
+    n_probe: int | None = None,
+) -> DataFrame:
+    """Candidates → codec score → per-query top-k: the whole body of
+    every broadcast tier. Returns (query_id, neighbor_id, score, rank)."""
+    cand = _candidates(items, queries, id_col, vec_col, dim, codec, cells, n_probe)
+    scored = cand.select(*_pairs(codec[2]))
+    return _rank_topk(scored, scored.columns[-1], k, codec[3])
 
 
 def brute_force_topk(
@@ -193,38 +330,8 @@ def brute_force_topk(
     sets (small |Q|); broadcast the query side. For corpus-scale ANN use
     srp_lsh_topk.
     """
-    # norms are per-ROW columns attached before the crossJoin: the pair
-    # expression then runs ONE zip_with pass instead of five array
-    # aggregates (cosine() would re-derive each norm twice per pair)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
-    )
-    n = _spread_if_undersplit(items).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_nv"),
-        _norm(F.col(vec_col)).alias("_nn"),
-    )
-    scored = (
-        n.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_pre(
-                    _dot(F.col("_qv"), F.col("_nv")), F.col("_qn"), F.col("_nn")
-                ),
-                round_to,
-            ).alias("cosine_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    codec = _cosine_codec(F.col(vec_col), round_to)
+    return _topk(items, queries, id_col, vec_col, None, k, codec)
 
 
 def embedding_near_dup_pairs(
@@ -254,20 +361,12 @@ def embedding_near_dup_pairs(
     wrong dim nulls every SRP dot product (zip_with pads with nulls),
     every row falls to bucket 0, and the join silently degenerates to
     all-pairs — so it is required rather than defaulted."""
-    a = items.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        _norm(F.col(vec_col)).alias("_na"),
-    )
-    b = items.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        _norm(F.col(vec_col)).alias("_nb"),
-    )
     if exact:
-        # bounded-input baseline: broadcast the right side so the pair
-        # frame is one nested-loop pass, not |a|x|b| cartesian partitions
-        cand = a.crossJoin(F.broadcast(b)).filter(F.col("id_a") < F.col("id_b"))
+        rows = items.select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).alias("vec"),
+            _norm(F.col(vec_col)).alias("_nrm"),
+        )
     else:
         if dim is None:
             raise ValueError(
@@ -275,6 +374,7 @@ def embedding_near_dup_pairs(
                 "embedding dimension for the banded path (a mismatched "
                 "dim silently degrades banding to a single bucket)"
             )
+        bucket = _bit_bands("sig", num_planes, bands, "SRP banding")
         # norm computed once per VECTOR (before the band explode — the
         # exploded copies carry the scalar along); the rerank below is
         # then a single zip_with per candidate pair. Checkpoint: the
@@ -285,61 +385,21 @@ def embedding_near_dup_pairs(
             .withColumn("_nrm", _norm(F.col("vec")))
             .localCheckpoint(eager=False)
         )
-        bandcols = _band_cols(num_planes, bands)
-        banded = sig.select("id", "vec", "_nrm", F.explode(bandcols).alias("bb")).select(
-            "id", "vec", "_nrm", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-        )
-        cand = (
-            banded.select(
-                F.col("id").alias("id_a"),
-                F.col("vec").alias("_va"),
-                F.col("_nrm").alias("_na"),
-                "band",
-                "bucket",
-            )
-            .join(
-                banded.select(
-                    F.col("id").alias("id_b"),
-                    F.col("vec").alias("_vb"),
-                    F.col("_nrm").alias("_nb"),
-                    "band",
-                    "bucket",
-                ),
-                ["band", "bucket"],
-            )
-            .filter(F.col("id_a") < F.col("id_b"))
-        )
-        # r13: score before the per-pair dedup (same argument as
-        # srp_lsh_topk — duplicate band collisions score identically, so
-        # the dedup exchange carries (long, long, double), not vectors)
-        return (
-            cand.select(
-                "id_a",
-                "id_b",
-                F.round(
-                    cosine_pre(
-                        _dot(F.col("_va"), F.col("_vb")), F.col("_na"), F.col("_nb")
-                    ),
-                    round_to,
-                ).alias("cosine_sim"),
-            )
-            .groupBy("id_a", "id_b")
-            .agg(F.max("cosine_sim").alias("cosine_sim"))
-            .filter(F.col("cosine_sim") >= threshold)
-        )
-    return (
-        cand.select(
-            "id_a",
-            "id_b",
-            F.round(
-                cosine_pre(
-                    _dot(F.col("_va"), F.col("_vb")), F.col("_na"), F.col("_nb")
-                ),
-                round_to,
-            ).alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-    )
+        rows = _bands(sig, bands, bucket, "id", "vec", "_nrm")
+    a, b = rows.alias("a"), rows.alias("b")
+    keep = F.col("a.id") < F.col("b.id")
+    cols = [
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
+        _rcos("a.vec", "b.vec", "a._nrm", "b._nrm", round_to).alias("cosine_sim"),
+    ]
+    if exact:
+        # bounded-input baseline: broadcast the right side so the pair
+        # frame is one nested-loop pass, not |a|x|b| cartesian partitions
+        pairs = a.crossJoin(F.broadcast(b)).filter(keep).select(*cols)
+    else:
+        pairs = _band_pairs(a, b, keep, cols)
+    return pairs.filter(F.col("cosine_sim") >= threshold)
 
 
 def _hyperplanes(dim: int, num: int, seed: int = 42) -> list[list[float]]:
@@ -364,8 +424,15 @@ def srp_signature(
     Hyperplanes are literal arrays compiled into the plan (no broadcast
     variable needed; num_planes×dim doubles is tiny).
     """
-    planes = _hyperplanes(dim, num_planes, seed)
     v = F.col(vec_col)
+    return df.select(
+        F.col(id_col).alias("id"), v.alias("vec"), _srp_sig(v, dim, num_planes, seed).alias("sig")
+    )
+
+
+def _srp_sig(v, dim: int, num_planes: int, seed: int):
+    """The packed SRP signature of vector column `v` (srp_signature)."""
+    planes = _hyperplanes(dim, num_planes, seed)
     # ONE transform over a 2-D plane literal instead of num_planes
     # separate dot expressions: building each zip_with/aggregate lambda
     # costs ~20ms of py4j round trips, so 16 planes × 2 call sites was
@@ -374,7 +441,7 @@ def srp_signature(
     # arithmetic (and identical sig values) as the old per-bit sum.
     p2d = _lit_mat(planes)
     pow2 = _lit_longs(1 << i for i in range(num_planes))
-    sig = F.aggregate(
+    return F.aggregate(
         F.transform(
             p2d,
             lambda h, i: F.when(_dot(v, h) >= 0, F.get(pow2, i)).otherwise(
@@ -384,7 +451,6 @@ def srp_signature(
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    return df.select(F.col(id_col).alias("id"), v.alias("vec"), sig.alias("sig"))
 
 
 def srp_lsh_topk(
@@ -406,63 +472,24 @@ def srp_lsh_topk(
     bucketed by (band, bucket)); each query probes its own buckets — the
     item side never cross-joins.
     """
-    bandcols = _band_cols(num_planes, bands)
-
-    def banded(df: DataFrame, label: str) -> DataFrame:
-        # norm once per vector, pre-explode; the rerank is then a
-        # single zip_with per candidate instead of five array passes
-        sig = srp_signature(df, dim, num_planes, id_col, vec_col, seed).withColumn(
-            "_nrm", _norm(F.col("vec"))
-        )
-        return sig.select(
-            F.col("id").alias(f"{label}_id"),
-            F.col("vec").alias(f"{label}_vec"),
-            F.col("_nrm").alias(f"{label}_nrm"),
-            F.explode(bandcols).alias("bb"),
-        ).select(
-            f"{label}_id",
-            f"{label}_vec",
-            f"{label}_nrm",
-            F.col("bb.band").alias("band"),
-            F.col("bb.bucket").alias("bucket"),
-        )
-
-    # deliberately NOT _spread_if_undersplit here: the SRP signature is
-    # one fold over num_planes dots — cheap enough that the gated A/B
+    bucket = _bit_bands("sig", num_planes, bands, "SRP banding")
+    v = F.col(vec_col)
+    sig = _srp_sig(v, dim, num_planes, seed).alias("sig")
+    n_cols, q_cols, score, ascending = _cosine_codec(v, round_to)
+    # deliberately NOT spread (spread=False): the SRP signature is one
+    # fold over num_planes dots — cheap enough that the gated A/B
     # measured the spread's exchange as a net loss (1.19×) on this
     # operator, unlike the PQ/SQ8 encode scans
-    cand = (
-        banded(items, "n")
-        .join(banded(queries, "q"), ["band", "bucket"])
-        .filter(F.col("q_id") != F.col("n_id"))
+    n, q = _sides(
+        items, queries, id_col, vec_col, dim, [*n_cols, sig], [*q_cols, sig], spread=False
     )
-    # r13 optimization (guide §2.3 shuffle metadata, not payloads): score
-    # BEFORE the per-pair dedup. A (q, n) pair colliding in several bands
-    # scores identically each time (same two vectors), so max == the
-    # value — while the dedup exchange now carries (long, long, double)
-    # instead of BOTH embedding arrays, and the aggregate is a codegen
-    # HashAggregate instead of the SortAggregate (+ two array-payload
-    # sorts) that first(vec) forced. Profile: the dedup exchange was
-    # 2.7 MiB for 10 k candidates (~276 B/row, all vector bytes).
-    # Isolated interleaved noop-sink A/B (best of 6): 1.71 s -> 1.46 s.
-    scored = (
-        cand.select(
-            F.col("q_id").alias("query_id"),
-            F.col("n_id").alias("neighbor_id"),
-            F.round(
-                cosine_pre(
-                    _dot(F.col("q_vec"), F.col("n_vec")),
-                    F.col("q_nrm"),
-                    F.col("n_nrm"),
-                ),
-                round_to,
-            ).alias("cosine_sim"),
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("cosine_sim").alias("cosine_sim"))
+    pairs = _band_pairs(
+        _bands(n, bands, bucket, "n_id", "n_vec", "n_nrm"),
+        _bands(q, bands, bucket, "q_id", "q_vec", "q_nrm"),
+        _not_self(),
+        _pairs(score),
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(pairs, "cosine_sim", k, ascending)
 
 
 def _resolve_centroids(
@@ -481,17 +508,11 @@ def _resolve_centroids(
     if centroids is not None:
         return [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
     # degenerate rows must not become centroids: a null vector/element
-    # would hand the driver a None to iterate, and a ZERO-NORM vector
-    # would give every item a NULL cosine distance to that cell — NULL
-    # struct fields sort FIRST in array_sort, so one zero centroid
-    # would swallow the entire corpus into a single cell
+    # would hand the driver a None to iterate, and a zero-norm centroid
+    # swallows the corpus (_usable)
     sel = items.select(
         F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")
-    ).filter(
-        F.col(vec_col).isNotNull()
-        & ~F.array_contains(F.transform(F.col(vec_col), lambda x: x.isNull()), True)
-        & (_norm(F.col(vec_col)) > 0)
-    )
+    ).filter(_usable(vec_col, nonzero=True))
     cent_rows: list = []
     if centroid_frac is not None and 0.0 < centroid_frac < 1.0:
         h = portable_token_hash(F.col("cid").cast("string"))
@@ -566,6 +587,34 @@ def _ranked_cells_expr(cents: list[tuple[int, list[float]]], round_to: int):
     return ranked_cells
 
 
+def _cell_exprs(cents: list[tuple[int, list[float]]], round_to: int):
+    """(cell(v), probes(v, n_probe)) over _ranked_cells_expr: an item's
+    assigned cell (its nearest centroid) and a query's n_probe nearest
+    cell entries, which _explode_probes turns into one row per probed
+    cell. The one definition of both, for the IVF tiers, semantic_dedup,
+    semantic_store and both semantic ingest gates."""
+    ranked_cells = _ranked_cells_expr(cents, round_to)
+
+    def cell(v):
+        return ranked_cells(v)[0]["i"]
+
+    def probes(v, n_probe: int):
+        return F.slice(ranked_cells(v), 1, n_probe)
+
+    return cell, probes
+
+
+def _explode_probes(df: DataFrame, outer: bool = False) -> DataFrame:
+    """Replace the `_cells` probe entries (a projected column, so each
+    query's ranked cells are computed once per row) with one row per
+    probed `cell`. The explode reads an expression, not a bare column:
+    over a bare column Spark infers a size(...) > 0 filter and pushes it
+    below the projection, computing the ranked cells twice per row."""
+    explode = F.explode_outer if outer else F.explode
+    cells = explode(F.transform("_cells", lambda x: x["i"])).alias("cell")
+    return df.select(*[c for c in df.columns if c != "_cells"], cells)
+
+
 def semantic_dedup(
     items: DataFrame,
     tau: float = 0.7,
@@ -596,7 +645,7 @@ def semantic_dedup(
     centroids keep the whole operator a pure function of the data —
     replayable by the DuckDB oracle."""
     cents = _resolve_centroids(items, n_cells, id_col, vec_col, centroid_frac, centroids)
-    ranked_cells = _ranked_cells_expr(cents, round_to)
+    cell, _ = _cell_exprs(cents, round_to)
     # row norm once per row (cell assignment binds its own copy inside
     # the ranked-cells lambda; `_n` feeds the pair rerank)
     base = _spread_if_undersplit(items).select(
@@ -608,7 +657,7 @@ def semantic_dedup(
         "id",
         "_v",
         "_n",
-        ranked_cells(F.col("_v"))[0]["i"].cast("long").alias("cell"),
+        cell(F.col("_v")).cast("long").alias("cell"),
     )
     # the assignment table feeds THREE consumers (both self-join sides
     # and the output join) and Spark shares no plan subtrees — without
@@ -626,15 +675,7 @@ def semantic_dedup(
     dups = (
         a.join(b, "cell")
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            F.round(
-                cosine_pre(
-                    _dot(F.col("_va"), F.col("_vb")), F.col("_na"), F.col("_nb")
-                ),
-                round_to,
-            )
-            >= tau
-        )
+        .filter(_rcos("_va", "_vb", "_na", "_nb", round_to) >= tau)
         .groupBy("id_b")
         .agg(F.min("id_a").alias("_dup_of"))
     )
@@ -676,11 +717,7 @@ def ivf_train_centroids(
     # degenerate rows crash cosine KMeans (zero-norm assertion) or null
     # out the feature vector — same hygiene filter _resolve_centroids
     # applies to the md5-sampled path
-    d = items.filter(
-        F.col(vec_col).isNotNull()
-        & ~F.array_contains(F.transform(F.col(vec_col), lambda x: x.isNull()), True)
-        & (_norm(F.col(vec_col)) > 0)
-    )
+    d = items.filter(_usable(vec_col, nonzero=True))
     if sample_frac is not None and 0.0 < sample_frac < 1.0:
         h = portable_token_hash(F.col(id_col).cast("string"))
         d = d.filter(h < F.lit(int(sample_frac * (1 << 60))))
@@ -741,69 +778,9 @@ def ivf_topk(
     corpus instead of all of it.
     """
     cents = _resolve_centroids(items, n_cells, id_col, vec_col, centroid_frac, centroids)
-    ranked_cells = _ranked_cells_expr(cents, round_to)
-
-    # row norm once per side (own projection, kept by CollapseProject's
-    # non-cheap-expression rule), reused by the n_cells cell distances
-    # AND the candidate rerank
-    nb = _spread_if_undersplit(items).select(
-        F.col(id_col).alias("n_id"),
-        F.col(vec_col).alias("n_vec"),
-        _norm(F.col(vec_col)).alias("n_nrm"),
-    )
-    n = nb.select(
-        "n_id",
-        "n_vec",
-        "n_nrm",
-        ranked_cells(F.col("n_vec"))[0]["i"].alias("cell"),
-    )
-    qb = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_nrm"),
-    )
-    q = qb.select(
-        "q_id",
-        "q_vec",
-        "q_nrm",
-        F.explode(
-            F.transform(
-                F.slice(ranked_cells(F.col("q_vec")), 1, n_probe),
-                lambda x: x["i"],
-            )
-        ).alias("cell"),
-    )
-    cand = n.join(F.broadcast(q), "cell").filter(F.col("q_id") != F.col("n_id"))
-    scored = cand.select(
-        F.col("q_id").alias("query_id"),
-        F.col("n_id").alias("neighbor_id"),
-        F.round(
-            cosine_pre(
-                _dot(F.col("q_vec"), F.col("n_vec")),
-                F.col("q_nrm"),
-                F.col("n_nrm"),
-            ),
-            round_to,
-        ).alias("cosine_sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def _pq_usable(vec_col: str, dim: int):
-    """Row predicate for the PQ encode/score paths: null vectors, null
-    elements, and wrong-length vectors must be EXCLUDED before any
-    subspace distance — zip_with pads a short slice with nulls, every
-    per-subspace L2² goes NULL, and array_sort puts NULL struct fields
-    FIRST, so a degenerate row would silently take code 0 in every
-    subspace (and a degenerate QUERY would rank k arbitrary neighbors
-    with NULL adc_dist at the top: NULLs sort first under ASC).  Same
-    hazard _resolve_centroids documents for the IVF cells."""
-    return (
-        F.col(vec_col).isNotNull()
-        & ~F.array_contains(F.transform(F.col(vec_col), lambda x: x.isNull()), True)
-        & (F.size(vec_col) == dim)
-    )
+    cells = _cell_exprs(cents, round_to)
+    codec = _cosine_codec(F.col(vec_col), round_to)
+    return _topk(items, queries, id_col, vec_col, dim, k, codec, cells, n_probe)
 
 
 # hard cap on driver-collected codebook size (doubles): 2^18 ≈ 2 MiB as
@@ -844,11 +821,7 @@ def _pq_codebooks(
     dsub = dim // m
     sel = items.select(
         F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")
-    ).filter(
-        F.col(vec_col).isNotNull()
-        & ~F.array_contains(F.transform(F.col(vec_col), lambda x: x.isNull()), True)
-        & (F.size(vec_col) == dim)
-    )
+    ).filter(_usable(vec_col, dim))
     rows = sel.orderBy(F.md5(F.col("cid").cast("string"))).limit(k).collect()
     if len(rows) < k:
         raise ValueError(
@@ -934,6 +907,32 @@ def _pq_exprs(cbs: list[list[list[float]]], dsub: int, round_to: int):
     return code_expr, dtable_expr, adc_expr
 
 
+def _pq_codec(
+    items: DataFrame,
+    dim: int,
+    m: int,
+    n_codes: int,
+    id_col: str,
+    vec_col: str,
+    round_to: int,
+    rerank: int | None = None,
+):
+    """PQ codec of pq_topk and ivf_pq_topk: items carry their m codes,
+    queries their m × k ADC table, the score is the ADC distance
+    (ascending). With `rerank`, both sides also carry the vector and its
+    norm for the exact-cosine rerank."""
+    cbs = _pq_codebooks(items, dim, m, n_codes, id_col, vec_col)
+    code_expr, dtable_expr, adc_expr = _pq_exprs(cbs, dim // m, round_to)
+    v = F.col(vec_col)
+    exact = lambda side: _cos_cols(side, v) if rerank else []  # noqa: E731
+    return (
+        [*exact("n"), code_expr(v).alias("codes")],
+        [*exact("q"), dtable_expr(v).alias("dtable")],
+        adc_expr().alias("adc_dist"),
+        True,
+    )
+
+
 def pq_topk(
     items: DataFrame,
     queries: DataFrame,
@@ -969,63 +968,28 @@ def pq_topk(
     N·|Q| vectors).  Returns (query_id, neighbor_id, adc_dist, rank) —
     or with rerank, (query_id, neighbor_id, cosine_sim, rank).
 
-    This is the flat-PQ scan (every code row read per query batch).
-    For the full FAISS-style IVFPQ shape, compose with the IVF cell
-    operators: assign items to cells with ivf_topk's literal-centroid
-    projection (persist bucketed by cell), then run this ADC scan only
-    over the n_probe probed cells — both halves are already
-    partition-invariant and oracle-replayable, so the composition is
-    too."""
-    cbs = _pq_codebooks(items, dim, m, n_codes, id_col, vec_col)
-    code_expr, dtable_expr, adc_expr = _pq_exprs(cbs, dim // m, round_to)
-    items = _spread_if_undersplit(items.filter(_pq_usable(vec_col, dim)))
-    queries = queries.filter(_pq_usable(vec_col, dim))
-
-    n = items.select(
-        F.col(id_col).alias("n_id"),
-        *( [F.col(vec_col).alias("n_vec"), _norm(F.col(vec_col)).alias("n_nrm")]
-           if rerank else [] ),
-        code_expr(F.col(vec_col)).alias("codes"),
+    This is the flat-PQ scan (every code row read per query batch);
+    ivf_pq_topk is the FAISS-style IVFPQ composition that scans only the
+    n_probe probed cells."""
+    codec = _pq_codec(items, dim, m, n_codes, id_col, vec_col, round_to, rerank)
+    if not rerank:
+        return _topk(items, queries, id_col, vec_col, dim, k, codec)
+    cand = _candidates(items, queries, id_col, vec_col, dim, codec)
+    short = _rank_topk(
+        cand.select(*_pairs(codec[2], "q_vec", "n_vec", "q_nrm", "n_nrm")),
+        "adc_dist",
+        rerank,
+        True,
     )
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        *( [F.col(vec_col).alias("q_vec"), _norm(F.col(vec_col)).alias("q_nrm")]
-           if rerank else [] ),
-        dtable_expr(F.col(vec_col)).alias("dtable"),
-    )
-    pairs = (
-        n.crossJoin(F.broadcast(q))
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("adc_dist", adc_expr())
-    )
-    if rerank:
-        w_pre = W.partitionBy("q_id").orderBy(F.asc("adc_dist"), F.asc("n_id"))
-        cand = (
-            pairs.withColumn("_pre", F.row_number().over(w_pre))
-            .filter(F.col("_pre") <= rerank)
-        )
-        scored = cand.select(
-            F.col("q_id").alias("query_id"),
-            F.col("n_id").alias("neighbor_id"),
-            F.round(
-                cosine_pre(
-                    _dot(F.col("q_vec"), F.col("n_vec")), F.col("q_nrm"), F.col("n_nrm")
-                ),
-                round_to,
-            ).alias("cosine_sim"),
-        )
-        w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-        return scored.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= k
-        )
-    scored = pairs.select(
-        F.col("q_id").alias("query_id"),
-        F.col("n_id").alias("neighbor_id"),
-        F.col("adc_dist"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _rank_topk(
+        short.select(
+            "query_id",
+            "neighbor_id",
+            _rcos("q_vec", "n_vec", "q_nrm", "n_nrm", round_to).alias("cosine_sim"),
+        ),
+        "cosine_sim",
+        k,
+        False,
     )
 
 
@@ -1061,39 +1025,9 @@ def ivf_pq_topk(
     Returns (query_id, neighbor_id, adc_dist, rank); ranking is by
     quantized distance (ties by id), as in pq_topk."""
     cents = _resolve_centroids(items, n_cells, id_col, vec_col, centroid_frac, centroids)
-    ranked_cells = _ranked_cells_expr(cents, round_to)
-    cbs = _pq_codebooks(items, dim, m, n_codes, id_col, vec_col)
-    code_expr, dtable_expr, adc_expr = _pq_exprs(cbs, dim // m, round_to)
-    items = _spread_if_undersplit(items.filter(_pq_usable(vec_col, dim)))
-    queries = queries.filter(_pq_usable(vec_col, dim))
-
-    n = items.select(
-        F.col(id_col).alias("n_id"),
-        ranked_cells(F.col(vec_col))[0]["i"].alias("cell"),
-        code_expr(F.col(vec_col)).alias("codes"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        dtable_expr(F.col(vec_col)).alias("dtable"),
-        F.explode(
-            F.transform(
-                F.slice(ranked_cells(F.col(vec_col)), 1, n_probe), lambda x: x["i"]
-            )
-        ).alias("cell"),
-    )
-    scored = (
-        n.join(F.broadcast(q), "cell")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("n_id").alias("neighbor_id"),
-            adc_expr().alias("adc_dist"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    cells = _cell_exprs(cents, round_to)
+    codec = _pq_codec(items, dim, m, n_codes, id_col, vec_col, round_to)
+    return _topk(items, queries, id_col, vec_col, dim, k, codec, cells, n_probe)
 
 
 def embedding_health(
@@ -1150,7 +1084,7 @@ def _sq8_params(
     bounded-collect contract as _resolve_centroids/_pq_codebooks.
     step = (max−min)/255; a constant dimension gets step 0 (its codes
     collapse to 0 and reconstruct to the constant)."""
-    sel = items.filter(_pq_usable(vec_col, dim))
+    sel = items.filter(_usable(vec_col, dim))
     aggs = []
     for j in range(dim):
         x = F.col(vec_col)[j].cast("double")
@@ -1164,40 +1098,47 @@ def _sq8_params(
     return mins, steps
 
 
-def _sq8_exprs(mins: list[float], steps: list[float]):
-    """(code_expr, recon_expr) over the fitted per-dimension grid —
-    shared by the flat sq8_topk scan and the composed ivf_sq8_topk.
+def _sq8_codec(items: DataFrame, dim: int, vec_col: str, round_to: int):
+    """SQ8 codec of sq8_topk and ivf_sq8_topk, over the fitted
+    per-dimension grid: items carry their reconstruction, queries stay
+    full-precision, the score is the asymmetric reconstructed L2²
+    (ascending).
     code: round HALF_UP to the grid, clamped to [0, 255] (FP noise at
     the extremes can land a hair outside); constant dims → 0.
     recon: min_j + code_j·step_j."""
+    mins, steps = _sq8_params(items, dim, vec_col)
     mins_l = _lit_vec(mins)
     steps_l = _lit_vec(steps)
-
-    def code_expr(v):
-        return F.transform(
-            v,
-            lambda x, i: F.when(
-                F.get(steps_l, i) > 0,
-                F.least(
-                    F.lit(255),
-                    F.greatest(
-                        F.lit(0),
-                        F.round(
-                            (x.cast("double") - F.get(mins_l, i)) / F.get(steps_l, i),
-                            0,
-                        ).cast("int"),
-                    ),
+    v = F.col(vec_col)
+    codes = F.transform(
+        v,
+        lambda x, i: F.when(
+            F.get(steps_l, i) > 0,
+            F.least(
+                F.lit(255),
+                F.greatest(
+                    F.lit(0),
+                    F.round(
+                        (x.cast("double") - F.get(mins_l, i)) / F.get(steps_l, i),
+                        0,
+                    ).cast("int"),
                 ),
-            ).otherwise(F.lit(0)),
-        )
-
-    def recon_expr(codes):
-        return F.transform(
-            codes,
-            lambda c, i: F.get(mins_l, i) + c.cast("double") * F.get(steps_l, i),
-        )
-
-    return code_expr, recon_expr
+            ),
+        ).otherwise(F.lit(0)),
+    )
+    recon = F.transform(
+        codes, lambda c, i: F.get(mins_l, i) + c.cast("double") * F.get(steps_l, i)
+    )
+    l2sq = F.aggregate(
+        F.zip_with(
+            F.col("recon"),
+            F.col("q_vec"),
+            lambda x, y: (x - y.cast("double")) * (x - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, d: acc + d,
+    )
+    return [recon.alias("recon")], [v.alias("q_vec")], F.round(l2sq, round_to).alias("sq_dist"), True
 
 
 def sq8_topk(
@@ -1226,45 +1167,13 @@ def sq8_topk(
     bytes than raw float32, 8x than float64); decode cost is linear in
     scanned rows, NOT pairs beyond the zip_with.  This is the flat
     exhaustive scan (every code row per query batch, broadcast
-    nested-loop like pq_topk) — compose with IVF cells exactly as
-    ivf_pq_topk does when the scan itself must be sublinear.
+    nested-loop like pq_topk); ivf_sq8_topk adds IVF cells when the
+    scan itself must be sublinear.
 
     Returns (query_id, neighbor_id, sq_dist, rank): L2² against the
     reconstructed items, rank asc (ties by neighbor id)."""
-    mins, steps = _sq8_params(items, dim, vec_col)
-    code_expr, recon_expr = _sq8_exprs(mins, steps)
-    items = _spread_if_undersplit(items.filter(_pq_usable(vec_col, dim)))
-    queries = queries.filter(_pq_usable(vec_col, dim))
-
-    n = items.select(
-        F.col(id_col).alias("n_id"),
-        recon_expr(code_expr(F.col(vec_col))).alias("recon"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-    )
-    l2sq = F.aggregate(
-        F.zip_with(
-            F.col("recon"),
-            F.col("q_vec"),
-            lambda x, y: (x - y.cast("double")) * (x - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    scored = (
-        n.crossJoin(F.broadcast(q))
-        .filter(F.col("q_id") != F.col("n_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("n_id").alias("neighbor_id"),
-            F.round(l2sq, round_to).alias("sq_dist"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("sq_dist"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    codec = _sq8_codec(items, dim, vec_col, round_to)
+    return _topk(items, queries, id_col, vec_col, dim, k, codec)
 
 
 def ivf_sq8_topk(
@@ -1301,48 +1210,9 @@ def ivf_sq8_topk(
     scan — pinned as a parity test.  Returns (query_id, neighbor_id,
     sq_dist, rank); rank asc by quantized distance, ties by id."""
     cents = _resolve_centroids(items, n_cells, id_col, vec_col, centroid_frac, centroids)
-    ranked_cells = _ranked_cells_expr(cents, round_to)
-    mins, steps = _sq8_params(items, dim, vec_col)
-    code_expr, recon_expr = _sq8_exprs(mins, steps)
-    items = _spread_if_undersplit(items.filter(_pq_usable(vec_col, dim)))
-    queries = queries.filter(_pq_usable(vec_col, dim))
-
-    n = items.select(
-        F.col(id_col).alias("n_id"),
-        ranked_cells(F.col(vec_col))[0]["i"].alias("cell"),
-        recon_expr(code_expr(F.col(vec_col))).alias("recon"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(
-            F.transform(
-                F.slice(ranked_cells(F.col(vec_col)), 1, n_probe), lambda x: x["i"]
-            )
-        ).alias("cell"),
-    )
-    l2sq = F.aggregate(
-        F.zip_with(
-            F.col("recon"),
-            F.col("q_vec"),
-            lambda x, y: (x - y.cast("double")) * (x - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    scored = (
-        n.join(F.broadcast(q), "cell")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("n_id").alias("neighbor_id"),
-            F.round(l2sq, round_to).alias("sq_dist"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("sq_dist"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    cells = _cell_exprs(cents, round_to)
+    codec = _sq8_codec(items, dim, vec_col, round_to)
+    return _topk(items, queries, id_col, vec_col, dim, k, codec, cells, n_probe)
 
 
 def sampled_centroids(
@@ -1387,10 +1257,10 @@ def semantic_store(
     Pass the SAME centroids to semantic_ingest_dedup (or let both
     default to the md5-sampled resolve over this df's vectors)."""
     cents = _resolve_centroids(df, n_cells, id_col, vec_col, centroid_frac, centroids)
-    ranked_cells = _ranked_cells_expr(cents, round_to)
-    return df.filter(_pq_usable(vec_col, dim)).select(
+    cell, _ = _cell_exprs(cents, round_to)
+    return df.filter(_usable(vec_col, dim)).select(
         F.col(id_col).alias("id"),
-        ranked_cells(F.col(vec_col))[0]["i"].alias("cell"),
+        cell(F.col(vec_col)).alias("cell"),
         F.col(vec_col).alias("vec"),
         _norm(F.col(vec_col)).alias("norm"),
     )
@@ -1435,9 +1305,7 @@ def semantic_ingest_dedup(
     work is one zip_with (both norms precomputed); the only exchange
     is the delta-sized per-doc max aggregation (map-side combined).
     Plan-guarded in test_plan_shapes."""
-    ranked_cells = _ranked_cells_expr(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)], round_to
-    )
+    _, probes = _cell_exprs(list(enumerate(centroids)), round_to)
     # NO checkpoint here, deliberately: a localCheckpoint would replace
     # the delta's filtered scan with a LogicalRDD and erase the
     # selective predicate dynamic partition pruning needs to see on the
@@ -1445,23 +1313,16 @@ def semantic_ingest_dedup(
     # scale property) would silently vanish.  The delta subtree is a
     # pushdown-filtered scan; computing it twice (probes + final
     # rejoin) is noise next to that.
-    delta = incoming.filter(_pq_usable(vec_col, dim)).select(
+    delta = incoming.filter(_usable(vec_col, dim)).select(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("q_vec"),
         _norm(F.col(vec_col)).alias("q_norm"),
-        F.slice(ranked_cells(F.col(vec_col)), 1, n_probe).alias("_cells"),
+        probes(F.col(vec_col), n_probe).alias("_cells"),
     )
-    probes = delta.select(
-        "q_id", "q_vec", "q_norm",
-        F.explode(F.transform("_cells", lambda x: x["i"])).alias("cell"),
-    )
-    pairs = store.join(F.broadcast(probes), "cell").select(
+    pairs = store.join(F.broadcast(_explode_probes(delta)), "cell").select(
         "q_id",
         F.col("id").alias("match_id"),
-        F.round(
-            cosine_pre(_dot(F.col("q_vec"), F.col("vec")), F.col("q_norm"), F.col("norm")),
-            round_to,
-        ).alias("cosine"),
+        _rcos("q_vec", "vec", "q_norm", "norm", round_to).alias("cosine"),
     ).filter(F.col("cosine").isNotNull())
     # the NULL filter is load-bearing twice over: cosine is undefined
     # against zero-norm rows (either side), and a NULL first field would
@@ -1483,7 +1344,7 @@ def semantic_ingest_dedup(
     # distinct status instead of a false 'new' admission
     base = incoming.select(
         F.col(id_col).alias("q_id"),
-        _pq_usable(vec_col, dim).alias("_usable"),
+        _usable(vec_col, dim).alias("_usable"),
     )
     return (
         base.join(F.broadcast(best), "q_id", "left")

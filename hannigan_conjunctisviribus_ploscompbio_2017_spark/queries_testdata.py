@@ -3415,7 +3415,7 @@ def _ivf_sq8_oracle(
     from probed cells, distances only from reconstructed codes.  Cell
     assignment replays over ALL vectors (as _resolve_centroids sees
     them); the candidate/score sides restrict to the usable (non-null,
-    full-dim) rows the engine's _pq_usable filter keeps."""
+    full-dim) rows the engine's _usable filter keeps."""
     cos = """SUM(CAST(t.v[j] AS DOUBLE) * CAST(c.cv[j] AS DOUBLE))
                / (SQRT(SUM(CAST(t.v[j] AS DOUBLE) * CAST(t.v[j] AS DOUBLE)))
                   * SQRT(SUM(CAST(c.cv[j] AS DOUBLE) * CAST(c.cv[j] AS DOUBLE))))"""

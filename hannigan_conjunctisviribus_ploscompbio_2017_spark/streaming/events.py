@@ -277,7 +277,10 @@ def streaming_near_dup_candidates(
     pipeline."""
     import pandas as pd
 
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.dedup import validate_banding
+    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.dedup import (
+        _bands,
+        validate_banding,
+    )
 
     rows_per_band = validate_banding(num_hashes, bands, "MinHash banding")
     sig = events.select(
@@ -285,21 +288,14 @@ def streaming_near_dup_candidates(
         "ts",
         *minhash_sig_cols(text_col, k_shingle, num_hashes),
     ).filter(F.col("h0").isNotNull())  # docs shorter than k tokens: no signature
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.xxhash64(
-                    F.array(*[F.col(f"h{i * rows_per_band + j}") for j in range(rows_per_band)])
-                ).alias("bucket"),
-            )
-            for i in range(bands)
-        ]
-    )
-    banded = sig.select(
-        "event_id", "ts", F.explode(band_structs).alias("bb")
-    ).select(
-        "event_id", "ts", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    banded = _bands(
+        sig,
+        bands,
+        lambda i: F.xxhash64(
+            F.array(*[F.col(f"h{i * rows_per_band + j}") for j in range(rows_per_band)])
+        ),
+        "event_id",
+        "ts",
     )
 
     out_schema = T.StructType(
@@ -669,47 +665,33 @@ def streaming_semantic_ingest(
     import pandas as pd
 
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.similarity import (
-        _dot,
+        _cell_exprs,
+        _explode_probes,
         _norm,
-        _pq_usable,
-        _ranked_cells_expr,
-        cosine_pre,
+        _rcos,
+        _usable,
     )
 
-    ranked_cells = _ranked_cells_expr(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)], round_to
-    )
-    usable = _pq_usable(vec_col, dim)
+    _, probe_cells = _cell_exprs(list(enumerate(centroids)), round_to)
+    usable = _usable(vec_col, dim)
     probes = emb_stream.select(
         F.col(id_col).alias("q_id"),
         F.col(ts_col).alias("ts"),
         usable.alias("_usable"),
         F.col(vec_col).alias("q_vec"),
         F.when(usable, _norm(F.col(vec_col))).alias("q_norm"),
-        # explode_outer, not explode: an unusable doc has NULL probes
-        # and must keep exactly one (NULL-cell) row so it reaches the
-        # reduce — a plain explode would drop it from the stream
-        F.explode_outer(
-            F.when(
-                usable,
-                F.transform(
-                    F.slice(ranked_cells(F.col(vec_col)), 1, n_probe),
-                    lambda x: x["i"],
-                ),
-            )
-        ).alias("cell"),
+        F.when(usable, probe_cells(F.col(vec_col), n_probe)).alias("_cells"),
     )
+    # outer: an unusable doc has NULL probes and must keep exactly one
+    # (NULL-cell) row so it reaches the reduce — a plain explode would
+    # drop it from the stream
+    probes = _explode_probes(probes, outer=True)
     pairs = probes.join(F.broadcast(store), "cell", "left").select(
         "q_id",
         "ts",
         "_usable",
         F.col("id").alias("match_id"),
-        F.round(
-            cosine_pre(
-                _dot(F.col("q_vec"), F.col("vec")), F.col("q_norm"), F.col("norm")
-            ),
-            round_to,
-        ).alias("cosine"),
+        _rcos("q_vec", "vec", "q_norm", "norm", round_to).alias("cosine"),
     )
 
     id_type = emb_stream.schema[id_col].dataType

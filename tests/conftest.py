@@ -1,8 +1,11 @@
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, so pytest in any checkout tests its own package
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.session import get_spark
 

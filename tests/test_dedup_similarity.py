@@ -142,6 +142,20 @@ def test_srp_lsh_recall_vs_brute_force(spark):
     approx_top = {r.query_id: r.neighbor_id for r in approx}
     hits = sum(1 for k, v in exact_top.items() if approx_top.get(k) == v)
     assert hits >= 6  # recall@1 ≥ 0.6 with 8 bands of 2 bits on random data
+    # wrong-dim vectors are unusable on both sides: they would hash to
+    # bucket 0 of every band (every projection dot NULL) and score NULL
+    bad = _wrong_dim(spark)
+    assert similarity.srp_lsh_topk(emb, bad, dim=8, k=3, num_planes=16, bands=8).count() == 0
+    rows = similarity.srp_lsh_topk(
+        emb.unionByName(bad), q, dim=8, k=300, num_planes=16, bands=8
+    ).collect()
+    assert rows and all(r.cosine_sim is not None for r in rows)
+    assert 999 not in {r.neighbor_id for r in rows}
+
+
+def _wrong_dim(spark):
+    """One 2-element vector (id 999) for the 8-d fixtures."""
+    return spark.createDataFrame([(999, [1.0, 0.0])], "vec_id long, embedding array<float>")
 
 
 def test_ivf_topk_recall_and_determinism(spark):
@@ -161,6 +175,16 @@ def test_ivf_topk_recall_and_determinism(spark):
                    similarity.ivf_topk(emb.repartition(7), q, dim=8, k=1,
                                        n_cells=8, n_probe=4).collect()))
     assert a == b
+    # ivf_topk honours dim: a wrong-dim query gets no rows rather than
+    # k neighbors scored NULL, and a wrong-dim item is never a candidate
+    # (full probe, so every usable item is one)
+    bad = _wrong_dim(spark)
+    assert similarity.ivf_topk(emb, bad, dim=8, k=3, n_cells=4, n_probe=1).count() == 0
+    rows = similarity.ivf_topk(
+        emb.unionByName(bad), q, dim=8, k=300, n_cells=8, n_probe=8
+    ).collect()
+    assert rows and all(r.cosine_sim is not None for r in rows)
+    assert 999 not in {r.neighbor_id for r in rows}
 
 
 def test_ivf_trained_centroids_recall(spark):
@@ -1302,7 +1326,7 @@ def test_sq8_topk_near_exact_on_real_embeddings(spark):
     against real neighbor gaps — and degenerate vectors are filtered,
     not scored."""
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.similarity import (
-        _pq_usable,
+        _usable,
         sq8_topk,
     )
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.schemas import load_table
@@ -1311,10 +1335,10 @@ def test_sq8_topk_near_exact_on_real_embeddings(spark):
     q = emb.filter(F.col("vec_id") < 10)
     sq = {r.query_id: r.neighbor_id for r in sq8_topk(emb, q, dim=64, k=1).collect()}
     # exact L2 top-1 via the same pair construction at full precision
-    n = emb.filter(_pq_usable("embedding", 64)).select(
+    n = emb.filter(_usable("embedding", 64)).select(
         F.col("vec_id").alias("n_id"), F.col("embedding").alias("nv")
     )
-    qq = q.filter(_pq_usable("embedding", 64)).select(
+    qq = q.filter(_usable("embedding", 64)).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
     )
     l2 = F.aggregate(
@@ -1341,15 +1365,38 @@ def test_sq8_topk_near_exact_on_real_embeddings(spark):
     assert agree >= len(sq) - 1, (agree, len(sq))
 
 
-def test_ivf_sq8_topk_full_probe_parity_and_recall(spark):
-    """IVF-SQ8 composition invariants: (1) probing ALL cells makes the
-    candidate set the whole corpus, so the result must equal sq8_topk's
-    flat scan row-for-row — the composition adds cells, never changes
-    the distance math; (2) at the default n_probe=4/16 the probed top-1
-    agrees with the flat SQ8 top-1 for most queries (cells are md5-
-    sampled, not trained, so the bar is recall, not equality); (3) the
-    ranking is partition-invariant (centroids and the SQ8 grid are plan
-    literals)."""
+@pytest.mark.parametrize(
+    "ivf_name, flat_name, flat_kw",
+    [
+        ("ivf_topk", "brute_force_topk", {}),
+        ("ivf_pq_topk", "pq_topk", {"dim": 64}),
+        ("ivf_sq8_topk", "sq8_topk", {"dim": 64}),
+    ],
+    ids=["ivf_topk", "ivf_pq_topk", "ivf_sq8_topk"],
+)
+def test_ivf_full_probe_equals_flat_scan(spark, ivf_name, flat_name, flat_kw):
+    """Probing ALL cells (n_probe == n_cells) makes an IVF tier's
+    candidate set the whole corpus, so its result must equal its flat
+    tier's scan row for row: the composition adds cells, never changes
+    the distance math or the ranking."""
+    from hannigan_conjunctisviribus_ploscompbio_2017_spark.schemas import load_table
+
+    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    q = emb.filter(F.col("vec_id") < 10)
+    flat = getattr(similarity, flat_name)(emb, q, k=3, **flat_kw).collect()
+    full_probe = getattr(similarity, ivf_name)(
+        emb, q, dim=64, k=3, n_cells=16, n_probe=16
+    ).collect()
+    assert len(flat) == 30
+    assert sorted(map(tuple, full_probe)) == sorted(map(tuple, flat))
+
+
+def test_ivf_sq8_topk_probed_recall_and_invariance(spark):
+    """IVF-SQ8 at the default n_probe=4/16: (1) the probed top-1 agrees
+    with the flat SQ8 top-1 for most queries (cells are md5-sampled,
+    not trained, so the bar is recall, not equality); (2) the ranking is
+    partition-invariant (centroids and the SQ8 grid are plan literals).
+    Full-probe parity is test_ivf_full_probe_equals_flat_scan."""
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.similarity import (
         ivf_sq8_topk,
         sq8_topk,
@@ -1359,23 +1406,14 @@ def test_ivf_sq8_topk_full_probe_parity_and_recall(spark):
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
 
-    flat = {
-        (r.query_id, r.neighbor_id): (r.sq_dist, r.rank)
-        for r in sq8_topk(emb, q, dim=64, k=3).collect()
+    flat1 = {
+        r.query_id: r.neighbor_id
+        for r in sq8_topk(emb, q, dim=64, k=1).collect()
     }
-    full_probe = {
-        (r.query_id, r.neighbor_id): (r.sq_dist, r.rank)
-        for r in ivf_sq8_topk(
-            emb, q, dim=64, k=3, n_cells=16, n_probe=16
-        ).collect()
-    }
-    assert full_probe == flat
-
     probed = {
         r.query_id: r.neighbor_id
         for r in ivf_sq8_topk(emb, q, dim=64, k=1).collect()
     }
-    flat1 = {qi: ni for (qi, ni), (_d, rk) in flat.items() if rk == 1}
     assert probed.keys() == flat1.keys()
     agree = sum(probed[k] == flat1[k] for k in probed)
     assert agree >= len(probed) * 0.5, (agree, len(probed))

@@ -3,6 +3,7 @@ refactors — filters reach the parquet scan, dimension joins broadcast,
 blob columns prune. These assert on .explain output, the same checks done
 interactively while tuning (README '100 TB design notes')."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.queries_testdata import QUERIES
@@ -358,18 +359,20 @@ def test_pq_rerank_plan_shape(spark):
     assert len(re.findall(r"\(\d+\) Exchange\b", p)) <= 2
 
 
-def test_ivf_pq_topk_plan_cell_join_not_cross(spark):
-    """The composed IVF-PQ pair stage must be a hash join ON THE CELL
+@pytest.mark.parametrize("tier", ["ivf_topk", "ivf_pq_topk", "ivf_sq8_topk"])
+def test_ivf_plan_cell_join_not_cross(spark, tier):
+    """Every IVF tier's pair stage must be a hash join ON THE CELL
     (broadcast query probes), never a cross/nested-loop over all items
-    — cells bounding the scan is the operator's entire point — and the
-    per-pair work stays ADC lookups (no per-pair zip_with aggregates:
-    codes/dtable are computed once per row upstream)."""
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.similarity import ivf_pq_topk
+    — cells bounding the scan is the composition's entire point — and
+    the per-pair work stays the codec's score over columns computed once
+    per ROW upstream (vectors and norms, PQ codes and ADC tables, SQ8
+    reconstructions)."""
+    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators import similarity
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.schemas import load_table
 
     emb = load_table(spark, SF0001, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    p = plan_of(ivf_pq_topk(emb, q, dim=64, k=5))
+    p = plan_of(getattr(similarity, tier)(emb, q, dim=64, k=5))
     assert "BroadcastHashJoin" in p  # probe join keyed on cell
     assert "BroadcastNestedLoopJoin" not in p
     assert "CartesianProduct" not in p
@@ -457,23 +460,6 @@ def test_ingest_dedup_store_scan_never_shuffles(spark, tmp_path):
     # every wide exchange is delta-bounded: the distinct feeding the
     # broadcast build, the matched-set distinct, the keeper window
     assert len(re.findall(r"\(\d+\) Exchange\b", p)) == 3
-
-
-def test_ivf_sq8_topk_plan_cell_join_not_cross(spark):
-    """Like ivf_pq: the IVF-SQ8 pair stage must be a hash join ON THE
-    CELL (broadcast query probes), never a cross/nested-loop over all
-    items — cells bounding the scan is the composition's entire point;
-    reconstruction is a per-ROW transform upstream of the join."""
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.similarity import ivf_sq8_topk
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.schemas import load_table
-
-    emb = load_table(spark, SF0001, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5)
-    p = plan_of(ivf_sq8_topk(emb, q, dim=64, k=5))
-    assert "BroadcastHashJoin" in p  # probe join keyed on cell
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "CartesianProduct" not in p
-    assert "SortMergeJoin" not in p
 
 
 def test_semantic_ingest_store_dpp_and_single_exchange(spark, tmp_path):
