@@ -6,25 +6,28 @@ bin/compareTwins.R:95-104 in the reference code).  Three scale regimes:
 
 1. **Per-group, in-task** (many small per-sample subgraphs): every
    kernel takes a `group_cols` argument and NEVER runs one job per
-   subgraph.  One helper, `_per_group`, runs a kernel's solve on each
-   group inside one applyInPandas task, with the group and node
-   columns in their input types.  Exact betweenness, alpha centrality
-   and greedy modularity always solve this way (lazily, in the
-   consumer's job), as does approx_betweenness below
-   `_LOCAL_BRANDES_NODES` nodes.  When the whole static graph has at
-   most `_IN_TASK_ROWS` adjacency rows, eigenvector centrality,
-   PageRank and components also solve each group's whole iteration
-   this way (`_in_task`, which checkpoints the output): a fixed
-   handful of Spark jobs, however many iterations.  A superstep costs
-   several jobs whatever the graph's size, so at this scale the job
-   overhead is the whole cost.
+   subgraph.  One helper, `_per_group`, hash-partitions the rows on
+   the group columns and runs a kernel's solve once per PARTITION
+   (one mapInPandas call), with the group and node columns in their
+   input types.  Exact betweenness, alpha centrality and greedy
+   modularity always solve this way (lazily, in the consumer's job),
+   as does approx_betweenness below `_LOCAL_BRANDES_NODES` nodes;
+   their solves stay per group, looped over the partition's groups by
+   `_each_group`.  When the static graph's LARGEST group has at most
+   `_IN_TASK_ROWS` adjacency rows, eigenvector centrality, PageRank
+   and components also run their whole iteration this way (`_in_task`,
+   which checkpoints the output), vectorized over all the partition's
+   groups at once on (group, node) integer codes (`_graph_codes`): a
+   fixed handful of Spark jobs, however many iterations and groups.  A
+   superstep costs several jobs whatever the graph's size, so at this
+   scale the job overhead is the whole cost.
 
-2. **Per-group, superstep** (grouped graphs above the cutoff): the
-   iterative kernels compute ALL subgraphs jointly, keying every
-   intermediate on the group columns, one shuffle per superstep
-   whatever the number of groups — the §7 risk-register design:
-   per-sample fan-out as grouped aggregation.  Both per-group regimes
-   give the same rounded output.
+2. **Per-group, superstep** (grouped graphs with a group above the
+   cutoff): the iterative kernels compute ALL subgraphs jointly,
+   keying every intermediate on the group columns, one shuffle per
+   superstep whatever the number of groups — the §7 risk-register
+   design: per-sample fan-out as grouped aggregation.  Both per-group
+   regimes give the same rounded output.
 
 3. **Global iterative kernels** (one big graph): power iteration /
    frontier expansion expressed as a DataFrame loop with per-superstep
@@ -47,16 +50,16 @@ Read-once rule: a kernel derives each input exactly once per call.
 Inputs are usually lazy plans (a Q5 join, a pipeline stage), and every
 extra reference to one is a full recomputation.  `symmetrize` reads
 its input in one pass, and the iterative kernels build their static
-graph once through `_static_graph` — symmetrize, weight, the kernel's
-per-group constants (eigenvector's shift as self-loops of A + sI,
-PageRank's transition weights and group sizes), one checkpoint — so
-each superstep moves only the score/label messages.  BFS and
-approx_betweenness checkpoint their adjacency first too, and derive
-their node set and roots from that checkpoint.
+graph once through `_static_graph` — symmetrize, weight, one
+checkpoint whose own job also observes the row counts that pick the
+regime — so each superstep moves only the score/label messages.  BFS
+and approx_betweenness checkpoint their adjacency first too, and
+derive their node set and roots from that checkpoint.
 """
 
 from __future__ import annotations
 
+import itertools
 import math
 import os
 import warnings
@@ -272,13 +275,15 @@ class _loop_shuffle_width:
     every iteration; for the (very common) case of many SMALL per-sample
     subgraphs the per-task overhead then dominates — measured 31s → 4s on
     the interpersonal-diversity pipeline's 8-iteration eigenvector loop.
-    Width is chosen from the actual edge count (~50k rows/partition),
-    capped at the session default, so big graphs keep full parallelism.
+    Width is chosen from the static graph's row count `n` (~50k
+    rows/partition), capped at the session default, so big graphs keep
+    full parallelism.  `n` comes from the checkpoint's own job
+    (`_counted_checkpoint`), never from a count job of its own.
     """
 
-    def __init__(self, edges: DataFrame, rows_per_partition: int = 50_000):
-        self.spark = edges.sparkSession
-        self.n = edges.count()
+    def __init__(self, spark, n: int, rows_per_partition: int = 50_000):
+        self.spark = spark
+        self.n = n
         default = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         self.width = max(1, min(default, -(-self.n // rows_per_partition)))
 
@@ -292,28 +297,67 @@ class _loop_shuffle_width:
         return False
 
 
+def _counted_checkpoint(df: DataFrame, g: list[str] = ()) -> tuple[DataFrame, int, int]:
+    """`_checkpoint(df)` with its row count and its largest group's row
+    count (the row count again without group columns), observed by the
+    checkpoint's own job — no count job.  The per-group count is a
+    window on `g`: free of a second exchange only when `df` is already
+    partitioned by `g`, as `_static_graph` makes it.
+
+    The metrics are a named `observe`, read back off the checkpointed
+    frame's executed plan.  Not an `Observation` object: in Spark 4.1
+    its first use gives the session an unserializable
+    ObservationManager, and every later MLlib model whose transform
+    captures the session (LogisticRegression's training summary) then
+    fails with "Task not serializable"."""
+    if g:
+        df = df.withColumn("_gn", F.count(F.lit(1)).over(W.partitionBy(*g)))
+    name = f"_sg_counts_{next(_observe_ids)}"
+    largest = F.max("_gn") if g else F.count(F.lit(1))
+    df = df.observe(name, F.count(F.lit(1)).alias("n"), largest.alias("largest"))
+    if g:
+        df = df.drop("_gn")
+    out = _checkpoint(df)
+    row = df._jdf.queryExecution().observedMetrics().get(name).get()
+    return out, row.getLong(0), 0 if row.isNullAt(1) else row.getLong(1)
+
+
+_observe_ids = itertools.count()
+
+
 def _static_graph(
     edges: DataFrame,
     g: list[str],
     weight_col: str | None = None,
     prep=None,
-) -> tuple[DataFrame, _loop_shuffle_width]:
+) -> tuple[DataFrame, _loop_shuffle_width, bool]:
     """Set-up shared by the superstep kernels: the static graph, built
     once per call (the Pregel split — only messages move per superstep).
 
     One read of `edges`: symmetrize, weight column `w` (1.0 when
     `weight_col` is None or absent), then `prep` — the kernel's own
-    static columns, which must also read their input once (a window,
-    not a self-join with its own aggregate) — and one checkpoint.
-    Without it a lazy input (a Q5 join, a pipeline stage) is recomputed
-    by every job that reads it.  Returns the checkpointed adjacency and
-    the loop's shuffle-width pin, whose `n` is the adjacency's row
-    count."""
-    und = symmetrize(edges, g)
+    static columns, which must also read their input once — and one
+    checkpoint.  Without it a lazy input (a Q5 join, a pipeline stage)
+    is recomputed by every job that reads it.
+
+    The checkpoint's own job observes the adjacency's row count `n` and
+    its largest group's row count, so picking the regime costs no job.
+    Grouped inputs are hash-partitioned on the group columns first:
+    symmetrize's (group, src, dst) aggregate then needs no exchange of
+    its own, and the per-group count window none either.  (A single
+    huge group is symmetrized in one task; the superstep path
+    re-shuffles it by (group, src) from the first superstep on.)
+
+    Returns the checkpointed adjacency, the loop's shuffle-width pin
+    over `n`, and whether the in-task regime applies: the largest group
+    has at most `_IN_TASK_ROWS` rows.  Routing on the largest group, not
+    the total, keeps a study of many small samples in-task at any
+    size."""
+    und = symmetrize(edges.repartition(*g) if g else edges, g)
     w = F.col(weight_col) if (weight_col and weight_col in und.columns) else F.lit(1.0)
     adj = und.select(*g, "src", "dst", w.cast("double").alias("w"))
-    adj = _checkpoint(prep(adj) if prep else adj)
-    return adj, _loop_shuffle_width(adj)
+    adj, n, largest = _counted_checkpoint(prep(adj) if prep else adj, g)
+    return adj, _loop_shuffle_width(adj.sparkSession, n), largest <= _IN_TASK_ROWS
 
 
 def _str_ids(und: DataFrame, g: list[str], *keep: str) -> DataFrame:
@@ -323,52 +367,83 @@ def _str_ids(und: DataFrame, g: list[str], *keep: str) -> DataFrame:
     return und.select(*g, F.col("src").cast("string"), F.col("dst").cast("string"), *keep)
 
 
-# Static graphs (symmetrized adjacency rows over all groups, the
-# `_static_graph` size probe) at or below this size take the in-task
-# regime.  A superstep costs several Spark jobs whatever the graph's
-# size, so on small grouped graphs the job overhead is the whole cost.
+# Static graphs whose largest group has at most this many symmetrized
+# adjacency rows take the in-task regime, and an in-task partition
+# holds about this many rows at most.  A superstep costs several Spark
+# jobs whatever the graph's size, so on small per-group graphs the job
+# overhead is the whole cost.
 _IN_TASK_ROWS = 500_000
 # approx_betweenness solves graphs of at most this many nodes in one
 # task (see its docstring); 0 forces the superstep path.
 _LOCAL_BRANDES_NODES = 8192
 
 
-def _per_group(rows: DataFrame, g: list[str], out: str, solve) -> DataFrame:
-    """Run `solve` once per group inside one applyInPandas task — the
-    one per-group solve path of the module, lazy.
+def _per_group(rows: DataFrame, g: list[str], out: str, solve, width: int | None = None) -> DataFrame:
+    """Run `solve` once per partition of `rows` hash-partitioned on the
+    group columns — the one per-group solve path of the module (one
+    mapInPandas call), lazy.
 
-    `solve` gets one group's rows as a pandas frame and returns a frame
-    with `node` and the kernel's value columns; `out` declares those
-    columns ("<name> <type>, ...").  Group and node columns keep their
-    native types (read off `rows`), and the group values are copied
-    into every output row, so the solve never sees them.  Without group
-    columns the whole graph is one group (the `_g` stand-in, dropped by
-    the caller's select).  Kernels with a superstep path round
-    JVM-side, so HALF_UP rounding matches on both paths."""
+    `solve(pdf, g)` gets a whole partition as one pandas frame — every
+    row of each of its groups, group columns `g` included — and returns
+    a frame with the group columns, `node` and the kernel's value
+    columns; `out` declares the value columns ("<name> <type>, ...").
+    Solves written for one group at a time go through `_each_group`.
+    One Python call per partition, not per group: per-group Arrow
+    batches and calls cost more than the small solves themselves (the
+    form stats.rarefy adopted).  Group and node columns keep their
+    native types (read off `rows`).  Without group columns the whole
+    graph is one group (the `_g` stand-in, dropped by the caller's
+    select).  `width` fixes the partition count (default: the
+    session's shuffle width); peak task memory is one partition, so
+    the in-task callers size it to at most about `_IN_TASK_ROWS` rows.
+    Kernels with a superstep path round JVM-side, so HALF_UP rounding
+    matches on both paths."""
+    import pandas as pd
+
     g_eff = g or ["_g"]
     if not g:
         rows = rows.withColumn("_g", F.lit(1))
     types = {f.name: f.dataType.simpleString() for f in rows.schema.fields}
     schema = ", ".join(f"{c} {types[c]}" for c in g_eff) + f", node {types['src']}, {out}"
 
-    def _solve_group(pdf):
-        res = solve(pdf)
-        for c in g_eff:
-            res[c] = pdf[c].iloc[0]
-        return res
+    def _solve_partition(batches):
+        pdfs = [b for b in batches if len(b)]
+        if pdfs:
+            yield solve(pd.concat(pdfs, ignore_index=True), g_eff)
 
-    return rows.groupBy(*g_eff).applyInPandas(_solve_group, schema=schema)
+    parts = rows.repartition(width, *g_eff) if width else rows.repartition(*g_eff)
+    return parts.mapInPandas(_solve_partition, schema=schema)
+
+
+def _each_group(solve):
+    """Adapt a one-group solve (a group's rows → `node` and value
+    columns) to `_per_group`'s per-partition form: loop over the
+    partition's groups, copying each group's values into its output
+    rows."""
+    import pandas as pd
+
+    def _solve(pdf, g):
+        res = []
+        for _, grp in pdf.groupby(g, sort=False, dropna=False):
+            r = solve(grp.reset_index(drop=True))
+            for c in g:
+                r[c] = grp[c].iloc[0]
+            res.append(r)
+        return pd.concat(res, ignore_index=True)
+
+    return _solve
 
 
 def _in_task(adj: DataFrame, g: list[str], width: _loop_shuffle_width, out: str, solve):
-    """Small-graph regime of the grouped iterative kernels: each group's
+    """In-task regime of the grouped iterative kernels: every group's
     whole iteration runs in `_per_group`, a fixed handful of jobs
-    instead of a loop of supersteps.  The output is checkpointed under
-    the kernel's shuffle-width pin (left lazy, every consumer would
-    re-run the Python solve), then the static graph `adj` is
-    released."""
-    with width:
-        res = _checkpoint(_per_group(adj, g, out, solve))
+    instead of a loop of supersteps.  The partition count is the
+    loop's width, raised to ceil(n / _IN_TASK_ROWS) so a task holds
+    about `_IN_TASK_ROWS` rows at most.  The output is checkpointed
+    (left lazy, every consumer would re-run the Python solve), then
+    the static graph `adj` is released."""
+    parts = max(width.width, -(-width.n // _IN_TASK_ROWS))
+    res = _checkpoint(_per_group(adj, g, out, solve, parts))
     _release(adj)
     return res
 
@@ -409,14 +484,36 @@ def _supersteps(state: DataFrame, width: _loop_shuffle_width, max_iter: int, ste
     return state
 
 
-def _node_codes(pdf):
-    """One group's adjacency as integer codes: (src codes, dst codes,
-    node ids), every node id coded once."""
+def _graph_codes(pdf, g: list[str]):
+    """A partition's adjacency, every group at once, as integer codes:
+    (src, dst, grp, out).  `src`/`dst` code each row's endpoints as a
+    (group, node) pair, `grp[c]` is pair c's group code, and `out`
+    holds each pair's group columns and `node` id, in code order — the
+    frame a solve adds its value column to.  Node ids are factorized
+    sorted, so within a group code order is node-id order (components'
+    min-label rule); per-group reductions are bincounts (or
+    `_group_max`) over `grp`."""
+    import numpy as np
     import pandas as pd
 
-    codes, nodes = pd.factorize(pd.concat([pdf["src"], pdf["dst"]], ignore_index=True))
     m = len(pdf)
-    return codes[:m], codes[m:], nodes
+    gc = pdf.groupby(g, sort=False, dropna=False).ngroup().to_numpy()
+    nc, ids = pd.factorize(pd.concat([pdf["src"], pdf["dst"]], ignore_index=True), sort=True)
+    pc, pairs = pd.factorize(np.concatenate([gc, gc]) * len(ids) + nc, sort=True)
+    grp = pairs // len(ids)
+    first = np.unique(gc, return_index=True)[1]  # each group's first row
+    out = pdf[g].iloc[first[grp]].reset_index(drop=True)
+    out["node"] = np.asarray(ids)[pairs % len(ids)]
+    return pc[:m], pc[m:], grp, out
+
+
+def _group_max(x, grp):
+    """Per-group max of `x` (indexed by group code)."""
+    import numpy as np
+
+    mx = np.full(grp.max() + 1, -np.inf)
+    np.maximum.at(mx, grp, x)
+    return mx
 
 
 # --------------------------------------------------------------------------
@@ -506,8 +603,9 @@ def eigenvector_centrality(
     phage↔bacteria graphs are exactly bipartite).  Scores are
     L2-normalized per iteration and scaled to max 1 at the end.
 
-    Static graphs of at most _IN_TASK_ROWS adjacency rows run every
-    group's whole iteration inside one task (_in_task); the job count
+    Static graphs whose largest group has at most _IN_TASK_ROWS
+    adjacency rows run every group's whole iteration in-task
+    (_in_task), vectorized over a partition's groups; the job count
     then does not grow with max_iter.  Larger graphs run a joint power
     iteration: ONE DataFrame loop computes every group's leading
     eigenvector simultaneously — scores keyed by (group, node), message
@@ -521,20 +619,21 @@ def eigenvector_centrality(
     import pandas as pd
 
     g = _gcols(group_cols)
-    adj, width = _static_graph(edges, g, weight_col)
-    if width.n <= _IN_TASK_ROWS:
+    adj, width, in_task = _static_graph(edges, g, weight_col)
+    if in_task:
 
-        def _solve(pdf: pd.DataFrame) -> pd.DataFrame:
-            src, dst, nodes = _node_codes(pdf)
-            n = len(nodes)
+        def _solve(pdf: pd.DataFrame, gk: list[str]) -> pd.DataFrame:
+            src, dst, grp, out = _graph_codes(pdf, gk)
+            n, ng = len(out), grp.max() + 1
             # a NULL weight adds nothing to the superstep's sums either
             w = pdf["w"].fillna(0.0).to_numpy()
-            s = np.bincount(src, weights=w, minlength=n).max()
+            s = _group_max(np.bincount(src, weights=w, minlength=n), grp)[grp]
             x = np.ones(n)
             for _ in range(max_iter):
                 raw = np.bincount(dst, weights=w * x[src], minlength=n) + s * x
-                x = raw / np.sqrt(np.sum(raw * raw))
-            return pd.DataFrame({"node": nodes, "centrality": x / x.max()})
+                x = raw / np.sqrt(np.bincount(grp, weights=raw * raw, minlength=ng))[grp]
+            out["centrality"] = x / _group_max(x, grp)[grp]
+            return out
 
         res = _in_task(adj, g, width, "centrality double", _solve)
         return res.select(*g, "node", F.round("centrality", 6).alias("centrality"))
@@ -603,44 +702,62 @@ def pagerank(
 ) -> DataFrame:
     """Weighted PageRank on the undirected view (igraph::page_rank,
     bin/compareTwins.R:98-100). Same two regimes as
-    eigenvector_centrality: in-task per group up to _IN_TASK_ROWS
-    adjacency rows, joint supersteps above, the same rounded output.
+    eigenvector_centrality: in-task when the largest group has at most
+    _IN_TASK_ROWS adjacency rows, joint supersteps above, the same
+    rounded output.
 
-    The transition weights p = w / Σw (Σ over the source's edges, a
-    window on (group, src)) are columns of the checkpointed adjacency,
-    read by both paths; the teleport term is (1 − d)/n for a group of n
-    nodes.  On the superstep path n rides in the checkpointed node
-    table, so a superstep is one join and one aggregate plus the
-    teleport term.
+    The transition weights are p = w / Σw, Σ over the source's non-NULL
+    edge weights; a NULL weight (or a source whose weights are all
+    NULL) contributes nothing.  A source whose non-NULL weights sum to
+    0 is a division by zero: under ANSI mode (Spark's default) both
+    regimes raise DIVIDE_BY_ZERO, without it its edges contribute
+    nothing, as a NULL quotient does.  The in-task solve computes p
+    itself; the superstep path adds it to the checkpointed adjacency
+    with a window on (group, src).  The teleport term is (1 − d)/n for
+    a group of n nodes.  On the superstep path n rides in the
+    checkpointed node table, so a superstep is one join and one
+    aggregate plus the teleport term.
     """
     import numpy as np
     import pandas as pd
 
     g = _gcols(group_cols)
-    adj, width = _static_graph(
-        edges,
-        g,
-        weight_col,
-        prep=lambda a: a.withColumn(
-            "p", F.col("w") / F.sum("w").over(W.partitionBy(*g, "src"))
-        ),
-    )
-    if width.n <= _IN_TASK_ROWS:
+    adj, width, in_task = _static_graph(edges, g, weight_col)
+    if in_task:
+        ansi = adj.sparkSession.conf.get("spark.sql.ansi.enabled").lower() == "true"
 
-        def _solve(pdf: pd.DataFrame) -> pd.DataFrame:
-            src, dst, nodes = _node_codes(pdf)
-            n = len(nodes)
-            # a NULL p adds nothing to the superstep's sums either
-            p = pdf["p"].fillna(0.0).to_numpy()
-            r = np.full(n, 1.0 / n)
+        def _solve(pdf: pd.DataFrame, gk: list[str]) -> pd.DataFrame:
+            src, dst, grp, out = _graph_codes(pdf, gk)
+            n = len(out)
+            w = pdf["w"].to_numpy(dtype=float)
+            known = ~np.isnan(w)
+            tot = np.bincount(src, weights=np.where(known, w, 0.0), minlength=n)[src]
+            if ansi and (known & (tot == 0)).any():
+                raise ZeroDivisionError(
+                    "[DIVIDE_BY_ZERO] pagerank: a source's edge weights sum "
+                    "to 0, so its transition weights w/Σw are undefined"
+                )
+            # a NULL p (NULL weight, or 0/0 without ANSI) adds nothing to
+            # the superstep's sums either
+            ok = known & (tot != 0)
+            p = np.zeros(len(w))
+            p[ok] = w[ok] / tot[ok]
+            size = np.bincount(grp)[grp]
+            r = 1.0 / size
             for _ in range(max_iter):
-                r = (1 - damping) / n + damping * np.bincount(
+                r = (1 - damping) / size + damping * np.bincount(
                     dst, weights=p * r[src], minlength=n
                 )
-            return pd.DataFrame({"node": nodes, "pagerank": r})
+            out["pagerank"] = r
+            return out
 
         res = _in_task(adj, g, width, "pagerank double", _solve)
         return res.select(*g, "node", F.round("pagerank", 8).alias("pagerank"))
+    with width:
+        p = F.col("w") / F.sum("w").over(W.partitionBy(*g, "src"))
+        weighted = _checkpoint(adj.withColumn("p", p))
+    _release(adj)
+    adj = weighted
     nodes = adj.select(*g, F.col("src").alias("node")).distinct()
     nodes = _checkpoint(
         _by_group(nodes, nodes.groupBy(*g).agg(F.count(F.lit(1)).alias("_n")), g)
@@ -688,7 +805,7 @@ def katz_centrality(
     aggregate) broadcast into the plan — no driver-side collect.
     """
     g = _gcols(group_cols)
-    adj, width = _static_graph(edges, g, weight_col)
+    adj, width, _ = _static_graph(edges, g, weight_col)
     nodes = adj.select(*g, F.col("src").alias("node")).distinct()
     if isinstance(alpha, DataFrame):
         acol = alpha.columns[0]
@@ -730,10 +847,12 @@ def connected_components(
     bin/GeneralNetworkProperties.R:68-84); the component label is the
     lexicographic-min member.
 
-    Static graphs of at most _IN_TASK_ROWS adjacency rows run a min-root
-    union-find per group inside one task (_in_task) — at small scale the
-    fixed per-superstep cost dominates (measured ~7s for a tiny
-    dup-pair graph).  Larger graphs run iterative min-label propagation
+    Static graphs whose largest group has at most _IN_TASK_ROWS
+    adjacency rows solve in-task (_in_task): min-label hooking with
+    pointer jumping, vectorized over a partition's groups on (group,
+    node) codes that sort like the node ids — at small scale the fixed
+    per-superstep cost dominates (measured ~7s for a tiny dup-pair
+    graph).  Larger graphs run iterative min-label propagation
     to convergence, all groups jointly — O(diameter) supersteps (labels
     advance one hop per round; no pointer-doubling).  Exhausting
     max_iter without converging RAISES rather than returning a silently
@@ -742,31 +861,30 @@ def connected_components(
     Node ids (and component labels) are strings on BOTH paths, so the
     two paths return identical labels and schemas — min-label always
     means lexicographic min."""
+    import numpy as np
     import pandas as pd
 
     g = _gcols(group_cols)
-    # the size probe (width.n) and either path read this one checkpoint
-    und, width = _static_graph(edges, g, prep=lambda a: _str_ids(a, g))
-    if width.n <= _IN_TASK_ROWS:
+    # either path reads this one checkpoint
+    und, width, in_task = _static_graph(edges, g, prep=lambda a: _str_ids(a, g))
+    if in_task:
 
-        def _solve(pdf: pd.DataFrame) -> pd.DataFrame:
-            parent: dict[str, str] = {}
-
-            def find(x: str) -> str:
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for s, d in zip(pdf["src"], pdf["dst"]):
-                parent.setdefault(s, s)
-                parent.setdefault(d, d)
-                rs, rd = find(s), find(d)
-                if rs != rd:
-                    lo, hi = (rs, rd) if rs < rd else (rd, rs)
-                    parent[hi] = lo  # min root survives → min-label semantics
-            nodes = list(parent)
-            return pd.DataFrame({"node": nodes, "component": [find(v) for v in nodes]})
+        def _solve(pdf: pd.DataFrame, gk: list[str]) -> pd.DataFrame:
+            src, dst, _, out = _graph_codes(pdf, gk)
+            # label[v] ≤ v always points into v's component, so the
+            # component's min code (its min node id) stays its own root
+            label = np.arange(len(out))
+            while True:
+                # hook each root onto the least label across its edges
+                nxt = label.copy()
+                np.minimum.at(nxt, label[src], label[dst])
+                while not np.array_equal(nxt[nxt], nxt):  # pointer jumping
+                    nxt = nxt[nxt]
+                if np.array_equal(nxt, label):
+                    break
+                label = nxt
+            out["component"] = out["node"].to_numpy()[label]
+            return out
 
         res = _in_task(und, g, width, "component string", _solve)
         return res.select(*g, "node", "component")
@@ -886,23 +1004,22 @@ def bfs_distances(
     g = _gcols(group_cols)
     # checkpoint first: the node set, the roots and every superstep read
     # this one copy of the input (read-once rule)
+    und, n, _ = _counted_checkpoint(
+        edges.select(*g, "src", "dst").dropDuplicates([*g, "src", "dst"])
+        if directed
+        else symmetrize(edges, g)
+    )
+    all_nodes = und.select(*g, F.col("src").alias("node"))
     if directed:
-        und = _checkpoint(edges.select(*g, "src", "dst").dropDuplicates([*g, "src", "dst"]))
-        all_nodes = (
-            und.select(*g, F.col("src").alias("node"))
-            .unionByName(und.select(*g, F.col("dst").alias("node")))
-            .distinct()
-        )
-    else:
-        und = _checkpoint(symmetrize(edges, g))
-        all_nodes = und.select(*g, F.col("src").alias("node")).distinct()
+        all_nodes = all_nodes.unionByName(und.select(*g, F.col("dst").alias("node")))
+    all_nodes = all_nodes.distinct()
     roots = sources if sources is not None else all_nodes.select(*g, F.col("node").alias("root"))
 
     visited = roots.select(*g, "root", F.col("root").alias("node")).withColumn(
         "dist", F.lit(0)
     )
     frontier = visited
-    with _loop_shuffle_width(und):
+    with _loop_shuffle_width(und.sparkSession, n):
         for depth in range(1, max_depth + 1):
             neighbors = (
                 frontier.join(und.withColumnRenamed("src", "node"), [*g, "node"])
@@ -1006,7 +1123,7 @@ def label_propagation(
     updates with min-label seeds.
     """
     g = _gcols(group_cols)
-    und, width = _static_graph(edges, g, prep=lambda a: a.select(*g, "src", "dst"))
+    und, width, _ = _static_graph(edges, g, prep=lambda a: a.select(*g, "src", "dst"))
     w = W.partitionBy(*g, "node").orderBy(F.desc("_votes"), F.asc("community"))
 
     def step(labels: DataFrame) -> DataFrame:
@@ -1156,7 +1273,7 @@ def greedy_modularity(
             {"node": out_nodes, "community": out_comm, "modularity": round(q, 6)}
         )
 
-    res = _per_group(und, g, "community string, modularity double", _cnm)
+    res = _per_group(und, g, "community string, modularity double", _each_group(_cnm))
     return res.select(*g, "node", "community", "modularity")
 
 
@@ -1207,7 +1324,7 @@ def betweenness_centrality(
     """
     g = _gcols(group_cols)
     und = _str_ids(symmetrize(edges, g), g)
-    res = _per_group(und, g, "betweenness double", _brandes(None, math.inf, False))
+    res = _per_group(und, g, "betweenness double", _each_group(_brandes(None, math.inf, False)))
     return res.select(*g, "node", F.round("betweenness", 6).alias("betweenness"))
 
 
@@ -1324,7 +1441,7 @@ def approx_betweenness(
 ) -> DataFrame:
     """Distributed Brandes betweenness with pivot sampling — the 100 TB
     path for ONE giant graph (SURVEY §7 risk register: exact Brandes is
-    O(VE) and the per-subgraph applyInPandas solver above requires a
+    O(VE) and the per-group in-task solver above requires a
     group's edges to fit on one executor).
 
     Level-synchronous Brandes over DataFrames, all pivots jointly:
@@ -1365,12 +1482,12 @@ def approx_betweenness(
     n_pivots by up to the component count.  Reduces exactly to Brandes
     when the budget covers every node, and the local/superstep paths
     stay numerically identical."""
-    und = _checkpoint(_str_ids(symmetrize(edges), []))
+    und, n_rows, _ = _counted_checkpoint(_str_ids(symmetrize(edges), []))
     all_nodes = und.select(F.col("src").alias("node")).distinct()
     n_nodes = all_nodes.count()
     if n_nodes <= _LOCAL_BRANDES_NODES:
         solve = _brandes(n_pivots, max_depth, stratify_components)
-        res = _per_group(und, [], "betweenness double", solve)
+        res = _per_group(und, [], "betweenness double", _each_group(solve))
         return res.select("node", F.round("betweenness", 6).alias("betweenness"))
     root_scale = None  # per-root scale frame (stratified mode only)
     if n_pivots is None or n_pivots >= n_nodes:
@@ -1415,7 +1532,7 @@ def approx_betweenness(
         )
     )
     frontier = visited
-    with _loop_shuffle_width(und):
+    with _loop_shuffle_width(und.sparkSession, n_rows):
         # forward: BFS + σ accumulation (σ flows only level d-1 → d)
         prev_new = None  # the checkpoint backing the current frontier
         for depth in range(1, max_depth + 1):
@@ -1537,5 +1654,5 @@ def alpha_centrality(
         x = np.linalg.solve(np.eye(n) - a_eff * A, np.ones(n))
         return pd.DataFrame({"node": nodes, "alpha_centrality": x})
 
-    res = _per_group(und, g, "alpha_centrality double", _solve)
+    res = _per_group(und, g, "alpha_centrality double", _each_group(_solve))
     return res.select(*g, "node", F.round("alpha_centrality", 6).alias("alpha_centrality"))

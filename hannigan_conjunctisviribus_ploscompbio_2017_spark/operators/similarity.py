@@ -499,12 +499,19 @@ def _resolve_centroids(
     vec_col: str,
     centroid_frac: float | None,
     centroids: list[list[float]] | None,
+    dim: int | None = None,
 ) -> list[tuple[int, list[float]]]:
     """Shared coarse-centroid resolution for the cell-based operators
     (ivf_topk, semantic_dedup): explicit centroid list if given, else
     the deterministic md5-first sample (optionally pre-filtered by the
     hash-threshold scan — see ivf_topk's docstring for the proof that
-    the filtered and unfiltered passes select identical rows)."""
+    the filtered and unfiltered passes select identical rows).
+
+    Operators that take `dim` pass it, and only `dim`-element vectors
+    are sampled.  Without `dim`, sampled centroids of unequal length
+    raise: a wrong-length centroid gives every item a NULL distance to
+    it, which sorts first, and the whole corpus would fall into that
+    one cell."""
     if centroids is not None:
         return [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
     # degenerate rows must not become centroids: a null vector/element
@@ -512,7 +519,7 @@ def _resolve_centroids(
     # swallows the corpus (_usable)
     sel = items.select(
         F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")
-    ).filter(_usable(vec_col, nonzero=True))
+    ).filter(_usable(vec_col, dim, nonzero=True))
     cent_rows: list = []
     if centroid_frac is not None and 0.0 < centroid_frac < 1.0:
         h = portable_token_hash(F.col("cid").cast("string"))
@@ -527,6 +534,13 @@ def _resolve_centroids(
             sel.orderBy(F.md5(F.col("cid").cast("string")))
             .limit(n_cells)
             .collect()
+        )
+    lengths = sorted({len(r["cvec"]) for r in cent_rows})
+    if len(lengths) > 1:
+        raise ValueError(
+            f"sampled centroids have unequal lengths {lengths}: the items "
+            f"table mixes vector dimensions; pass `dim` (or filter the "
+            f"items) so only full-dimension vectors are sampled"
         )
     return [(i, [float(x) for x in r["cvec"]]) for i, r in enumerate(cent_rows)]
 
@@ -777,7 +791,7 @@ def ivf_topk(
     persists bucketed by cell; each query scans n_probe/n_cells of the
     corpus instead of all of it.
     """
-    cents = _resolve_centroids(items, n_cells, id_col, vec_col, centroid_frac, centroids)
+    cents = _resolve_centroids(items, n_cells, id_col, vec_col, centroid_frac, centroids, dim)
     cells = _cell_exprs(cents, round_to)
     codec = _cosine_codec(F.col(vec_col), round_to)
     return _topk(items, queries, id_col, vec_col, dim, k, codec, cells, n_probe)
@@ -1024,7 +1038,7 @@ def ivf_pq_topk(
     literals: partition-invariant and end-to-end DuckDB-replayable.
     Returns (query_id, neighbor_id, adc_dist, rank); ranking is by
     quantized distance (ties by id), as in pq_topk."""
-    cents = _resolve_centroids(items, n_cells, id_col, vec_col, centroid_frac, centroids)
+    cents = _resolve_centroids(items, n_cells, id_col, vec_col, centroid_frac, centroids, dim)
     cells = _cell_exprs(cents, round_to)
     codec = _pq_codec(items, dim, m, n_codes, id_col, vec_col, round_to)
     return _topk(items, queries, id_col, vec_col, dim, k, codec, cells, n_probe)
@@ -1209,7 +1223,7 @@ def ivf_sq8_topk(
     the candidate set the whole corpus, i.e. exactly sq8_topk's flat
     scan — pinned as a parity test.  Returns (query_id, neighbor_id,
     sq_dist, rank); rank asc by quantized distance, ties by id."""
-    cents = _resolve_centroids(items, n_cells, id_col, vec_col, centroid_frac, centroids)
+    cents = _resolve_centroids(items, n_cells, id_col, vec_col, centroid_frac, centroids, dim)
     cells = _cell_exprs(cents, round_to)
     codec = _sq8_codec(items, dim, vec_col, round_to)
     return _topk(items, queries, id_col, vec_col, dim, k, codec, cells, n_probe)
@@ -1256,7 +1270,7 @@ def semantic_store(
 
     Pass the SAME centroids to semantic_ingest_dedup (or let both
     default to the md5-sampled resolve over this df's vectors)."""
-    cents = _resolve_centroids(df, n_cells, id_col, vec_col, centroid_frac, centroids)
+    cents = _resolve_centroids(df, n_cells, id_col, vec_col, centroid_frac, centroids, dim)
     cell, _ = _cell_exprs(cents, round_to)
     return df.filter(_usable(vec_col, dim)).select(
         F.col(id_col).alias("id"),

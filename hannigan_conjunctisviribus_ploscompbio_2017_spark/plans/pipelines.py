@@ -5,9 +5,10 @@ Entry point A (bin/interpersonaldiversity.R in /root/reference): the
 reference splits this across Neo4j (Cypher over REST) and single-threaded
 R; here it is one Spark job graph from the edge tables to the final
 statistics table, and only the final small stats frame ever reaches the
-driver.  Tables that more than one later stage reads (the normalized
-edge table, the rarefied abundances, the kernel's static graph) are
-materialized once, so no stage recomputes the Q5 join.
+driver.  Tables that more than one later stage or caller reads (the
+normalized edge table, the rarefied abundances, the kernel's static
+graph, the class-labelled Bray-Curtis distances) are materialized once,
+so no stage recomputes the Q5 join or the distances.
 
 Stage trace (reference line cites):
  1. Q5 sample-network join (bin/interpersonaldiversity.R:18-36)
@@ -51,8 +52,11 @@ def interpersonal_diversity(
       removal_list: optional (phage,) anti-filter list.
       sample_class: optional (sample, cls) grouping for the final stats.
 
-    Returns a dict of DataFrames.  `rarefied` is materialized (a
-    checkpoint); the others are lazy:
+    Returns a dict of DataFrames.  `rarefied` and `distances` are
+    materialized (checkpoints): `stats` and every caller read
+    `distances`, and a lazy one would recompute the centrality
+    read-back and the Bray-Curtis join for each.  The others are lazy
+    over checkpoints:
       rarefied   — per (sample, phage) rarefied abundances
       centrality — per (sample, node) eigenvector centrality
       distances  — per (sample_a, sample_b) Bray-Curtis + class label
@@ -143,6 +147,7 @@ def interpersonal_diversity(
     distances = bray_curtis(centrality, "sample", "node", "centrality")
 
     # 10. class labeling + grouped stats (F8 + A2)
+    by = []
     if sample_class is not None:
         ca = sample_class.select(F.col("sample").alias("sample_a"), F.col("cls").alias("_ca"))
         cb = sample_class.select(F.col("sample").alias("sample_b"), F.col("cls").alias("_cb"))
@@ -155,17 +160,13 @@ def interpersonal_diversity(
             )
             .drop("_ca", "_cb")
         )
-        stats = distances.groupBy("pair_class").agg(
-            F.round(F.avg("bray_curtis"), 6).alias("mean_distance"),
-            F.round(F.stddev_pop("bray_curtis"), 6).alias("sd_distance"),
-            F.count(F.lit(1)).alias("n_pairs"),
-        )
-    else:
-        stats = distances.agg(
-            F.round(F.avg("bray_curtis"), 6).alias("mean_distance"),
-            F.round(F.stddev_pop("bray_curtis"), 6).alias("sd_distance"),
-            F.count(F.lit(1)).alias("n_pairs"),
-        )
+        by = ["pair_class"]
+    distances = _checkpoint(distances)
+    stats = distances.groupBy(*by).agg(
+        F.round(F.avg("bray_curtis"), 6).alias("mean_distance"),
+        F.round(F.stddev_pop("bray_curtis"), 6).alias("sd_distance"),
+        F.count(F.lit(1)).alias("n_pairs"),
+    )
 
     return {
         "rarefied": rarefied,

@@ -1,3 +1,4 @@
+import itertools
 import sys
 from pathlib import Path
 
@@ -30,3 +31,18 @@ def edges_df(spark, pairs, weights=None, group=None):
             row["g"] = group
         rows.append(row)
     return spark.createDataFrame(rows)
+
+
+def count_jobs(spark, fn) -> int:
+    """The number of Spark jobs `fn()` runs, counted by job group."""
+    sc = spark.sparkContext
+    gid = f"count_jobs_{next(_job_groups)}"
+    sc.setJobGroup(gid, gid)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+_job_groups = itertools.count()

@@ -548,6 +548,29 @@ def test_semantic_dedup_empty_table_raises_cleanly(spark):
         similarity.ivf_topk(degenerate, degenerate, dim=2)
 
 
+def test_wrong_dim_row_never_becomes_a_centroid(spark):
+    """A 2-element row whose md5 ranks first among 100 8-d items: the
+    operators that take `dim` sample only 8-d centroids and spread the
+    items over several cells (a wrong-dim centroid gives every item a
+    NULL distance, which sorts first, so all would fall into one
+    cell); those without `dim` refuse the mixed-length sample."""
+    import hashlib
+    import random
+
+    md5 = lambda i: hashlib.md5(str(i).encode()).hexdigest()  # noqa: E731
+    rng = random.Random(7)
+    rows = [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(100)]
+    bad = next(i for i in range(1000, 10**6) if md5(i) < min(md5(r[0]) for r in rows))
+    df = spark.createDataFrame(rows + [(bad, [1.0, 0.5])], "vec_id long, embedding array<double>")
+    store = similarity.semantic_store(df, dim=8, n_cells=4).collect()
+    assert sorted(r.id for r in store) == list(range(100))
+    assert len({r.cell for r in store}) > 1
+    with pytest.raises(ValueError, match="unequal lengths"):
+        similarity.semantic_dedup(df, n_cells=4)
+    with pytest.raises(ValueError, match="unequal lengths"):
+        similarity.sampled_centroids(df, n_cells=4)
+
+
 def test_semantic_dedup_flags_clumps(spark):
     import math
 

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators import kernels as K
-from tests.conftest import edges_df
+from tests.conftest import count_jobs, edges_df
 
 P5 = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")]
 S10 = [("hub", f"leaf{i}") for i in range(9)]  # star, 10 nodes
@@ -89,7 +89,7 @@ _PARITY_KERNELS = {
 }
 _PARITY_CASES = [
     "two_comp", "p5", "k5", "s10", "bipartite33_weighted",
-    "grouped_int_ids", "self_loop", "one_edge_group", "max_iter0",
+    "grouped_int_ids", "self_loop", "null_weight", "one_edge_group", "max_iter0",
 ]
 
 
@@ -110,6 +110,13 @@ def _parity_case(spark, case):
         return e, ["grp"], 10
     if case == "self_loop":
         e = edges_df(spark, [("a", "a"), ("a", "b"), ("b", "c")], weights=[4.0, 1.0, 2.0])
+        return e, None, 10
+    if case == "null_weight":
+        # a NULL weight contributes nothing; x's only weight is NULL
+        e = spark.createDataFrame(
+            [("a", "b", 1.0), ("b", "c", None), ("c", "d", 3.0), ("d", "e", 4.0), ("x", "y", None)],
+            "src string, dst string, weight double",
+        )
         return e, None, 10
     # one_edge_group: a one-edge group next to a P5 group
     e = edges_df(spark, P5, weights=[1, 2, 3, 4], group="g1").unionByName(
@@ -146,19 +153,75 @@ def test_in_task_job_count_independent_of_max_iter(spark, kernel):
     """On a small grouped graph the whole iteration runs in-task, so
     the number of Spark jobs does not grow with max_iter (each
     superstep adds jobs)."""
-    sc = spark.sparkContext
     e, g, _ = _parity_case(spark, "one_edge_group")
 
     def jobs(max_iter):
-        gid = f"in_task_jobs_{kernel}_{max_iter}"
-        sc.setJobGroup(gid, gid)
-        try:
-            _PARITY_KERNELS[kernel](e, g, max_iter).collect()
-        finally:
-            sc._jsc.clearJobGroup()
-        return len(sc.statusTracker().getJobIdsForGroup(gid))
+        return count_jobs(spark, lambda: _PARITY_KERNELS[kernel](e, g, max_iter).collect())
 
     assert jobs(2) == jobs(12)
+
+
+@pytest.mark.parametrize("kernel", list(_PARITY_KERNELS))
+def test_in_task_job_count(spark, kernel):
+    """An in-task call on a materialized grouped input runs 5 jobs: the
+    static-graph checkpoint (its group exchange and its write, which
+    also observes the row counts that pick the regime), the in-task
+    checkpoint (the same two) and the collect.  A count job to pick the
+    regime, or PageRank's (group, src) window for p = w/Σw, would add
+    more."""
+    e, g, it = _parity_case(spark, "one_edge_group")
+    e = K._checkpoint(e)
+    assert count_jobs(spark, lambda: _PARITY_KERNELS[kernel](e, g, it).collect()) <= 5
+
+
+@pytest.mark.parametrize("kernel", list(_PARITY_KERNELS))
+def test_in_task_routes_on_largest_group(spark, monkeypatch, kernel):
+    """The regime follows the LARGEST group's adjacency rows, not the
+    total: four P5 groups (8 rows each, 32 in all) stay in-task at a
+    cutoff of 8, in at least ceil(32 / 8) partitions, and go superstep
+    at 7, with equal rows."""
+    e = edges_df(spark, P5, weights=[1, 2, 3, 4], group="g0")
+    for i in range(1, 4):
+        e = e.unionByName(edges_df(spark, P5, weights=[i, 1, 2, 5 - i], group=f"g{i}"))
+    run = _PARITY_KERNELS[kernel]
+    parts = []
+    real = K._per_group
+    monkeypatch.setattr(K, "_per_group", lambda *a: parts.append(a[4]) or real(*a))
+    monkeypatch.setattr(K, "_IN_TASK_ROWS", 8)
+    local = sorted(map(tuple, run(e, ["g"], 10).collect()))
+    assert parts and parts[0] >= 4, "8-row groups under a cutoff of 8 did not run in-task"
+    monkeypatch.setattr(K, "_IN_TASK_ROWS", 7)
+    assert local == sorted(map(tuple, run(e, ["g"], 10).collect()))
+    assert len(parts) == 1, "8-row groups over a cutoff of 7 did not go superstep"
+
+
+def test_kernel_leaves_session_usable_by_mllib(spark):
+    """The static graph's row counts must not leave the session
+    unserializable: a LogisticRegression model (whose transform closure
+    captures the session through its training summary) still scores
+    after a kernel call."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.feature import VectorAssembler
+
+    K.pagerank(edges_df(spark, P5)).collect()
+    rows = spark.createDataFrame([(float(i % 2), float(i)) for i in range(20)], "label double, x double")
+    data = VectorAssembler(inputCols=["x"], outputCol="features").transform(rows)
+    assert len(LogisticRegression(maxIter=3).fit(data).transform(data).select("prediction").collect()) == 20
+
+
+@pytest.mark.parametrize("in_task", [True, False])
+def test_pagerank_zero_weight_sum_raises(spark, monkeypatch, in_task):
+    """A source whose non-NULL weights sum to 0 has no transition
+    weights p = w/Σw: both regimes raise DIVIDE_BY_ZERO (ANSI mode)
+    rather than return ranks."""
+    if not in_task:
+        monkeypatch.setattr(K, "_IN_TASK_ROWS", 0)
+    e = spark.createDataFrame(
+        [("a", "b", 0.0), ("a", "c", None), ("b", "c", 1.0)],
+        "src string, dst string, weight double",
+    )
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        K.pagerank(e, weight_col="weight").collect()
 
 
 def test_connected_components_superstep_raises_unconverged(spark, monkeypatch):

@@ -3,6 +3,7 @@
 from pyspark.sql import functions as F
 
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.plans import pipelines as P
+from tests.conftest import count_jobs
 
 
 def _q5_edges(spark):
@@ -212,3 +213,15 @@ def test_pretrain_pack_spancut_cuts_before_packing(spark):
             assert r.pack_id >= 0 and 0 <= r.pack_offset < 16
         else:
             assert r.pack_id == -1 and r.n_tok == -1
+
+
+def test_interpersonal_diversity_distances_materialized(spark):
+    """`distances` comes back materialized: collecting `stats` and then
+    `distances` re-runs no centrality or Bray-Curtis stage (at most 2
+    jobs each: an exchange and a result)."""
+    cls = spark.createDataFrame(
+        [("A1", "grpA"), ("A2", "grpA"), ("B1", "grpB")], "sample string, cls string"
+    )
+    out = P.interpersonal_diversity(_q5_edges(spark), sample_class=cls, eigen_iter=4)
+    assert count_jobs(spark, out["stats"].collect) <= 2
+    assert count_jobs(spark, out["distances"].collect) <= 2
