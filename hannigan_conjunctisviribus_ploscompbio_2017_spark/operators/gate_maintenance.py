@@ -50,37 +50,23 @@ files while PRESERVING its partition layout (partitionBy("cell") /
 ("band", "_part")), so DPP and every plan guard survive.
 
 CONCURRENCY (r10, completed r11): "run maintenance only between runs"
-is a two-sided lock for every protocol participant.  Maintenance side:
-`compact_store`/`retire_from_store`/`convert_store_to_versioned` claim
-the `<store>.maintenance` marker (compare-and-set on the atomic
-create-if-absent primitive) for their whole pass —
-`retire_from_store` claims BEFORE its counting scan, so count and
-rewrite sit under one claim — and then REFUSE while any store-user
-claim file exists.  User side: the append_admitted_* writers and,
-given `store_path=`, every foreachBatch gate epoch hold a SHARED claim
-(`store_user_claim`: check marker → create `<store>.claims/<uuid>` →
-re-check marker → run → delete), so every interleaving resolves — a
-claim created before the rewrite's listing makes the rewrite back out;
-one created after it necessarily post-dates the marker claim, so the
-user's re-check backs out.  Closing the r10 check-then-act window
-needs ATOMIC create-if-absent plus read-after-write visibility.  HDFS
-and POSIX provide both.  BASELINE s3a does NOT provide the first: its
-create(overwrite=false) is a HEAD-then-PUT check-then-act even under
-S3 strong consistency (which makes the individual calls consistent,
-not the pair atomic) — so every claim/marker entry point REFUSES
-s3/s3a paths unless the operator attests a conditional-create-capable
-client (Hadoop 3.4.1+ s3a conditional create / If-None-Match) via the
-Hadoop conf `sparkgraft.fs.atomic.create.attested=true`
-(`_check_atomic_create_capable` in streaming/events.py).  The honest
-remainder: an AD-HOC reader that scans the store without taking a
-claim still races a rewrite's swap/GC — use `read_store`, or wrap
-such scans in `store_user_claim` yourself.
-Crash adjudication is asymmetric by design: a crashed REWRITE leaves
-the marker (the store may be mid-swap; verify nothing is running,
-delete the marker, re-run — the auto-restore repairs the window); a
-crashed USER leaves a claim file that only blocks maintenance (the
-store is untouched; delete the stale claim file and re-run the
-maintenance pass).
+is a two-sided lock, implemented once in `fslock.py` for the stores
+and the decisions logs alike — its docstring holds the protocol, the
+interleaving proof, the s3a conditional-create attestation
+(`sparkgraft.fs.atomic.create.attested`) and the crash adjudication.
+The stores are its `<store>.maintenance` / `<store>.claims/` family:
+`compact_store`/`retire_from_store`/`convert_store_to_versioned` hold
+the marker for their whole pass — `retire_from_store` takes it BEFORE
+its counting scan, so count and rewrite sit under one claim — and
+refuse while any store-user claim exists; the append_admitted_*
+writers, `read_store` and, given `store_path=`, every foreachBatch gate
+epoch hold a shared claim (`store_user_claim`) for their whole pass.
+The honest remainder: an AD-HOC reader that scans the store without
+taking a claim still races a rewrite's swap/GC — use `read_store`, or
+wrap such scans in `store_user_claim` yourself.  A rewrite whose swap
+fails with no live store left (StoreRestoreError, a stalled
+conversion) keeps the marker, so gates keep failing fast with guidance
+until an operator restores the tree and deletes it.
 
 VERSIONED LAYOUT (r11, the object-store-safe rewrite): a store may
 instead live as a root of `v<N>/` data directories plus hidden
@@ -116,20 +102,21 @@ from __future__ import annotations
 
 import math
 import re
-import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hannigan_conjunctisviribus_ploscompbio_2017_spark.streaming.events import (
-    _check_atomic_create_capable,
+from hannigan_conjunctisviribus_ploscompbio_2017_spark.fslock import (
+    _STORE,
+    _check_marker,
     _claim_files_info,
-    _claim_payload,
     _fs_create_text,
     _fs_read_text,
     _hadoop_fs,
-    _sweep_stale_claim_files,
+    _maintenance_pass,
+    _sweep_claims,
+    _user_claim,
 )
 
 _MATERIALIZED_CAVEAT = (
@@ -168,99 +155,36 @@ def _check_materialized(decisions: DataFrame, require_materialized: bool) -> Non
 
 
 # --------------------------------------------------------------------------
-# maintenance concurrency marker — the CAS lock that makes the "run it
-# only between runs" rule loud instead of a docstring
+# the store family of the maintenance lock (fslock.py)
 # --------------------------------------------------------------------------
-
-_MAINTENANCE_SUFFIX = ".maintenance"
-
-
-def _maintenance_marker(store_path: str) -> str:
-    """The store's maintenance-marker path: a SIBLING of the store root
-    (`<store>.maintenance`), like `.compact.tmp` / `.precompact` — it
-    must survive the rename swap that momentarily moves the store root
-    itself aside, so it cannot live inside the store."""
-    return store_path.rstrip("/") + _MAINTENANCE_SUFFIX
 
 
 def check_store_maintenance(spark: SparkSession, store_path: str) -> None:
-    """Fail fast when a maintenance rewrite holds the store's marker —
-    the check every gate scan and append_admitted_* writer runs, so a
-    gate racing compact_store/retire_from_store dies with THIS guidance
-    instead of a raw FileNotFound inside the rewrite's rename window
-    (where the live store path momentarily does not exist)."""
-    marker = _maintenance_marker(store_path)
-    holder = _fs_read_text(spark, marker)
-    if holder is not None:
-        raise RuntimeError(
-            f"store at {store_path} is under maintenance "
-            f"(compact_store/retire_from_store hold {marker}): the rewrite "
-            "momentarily renames the live store aside, so scanning or "
-            "appending now would fail mid-plan or see a half-swapped "
-            "store. Wait for the maintenance pass to finish. If it "
-            "CRASHED (no maintenance process is running), the store is "
-            "intact or auto-restorable — delete the marker and re-run "
-            "the maintenance helper, THEN resume the gate"
-        )
+    """Fail fast when a maintenance rewrite holds the store's
+    `<store>.maintenance` marker — a sibling of the store root, so it
+    survives the rename swap that moves the root aside.  Gates racing
+    compact_store/retire_from_store die with THIS guidance instead of a
+    raw FileNotFound inside the rewrite's rename window (where the live
+    store path momentarily does not exist)."""
+    _check_marker(spark, _STORE, store_path)
 
 
-def _take_maintenance_marker(spark: SparkSession, store_path: str, what: str) -> str:
-    """Claim the store's maintenance marker (compare-and-set via the
-    atomic create-if-absent primitive).  Raises when another maintenance
-    pass — or a crashed one — already holds it; two concurrent rewrites
-    racing the rename swap would otherwise corrupt the store."""
-    marker = _maintenance_marker(store_path)
-    _check_atomic_create_capable(spark, marker, "maintenance marker CAS")
-    if not _fs_create_text(spark, marker, what):
-        holder = _fs_read_text(spark, marker)
-        raise RuntimeError(
-            f"another maintenance pass ({holder}) already holds {marker} — "
-            "either it is still running (wait for it), or it crashed and "
-            "left the marker (the store is intact or auto-restorable: "
-            "verify no maintenance process is running, delete the marker, "
-            "and re-run)"
-        )
-    return marker
-
-
-# --------------------------------------------------------------------------
-# store-user claims — the shared (read) side of the lock, closing the
-# check-then-act window the bare marker check leaves open
-# --------------------------------------------------------------------------
-
-_CLAIMS_SUFFIX = ".claims"
-
-
-def _claims_dir(store_path: str) -> str:
-    """`<store>.claims/` — sibling of the store root like the
-    maintenance marker, for the same reason: it must survive the
-    rewrite's swap of the root itself."""
-    return store_path.rstrip("/") + _CLAIMS_SUFFIX
-
-
-@contextmanager
 def store_user_claim(spark: SparkSession, store_path: str, what: str = "gate/append"):
-    """Hold a SHARED store-user claim for the duration of a gate pass or
-    append — the second half of the maintenance mutual exclusion that
-    makes it an actual lock instead of check-then-act.  Protocol:
+    """Context manager holding a SHARED store-user claim
+    (`<store>.claims/<uuid>`) for the duration of a gate pass or append
+    — the second half of the maintenance mutual exclusion that makes it
+    an actual lock instead of check-then-act.  Protocol:
 
       user:     check marker absent → CREATE `<store>.claims/<uuid>` →
                 RE-CHECK marker (a rewrite that claimed in between wins;
                 the user backs out, deleting its claim) → run → delete.
       rewrite:  CAS-claim `<store>.maintenance` → refuse while ANY claim
-                file exists (`_check_no_user_claims`).
+                file exists.
 
-    Every interleaving resolves: a user claim created before the
-    rewrite's claims listing is seen there (rewrite backs out); one
-    created after it necessarily post-dates the marker claim, so the
-    user's re-check sees the marker (user backs out).  Needs ATOMIC
-    create-if-absent and read-after-write visibility — both held by
-    HDFS and POSIX; no rename, no mtime.  Baseline s3a does NOT hold
-    the first (HEAD-then-PUT), so the claim create refuses s3/s3a
-    paths without the conditional-create attestation (module
-    docstring, CONCURRENCY).
-
-    The appends and the foreachBatch gates' epochs (when given
+    The interleaving proof and the filesystem requirements (atomic
+    create-if-absent: s3/s3a paths refuse without the conditional-create
+    attestation, before any filesystem access) are fslock.py's.  The
+    appends and the foreachBatch gates' epochs (when given
     `store_path=`) hold this automatically; ad-hoc store scans go
     through `read_store` (this claim + resolve + read in one motion)
     or wrap themselves in it.  A CRASHED user leaves its claim file
@@ -269,30 +193,7 @@ def store_user_claim(spark: SparkSession, store_path: str, what: str = "gate/app
     either delete it by hand or let `sweep_stale_claims` age it out;
     the store itself is untouched — user claims guard users FROM
     maintenance, never the store from users."""
-    path = store_path.rstrip("/")
-    check_store_maintenance(spark, path)
-    claim = f"{_claims_dir(path)}/{uuid.uuid4().hex}"
-    _check_atomic_create_capable(spark, claim, "store-user claim CAS")
-    if not _fs_create_text(spark, claim, _claim_payload(what)):
-        raise RuntimeError(f"store-user claim collision at {claim}")
-    fs, jclaim, _ = _hadoop_fs(spark, claim)
-    try:
-        # re-check AFTER the claim is visible: a rewrite that claimed
-        # the marker between our first check and our create must win
-        # (it cannot have seen our claim) — back out
-        check_store_maintenance(spark, path)
-        yield
-    finally:
-        fs.delete(jclaim, False)
-
-
-def _user_claims_info(spark: SparkSession, store_path: str) -> list[dict]:
-    """One record per live store-user claim — {name, path, what,
-    created_utc, pid, host, age_s} from the r12 JSON payload (FS
-    mtime fallback for pre-r12 bare-text claims) — the store_stats
-    monitoring face of the claim protocol and sweep_stale_claims's
-    input.  Hidden/checksum siblings excluded."""
-    return _claim_files_info(spark, _claims_dir(store_path.rstrip("/")))
+    return _user_claim(spark, _STORE, store_path, what)
 
 
 def sweep_stale_claims(
@@ -313,41 +214,11 @@ def sweep_stale_claims(
     comfortably above the longest pass never sweeps a live claim; age
     stamps come from the writer's clock (payload `created_utc`), so
     size thresholds in HOURS to absorb cross-host skew.  Refuses while
-    the store's `.maintenance` marker is held — a live rewrite never
-    coexists with claims it should be refused by, so a marker here
-    means a CRASHED rewrite, which needs its own adjudication first
-    (the sweep must not unblock maintenance over a possibly half-swapped
-    store).  Returns the swept claim records (payload + age)."""
-    path = store_path.rstrip("/")
-    check_store_maintenance(spark, path)
-    return _sweep_stale_claim_files(spark, _claims_dir(path), max_age_s)
-
-
-def _check_no_user_claims(spark: SparkSession, store_path: str) -> None:
-    """Run by every maintenance pass AFTER claiming the marker: refuse
-    while any store user (gate epoch, append, claimed ad-hoc scan)
-    holds a claim file — the raise releases the marker (the caller's
-    non-crash cleanup), so the user finishes undisturbed and the
-    maintenance pass simply re-runs later."""
-    cd = _claims_dir(store_path.rstrip("/"))
-    fs, jdir, _ = _hadoop_fs(spark, cd)
-    if not fs.exists(jdir):
-        return
-    holders = sorted(
-        name
-        for st in fs.listStatus(jdir)
-        # belt-and-braces: skip checksum/hidden siblings some Hadoop
-        # FileSystems materialize next to the claim files
-        if not (name := st.getPath().getName()).startswith((".", "_"))
-    )
-    if holders:
-        raise RuntimeError(
-            f"active store-user claims under {cd}: {holders} — a gate "
-            "epoch or append is mid-flight; wait for it and re-run this "
-            "maintenance pass. If a claimant CRASHED (nothing is "
-            "running), the store is untouched: delete the stale claim "
-            "file(s) and re-run"
-        )
+    the store's `.maintenance` marker is held (a crashed rewrite needs
+    its own adjudication first — the sweep must not unblock maintenance
+    over a possibly half-swapped store).  Returns the swept claim
+    records (payload + age)."""
+    return _sweep_claims(spark, _STORE, store_path, max_age_s)
 
 
 def _admitted_ids(decisions: DataFrame, alias: str) -> DataFrame:
@@ -670,174 +541,47 @@ def convert_store_to_versioned(spark: SparkSession, store_path: str) -> str:
     tree and deletes the marker.  Returns the live data directory
     (`<root>/v1`)."""
     path = store_path.rstrip("/")
-    marker = _take_maintenance_marker(spark, path, "convert to versioned layout")
-    keep_marker = False
-    try:
-        _check_no_user_claims(spark, path)
+    with _maintenance_pass(spark, _STORE, path, "convert to versioned layout") as hold:
         fs, jpath, jvm = _hadoop_fs(spark, path)
         live, _, _ = _versioned_state(fs, jvm, path)
         if live:
             raise RuntimeError(f"store at {path} is already versioned (v{live})")
         mover = jvm.org.apache.hadoop.fs.Path(path + ".tov")
         v1 = jvm.org.apache.hadoop.fs.Path(f"{path}/v1")
-        manifest1 = f"{path}/{_MANIFEST_PREFIX}1"
-        if fs.exists(mover):
-            # conversion crashed between moving the tree aside and
-            # moving it under the root — finish it.  The stranded state
-            # PRE-EXISTS here, so the marker is kept on ANY failure in
-            # this window — a rename returning False, or mkdirs/rename
-            # RAISING (a transient DFS error raises instead of
-            # returning False; the keep must cover both) — until the
-            # move-in lands
-            keep_marker = True
-            fs.mkdirs(jpath)
-            if not fs.rename(mover, v1):
-                raise StoreRestoreError(
-                    f"could not resume interrupted conversion: rename "
-                    f"{mover} -> {v1} failed and the store's data sits at "
-                    f"{mover} with no live tree — move it back to {path} "
-                    f"by hand, then delete the {_MAINTENANCE_SUFFIX} "
-                    "marker (left in place so gates keep failing fast "
-                    "with guidance) and re-run"
-                )
-            keep_marker = False
-        elif fs.exists(v1):
+        resuming = fs.exists(mover)
+        if fs.exists(v1) and not resuming:
             pass  # crashed after the move, before the manifest — just flip
-        elif not fs.exists(jpath):
+        elif not resuming and not fs.exists(jpath):
             fs.mkdirs(jpath)  # cold creation: first append creates v1/
         else:
-            if not fs.rename(jpath, mover):
+            # move the tree aside (unless an interrupted conversion
+            # already did) and under the root
+            if not resuming and not fs.rename(jpath, mover):
                 raise RuntimeError(f"could not move {path} aside to {mover}")
-            # data stranded at .tov from here until the move-in lands;
-            # keep the marker on any failure, raised or returned
-            keep_marker = True
-            fs.mkdirs(jpath)
-            if not fs.rename(mover, v1):
-                raise StoreRestoreError(
-                    f"conversion stalled: {path} moved aside to {mover} but "
-                    f"rename into {v1} failed — no live store exists. Move "
-                    f"{mover} back to {path} by hand, then delete the "
-                    f"{_MAINTENANCE_SUFFIX} marker (left in place so gates "
-                    "keep failing fast with guidance) and re-run"
-                )
-            keep_marker = False
+            # the data sits at .tov with no live tree until the move-in
+            # lands: keep the marker on ANY failure in this window — a
+            # rename returning False, or mkdirs/rename RAISING (a
+            # transient DFS error raises instead of returning False)
+            with hold.stranded():
+                fs.mkdirs(jpath)
+                if not fs.rename(mover, v1):
+                    raise StoreRestoreError(
+                        (
+                            f"could not resume interrupted conversion: rename "
+                            f"{mover} -> {v1} failed"
+                            if resuming
+                            else f"conversion stalled: {path} moved aside to "
+                            f"{mover} but rename into {v1} failed"
+                        )
+                        + f" — no live store exists. Move {mover} back to "
+                        f"{path} by hand, then delete the .maintenance marker "
+                        "(left in place so gates keep failing fast with "
+                        "guidance) and re-run"
+                    )
+        manifest1 = f"{path}/{_MANIFEST_PREFIX}1"
         if not _fs_create_text(spark, manifest1, "converted"):
             raise RuntimeError(f"manifest {manifest1} already exists")
         return f"{path}/v1"
-    finally:
-        if not keep_marker:
-            mfs, mpath, _ = _hadoop_fs(spark, marker)
-            mfs.delete(mpath, False)
-
-
-def _versioned_rewrite_locked(
-    spark: SparkSession,
-    root: str,
-    partition_by: tuple[str, ...] | None,
-    target_file_bytes: int,
-    transform,
-) -> tuple[int, int]:
-    """The manifest/pointer-swap twin of _guarded_rewrite_locked, for
-    stores in the VERSIONED layout (caller holds the maintenance
-    marker).  Every mutation is an atomic file CREATE or a delete of a
-    tree no reader resolves — zero renames, so the crash-window
-    analysis needs no rename atomicity and holds on object stores:
-
-      - crash BEFORE the manifest flip: readers still resolve v<N>
-        (the live store, untouched); the orphaned v<N+1> data is GC'd
-        at the start of the next pass.
-      - crash AFTER the flip, before GC: readers already resolve the
-        complete v<N+1>; the stale v<N> tree and its manifest are GC'd
-        at the start of the next pass.
-
-    Both windows are pinned in tests/test_gate_maintenance.py by
-    constructing the exact on-disk states a kill would leave."""
-    fs, _, jvm = _hadoop_fs(spark, root)
-    live, manifests, dirs = _versioned_state(fs, jvm, root)
-    if not live:
-        raise RuntimeError(f"{root} is not a versioned store")
-    # GC leftovers of crashed passes: orphan data dirs that never got a
-    # manifest (crash before flip) and superseded versions whose GC was
-    # interrupted (crash after flip)
-    for n in dirs:
-        if n != live:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/v{n}"), True)
-    for n in manifests:
-        if n != live:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(f"{root}/{_MANIFEST_PREFIX}{n}"), False
-            )
-    cur = f"{root}/v{live}"
-    jcur = jvm.org.apache.hadoop.fs.Path(cur)
-    if not fs.exists(jcur):
-        return (0, 0)  # converted cold store, first append hasn't run
-    discovered = _discovered_partition_cols(fs, jvm, cur)
-    missing_layout = [c for c in discovered if c not in (partition_by or ())]
-    if missing_layout:
-        raise ValueError(
-            f"store at {root} (live v{live}) is partitioned on "
-            f"{sorted(discovered)} but partition_by={partition_by} omits "
-            f"{missing_layout} — rewriting would flatten the layout and "
-            "destroy dynamic partition pruning; pass the store's actual "
-            "layout"
-        )
-    files_before, total_bytes = _store_data_files(fs, jvm, cur)
-    if files_before == 0:
-        return (0, 0)
-    n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-    df = spark.read.parquet(cur)
-    if partition_by:
-        missing = [c for c in partition_by if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"partition_by columns {missing} not in the store at {root} "
-                f"(columns: {df.columns}) — pass the store's actual layout"
-            )
-    if transform is not None:
-        df = transform(df)
-    nxt = f"{root}/v{live + 1}"
-    if partition_by:
-        (
-            df.repartition(n_files, *[F.col(c) for c in partition_by])
-            .write.partitionBy(*partition_by)
-            .parquet(nxt)
-        )
-    else:
-        df.coalesce(n_files).write.parquet(nxt)
-    # THE FLIP: one atomic create-if-absent — the only mutation a reader
-    # can ever observe; before it they resolve v<live>, after it v<live+1>
-    if not _fs_create_text(spark, f"{root}/{_MANIFEST_PREFIX}{live + 1}", "flip"):
-        raise RuntimeError(
-            f"manifest for v{live + 1} already exists at {root} — another "
-            "pass raced this one past the maintenance marker; adjudicate "
-            "by hand"
-        )
-    # GC the superseded version; a crash in here is the documented
-    # after-flip window, repaired by the next pass's GC sweep
-    fs.delete(jcur, True)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/{_MANIFEST_PREFIX}{live}"), False)
-    files_after, _ = _store_data_files(fs, jvm, nxt)
-    return (files_before, files_after)
-
-
-def _rewrite_locked(
-    spark: SparkSession,
-    path: str,
-    partition_by: tuple[str, ...] | None,
-    target_file_bytes: int,
-    transform,
-) -> tuple[int, int]:
-    """Layout dispatch for the marker-held rewrite: versioned roots take
-    the manifest flip, plain stores the rename swap."""
-    fs, _, jvm = _hadoop_fs(spark, path)
-    live, _, _ = _versioned_state(fs, jvm, path)
-    if live:
-        return _versioned_rewrite_locked(
-            spark, path, partition_by, target_file_bytes, transform
-        )
-    return _guarded_rewrite_locked(
-        spark, path, partition_by, target_file_bytes, transform
-    )
 
 
 # --------------------------------------------------------------------------
@@ -865,20 +609,20 @@ def _discovered_partition_cols(fs, jvm, path: str) -> set[str]:
         cur = nxt
 
 
-def _store_data_files(fs, jvm, path: str) -> tuple[int, int]:
-    """(file count, total bytes) of a store's DATA files — hidden files
-    (_SUCCESS, markers, dot-files) excluded, partition dirs recursed."""
+def _store_listing(fs, jvm, path: str) -> tuple[int, int, set[str]]:
+    """(file count, total bytes, leaf dirs) of a store's DATA files —
+    hidden files (_SUCCESS, markers, dot-files) excluded, partition dirs
+    recursed; the leaf dirs are the distinct parents of the data files."""
     it = fs.listFiles(jvm.org.apache.hadoop.fs.Path(path), True)
-    n = 0
-    total = 0
+    n, total, leaves = 0, 0, set()
     while it.hasNext():
         st = it.next()
-        name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
+        if st.getPath().getName().startswith(("_", ".")):
             continue
         n += 1
         total += st.getLen()
-    return n, total
+        leaves.add(st.getPath().getParent().toString())
+    return n, total, leaves
 
 
 def store_stats(spark: SparkSession, store_path: str) -> dict:
@@ -910,45 +654,21 @@ def store_stats(spark: SparkSession, store_path: str) -> dict:
     of a crashed rewrite are never double-counted) plus a `version`
     key; plain stores omit the key."""
     path = store_path.rstrip("/")
-    fs, jpath, jvm = _hadoop_fs(spark, path)
+    fs, _, jvm = _hadoop_fs(spark, path)
     live, _, _ = _versioned_state(fs, jvm, path)
     data_path = f"{path}/v{live}" if live else path
-    jdata = jvm.org.apache.hadoop.fs.Path(data_path)
-    claims = _user_claims_info(spark, path)
-    if not fs.exists(jdata):
-        out = {
-            "data_files": 0,
-            "total_bytes": 0,
-            "avg_file_bytes": 0,
-            "partition_columns": [],
-            "partition_dirs": 0,
-            "under_maintenance": _fs_read_text(spark, _maintenance_marker(path))
-            is not None,
-            "active_claims": len(claims),
-            "oldest_claim_age_s": max((c["age_s"] for c in claims), default=None),
-        }
-        if live:
-            out["version"] = live
-        return out
-    n_files = 0
-    total = 0
-    leaf_dirs: set[str] = set()
-    it = fs.listFiles(jdata, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue
-        n_files += 1
-        total += st.getLen()
-        leaf_dirs.add(st.getPath().getParent().toString())
+    exists = fs.exists(jvm.org.apache.hadoop.fs.Path(data_path))
+    n_files, total, leaves = _store_listing(fs, jvm, data_path) if exists else (0, 0, ())
+    claims = _claim_files_info(spark, _STORE.claims(path))
     out = {
         "data_files": n_files,
         "total_bytes": total,
         "avg_file_bytes": (total // n_files) if n_files else 0,
-        "partition_columns": sorted(_discovered_partition_cols(fs, jvm, data_path)),
-        "partition_dirs": len(leaf_dirs),
-        "under_maintenance": _fs_read_text(spark, _maintenance_marker(path)) is not None,
+        "partition_columns": sorted(_discovered_partition_cols(fs, jvm, data_path))
+        if exists
+        else [],
+        "partition_dirs": len(leaves),
+        "under_maintenance": _fs_read_text(spark, _STORE.marker(path)) is not None,
         "active_claims": len(claims),
         "oldest_claim_age_s": max((c["age_s"] for c in claims), default=None),
     }
@@ -1003,10 +723,12 @@ def compact_store(
     with the protocol's guidance error instead of a raw FileNotFound
     inside the rename window — ad-hoc unclaimed scans should wrap
     themselves in `store_user_claim`.  A CRASHED rewrite leaves the
-    marker in place deliberately (the store may need the auto-restore);
-    deleting it and re-running is the documented manual adjudication
-    step.  A crashed USER leaves only a claim file — delete it and
-    re-run the maintenance pass.
+    marker in place deliberately (the store may need the auto-restore),
+    as does StoreRestoreError (the swap AND its rollback failed, so no
+    live store path exists until the operator restores `.precompact` by
+    hand); deleting it and re-running is the documented manual
+    adjudication step.  A crashed USER leaves only a claim file —
+    delete it and re-run the maintenance pass.
 
     FILESYSTEM CONTRACT: the rename-swap path above assumes directory
     rename is atomic (HDFS, POSIX local FS).  On an object store
@@ -1027,7 +749,9 @@ def compact_store(
     docstring, CONCURRENCY; `sparkgraft.fs.atomic.create.attested`).
 
     Returns (files_before, files_after)."""
-    return _guarded_rewrite(spark, store_path, partition_by, target_file_bytes, None)
+    path = store_path.rstrip("/")
+    with _maintenance_pass(spark, _STORE, path, "compact/retire rewrite") as hold:
+        return _rewrite_locked(spark, path, partition_by, target_file_bytes, None, hold)
 
 
 def retire_from_store(
@@ -1082,10 +806,7 @@ def retire_from_store(
     rewrite (the r10 check-then-claim shape left that window open); a
     racing pass loses the CAS with the designed guidance error."""
     path = store_path.rstrip("/")
-    marker = _take_maintenance_marker(spark, path, "retire (count+rewrite)")
-    keep_marker = False
-    try:
-        _check_no_user_claims(spark, path)
+    with _maintenance_pass(spark, _STORE, path, "retire (count+rewrite)") as hold:
         if isinstance(retired, DataFrame):
             rset = (
                 retired.select(F.col(retired.columns[0]).alias(key_col))
@@ -1111,15 +832,9 @@ def retire_from_store(
             partition_by,
             target_file_bytes,
             lambda df: df.join(F.broadcast(rset), key_col, "left_anti"),
+            hold,
         )
         return (rows_before, rows_before - removed)
-    except StoreRestoreError:
-        keep_marker = True  # live store path missing — keep gates failing fast
-        raise
-    finally:
-        if not keep_marker:
-            mfs, mpath, _ = _hadoop_fs(spark, marker)
-            mfs.delete(mpath, False)
 
 
 def _count_retired(
@@ -1145,134 +860,155 @@ class StoreRestoreError(RuntimeError):
     """The double-failure case of the rename swap: moving the compacted
     tree into the live path failed AND the rollback rename of the
     `.precompact` backup also failed — the live store path is missing
-    and the complete original sits at `<store>.precompact`.  Raised
-    instead of a bare RuntimeError so the maintenance-marker release
-    logic can tell this apart from guards that leave the store intact:
-    the marker is deliberately LEFT IN PLACE, keeping gates failing
-    fast with guidance (not raw FileNotFound) until an operator renames
-    `.precompact` back to the store path and deletes the marker."""
+    and the complete original sits at `<store>.precompact` (or, for a
+    stalled convert_store_to_versioned, at `<root>.tov`).  Raised from
+    inside the maintenance pass's stranded window, so the marker is
+    deliberately LEFT IN PLACE, keeping gates failing fast with guidance
+    (not raw FileNotFound) until an operator moves the tree back to the
+    store path and deletes the marker."""
 
 
-def _guarded_rewrite(
-    spark: SparkSession,
-    store_path: str,
-    partition_by: tuple[str, ...] | None,
-    target_file_bytes: int,
-    transform,
-) -> tuple[int, int]:
-    """The shared layout-preserving store rewrite behind compact_store
-    (retire_from_store claims the marker itself, one claim over count
-    plus rewrite, and calls _guarded_rewrite_locked directly):
-    maintenance-marker claim, leftover/flattening guards, optional row
-    transform, sized output files, rename-based swap with rollback.
-    Returns (files_before, files_after).
-
-    The `<store>.maintenance` marker is claimed FIRST (compare-and-set)
-    and released on every exit that leaves a live store — success or
-    raised guard.  Two cases keep the marker: a process CRASH (the
-    store may be mid-swap, so gates must keep failing fast until an
-    operator deletes the marker and re-runs — the auto-restore then
-    repairs the crash window), and StoreRestoreError (swap failed AND
-    rollback failed: no live store path exists until the operator
-    restores `.precompact` by hand, so releasing the marker would trade
-    the protocol's guidance error for a raw FileNotFound)."""
-    path = store_path.rstrip("/")
-    marker = _take_maintenance_marker(spark, path, "compact/retire rewrite")
-    keep_marker = False
-    try:
-        _check_no_user_claims(spark, path)
-        return _rewrite_locked(
-            spark, path, partition_by, target_file_bytes, transform
-        )
-    except StoreRestoreError:
-        keep_marker = True
-        raise
-    finally:
-        if not keep_marker:
-            mfs, mpath, _ = _hadoop_fs(spark, marker)
-            mfs.delete(mpath, False)
-
-
-def _guarded_rewrite_locked(
+def _rewrite_locked(
     spark: SparkSession,
     path: str,
     partition_by: tuple[str, ...] | None,
     target_file_bytes: int,
     transform,
+    hold,
 ) -> tuple[int, int]:
+    """The layout-preserving store rewrite behind compact_store and
+    retire_from_store, run inside their maintenance pass (`hold`).  One
+    body for both layouts — repair a crashed pass's leftovers, refuse to
+    flatten the partition layout, size the output, read, apply the
+    optional row `transform`, and write a complete copy NEXT to the live
+    data — then the layout's own swap.  Returns (files_before,
+    files_after).
+
+    PLAIN store — the rename swap: the copy goes to
+    `<store>.compact.tmp`, the live store is renamed to
+    `<store>.precompact`, the copy renamed in (rolled back on failure),
+    and the backup deleted last.  An interruption leaves either the
+    original store live, or (between the two renames) the complete
+    original at `.precompact`, which the next pass restores.  If the
+    move-in AND the rollback fail, no live store path exists:
+    StoreRestoreError, and the marker is kept.
+
+    VERSIONED root — the manifest flip: the copy goes to `v<N+1>`, one
+    atomically created `_MANIFEST-v<N+1>` flips readers over, then the
+    old version is GC'd.  Every mutation is an atomic file CREATE or a
+    delete of a tree no reader resolves — zero renames, so the
+    crash-window analysis holds on object stores:
+
+      - crash BEFORE the flip: readers still resolve v<N> (untouched);
+        the orphaned v<N+1> data is GC'd at the start of the next pass.
+      - crash AFTER the flip, before GC: readers already resolve the
+        complete v<N+1>; the stale v<N> tree and its manifest are GC'd
+        at the start of the next pass.
+
+    Both windows are pinned in tests/test_gate_maintenance.py by
+    constructing the exact on-disk states a kill would leave."""
     fs, jpath, jvm = _hadoop_fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(path + ".compact.tmp")
-    bak = jvm.org.apache.hadoop.fs.Path(path + ".precompact")
-    if fs.exists(bak) and not fs.exists(jpath):
-        # interrupted between the two renames: the original is complete
-        # at .precompact — restore it, clear the superseded tmp (it is
-        # the interrupted pass's helper output, never the live store —
-        # in this window it necessarily still exists and would
-        # otherwise trip the leftover refusal below), and start over
-        if not fs.rename(bak, jpath):
-            raise RuntimeError(f"could not restore interrupted compaction from {bak}")
-        fs.delete(tmp, True)
-    for leftover in (tmp, bak):
-        if fs.exists(leftover):
-            raise RuntimeError(
-                f"leftover from an interrupted compaction at {leftover} — "
-                "the live store is intact; delete the leftover and re-run"
-            )
+    P = jvm.org.apache.hadoop.fs.Path
+    live, manifests, dirs = _versioned_state(fs, jvm, path)
+    if live:
+        # GC leftovers of crashed passes: orphan data dirs that never got
+        # a manifest (crash before flip) and superseded versions whose
+        # GC was interrupted (crash after flip)
+        for n in dirs:
+            if n != live:
+                fs.delete(P(f"{path}/v{n}"), True)
+        for n in manifests:
+            if n != live:
+                fs.delete(P(f"{path}/{_MANIFEST_PREFIX}{n}"), False)
+        src, out, where = f"{path}/v{live}", f"{path}/v{live + 1}", f"{path} (live v{live})"
+        if not fs.exists(P(src)):
+            return (0, 0)  # converted cold store, first append hasn't run
+    else:
+        src, out, where = path, path + ".compact.tmp", path
+        tmp, bak = P(out), P(path + ".precompact")
+        if fs.exists(bak) and not fs.exists(jpath):
+            # interrupted between the two renames: the original is
+            # complete at .precompact — restore it, clear the superseded
+            # tmp (the interrupted pass's helper output, never the live
+            # store — in this window it necessarily still exists and
+            # would otherwise trip the leftover refusal below), and
+            # start over
+            if not fs.rename(bak, jpath):
+                raise RuntimeError(f"could not restore interrupted compaction from {bak}")
+            fs.delete(tmp, True)
+        for leftover in (tmp, bak):
+            if fs.exists(leftover):
+                raise RuntimeError(
+                    f"leftover from an interrupted compaction at {leftover} — "
+                    "the live store is intact; delete the leftover and re-run"
+                )
     # refuse to silently FLATTEN a partitioned store: discover the
     # on-disk `name=value` directory columns and demand partition_by
     # covers them — rows would survive a flattening rewrite (every
     # content check passes) but the partition dirs, and with them DPP,
     # would be gone, a silent full-store-scan regression in production
-    discovered = _discovered_partition_cols(fs, jvm, path)
+    discovered = _discovered_partition_cols(fs, jvm, src)
     missing_layout = [c for c in discovered if c not in (partition_by or ())]
     if missing_layout:
         raise ValueError(
-            f"store at {path} is partitioned on {sorted(discovered)} but "
+            f"store at {where} is partitioned on {sorted(discovered)} but "
             f"partition_by={partition_by} omits {missing_layout} — "
             "rewriting would flatten the layout and destroy dynamic "
             "partition pruning; pass the store's actual layout"
         )
-    files_before, total_bytes = _store_data_files(fs, jvm, path)
+    files_before, total_bytes, _ = _store_listing(fs, jvm, src)
     if files_before == 0:
         return (0, 0)
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-    df = spark.read.parquet(path)
-    if partition_by:
-        missing = [c for c in partition_by if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"partition_by columns {missing} not in the store at {path} "
-                f"(columns: {df.columns}) — pass the store's actual layout"
-            )
+    df = spark.read.parquet(src)
+    missing = [c for c in partition_by or () if c not in df.columns]
+    if missing:
+        raise ValueError(
+            f"partition_by columns {missing} not in the store at {path} "
+            f"(columns: {df.columns}) — pass the store's actual layout"
+        )
     if transform is not None:
         df = transform(df)
     if partition_by:
         (
             df.repartition(n_files, *[F.col(c) for c in partition_by])
             .write.partitionBy(*partition_by)
-            .parquet(str(tmp))
+            .parquet(out)
         )
     else:
-        df.coalesce(n_files).write.parquet(str(tmp))
+        df.coalesce(n_files).write.parquet(out)
+    if live:
+        # THE FLIP: one atomic create-if-absent — the only mutation a
+        # reader can ever observe; before it they resolve v<live>, after
+        # it v<live+1>
+        if not _fs_create_text(spark, f"{path}/{_MANIFEST_PREFIX}{live + 1}", "flip"):
+            raise RuntimeError(
+                f"manifest for v{live + 1} already exists at {path} — another "
+                "pass raced this one past the maintenance marker; adjudicate "
+                "by hand"
+            )
+        # GC the superseded version; a crash in here is the documented
+        # after-flip window, repaired by the next pass's GC sweep
+        fs.delete(P(src), True)
+        fs.delete(P(f"{path}/{_MANIFEST_PREFIX}{live}"), False)
+        return (files_before, _store_listing(fs, jvm, out)[0])
     if not fs.rename(jpath, bak):
         raise RuntimeError(f"could not move the live store aside to {bak}")
-    if not fs.rename(tmp, jpath):
-        # roll back — the original store returns live; if the rollback
-        # rename ALSO fails there is no live store path, so raise the
-        # keep-the-marker error with the manual restore step spelled out
-        if not fs.rename(bak, jpath):
+    with hold.stranded():  # no live store path until a rename lands
+        swapped = fs.rename(tmp, jpath)
+        if not swapped and not fs.rename(bak, jpath):
             raise StoreRestoreError(
                 f"could not move the compacted store into {path}, and "
                 f"rolling the original back from {bak} also failed — no "
                 f"live store exists. The complete original is at {bak}: "
                 f"rename it back to {path} by hand, then delete the "
-                f"{_MAINTENANCE_SUFFIX} marker (left in place so gates "
-                "keep failing fast with guidance) and re-run"
+                ".maintenance marker (left in place so gates keep failing "
+                "fast with guidance) and re-run"
             )
+    if not swapped:
         raise RuntimeError(
             f"could not move the compacted store into {path} "
             "(original rolled back and live again)"
         )
     fs.delete(bak, True)
-    files_after, _ = _store_data_files(fs, jvm, path)
-    return (files_before, files_after)
+    return (files_before, _store_listing(fs, jvm, path)[0])

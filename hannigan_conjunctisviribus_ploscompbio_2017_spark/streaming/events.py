@@ -15,15 +15,25 @@ processAllAvailable() (the documented local-smoke pattern).
 from __future__ import annotations
 
 import json
-import os
-import socket
-import uuid
-from contextlib import contextmanager
-from datetime import datetime, timezone
+import math
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from hannigan_conjunctisviribus_ploscompbio_2017_spark.fslock import (
+    _LOG,
+    _STORE,
+    _check_marker,
+    _fs_create_text,
+    _fs_read_text,
+    _fs_write_text,
+    _hadoop_fs,
+    _maintenance_pass,
+    _sweep_claims,
+    _user_claim,
+)
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -820,21 +830,13 @@ def _admission_gate_foreach(
         # every epoch holds a LOG-user claim (the fold's mutual
         # exclusion), plus a STORE-user claim when the persisted store's
         # root is known — both two-phase, both released at epoch end
-        spark_b = batch.sparkSession
-        with log_user_claim(
-            spark_b, decisions_path, f"gate epoch {int(epoch_id)}"
+        spark_b, what = batch.sparkSession, f"gate epoch {int(epoch_id)}"
+        with log_user_claim(spark_b, decisions_path, what), (
+            nullcontext()
+            if store_path is None
+            else _user_claim(spark_b, _STORE, store_path, what)
         ):
-            if store_path is not None:
-                from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.gate_maintenance import (
-                    store_user_claim,
-                )
-
-                with store_user_claim(
-                    spark_b, store_path, f"gate epoch {int(epoch_id)}"
-                ):
-                    _gate_epoch(batch, epoch_id)
-            else:
-                _gate_epoch(batch, epoch_id)
+            _gate_epoch(batch, epoch_id)
 
     def _gate_epoch(batch: DataFrame, epoch_id: int) -> None:
         spark_b = batch.sparkSession
@@ -873,7 +875,7 @@ def _admission_gate_foreach(
         # that state would read as an EMPTY log and re-admit everything.
         # (The maintenance-marker guard against a LIVE fold lives in the
         # log_user_claim every epoch holds around this whole body — a
-        # two-phase claim the fold's _check_no_log_claims honors, so the
+        # two-phase claim the fold's maintenance pass refuses on, so the
         # pre-commit silent-decision-loss window is closed, not merely
         # narrowed to the boundary check that used to sit here.)
         if _fs_read_text(spark_b, f"{decisions_path}/{_COMPACTED_MARKER}") is not None:
@@ -1240,7 +1242,7 @@ def read_gate_decisions(spark: SparkSession, decisions_path: str) -> DataFrame:
     LAZY; in a loop where a fold could start concurrently, materialize
     it (`.localCheckpoint()`) inside a `log_user_claim` — the same
     frame the append step wants materialized anyway."""
-    _check_log_maintenance(spark, decisions_path.rstrip("/"))
+    _check_marker(spark, _LOG, decisions_path)
     return _resolve_gate_decisions(spark, decisions_path)
 
 
@@ -1262,41 +1264,24 @@ def _resolve_gate_decisions(spark: SparkSession, decisions_path: str) -> DataFra
 
 
 # --------------------------------------------------------------------------
-# decisions-log lifecycle: run markers, legacy migration, compaction
+# decisions-log lifecycle: run markers, legacy migration, compaction.
+# The fold-vs-epoch lock (`<log>/_maintenance` marker, `<log>/_claims/`)
+# is the log family of the one maintenance lock in fslock.py.
 # --------------------------------------------------------------------------
 
 _RUN_MARKER = "_run_id"
 _COMPACTED_MARKER = "_compacted"
-_MAINTENANCE_MARKER = "_maintenance"
-_CLAIMS_SUBDIR = "_claims"
 
 
-def _check_log_maintenance(spark: SparkSession, decisions_path: str) -> None:
-    """Fail fast while compact_gate_decisions holds the log's
-    `_maintenance` marker — a gate epoch committed mid-fold would be
-    silently deleted by the fold without being folded."""
-    if _fs_read_text(spark, f"{decisions_path}/{_MAINTENANCE_MARKER}") is not None:
-        raise RuntimeError(
-            f"decisions log at {decisions_path} is under maintenance "
-            "(compact_gate_decisions holds its _maintenance marker) — "
-            "a gate epoch committed mid-fold would be silently "
-            "deleted by the fold. Stop the maintenance pass or wait "
-            "for it; if it CRASHED, delete the marker and re-run "
-            "compact_gate_decisions to completion, then start the "
-            "next run with a fresh decisions_path + checkpoint pair"
-        )
-
-
-@contextmanager
 def log_user_claim(spark: SparkSession, decisions_path: str, what: str):
-    """Shared LOG-user claim held by every gate epoch — the
-    decisions-log twin of gate_maintenance.store_user_claim, same
-    two-phase protocol and the same interleaving proof: check the
-    log's `_maintenance` marker, create `<log>/_claims/<uuid>`,
-    RE-CHECK the marker (a fold that claimed in between wins — back
-    out, deleting the claim), run the epoch, delete.  The fold refuses
-    while any claim exists (`_check_no_log_claims`), so an epoch
-    mid-flight can never have its freshly committed `_epoch=<n>`
+    """Context manager holding a shared LOG-user claim for one gate
+    epoch — the log family (`<log>/_maintenance`, `<log>/_claims/`) of
+    the one maintenance lock in fslock.py, the same two-phase protocol
+    as gate_maintenance.store_user_claim: check the log's `_maintenance`
+    marker, create `<log>/_claims/<uuid>`, RE-CHECK the marker (a fold
+    that claimed in between wins — back out, deleting the claim), run
+    the epoch, delete.  The fold refuses while any claim exists, so an
+    epoch mid-flight can never have its freshly committed `_epoch=<n>`
     directory deleted-without-folding — the pre-commit window the bare
     marker check only narrowed.  `_claims` has no `=` in its name, so
     parquet reads keep hiding it like the other markers.  A CRASHED
@@ -1304,106 +1289,7 @@ def log_user_claim(spark: SparkSession, decisions_path: str, what: str):
     the stale file by hand, or let `sweep_stale_log_claims` age it out
     (the claim payload carries its creation stamp + pid/host since
     r12)."""
-    path = decisions_path.rstrip("/")
-    _check_log_maintenance(spark, path)
-    claim = f"{path}/{_CLAIMS_SUBDIR}/{uuid.uuid4().hex}"
-    _check_atomic_create_capable(spark, claim, "log-user claim CAS")
-    if not _fs_create_text(spark, claim, _claim_payload(what)):
-        raise RuntimeError(f"log-user claim collision at {claim}")
-    fs, jclaim, _ = _hadoop_fs(spark, claim)
-    try:
-        _check_log_maintenance(spark, path)
-        yield
-    finally:
-        fs.delete(jclaim, False)
-
-
-def _claim_payload(what: str) -> str:
-    """The JSON payload every claim file carries since r12 — the
-    machine-adjudicable identity of the holder (r11 verdict missing #2;
-    claims previously held only the free-text `what`, so stale-vs-live
-    adjudication was manual): an ISO-8601 UTC creation stamp (what the
-    stale sweeps age against), the holder's pid and host, and `what`.
-    One line, parseable, still human-readable in an `ls`+`cat`."""
-    return json.dumps(
-        {
-            "what": what,
-            "created_utc": datetime.now(timezone.utc).strftime(
-                "%Y-%m-%dT%H:%M:%SZ"
-            ),
-            "pid": os.getpid(),
-            "host": socket.gethostname(),
-        }
-    )
-
-
-def _claim_files_info(spark: SparkSession, claims_dir: str) -> list[dict]:
-    """One record per live claim file under `claims_dir`:
-    {name, path, what, created_utc, pid, host, age_s}.  `age_s` is
-    computed from the payload's creation stamp against this process's
-    clock — a pre-r12 claim with a bare-text payload (or an unreadable
-    one: the holder may delete it mid-listing) falls back to the file's
-    FS modification time.  Cross-host clock skew therefore shifts ages;
-    size stale thresholds in hours, not seconds."""
-    fs, jdir, _ = _hadoop_fs(spark, claims_dir)
-    if not fs.exists(jdir):
-        return []
-    now = datetime.now(timezone.utc)
-    out = []
-    for st in fs.listStatus(jdir):
-        name = st.getPath().getName()
-        if name.startswith((".", "_")):
-            continue
-        rec = {
-            "name": name,
-            "path": st.getPath().toString(),
-            "what": None,
-            "created_utc": None,
-            "pid": None,
-            "host": None,
-        }
-        raw = _fs_read_text(spark, rec["path"])
-        if raw is None:
-            continue  # holder deleted it between the listing and the read
-        try:
-            payload = dict(json.loads(raw))
-            rec.update(
-                {k: payload.get(k) for k in ("what", "created_utc", "pid", "host")}
-            )
-        except Exception:
-            payload = None
-            rec["what"] = raw  # pre-r12 bare-text payload
-        # age: the payload stamp when it parses; FS mtime otherwise —
-        # including a JSON payload with a missing/malformed stamp, which
-        # keeps its parsed identity fields but falls back for the age
-        try:
-            created = datetime.strptime(
-                payload["created_utc"], "%Y-%m-%dT%H:%M:%SZ"
-            ).replace(tzinfo=timezone.utc)
-        except Exception:
-            created = datetime.fromtimestamp(
-                st.getModificationTime() / 1000.0, tz=timezone.utc
-            )
-        rec["age_s"] = max(0.0, (now - created).total_seconds())
-        out.append(rec)
-    return out
-
-
-def _sweep_stale_claim_files(
-    spark: SparkSession, claims_dir: str, max_age_s: float
-) -> list[dict]:
-    """Shared sweep body for both claim families: delete every claim
-    under `claims_dir` older than `max_age_s`, returning the swept
-    records.  A claim deleted by its holder mid-sweep is simply gone
-    (fs.delete on a missing path is a no-op False).  Callers gate on
-    their family's maintenance marker first."""
-    swept = []
-    for rec in _claim_files_info(spark, claims_dir):
-        if rec["age_s"] > max_age_s:
-            fs, jpath, _ = _hadoop_fs(spark, rec["path"])
-            fs.delete(jpath, False)
-            swept.append(rec)
-    return swept
+    return _user_claim(spark, _LOG, decisions_path, what)
 
 
 def sweep_stale_log_claims(
@@ -1419,163 +1305,7 @@ def sweep_stale_log_claims(
     epoch itself, so any threshold comfortably above the longest epoch
     (hours, not seconds — payload stamps come from the writer's clock)
     never sweeps a live claim.  Returns the swept claim records."""
-    path = decisions_path.rstrip("/")
-    _check_log_maintenance(spark, path)
-    return _sweep_stale_claim_files(spark, f"{path}/{_CLAIMS_SUBDIR}", max_age_s)
-
-
-def _check_no_log_claims(spark: SparkSession, decisions_path: str) -> None:
-    """Run by the fold AFTER claiming `_maintenance`: refuse while any
-    gate epoch holds a log-user claim — the raise releases the marker
-    (the caller's non-crash cleanup), the epoch finishes undisturbed,
-    and the fold simply re-runs later."""
-    cd = f"{decisions_path.rstrip('/')}/{_CLAIMS_SUBDIR}"
-    fs, jdir, _ = _hadoop_fs(spark, cd)
-    if not fs.exists(jdir):
-        return
-    holders = sorted(
-        name
-        for st in fs.listStatus(jdir)
-        if not (name := st.getPath().getName()).startswith((".", "_"))
-    )
-    if holders:
-        raise RuntimeError(
-            f"active gate-epoch claims under {cd}: {holders} — a gate "
-            "epoch is mid-flight; stop the stream (or wait for the epoch) "
-            "and re-run the fold. If the claimant CRASHED (no stream is "
-            "running), the log is untouched: delete the stale claim "
-            "file(s) and re-run"
-        )
-
-
-def _hadoop_fs(spark: SparkSession, path_str: str):
-    """(FileSystem, Path, jvm) for any Hadoop-FS path — local, HDFS, s3a."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path_str)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, jvm
-
-
-def _fs_read_text(spark: SparkSession, path_str: str) -> str | None:
-    """Contents of a small text file via the Hadoop FS API (None when
-    absent) — the decisions-log markers are one-line files.  Absence
-    is checked TWICE: exists→open is not atomic, and a marker released
-    by a concurrent maintenance pass between the two must read as
-    absent (the state it is in), not as a raw Java
-    FileNotFoundException — the live two-thread stress test caught
-    exactly that interleaving."""
-    fs, jpath, jvm = _hadoop_fs(spark, path_str)
-    if not fs.exists(jpath):
-        return None
-    try:
-        inp = fs.open(jpath)
-    except Exception as e:
-        # a FileNotFound AT OPEN TIME is authoritative absence — the
-        # open itself is the linearization point (a bare exists()
-        # re-check is not enough: a rapidly flapping marker can be
-        # re-created by the next maintenance pass before the re-check)
-        if "FileNotFoundException" in str(e) or not fs.exists(jpath):
-            return None
-        raise
-    try:
-        reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(inp, "UTF-8"))
-        lines = []
-        while True:
-            line = reader.readLine()
-            if line is None:
-                break
-            lines.append(line)
-        return "\n".join(lines)
-    finally:
-        inp.close()
-
-
-def _fs_write_text(spark: SparkSession, path_str: str, text: str) -> None:
-    """Write (overwrite) a small text file via the Hadoop FS API."""
-    fs, jpath, _ = _hadoop_fs(spark, path_str)
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
-_S3_SCHEMES = ("s3a", "s3n", "s3")
-_ATOMIC_CREATE_ATTESTATION = "sparkgraft.fs.atomic.create.attested"
-
-
-def _check_atomic_create_capable(spark: SparkSession, path_str: str, what: str) -> None:
-    """Every CAS in the maintenance/claim protocol (markers, store-user
-    and log-user claims, the versioned manifest flip) rests on
-    `_fs_create_text` being an ATOMIC create-if-absent.  HDFS and POSIX
-    local filesystems provide that; BASELINE s3a does NOT — Hadoop's
-    `create(overwrite=false)` there is a HEAD-then-PUT check-then-act,
-    so two racing passes could BOTH win a marker claim or a manifest
-    flip even under S3 strong consistency (which only makes the
-    individual operations consistent, not the pair atomic).  Refuse the
-    protocol on s3/s3n/s3a paths unless the operator attests the
-    capability by setting the Hadoop conf
-    `sparkgraft.fs.atomic.create.attested=true` (via
-    `spark.hadoop.sparkgraft.fs.atomic.create.attested=true`) — the
-    attestation means the s3a client actually performs conditional
-    If-None-Match creates (Hadoop 3.4.1+ ships s3a conditional-create
-    support; it must be enabled, and the store must honor
-    If-None-Match, as AWS S3 does since 2024).  Non-S3 object stores
-    (abfs, gs) provide atomic create natively and are not gated.
-
-    A SCHEME-LESS path resolves against `fs.defaultFS`, so the check
-    parses that conf's scheme for it — a cluster whose default
-    filesystem is s3a must not bypass the refusal just because callers
-    pass bare paths.  Both checks are string parses of the path/conf:
-    no FileSystem is instantiated, so the refusal works (with this
-    guidance, not a ClassNotFound) even where the s3a classes are not
-    on the classpath."""
-    if "://" in path_str:
-        scheme = path_str.split("://", 1)[0].lower()
-    else:
-        default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
-        scheme = default_fs.split("://", 1)[0].lower() if "://" in default_fs else ""
-    if scheme not in _S3_SCHEMES:
-        return
-    if spark._jsc.hadoopConfiguration().getBoolean(_ATOMIC_CREATE_ATTESTATION, False):
-        return
-    raise RuntimeError(
-        f"{what} at {path_str} needs an ATOMIC create-if-absent, which "
-        f"baseline {scheme}:// does not provide (Hadoop's "
-        "create(overwrite=false) on s3a is a HEAD-then-PUT check-then-act "
-        "— two racing passes could both win the claim). If your s3a "
-        "client performs conditional If-None-Match creates (Hadoop "
-        "3.4.1+ with conditional create enabled), attest it by setting "
-        f"spark.hadoop.{_ATOMIC_CREATE_ATTESTATION}=true; otherwise run "
-        "maintenance attended with external mutual exclusion, or keep "
-        "markers/claims on an HDFS/POSIX path"
-    )
-
-
-def _fs_create_text(spark: SparkSession, path_str: str, text: str) -> bool:
-    """Create a small text file FAILING IF IT EXISTS (the Hadoop FS
-    create(overwrite=false) contract — atomic claim on HDFS and local
-    FS; on s3/s3a paths the claim protocols gate on
-    `_check_atomic_create_capable` first, because baseline s3a
-    implements this as HEAD-then-PUT).  Returns False when the path
-    already exists (lost the race);
-    True when this caller created it.  Any OTHER create failure — a
-    transient FS error, a permission problem — re-raises instead of
-    reading as a lost race (which would surface as a misleading
-    'claimed by another run' diagnosis downstream): after the
-    exception, the path existing is the one signal that someone else
-    actually won."""
-    fs, jpath, _ = _hadoop_fs(spark, path_str)
-    try:
-        out = fs.create(jpath, False)
-    except Exception:
-        if fs.exists(jpath):
-            return False  # genuinely lost the race — the claim exists
-        raise
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-    return True
+    return _sweep_claims(spark, _LOG, decisions_path, max_age_s)
 
 
 def streaming_query_id(spark: SparkSession, checkpoint: str) -> str:
@@ -1751,7 +1481,8 @@ def compact_gate_decisions(
     decided doc.
 
     Run it only after the stream is stopped — a rule that is a
-    two-sided LOCK since r11: the fold claims the log's `_maintenance`
+    two-sided LOCK since r11 (the log family of fslock.py's maintenance
+    lock): the fold claims the log's `_maintenance`
     marker (compare-and-set) for its whole duration and then REFUSES
     while any gate epoch holds a `_claims/<uuid>` file; every epoch
     holds such a claim around its whole body (check marker → create →
@@ -1770,23 +1501,8 @@ def compact_gate_decisions(
     listing shrank ((0, n) when resuming an interrupted fold: the
     original epoch-file count is no longer known)."""
     path = decisions_path.rstrip("/")
-    _check_atomic_create_capable(
-        spark, f"{path}/{_MAINTENANCE_MARKER}", "log maintenance marker CAS"
-    )
-    if not _fs_create_text(spark, f"{path}/{_MAINTENANCE_MARKER}", "compact_gate_decisions"):
-        raise RuntimeError(
-            f"decisions log at {path} already holds a _maintenance marker "
-            "— another compact_gate_decisions pass is running (wait for "
-            "it), or a crashed one left the marker (verify nothing is "
-            "running, delete the marker, and re-run; the fold resumes "
-            "safely from its _compacted commit point)"
-        )
-    try:
-        _check_no_log_claims(spark, path)
+    with _maintenance_pass(spark, _LOG, path, "compact_gate_decisions"):
         return _compact_gate_decisions_locked(spark, path, target_file_bytes)
-    finally:
-        mfs, mpath, _ = _hadoop_fs(spark, f"{path}/{_MAINTENANCE_MARKER}")
-        mfs.delete(mpath, False)
 
 
 def _compact_gate_decisions_locked(
@@ -1794,8 +1510,6 @@ def _compact_gate_decisions_locked(
     path: str,
     target_file_bytes: int,
 ) -> tuple[int, int]:
-    import math
-
     fs, jpath, jvm = _hadoop_fs(spark, path)
     epoch_glob = jvm.org.apache.hadoop.fs.Path(f"{path}/_epoch=*/part-*")
     tmp = f"{path}/_compact_tmp"

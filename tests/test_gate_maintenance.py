@@ -6,6 +6,7 @@ existing store."""
 
 from pyspark.sql import functions as F
 
+from hannigan_conjunctisviribus_ploscompbio_2017_spark import fslock as FL
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators import gate_maintenance as GM
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.dedup import (
     fingerprint_store,
@@ -519,7 +520,7 @@ def test_maintenance_marker_blocks_appends_and_second_rewrite(spark, tmp_path):
         _docs(spark, [(1, TEXT_B)]), spark.read.parquet(store_path)
     ).localCheckpoint()
 
-    marker = GM._take_maintenance_marker(spark, store_path, "test holds the lock")
+    marker = FL._take_marker(spark, FL._STORE, store_path, "test holds the lock")
     with pytest.raises(RuntimeError, match="under maintenance"):
         GM.check_store_maintenance(spark, store_path)
     with pytest.raises(RuntimeError, match="under maintenance"):
@@ -596,7 +597,7 @@ def test_maintenance_marker_fails_gate_epoch_loudly(spark, tmp_path):
 
     # concurrent maintenance claims the store marker; the gate's next
     # epoch must lose with the designed error
-    marker = GM._take_maintenance_marker(spark, store_path, "concurrent compaction")
+    marker = FL._take_marker(spark, FL._STORE, store_path, "concurrent compaction")
     spark.createDataFrame(
         [(2, datetime(2025, 1, 1, 12, 5), TEXT_C)], schema
     ).coalesce(1).write.mode("append").parquet(str(src))
@@ -670,7 +671,7 @@ def test_store_stats_tracks_fragmentation_and_maintenance(spark, tmp_path):
     assert s2["data_files"] < s1["data_files"]
     assert s2["partition_columns"] == ["cell"] and s2["partition_dirs"] == 2
 
-    marker = GM._take_maintenance_marker(spark, store_path, "stats test")
+    marker = FL._take_marker(spark, FL._STORE, store_path, "stats test")
     assert GM.store_stats(spark, store_path)["under_maintenance"] is True
     os.remove(marker)
 
@@ -773,24 +774,24 @@ def test_retire_claim_covers_count_and_rewrite(spark, tmp_path, monkeypatch):
 
     phases = []
     real_count = GM._count_retired
-    real_rewrite = GM._guarded_rewrite_locked
+    real_rewrite = GM._rewrite_locked
 
     def count_spy(spark_, path, rset, key_col):
         assert os.path.exists(marker)  # claimed before the count
         with pytest.raises(RuntimeError, match="already holds"):
-            GM._take_maintenance_marker(spark_, path, "racer-during-count")
+            FL._take_marker(spark_, FL._STORE, path, "racer-during-count")
         phases.append("count")
         return real_count(spark_, path, rset, key_col)
 
     def rewrite_spy(spark_, path, *a, **k):
         assert os.path.exists(marker)  # the SAME claim, still held
         with pytest.raises(RuntimeError, match="already holds"):
-            GM._take_maintenance_marker(spark_, path, "racer-during-rewrite")
+            FL._take_marker(spark_, FL._STORE, path, "racer-during-rewrite")
         phases.append("rewrite")
         return real_rewrite(spark_, path, *a, **k)
 
     monkeypatch.setattr(GM, "_count_retired", count_spy)
-    monkeypatch.setattr(GM, "_guarded_rewrite_locked", rewrite_spy)
+    monkeypatch.setattr(GM, "_rewrite_locked", rewrite_spy)
     before, after = GM.retire_from_store(spark, store_path, [gone], "fingerprint")
     assert (before, after) == (3, 2)
     assert phases == ["count", "rewrite"]
@@ -815,7 +816,7 @@ def test_store_stats_cold_start_returns_zeroed(spark, tmp_path):
         "active_claims": 0,
         "oldest_claim_age_s": None,
     }
-    marker = GM._take_maintenance_marker(spark, path, "cold start test")
+    marker = FL._take_marker(spark, FL._STORE, path, "cold start test")
     assert GM.store_stats(spark, path)["under_maintenance"] is True
     os.remove(marker)
 
@@ -840,7 +841,7 @@ class _RenameFaultFS:
 
 
 def _fault_renames(monkeypatch, fail_when):
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.streaming.events import (
+    from hannigan_conjunctisviribus_ploscompbio_2017_spark.fslock import (
         _hadoop_fs as real_hfs,
     )
 
@@ -978,15 +979,15 @@ def test_store_user_claims_close_the_writer_race(spark, tmp_path, monkeypatch):
     # the user's first check and its claim create must win — simulated
     # by passing check 1 and raising at check 2
     calls = {"n": 0}
-    real_check = GM.check_store_maintenance
+    real_check = FL._check_marker
 
-    def flaky_check(spark_, path):
+    def flaky_check(spark_, fam, path):
         calls["n"] += 1
         if calls["n"] == 2:  # the re-check inside the claim window
             raise RuntimeError("store is under maintenance (simulated)")
-        return real_check(spark_, path)
+        return real_check(spark_, fam, path)
 
-    monkeypatch.setattr(GM, "check_store_maintenance", flaky_check)
+    monkeypatch.setattr(FL, "_check_marker", flaky_check)
     with pytest.raises(RuntimeError, match="under maintenance"):
         with GM.store_user_claim(spark, store_path, "loser"):
             raise AssertionError("must not enter — the re-check lost")
@@ -1436,7 +1437,7 @@ def test_convert_stall_keeps_marker_with_guidance(spark, tmp_path, monkeypatch):
                 raise RuntimeError("simulated transient DFS rename error")
             return self._real.rename(src, dst)
 
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.streaming.events import (
+    from hannigan_conjunctisviribus_ploscompbio_2017_spark.fslock import (
         _hadoop_fs as real_hfs,
     )
 
@@ -1490,7 +1491,7 @@ def test_claim_payload_sweep_and_stats_age(spark, tmp_path):
     with open(f"{claims_dir}/deadclaim", "w") as f:
         f.write(stale)
     with open(f"{claims_dir}/freshclaim", "w") as f:
-        f.write(GM._claim_payload("live append"))
+        f.write(FL._claim_payload("live append"))
     with open(f"{claims_dir}/legacyclaim", "w") as f:
         f.write("bare-text pre-r12 claim")  # no payload → FS mtime fallback
     with open(f"{claims_dir}/oddstamp", "w") as f:
@@ -1510,7 +1511,7 @@ def test_claim_payload_sweep_and_stats_age(spark, tmp_path):
     s = GM.store_stats(spark, store_path)
     assert s["active_claims"] == 4
     assert s["oldest_claim_age_s"] > 365 * 24 * 3600  # the 2020 stamp
-    odd = [r for r in GM._user_claims_info(spark, store_path) if r["name"] == "oddstamp"][0]
+    odd = [r for r in FL._claim_files_info(spark, FL._STORE.claims(store_path)) if r["name"] == "oddstamp"][0]
     assert odd["what"] == "odd append" and odd["pid"] == 77  # identity kept
     assert odd["age_s"] < 3600  # mtime fallback, not the broken stamp
 
@@ -1523,7 +1524,7 @@ def test_claim_payload_sweep_and_stats_age(spark, tmp_path):
     assert [r["name"] for r in swept] == ["deadclaim"]
     assert swept[0]["what"] == "append_admitted_fingerprints"
     assert swept[0]["pid"] == 4242 and swept[0]["host"] == "lost-worker"
-    left = {r["name"] for r in GM._user_claims_info(spark, store_path)}
+    left = {r["name"] for r in FL._claim_files_info(spark, FL._STORE.claims(store_path))}
     assert left == {"freshclaim", "legacyclaim", "oddstamp"}  # young, kept
     s2 = GM.store_stats(spark, store_path)
     assert s2["active_claims"] == 3 and s2["oldest_claim_age_s"] < 3600
@@ -1551,10 +1552,10 @@ def test_sweep_never_sweeps_live_claim(spark, tmp_path):
     fingerprint_store(_docs(spark, [(1, TEXT_A)])).write.parquet(store_path)
     with GM.store_user_claim(spark, store_path, "live reader"):
         assert GM.sweep_stale_claims(spark, store_path, max_age_s=3600) == []
-        info = GM._user_claims_info(spark, store_path)
+        info = FL._claim_files_info(spark, FL._STORE.claims(store_path))
         assert len(info) == 1 and info[0]["what"] == "live reader"
         assert info[0]["age_s"] < 600
-    assert GM._user_claims_info(spark, store_path) == []  # released
+    assert FL._claim_files_info(spark, FL._STORE.claims(store_path)) == []  # released
 
 
 def test_read_store_facade_claims_and_resolves(spark, tmp_path):
@@ -1600,7 +1601,7 @@ def test_read_store_facade_claims_and_resolves(spark, tmp_path):
         with GM.read_store(spark, plain):
             raise AssertionError("must fail fast before yielding")
     # the facade left no claim behind when backing out
-    assert GM._user_claims_info(spark, plain) == []
+    assert FL._claim_files_info(spark, FL._STORE.claims(plain)) == []
 
 
 def test_atomic_create_gate_refuses_unattested_s3(spark):
@@ -1613,29 +1614,40 @@ def test_atomic_create_gate_refuses_unattested_s3(spark):
     here), and local/HDFS-style paths are never gated."""
     import pytest
 
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.streaming import events as EV
+    from hannigan_conjunctisviribus_ploscompbio_2017_spark.streaming import events as SE
 
     # helper-level: s3 schemes refuse, everything else passes untouched
     for bad in ("s3a://bucket/store.maintenance", "s3://b/x", "s3n://b/x"):
         with pytest.raises(RuntimeError, match="ATOMIC create-if-absent"):
-            EV._check_atomic_create_capable(spark, bad, "test CAS")
+            FL._check_atomic_create_capable(spark, bad, "test CAS")
     for ok in ("/tmp/x", "file:///tmp/x", "hdfs://nn/x", "abfs://c@a/x"):
-        EV._check_atomic_create_capable(spark, ok, "test CAS")
+        FL._check_atomic_create_capable(spark, ok, "test CAS")
 
     # entry-point level: the marker take dies with the guidance before
     # touching the (absent) s3a filesystem classes
     with pytest.raises(RuntimeError, match="ATOMIC create-if-absent"):
-        GM._take_maintenance_marker(spark, "s3a://bucket/store", "compact")
+        FL._take_marker(spark, FL._STORE, "s3a://bucket/store", "compact")
+    # ...and so do the shared user claims and the claimed read, which
+    # check the scheme before reading the marker through the filesystem
+    with pytest.raises(RuntimeError, match="ATOMIC create-if-absent"):
+        with GM.store_user_claim(spark, "s3a://bucket/store", "append"):
+            raise AssertionError("must refuse before entering")
+    with pytest.raises(RuntimeError, match="ATOMIC create-if-absent"):
+        with SE.log_user_claim(spark, "s3a://bucket/decisions", "gate epoch 0"):
+            raise AssertionError("must refuse before entering")
+    with pytest.raises(RuntimeError, match="ATOMIC create-if-absent"):
+        with GM.read_store(spark, "s3a://bucket/store"):
+            raise AssertionError("must refuse before yielding")
 
     # the attestation unlocks the helper (conf is cleaned up after)
     hconf = spark._jsc.hadoopConfiguration()
-    hconf.setBoolean(EV._ATOMIC_CREATE_ATTESTATION, True)
+    hconf.setBoolean(FL._ATOMIC_CREATE_ATTESTATION, True)
     try:
-        EV._check_atomic_create_capable(spark, "s3a://bucket/x", "test CAS")
+        FL._check_atomic_create_capable(spark, "s3a://bucket/x", "test CAS")
     finally:
-        hconf.unset(EV._ATOMIC_CREATE_ATTESTATION)
+        hconf.unset(FL._ATOMIC_CREATE_ATTESTATION)
     with pytest.raises(RuntimeError, match="ATOMIC create-if-absent"):
-        EV._check_atomic_create_capable(spark, "s3a://bucket/x", "test CAS")
+        FL._check_atomic_create_capable(spark, "s3a://bucket/x", "test CAS")
 
     # a SCHEME-LESS path on a cluster whose fs.defaultFS is s3a must
     # not bypass the refusal — the check resolves the default scheme
@@ -1644,9 +1656,9 @@ def test_atomic_create_gate_refuses_unattested_s3(spark):
     hconf.set("fs.defaultFS", "s3a://bucket")
     try:
         with pytest.raises(RuntimeError, match="ATOMIC create-if-absent"):
-            EV._check_atomic_create_capable(spark, "/stores/fp.maintenance", "t")
+            FL._check_atomic_create_capable(spark, "/stores/fp.maintenance", "t")
         # explicit non-S3 scheme still passes even under an s3a default
-        EV._check_atomic_create_capable(spark, "file:///tmp/x", "t")
+        FL._check_atomic_create_capable(spark, "file:///tmp/x", "t")
     finally:
         hconf.set("fs.defaultFS", prev)
-    EV._check_atomic_create_capable(spark, "/stores/fp.maintenance", "t")
+    FL._check_atomic_create_capable(spark, "/stores/fp.maintenance", "t")

@@ -5,6 +5,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from hannigan_conjunctisviribus_ploscompbio_2017_spark import fslock as FL
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators import multimodal as MM
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.schemas import load_table
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.sources import readers as R
@@ -2130,7 +2131,7 @@ def test_run_marker_create_is_compare_and_set(spark, tmp_path):
     """Review fix: the run-marker claim uses create(overwrite=false) —
     the second creator LOSES and must see the first claimant's id, so
     two fresh streams racing on one decisions_path cannot both pass."""
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.streaming.events import (
+    from hannigan_conjunctisviribus_ploscompbio_2017_spark.fslock import (
         _fs_create_text,
         _fs_read_text,
     )
@@ -2147,7 +2148,7 @@ def test_fs_create_text_reraises_non_race_failures(spark, tmp_path):
     regular file, standing in for transient FS/permission errors)
     re-raises instead of surfacing downstream as a misleading 'claimed
     by another run' diagnosis."""
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.streaming.events import (
+    from hannigan_conjunctisviribus_ploscompbio_2017_spark.fslock import (
         _fs_create_text,
     )
 
@@ -2290,7 +2291,7 @@ def test_sweep_stale_log_claims(spark, tmp_path):
             )
         )
     with open(f"{claims}/liveepoch", "w") as f:
-        f.write(SE._claim_payload("gate epoch 8"))
+        f.write(FL._claim_payload("gate epoch 8"))
 
     with pytest.raises(RuntimeError, match="active gate-epoch claims"):
         SE.compact_gate_decisions(spark, dec_path)

@@ -1,6 +1,8 @@
 """Capture `.explain("formatted")` for every headline bench query into
-plans/r13/<name>_<tag>.txt (dir overridable via SPARK_GRAFT_PLANS_DIR) — the round's before/after plan
-evidence (the judge reads these files instead of running Spark).
+<dir>/<name>_<tag>.txt — before/after plan evidence for a change, to
+diff by hand.  <dir> is `.scratch/plans/` in the checkout (git-ignored:
+plan dumps are not committed), or SPARK_GRAFT_PLANS_DIR when set (an
+absolute path is used as is, a relative one under `.scratch/plans/`).
 
 Usage: python tools/capture_plans.py <tag> [name ...]
   tag:   suffix for the plan files (before / after)
@@ -28,7 +30,10 @@ def main() -> None:
     if unknown:
         sys.exit(f"unknown query names: {', '.join(unknown)}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", os.environ.get("SPARK_GRAFT_PLANS_DIR", "r13"))
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out_dir = os.path.join(
+        root, ".scratch", "plans", os.environ.get("SPARK_GRAFT_PLANS_DIR", "")
+    )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("capture-plans")
     targets = list(HEADLINE)
