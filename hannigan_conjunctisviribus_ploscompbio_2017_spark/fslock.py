@@ -42,7 +42,9 @@ HDFS and POSIX provide both; baseline s3a does NOT provide the first
 claim, versioned manifest flip — refuses s3/s3a paths unless the
 operator attests a conditional-create-capable client
 (`_check_atomic_create_capable`), and does so before its first
-filesystem access.
+filesystem access.  The marker check runs the same refusal, so the
+read-side entry points (marker checks, stale sweeps, store_stats) give
+this guidance on such paths too, not a raw ClassNotFoundException.
 """
 
 from __future__ import annotations
@@ -162,8 +164,9 @@ def _check_atomic_create_capable(spark: SparkSession, path_str: str, what: str) 
     pass bare paths.  Both checks are string parses of the path/conf:
     no FileSystem is instantiated, so the refusal works (with this
     guidance, not a ClassNotFound) even where the s3a classes are not
-    on the classpath — which is why the marker take and the user claim
-    run it before their first filesystem access."""
+    on the classpath — which is why the marker take and the marker
+    check (and with it the user claims and the stale sweeps) run it
+    before their first filesystem access."""
     if "://" in path_str:
         scheme = path_str.split("://", 1)[0].lower()
     else:
@@ -320,8 +323,13 @@ _LOG = _LockFamily(
 
 def _check_marker(spark: SparkSession, fam: _LockFamily, path: str) -> None:
     """Fail fast with the family's guidance while a maintenance pass —
-    or a crashed one — holds the marker."""
+    or a crashed one — holds the marker.  Runs the atomic-create check
+    first: markers and claims on an unattested s3 path can only be
+    misread, never taken, so every entry point that starts here (the
+    marker checks, the user claims, the stale sweeps) refuses with the
+    attestation guidance before its first filesystem access."""
     path = path.rstrip("/")
+    _check_atomic_create_capable(spark, fam.marker(path), f"{fam.name} maintenance lock")
     if _fs_read_text(spark, fam.marker(path)) is not None:
         raise RuntimeError(fam.busy.format(path=path, marker=fam.marker(path)))
 
@@ -380,7 +388,6 @@ def _user_claim(spark: SparkSession, fam: _LockFamily, path: str, what: str):
     marker, create `<claims>/<uuid>` carrying `_claim_payload(what)`,
     re-check the marker, run, delete the claim."""
     claim = f"{fam.claims(path)}/{uuid.uuid4().hex}"
-    _check_atomic_create_capable(spark, claim, f"{fam.name}-user claim CAS")
     _check_marker(spark, fam, path)
     if not _fs_create_text(spark, claim, _claim_payload(what)):
         raise RuntimeError(f"{fam.name}-user claim collision at {claim}")

@@ -8,8 +8,6 @@ pure DataFrame — no UDFs, no driver-side state.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -17,6 +15,7 @@ from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.dedup import (
     norm_tokens,
     portable_token_hash,
 )
+from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.stats import _smallest_k
 
 
 def seeded_id_hash(id_col: str, seed: int):
@@ -326,7 +325,6 @@ def exact_k_sample(
     k: int,
     id_col: str = "doc_id",
     seed: int = 42,
-    _margin_override: int | None = None,
 ) -> DataFrame:
     """Deterministic EXACT-k per-stratum sample: within each stratum,
     rank rows by md5_60(id|seed) and keep the k smallest — "take exactly
@@ -336,76 +334,28 @@ def exact_k_sample(
     identical across runs, partitionings, and engines, and the chosen
     set is NESTED in k (the k=100 sample contains the k=50 sample).
 
-    Two-phase, never a full-stratum sort (the rarefy_hash trick, now
-    automatic): hash keys are uniform in [0, 2^60), so the k-th
-    smallest key per stratum concentrates near 2^60·k/n. A map-side
-    filter at τ = 2^60·m/n with margin m = k + 10·√k + 64 keeps ~m
-    candidate rows per stratum (P[fewer than k survive] < e⁻⁴⁰ by
-    Chernoff) and the row_number window ranks ONLY those — both the
-    shuffle and the sort see ~m·n_strata rows, not the corpus.
-    Exactness is unconditional: a per-stratum candidate count guards
-    the margin, and any under-filled stratum re-ranks its FULL
-    population through the fallback branch (empty at runtime in the
-    normal case — AQE collapses it to an empty relation). Strata sizes
-    come from one aggregate over the strata column only (column
-    pruning makes that a cheap pruned scan; callers with an expensive
-    computed `df` should localCheckpoint it first, as the composed
-    pipelines do). `_margin_override` is test-only (forces the
-    fallback path).
+    Two-phase, never a full-stratum sort: the selection is
+    stats._smallest_k (the one shared with rarefy_hash), so the
+    row_number window ranks only a τ-filtered candidate pool of ~k +
+    6·√k + 24 rows per stratum, and an under-filled stratum re-ranks its
+    full population in an ~always-empty fallback branch.  Strata sizes
+    come from one aggregate over the strata column only (column pruning
+    makes that a cheap pruned scan; callers with an expensive computed
+    `df` should localCheckpoint it first, as the composed pipelines do).
 
-    Stratum rows with a NULL stratum key form their own stratum (the
-    joins are null-safe, matching the previous window semantics)."""
+    Rows with a NULL stratum key form their own stratum (the joins are
+    null-safe)."""
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    h = seeded_id_hash(id_col, seed)
-    margin = (
-        int(k + math.ceil(10.0 * math.sqrt(k))) + 64
-        if _margin_override is None
-        else _margin_override
+    sizes = (
+        df.groupBy(strata_col)
+        .agg(F.count(F.lit(1)).alias("_t"))
+        .withColumn("_d", F.least(F.lit(k), F.col("_t")))
     )
-    sizes = df.groupBy(F.col(strata_col).alias("_sk")).agg(
-        F.count(F.lit(1)).alias("_n")
-    )
-    # clamp the ratio at 1.0 BEFORE scaling: m ≥ n means keep-all, and
-    # an unclamped 2⁶⁰·m/n overflows the long cast; +512 absorbs the
-    # ~2⁷ ulp error of 2⁶⁰-scale doubles
-    ratio = F.least(F.lit(float(margin)) / F.col("_n"), F.lit(1.0))
-    tau = ((F.pow(F.lit(2.0), 60) * ratio).cast("long") + F.lit(512)).alias("_tau")
-    sizes = sizes.select("_sk", "_n", tau)
-    base = df.withColumn("_h", h).join(
-        F.broadcast(sizes), F.col(strata_col).eqNullSafe(F.col("_sk"))
-    )
-    # lazy checkpoint: the candidate pool feeds BOTH the margin guard
-    # and the rank — without it the upstream scan+filter runs twice
-    cand = base.filter(F.col("_h") <= F.col("_tau")).localCheckpoint(eager=False)
-    cc = cand.groupBy(F.col("_sk").alias("_cck")).agg(F.count(F.lit(1)).alias("_cc"))
-    # guard starts from SIZES (every stratum), not cand: a stratum with
-    # an empty candidate pool has no cand rows and a cand-derived guard
-    # would silently drop it instead of routing it to the fallback.
-    # eqNullSafe like every other join here: a plain key join can never
-    # match the NULL stratum's count row, which would route that (often
-    # large) stratum through the full-population fallback sort on every
-    # run — correct rows, but the exact cost the two-phase pool avoids
-    # broadcast the per-stratum candidate counts: both sides are
-    # stratum-sized aggregates the planner can't estimate, so this
-    # two-tiny-frame join planned as a SortMergeJoin (two exchanges +
-    # sorts) without the hint (r12; same rationale as contamination's
-    # cand_counts broadcast)
-    short = (
-        sizes.join(F.broadcast(cc), F.col("_sk").eqNullSafe(F.col("_cck")), "left")
-        .filter(F.coalesce(F.col("_cc"), F.lit(0)) < F.least(F.lit(k), F.col("_n")))
-        .select(F.col("_sk").alias("_shortk"))
-    )
-    null_safe_short = F.col("_sk").eqNullSafe(F.col("_shortk"))
-    pool = cand.join(F.broadcast(short), null_safe_short, "left_anti").unionByName(
-        base.join(F.broadcast(short), null_safe_short, "left_semi")
-    )
-    w = W.partitionBy("_sk").orderBy(F.col("_h").asc(), F.col(id_col).asc())
-    return (
-        pool.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(*df.columns)
-    )
+    kept = _smallest_k(df, strata_col, sizes, seeded_id_hash(id_col, seed), [id_col])
+    # the literal bound is redundant with _rn <= _d, but it lets Spark
+    # plan a per-partition WindowGroupLimit below each rank exchange
+    return kept.filter(F.col("_rn") <= k).select(*df.columns)
 
 
 def unigram_logprob(

@@ -109,6 +109,7 @@ from pyspark.sql import functions as F
 
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.fslock import (
     _STORE,
+    _check_atomic_create_capable,
     _check_marker,
     _claim_files_info,
     _fs_create_text,
@@ -140,9 +141,9 @@ def _check_materialized(decisions: DataFrame, require_materialized: bool) -> Non
     read_gate_decisions resolution (aggregate over a scan), or a
     checkpointed frame (LogicalRDD) — contains none, so a Join node in
     the analyzed plan is the tell.  Detection is anchored to plan NODE
-    names (the leading identifier of each plan line, the _cheap_replay
-    idiom) — a string literal or column name containing 'Join' inside a
-    node's argument list cannot false-positive."""
+    names (the leading identifier of each plan line) — a string literal
+    or column name containing 'Join' inside a node's argument list
+    cannot false-positive."""
     if not require_materialized:
         return
     try:
@@ -652,8 +653,10 @@ def store_stats(spark: SparkSession, store_path: str) -> dict:
     raising, so the monitoring loop can start polling before run 1.
     A VERSIONED root reports the LIVE version's stats (leftover trees
     of a crashed rewrite are never double-counted) plus a `version`
-    key; plain stores omit the key."""
+    key; plain stores omit the key.  An unattested s3 path refuses with
+    the lock's atomic-create guidance, as the marker check does."""
     path = store_path.rstrip("/")
+    _check_atomic_create_capable(spark, _STORE.marker(path), "store maintenance lock")
     fs, _, jvm = _hadoop_fs(spark, path)
     live, _, _ = _versioned_state(fs, jvm, path)
     data_path = f"{path}/v{live}" if live else path

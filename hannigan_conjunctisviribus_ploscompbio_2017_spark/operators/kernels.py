@@ -67,6 +67,10 @@ import warnings
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.dedup import (
+    portable_token_hash,
+)
+
 # --------------------------------------------------------------------------
 # helpers
 # --------------------------------------------------------------------------
@@ -1295,8 +1299,7 @@ def sample_edges(edges: DataFrame, fraction: float, seed: int = 42) -> DataFrame
     reproducible in any md5-capable engine (the DuckDB oracle replays it).
     """
     key = F.concat_ws("|", F.col("src"), F.col("dst"), F.lit(str(seed)))
-    h = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
-    return edges.filter(h < int(fraction * (1 << 60)))
+    return edges.filter(portable_token_hash(key) < int(fraction * (1 << 60)))
 
 
 # --------------------------------------------------------------------------

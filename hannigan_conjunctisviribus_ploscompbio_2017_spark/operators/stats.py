@@ -1,17 +1,23 @@
 """Resampling & ecology statistics (SURVEY §2.11).
 
 - rarefy: vegan::rrarefy — per-sample multinomial subsample to a fixed
-  depth (bin/interpersonaldiversity.R:60-76 in /root/reference).
-  Arrow-batched applyInPandas, one group per sample; seed derived from
-  the sample key by hash so results are reproducible regardless of
-  partitioning/order (the reference itself is NOT reproducible here —
+  depth (bin/interpersonaldiversity.R:60-76 in the reference).
+  Arrow-batched mapInPandas over a hash exchange on the sample; seed
+  derived from the sample key by hash so results are reproducible
+  regardless of partitioning/order (the reference itself is NOT reproducible here —
   bin/catcontigs.sh:47-51 embeds rand() in contig names; we fix that).
+- rarefy_hash: the same draw as a per-individual md5 rank — a pure row
+  function the DuckDB oracle replays row for row.
 - bray_curtis: vegan::vegdist — pairwise Bray-Curtis over per-sample
   abundance vectors as a sparse join-aggregate (no dense matrix, no
   driver collect): BC(a,b) = 1 − 2·Σ min(xai, xbi) / (Σ xai + Σ xbi).
-- rarefaction_curve: M13 — repeated rarefy at increasing depths.
-- permutation_pvalue: M4 harness — label-permutation null distribution
-  for a group-difference statistic, all permutations in one job.
+- rarefaction_curve: M13 — rarefy_hash richness at increasing depths,
+  all depths read off one ranked draw.
+- permutation_pvalue: M4 harness — margin-preserving label-permutation
+  null for a two-group mean difference, all permutations in one job.
+
+rarefy_hash, rarefaction_curve and corpus.exact_k_sample share one
+smallest-k-per-group selection (`_smallest_k`).
 """
 
 from __future__ import annotations
@@ -20,31 +26,17 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.dedup import (
+    portable_token_hash,
+)
 
 
 def _seed_for(key: str, base_seed: int) -> int:
     h = hashlib.sha256(f"{base_seed}:{key}".encode()).digest()
     return int.from_bytes(h[:4], "big")
-
-
-def _cheap_replay(df: DataFrame) -> bool:
-    """True when re-computing `df` costs only projections/filters over
-    an already-materialized checkpoint (every node of the analyzed plan
-    is Project/Filter/LogicalRDD) — the case where an extra
-    localCheckpoint would pin a second full copy for no saved work.
-    Conservative: any parse surprise returns False (→ checkpoint)."""
-    import re
-
-    try:
-        s = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return False
-    nodes = re.findall(r"^[\s:+-]*'?([A-Za-z]+)", s, flags=re.M)
-    return bool(nodes) and set(nodes) <= {"Project", "Filter", "LogicalRDD"} and (
-        "LogicalRDD" in nodes
-    )
 
 
 def rarefy(
@@ -179,7 +171,8 @@ def rarefy_hash(
 
     The explode is ∝ Σ counts: right for bounded abundance counts; for
     heavy-tailed counts use rarefy() (pandas hypergeometric, no
-    expansion). Samples with total < depth are dropped, as in rarefy().
+    expansion). Samples with total < depth are dropped, as in rarefy();
+    a NULL sample key is a sample of its own.
 
     ROUTING THRESHOLD (measured r07, tools/scale_check.py on the sf0.1
     lineitem abundance proxy, mean count ≈ 25/cell): at 8x data this
@@ -189,11 +182,11 @@ def rarefy_hash(
     individuals) the order flips — 18.1x here vs 13.75x for rarefy()
     (148s vs 118s wall on 32 cores) — because this path's work stays
     ∝ Σ counts while rarefy() ships only the (samples x items)
-    abundance ROWS through Arrow.  Route by expansion volume: prefer
-    rarefy_hash while Σ counts ≲ ~10M individuals per core (needs the
-    replayable-oracle property or bounded counts), and rarefy() beyond
-    that or whenever mean count per cell is heavy-tailed (≳ 50-100),
-    where the explode multiplies the row count by the tail.
+    abundance ROWS through Arrow.  Prefer rarefy_hash while Σ counts
+    ≲ ~10M individuals per core (needs the replayable-oracle property
+    or bounded counts), and rarefy() beyond that or whenever mean count
+    per cell is heavy-tailed (≳ 50-100), where the explode multiplies
+    the row count by the tail.
 
     `depth` may be an int, a 1-row/1-column DataFrame broadcast into
     the plan (single Catalyst DAG — no driver-side collect), or a SQL
@@ -206,42 +199,9 @@ def rarefy_hash(
     (Catalyst does not reuse the identical subtree across the broadcast
     boundary; measured one extra full scan+join per depth consumer).
 
-    Execution is two-phase so the rank never sorts the full exploded
-    community: keys are uniform in [0, 2^60), so the depth-th smallest
-    key per sample concentrates near 2^60·d/T. A map-side filter at
-    τ = 2^60·m/T with margin m = d + 10·√d + 64 keeps ~m candidates per
-    sample (P[fewer than d survive] < e⁻⁴⁰ by Chernoff), and the window
-    ranks only those. Exactness is unconditional, not probabilistic: a
-    per-sample candidate count guards the margin, and any under-filled
-    sample (or one where τ overflows to "keep all") routes through the
-    full-sort fallback branch — empty at runtime in the normal case, so
-    AQE collapses it to an empty relation.
+    The rank never sorts the full exploded community: see `_smallest_k`.
     """
-    from pyspark.sql import Window as W
-
-    typed = df.select(
-        F.col(sample_col).cast("string").alias(sample_col),
-        F.col(item_col).cast("string").alias(item_col),
-        F.col(count_col).cast("long").alias(count_col),
-    ).filter(F.col(count_col) > 0)
-    # the zero/negative filter is load-bearing, not hygiene: Spark's
-    # sequence(1, 0) yields a DESCENDING [1, 0] — an unfiltered
-    # zero-count row would explode into two phantom individuals that
-    # compete in the rarefaction draw
-    # typed feeds BOTH the per-sample depth aggregate and the explode
-    # base, and Catalyst does not share the subtree — without this the
-    # caller's (possibly expensive) upstream plan runs twice (measured
-    # ~35% of m1_rarefaction_portable's wall-clock at sf0.1). The
-    # checkpointed frame is the aggregated abundance table (samples ×
-    # items) — orders of magnitude smaller than the raw data at any
-    # scale, so materializing it once is the right call at 100 TB too.
-    # SKIPPED when the input already replays cheaply (a checkpointed
-    # LogicalRDD under only projections/filters — e.g. the rarefaction
-    # facade's own materialization): re-checkpointing would pin a
-    # second full copy of the abundance table in block-manager storage
-    # for the plan's lifetime to save two trivial re-projections.
-    if not _cheap_replay(typed):
-        typed = typed.localCheckpoint(eager=False)
+    typed = _typed_abundance(df, sample_col, item_col, count_col)
     # attach the depth to the per-SAMPLE aggregate, not the base table:
     # a crossJoin on the pre-aggregation rows re-derives the (possibly
     # expensive) upstream plan once more per consumer — measured ~40% of
@@ -260,214 +220,169 @@ def rarefy_hash(
         )
     else:
         per_sample = per_sample.withColumn("_depth", F.lit(int(depth)))
-    stats = per_sample.filter(F.col("_t") >= F.col("_depth")).withColumnRenamed(
+    groups = per_sample.filter(F.col("_t") >= F.col("_depth")).withColumnRenamed(
         "_depth", "_d"
     )
-    kept = _hash_ranked_kept(typed, sample_col, item_col, count_col, stats, seed)
+    kept = _kept_individuals(typed, sample_col, item_col, count_col, groups, seed)
     return kept.groupBy(sample_col, item_col).agg(
         F.count(F.lit(1)).alias(count_col)
     )
 
 
-def _hash_ranked_kept(
+def _typed_abundance(
+    df: DataFrame, sample_col: str, item_col: str, count_col: str
+) -> DataFrame:
+    """(sample string, item string, count long > 0), lazily checkpointed.
+
+    The count>0 filter is load-bearing, not hygiene: Spark's
+    sequence(1, 0) yields a DESCENDING [1, 0] — an unfiltered zero-count
+    row would explode into two phantom individuals that compete in the
+    draw.  The frame feeds BOTH the per-sample totals and the explode,
+    and Catalyst does not share the subtree — without the checkpoint the
+    caller's (possibly expensive) upstream plan runs twice (measured
+    ~35% of m1_rarefaction_portable's wall-clock at sf0.1).  It is the
+    aggregated abundance table (samples × items) — orders of magnitude
+    smaller than the raw data at any scale."""
+    return (
+        df.select(
+            F.col(sample_col).cast("string").alias(sample_col),
+            F.col(item_col).cast("string").alias(item_col),
+            F.col(count_col).cast("long").alias(count_col),
+        )
+        .filter(F.col(count_col) > 0)
+        .localCheckpoint(eager=False)
+    )
+
+
+def _kept_individuals(
     typed: DataFrame,
     sample_col: str,
     item_col: str,
     count_col: str,
-    stats: DataFrame,
+    groups: DataFrame,
     seed: int,
 ) -> DataFrame:
-    """The shared two-phase hash-rank selection behind rarefy_hash and
-    rarefaction_curve_hash. `typed` is the (sample, item, count>0)
-    abundance table (checkpoint it upstream — it is consumed twice);
-    `stats` carries one row per eligible sample with `_t` (community
-    size) and `_d` (individuals to keep). Returns the kept individuals
-    (sample, item, _i, _k, _t, _d, _rn) with _rn <= _d — the _d
-    smallest md5 keys per sample, exact regardless of the candidate
-    pruning (margin-guard fallback re-ranks any under-filled sample
-    over its full community)."""
-    from pyspark.sql import Window as W
+    """The `_d` individuals with the smallest md5_60(sample|item|i|seed)
+    per sample of `groups` (one row per eligible sample with `_t`, the
+    community size, and `_d`): rows (sample, item, _t, _d, _i, _k, _rn).
+    `_i` numbers a cell's individuals 1..count; ties on the key break
+    by (item, _i)."""
+    key = portable_token_hash(
+        F.concat_ws(
+            "|", F.col(sample_col), F.col(item_col), F.col("_i"), F.lit(str(seed))
+        )
+    )
+    # count_col is dead once the cell is exploded: dropping it before
+    # the candidate checkpoint (r13, guide §2.3 project-before-the-
+    # exchange) took an isolated noop-sink A/B on m1_rarefaction_portable
+    # from 7.70 s to 5.49 s (best of 5)
+    return _smallest_k(
+        typed,
+        sample_col,
+        groups,
+        key,
+        [item_col, "_i"],
+        expand=lambda b: b.withColumn(
+            "_i", F.explode(F.sequence(F.lit(1), F.col(count_col)))
+        ).drop(count_col),
+    )
 
-    # candidate threshold: double-precision ratio + 512 absolute slack
-    # covers the ~2⁷ ulp error of 2⁶⁰-scale doubles; min() guards the
-    # m ≥ T case (τ beyond the key range ⇒ every individual passes).
-    # Margin slack 6√d + 24 (r12 optimization round; was 10√d + 64):
-    # the candidate pool is Binomial(T, m/T) per sample, so
-    # P[pool < d] ≤ exp(−slack²/2m) ≤ e⁻¹⁸ ≈ 1.5e-8 per sample — and a
-    # short sample routes through the exact full-sort fallback anyway,
-    # so the margin buys only performance, never correctness. At small
-    # depths the old slack dominated the pool (d=17 → 122 candidates/
-    # sample, a 7× inflation of the checkpoint + rank-window input);
-    # the tighter slack halves those stages' rows while keeping the
-    # expected fallback count ~zero until ~10⁷ samples per job.
-    margin = F.col("_d") + F.ceil(F.lit(6.0) * F.sqrt(F.col("_d"))).cast("long") + 24
-    # clamp the ratio at 1.0 BEFORE scaling: m ≥ T means keep-all, and an
-    # unclamped 2⁶⁰·m/T overflows the long cast
+
+# Candidate margin over the keep count d: m = a·d + ⌈b·√d⌉ + c with
+# (a, b, c) below.  A group's pool of keys ≤ τ = 2⁶⁰·m/n is
+# Binomial(n, m/n), so P[pool < d] ≤ exp(−(6√d + 24)²/2m) ≤ e⁻¹⁸ per
+# group (r12 optimization round; was d + 10√d + 64, whose slack
+# dominated the pool at small depths — d=17 → 122 candidates, a 7×
+# inflation of the checkpoint and rank-window input).  A short group
+# re-ranks its full population in the fallback, so the margin buys
+# only speed, never correctness; tests set it to (0, 0, 0) to send
+# every group down the fallback.
+_MARGIN = (1, 6.0, 24)
+
+
+def _smallest_k(
+    rows: DataFrame,
+    group_col: str,
+    groups: DataFrame,
+    key,
+    order: list[str],
+    expand=None,
+) -> DataFrame:
+    """Keep, per group, the `_d` rows with the smallest 60-bit hash
+    `key`, ties broken by `order` — the one smallest-k selection behind
+    rarefy_hash, rarefaction_curve and corpus.exact_k_sample.
+
+    `groups` carries one row per eligible group: `group_col`, `_t` (the
+    group's population, i.e. its row count after `expand`) and `_d`
+    (rows to keep).  Rows of groups missing from `groups` are dropped.
+    The group joins are null-safe, so a NULL key is a group of its own.
+    `expand` (default: none) maps the joined rows to the population
+    `key` ranks — rarefy_hash's explode into individuals.  Returns the
+    expanded rows plus `_t`, `_d`, `_k` and `_rn` (≤ `_d`).
+
+    Two phases, so the rank never sorts a full group: keys are uniform
+    in [0, 2⁶⁰), so the d-th smallest of a group of n concentrates near
+    2⁶⁰·d/n.  A map-side filter at τ = 2⁶⁰·m/n (margin m, `_MARGIN`)
+    keeps ~m candidates per group and the row_number window ranks only
+    those.  Exactness is unconditional: a per-group candidate count
+    finds groups whose pool came up short of `_d`, and those re-rank
+    their FULL population in a fallback branch — empty at runtime in
+    the normal case, so AQE collapses it to an empty relation."""
+    expand = expand or (lambda b: b)
+    a, b, c = _MARGIN
+    d = F.col("_d")
+    margin = F.lit(a) * d + F.ceil(F.lit(float(b)) * F.sqrt(d)).cast("long") + c
+    # clamp the ratio at 1.0 BEFORE scaling: m ≥ n means keep-all, and an
+    # unclamped 2⁶⁰·m/n overflows the long cast; +512 absorbs the ~2⁷
+    # ulp error of 2⁶⁰-scale doubles
     ratio = F.least(margin.cast("double") / F.col("_t"), F.lit(1.0))
     tau = (F.pow(F.lit(2.0), 60) * ratio).cast("long") + 512
-    # stats is one row per SAMPLE — broadcast it so the full community
-    # table is never shuffled on sample just to pick up its (_t, _d, τ)
-    # thresholds (statically planned as SortMergeJoin otherwise: the
-    # checkpointed community's size is unknown to the planner). Samples
-    # are bounded at any corpus scale; the candidate-rank window below
-    # still shuffles only the ~margin-sized candidate pool.
-    base = typed.join(
-        F.broadcast(stats.select(sample_col, "_t", "_d", tau.alias("_tau"))),
-        sample_col,
-    )
-    key = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.col(sample_col),
-                    F.col(item_col),
-                    F.col("_i"),
-                    F.lit(str(seed)),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    g = groups.select(F.col(group_col).alias("_gk"), "_t", "_d")
+    in_g = F.col(group_col).eqNullSafe(F.col("_gk"))
+    # groups is one row per GROUP — broadcast it so the full population
+    # is never shuffled on the group key just to pick up its (_t, _d, τ)
+    # (statically planned as SortMergeJoin otherwise: a checkpointed
+    # input's size is unknown to the planner)
+    base = rows.join(F.broadcast(g.withColumn("_tau", tau)), in_g).drop("_gk")
 
-    def _individuals(b: DataFrame) -> DataFrame:
-        return b.withColumn(
-            "_i", F.explode(F.sequence(F.lit(1), F.col(count_col)))
-        ).withColumn("_k", key)
+    def keyed(b: DataFrame) -> DataFrame:
+        return expand(b).withColumn("_k", key)
 
-    # lazy checkpoint: the candidate set feeds BOTH the margin-guard
-    # count and the rank — without it the explode+md5 subtree runs twice.
-    # Projected to the documented kept-contract columns (r13, guide §2.3
-    # project-before-the-exchange): `count_col` and `_tau` are dead once
-    # the candidate filter has run, and carrying them pinned ~25% more
-    # bytes in the checkpoint and the rank-window exchange.
-    # Isolated interleaved noop-sink A/B on m1_rarefaction_portable
-    # (best of 5): 7.70 s without the projection -> 5.49 s with it.
+    # lazy checkpoint: the candidate pool feeds BOTH the margin guard
+    # and the rank — without it the expand+hash subtree runs twice
     cand = (
-        _individuals(base)
+        keyed(base)
         .filter(F.col("_k") <= F.col("_tau"))
-        .select(sample_col, item_col, "_i", "_k", "_t", "_d")
+        .drop("_tau")
         .localCheckpoint(eager=False)
     )
-    # margin guard: samples whose candidate pool came up short of depth
-    # (or where τ saturated) re-rank over their FULL community below
-    # the guard must start from STATS (every eligible sample), not from
-    # cand: a sample whose candidate pool is EMPTY has no cand rows at
-    # all and a cand-derived guard would silently drop it instead of
-    # routing it to the full-sort fallback
-    cand_counts = cand.groupBy(sample_col).agg(F.count(F.lit(1)).alias("_cc"))
-    short = (
-        stats.select(sample_col, "_d")
-        # broadcast the per-sample candidate counts: both sides are
-        # n_samples-row aggregates (bounded at any corpus scale — the
-        # same argument as broadcasting `stats` below), but the planner
-        # can't see that through the aggregation and would SMJ them,
-        # shuffling + sorting two tiny frames across extra stages
-        .join(F.broadcast(cand_counts), sample_col, "left")
+    # the guard starts from the GROUPS, not from cand: a group whose
+    # pool is EMPTY has no cand rows, and a cand-derived guard would
+    # silently drop it instead of routing it to the fallback.  Broadcast
+    # the per-group candidate counts: both sides are group-sized
+    # aggregates the planner cannot estimate, and would SMJ them
+    cc = cand.groupBy(F.col(group_col).alias("_ck")).agg(
+        F.count(F.lit(1)).alias("_cc")
+    )
+    short = F.broadcast(
+        g.join(F.broadcast(cc), F.col("_gk").eqNullSafe(F.col("_ck")), "left")
         .filter(F.coalesce(F.col("_cc"), F.lit(0)) < F.col("_d"))
-        .select(sample_col)
+        .select("_gk")
     )
-    w = W.partitionBy(sample_col).orderBy("_k", item_col, "_i")
-    sel_main = (
-        cand.join(F.broadcast(short), sample_col, "left_anti")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= F.col("_d"))
-    )
-    # fallback joins BEFORE the explode: its probe side is the small
-    # pre-explode table, so the ~always-empty branch never re-hashes the
-    # community even when its stage races AQE's empty-relation pruning
-    sel_fallback = (
-        _individuals(base.join(F.broadcast(short), sample_col))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= F.col("_d"))
-        .select(*sel_main.columns)
-    )
-    return sel_main.unionByName(sel_fallback)
+    w = W.partitionBy(group_col).orderBy("_k", *order)
 
-
-def rarefaction(
-    df: DataFrame,
-    sample_col: str,
-    item_col: str,
-    count_col: str,
-    depth: int | str | DataFrame,
-    seed: int = 42,
-    *,
-    total_individuals: int | None = None,
-    explode_budget_per_core: int = 10_000_000,
-) -> DataFrame:
-    """Auto-routing rarefaction facade: picks the explode path
-    (rarefy_hash) or the Arrow hypergeometric path (rarefy) by the
-    measured crossover — the explode path's work is ∝ Σ counts
-    (exploded individuals), the Arrow path's ∝ abundance ROWS, and on
-    32 cores the order flips around ~10M exploded individuals per core
-    (K=8/K=64 sweep, tools/scale_check.py; numbers in rarefy_hash's
-    routing-threshold paragraph).  Callers that don't want to pick a
-    route by hand get the right plan at any scale.
-
-    Routing input is Σ counts: pass `total_individuals` if the caller
-    already knows it (no extra job), else ONE tiny aggregate over the
-    abundance frame computes it — an adaptive, AQE-style decision that
-    costs a single pass over the (samples × items) table, orders of
-    magnitude smaller than the raw data at any scale.
-
-    Both routes draw exact multivariate-hypergeometric marginals and
-    return the same (sample, item, count) schema with per-sample sums
-    == depth, but the random REALIZATIONS differ (md5 individual ranks
-    vs seeded numpy): a workload that must stay bit-stable as its data
-    grows across the threshold should call one route directly.  The
-    explode route additionally keeps the DuckDB-replayable oracle
-    property; the facade preserves it exactly when it routes there.
-
-    `depth` accepts everything the routes accept: an int, a 1-row/
-    1-column DataFrame, or (SQL-expression form, e.g. "min(_t)") an
-    aggregate over the per-sample total column `_t` — translated for
-    the Arrow route into a broadcast depth frame over the same
-    per-sample totals.
-
-    The facade normalizes the frame to count>0 rows ONCE, for
-    everything downstream — the routing aggregate, the `_t`-expression
-    translation and both routes (zero/negative rows draw no
-    individuals: the explode route has always filtered them itself,
-    and handing them to the Arrow route would crash numpy's
-    hypergeometric on negatives and skew its total-vs-depth
-    eligibility check).  On a frame that already satisfies count>0
-    this is a no-op and both routes stay bit-identical to calling them
-    directly; with such rows present, the Arrow route's realization
-    equals rarefy(df.filter(count>0)) — a caller pinning a specific
-    realization should call one route directly anyway.  Whenever the
-    facade must consume the frame more than once (routing aggregate +
-    route, or `_t` translation + route) it lazily localCheckpoints it
-    first — the rarefy_hash plan-dedup discipline, so a caller's
-    expensive upstream plan is scanned once, not per consumer; the
-    explode route recognizes the already-materialized input
-    (_cheap_replay) and skips its own internal checkpoint, so exactly
-    ONE copy of the abundance table is ever pinned."""
-    base = df.filter(F.col(count_col).cast("long") > 0)
-    checkpointed = False
-    if total_individuals is None:
-        # base feeds BOTH the routing aggregate and the chosen route —
-        # materialize once instead of re-running the upstream plan
-        base = base.localCheckpoint(eager=False)
-        checkpointed = True
-        total_individuals = (
-            base.agg(F.sum(F.col(count_col).cast("long"))).first()[0] or 0
+    def ranked(pool: DataFrame) -> DataFrame:
+        return pool.withColumn("_rn", F.row_number().over(w)).filter(
+            F.col("_rn") <= F.col("_d")
         )
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    if total_individuals <= explode_budget_per_core * cores:
-        return rarefy_hash(base, sample_col, item_col, count_col, depth, seed)
-    if isinstance(depth, str):
-        if not checkpointed:
-            # the depth translation is a second consumer of base too
-            base = base.localCheckpoint(eager=False)
-        totals = base.groupBy(sample_col).agg(
-            F.sum(F.col(count_col).cast("long")).alias("_t")
-        )
-        depth = totals.agg(F.expr(depth).cast("long").alias("_d"))
-    return rarefy(base, sample_col, item_col, count_col, depth, seed)
+
+    main = ranked(cand.join(short, in_g, "left_anti"))
+    # the fallback joins BEFORE the expand: its probe side is the small
+    # pre-expansion table, so the ~always-empty branch never re-hashes
+    # the population even when its stage races AQE's empty-relation
+    # pruning
+    fallback = ranked(keyed(base.join(short, in_g, "left_semi")).drop("_tau"))
+    return main.unionByName(fallback)
 
 
 def bray_curtis(
@@ -537,131 +452,33 @@ def rarefaction_curve(
     depths: list[int],
     seed: int = 42,
 ) -> DataFrame:
-    """M13 — species richness after rarefying to each depth: one unioned
-    lazy plan, not a loop of actions. Output (sample, depth, richness)."""
-    if not depths:
-        raise ValueError("depths must be a non-empty list")
-    out = None
-    for d in depths:
-        r = (
-            rarefy(df, sample_col, item_col, count_col, d, seed)
-            .groupBy(sample_col)
-            .agg(F.count(F.lit(1)).alias("richness"))
-            .withColumn("depth", F.lit(d).cast("long"))
-        )
-        out = r if out is None else out.unionByName(r)
-    return out
-
-
-def permutation_pvalue_portable(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    n_perm: int = 199,
-    seed: int = 42,
-) -> DataFrame:
-    """M4 with the portable md5 hash family over INTEGER-valued data —
-    the oracle-replayable twin of permutation_pvalue.
-
-    MARGIN-PRESERVING permutation null: for each permutation, rows are
-    ranked by md5_60(rid|perm) — a uniform random permutation of the
-    pooled rows — and the n1 lowest are labeled g1, where n1 is the
-    OBSERVED size of group 1.  Permuted group sizes therefore equal the
-    observed n1/n2 exactly (the permutation null), unlike an independent
-    per-row Bernoulli flip (a random-allocation null whose variance
-    deviates for unbalanced groups).
-
-    value_col is cast to long: with integral values every group sum is
-    exact, so the per-permutation mean differences are bit-identical
-    across engines and the exceed count needs no rounding tolerance at
-    all (hashing doubles-as-strings, by contrast, is not portable).
-    Row ids hash (value|tie-rank|seed); tied rows are exchangeable, so
-    the arbitrary tie order never changes any permutation statistic.
-    """
-    from pyspark.sql import Window as W
-
-    md5_60 = lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")  # noqa: E731
-    # base feeds FOUR actions (group enumeration, n1, observed means,
-    # the permutation null) — materialize the possibly-join-derived
-    # input once instead of re-running its upstream plan per action
-    base = df.select(
-        F.col(group_col).alias("_g"), F.col(value_col).cast("long").alias("_v")
-    ).localCheckpoint(eager=False)
-    groups = sorted(str(r["_g"]) for r in base.select("_g").distinct().collect())
-    if len(groups) != 2:
-        raise ValueError(f"needs exactly 2 groups, got {groups}")
-    g1 = groups[0]
-    n1 = base.filter(F.col("_g") == g1).count()
-
-    tie_rank = F.row_number().over(W.partitionBy("_v").orderBy(F.lit(1)))
-    rid = md5_60(F.concat_ws("|", F.col("_v"), tie_rank, F.lit(str(seed))))
-    keyed = (
-        base.withColumn("_rid", rid)
-        .select(
-            "_v",
-            "_rid",
-            F.explode(F.sequence(F.lit(1), F.lit(n_perm))).alias("perm"),
-        )
-        .withColumn("_pk", md5_60(F.concat_ws("|", F.col("_rid"), F.col("perm"))))
-    )
-    wp = W.partitionBy("perm").orderBy("_pk", "_rid")
-    labeled = keyed.withColumn("in_g1", F.row_number().over(wp) <= n1)
-    perm_stats = labeled.groupBy("perm").agg(
-        (
-            F.avg(F.when(F.col("in_g1"), F.col("_v")))
-            - F.avg(F.when(~F.col("in_g1"), F.col("_v")))
-        ).alias("diff")
-    )
-    obs = {str(r["_g"]): r["m"] for r in base.groupBy("_g").agg(F.avg("_v").alias("m")).collect()}
-    observed = float(obs[g1]) - float(obs[groups[1]])
-    exceed = perm_stats.filter(F.abs(F.col("diff")) >= abs(observed)).count()
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        [(observed, float(exceed), float(n_perm))], "od double, e double, np double"
-    ).select(
-        F.round("od", 6).alias("observed_diff"),
-        F.round((F.col("e") + 1) / (F.col("np") + 1), 6).alias("p_value"),
-        F.col("np").cast("long").alias("n_perm"),
-    )
-
-
-def rarefaction_curve_hash(
-    df: DataFrame,
-    sample_col: str,
-    item_col: str,
-    count_col: str,
-    depths: list[int],
-    seed: int = 42,
-) -> DataFrame:
-    """M13 via the hash-rank draw: per-sample richness at each depth.
+    """M13 — species richness after rarefying each sample to each depth
+    (bin/OpfRarefaction.R:12-18): rows (sample, richness, depth), one
+    per sample whose community reaches the depth.  Each depth's
+    richness is exactly the richness of rarefy_hash(df, ..., depth,
+    seed).
 
     The per-individual md5 ranking is depth-independent, so ALL depths
     share ONE physical draw: rank once with per-sample effective depth
     d_eff = min(max(depths), community size), checkpoint the kept
     individuals (≤ d_eff + margin rows per sample), and read each
     depth's richness off the shared ranks with a filter + distinct-item
-    count. A per-depth rarefy_hash loop would re-run the explode + md5
-    + rank len(depths) times over the full community — measured 3x
-    wall-clock at 3 depths, and the gap widens with the depth grid.
-    Results are bit-identical to the per-depth calls (rank ≤ d is the
-    same d smallest keys either way) and the DuckDB oracle replays the
-    whole curve from a single ranked CTE."""
+    count (rank ≤ d is the same d smallest keys either way).  A
+    per-depth rarefy_hash loop would re-run the explode + md5 + rank
+    len(depths) times over the full community — measured 3x wall-clock
+    at 3 depths, and the gap widens with the depth grid.  The DuckDB
+    oracle replays the whole curve from a single ranked CTE."""
     if not depths:
         raise ValueError("depths must be a non-empty list")
-    typed = df.select(
-        F.col(sample_col).cast("string").alias(sample_col),
-        F.col(item_col).cast("string").alias(item_col),
-        F.col(count_col).cast("long").alias(count_col),
-    ).filter(F.col(count_col) > 0)
-    typed = typed.localCheckpoint(eager=False)
+    typed = _typed_abundance(df, sample_col, item_col, count_col)
     per_sample = typed.groupBy(sample_col).agg(F.sum(count_col).alias("_t"))
     # rank only samples that qualify for SOME depth, up to the deepest
     # depth each can serve
-    stats = per_sample.filter(F.col("_t") >= int(min(depths))).withColumn(
+    groups = per_sample.filter(F.col("_t") >= int(min(depths))).withColumn(
         "_d", F.least(F.lit(int(max(depths))), F.col("_t"))
     )
-    kept = _hash_ranked_kept(
-        typed, sample_col, item_col, count_col, stats, seed
+    kept = _kept_individuals(
+        typed, sample_col, item_col, count_col, groups, seed
     ).localCheckpoint(eager=False)
     out = None
     for d in depths:
@@ -682,44 +499,51 @@ def permutation_pvalue(
     n_perm: int = 999,
     seed: int = 42,
 ) -> DataFrame:
-    """M4 — permutation test for a two-group mean difference, fully
-    distributed, MARGIN-PRESERVING: per permutation, rank the pooled
-    rows by xxhash64(rid, perm) (a uniform random permutation) and label
-    the n1 lowest as group 1, where n1 is the observed group-1 size —
-    the exact permutation null, not a per-row Bernoulli reallocation.
-    One explode + one window + ONE aggregation for all permutations.
+    """M4 — permutation test for a two-group mean difference
+    (bin/CompareSkin.R:336-423), fully distributed: one explode + one
+    window + ONE aggregation for all permutations.
+
+    MARGIN-PRESERVING null: for each permutation, rows are ranked by
+    md5_60(rid|perm) — a uniform random permutation of the pooled rows
+    — and the n1 lowest are labeled group 1, where n1 is the OBSERVED
+    size of group 1 (the lower of the two group keys as strings).
+    Permuted group sizes therefore equal the observed n1/n2 exactly,
+    unlike an independent per-row Bernoulli flip (a random-allocation
+    null whose variance deviates for unbalanced groups).
+
+    Row ids hash (value|tie-rank|seed).  Hashing the value alone would
+    make tied rows move in lockstep (a degenerate null); tied rows are
+    exchangeable, so the arbitrary tie order never changes any
+    permutation statistic.  The value column is hashed and averaged as
+    given: with integral values every group sum is exact, so the
+    per-permutation statistics are bit-identical across engines and the
+    DuckDB oracle replays the exceed count with no tolerance (doubles
+    work too, but their string form and sum order are engine-specific).
 
     Returns 1 row: (observed_diff, p_value, n_perm).
     """
-    # base feeds multiple actions (group enumeration, n1, observed
-    # means, the null) — materialize the input once
+    md5_60 = lambda *cs: portable_token_hash(F.concat_ws("|", *cs))  # noqa: E731
+    # base feeds FOUR actions (group enumeration, n1, observed means,
+    # the permutation null) — materialize the possibly-join-derived
+    # input once instead of re-running its upstream plan per action
     base = df.select(
-        F.col(group_col).alias("_g"), F.col(value_col).cast("double").alias("_v")
+        F.col(group_col).alias("_g"), F.col(value_col).alias("_v")
     ).localCheckpoint(eager=False)
-    groups = [r["_g"] for r in base.select("_g").distinct().collect()]
+    groups = sorted((r["_g"] for r in base.select("_g").distinct().collect()), key=str)
     if len(groups) != 2:
         raise ValueError(f"permutation_pvalue needs exactly 2 groups, got {groups}")
-    g1 = groups[0] if str(groups[0]) < str(groups[1]) else groups[1]
+    g1, g2 = groups
     n1 = base.filter(F.col("_g") == g1).count()
-
-    obs = base.groupBy("_g").agg(F.avg("_v").alias("m"))
-    # deterministic row id for permutation hashing. Hashing the VALUE
-    # alone makes tied rows move in lockstep (degenerate null
-    # distribution); disambiguate ties with their rank among equal
-    # values — the multiset of ids stays deterministic for a given
-    # dataset even though which tied row gets which rank is arbitrary
-    # (tied rows are exchangeable).
-    from pyspark.sql import Window as W
 
     tie_rank = F.row_number().over(W.partitionBy("_v").orderBy(F.lit(1)))
     keyed = (
-        base.withColumn("_rid", F.xxhash64("_v", tie_rank, F.lit(seed)))
+        base.withColumn("_rid", md5_60(F.col("_v"), tie_rank, F.lit(str(seed))))
         .select(
             "_v",
             "_rid",
             F.explode(F.sequence(F.lit(1), F.lit(n_perm))).alias("perm"),
         )
-        .withColumn("_pk", F.xxhash64(F.col("_rid"), F.col("perm")))
+        .withColumn("_pk", md5_60(F.col("_rid"), F.col("perm")))
     )
     wp = W.partitionBy("perm").orderBy("_pk", "_rid")
     labeled = keyed.withColumn("in_g1", F.row_number().over(wp) <= n1)
@@ -729,11 +553,14 @@ def permutation_pvalue(
             - F.avg(F.when(~F.col("in_g1"), F.col("_v")))
         ).alias("diff")
     )
-    obs_rows = {r["_g"]: r["m"] for r in obs.collect()}
-    observed = float(obs_rows[g1] - [v for k, v in obs_rows.items() if k != g1][0])
+    obs = {r["_g"]: r["m"] for r in base.groupBy("_g").agg(F.avg("_v").alias("m")).collect()}
+    observed = float(obs[g1]) - float(obs[g2])
     exceed = perm_stats.filter(F.abs(F.col("diff")) >= abs(observed)).count()
     spark = df.sparkSession
     return spark.createDataFrame(
-        [(round(observed, 6), round((exceed + 1) / (n_perm + 1), 6), n_perm)],
-        "observed_diff double, p_value double, n_perm long",
+        [(observed, float(exceed), float(n_perm))], "od double, e double, np double"
+    ).select(
+        F.round("od", 6).alias("observed_diff"),
+        F.round((F.col("e") + 1) / (F.col("np") + 1), 6).alias("p_value"),
+        F.col("np").cast("long").alias("n_perm"),
     )

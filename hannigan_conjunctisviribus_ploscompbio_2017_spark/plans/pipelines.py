@@ -114,11 +114,9 @@ def interpersonal_diversity(
         .agg(F.sum("phage_abundance").alias("t"))
         .agg(F.min("t").alias("depth"))
     )
-    # route PINNED to rarefy (the Arrow hypergeometric path), not the
-    # stats.rarefaction auto-routing facade: this pipeline's frozen
-    # oracle pins a specific draw REALIZATION, and the facade would
-    # switch realizations when the data crosses its volume threshold.
-    # The Arrow route is the at-scale default anyway.
+    # rarefy (the Arrow hypergeometric draw), not rarefy_hash: this
+    # pipeline's frozen oracle pins the numpy draw REALIZATION, and the
+    # Arrow route is the at-scale default anyway.
     # materialized once: it feeds the weighted join and is returned
     rarefied = _checkpoint(
         rarefy(ab, "sample", "phage", "phage_abundance", depth=depth_df, seed=seed)

@@ -5253,39 +5253,6 @@ def g13_robustness(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def m13_rarefaction_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M13 — rarefaction/accumulation curve (bin/OpfRarefaction.R:12-18):
-    per-sample richness at increasing depths, seeded deterministic draw.
-
-    Not registered: this computes the same statistic over the same
-    derivation as m13_rarefaction_curve_portable — the two differ ONLY
-    in the draw family realizing the exact multivariate-hypergeometric
-    subsample (seeded numpy via rarefy here, md5 hash-rank there) — so
-    the portable entry carries the registry row and the family
-    equivalence is pinned in pytest (tests/test_stats.py::
-    test_rarefaction_curve_family_equivalence).  The builder stays
-    unregistered for tools/gen_fixture_oracles.py and the independent
-    hypergeometric replay (tests/test_fixture_independent.py), which
-    keep covering the numpy draw family against M13_CURVE_SF001."""
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.stats import rarefaction_curve
-
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 50)
-    ab = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .groupBy(
-            F.concat(F.lit("C"), F.col("o_custkey")).alias("sample"),
-            F.col("l_partkey").cast("string").alias("item"),
-        )
-        .agg(F.sum("l_quantity").cast("long").alias("count"))
-    )
-    curve = rarefaction_curve(ab, "sample", "item", "count", depths=[50, 200, 500], seed=42)
-    return curve.groupBy("depth").agg(
-        F.count(F.lit(1)).alias("n_samples"),
-        F.round(F.avg("richness"), 4).alias("mean_richness"),
-    )
-
-
 _M13_PORTABLE_ORACLE = f"""
     WITH ab AS MATERIALIZED (
       SELECT 'C' || o_custkey AS sample, CAST(l_partkey AS VARCHAR) AS item,
@@ -5323,10 +5290,12 @@ _M13_PORTABLE_ORACLE = f"""
 
 @query("m13_rarefaction_curve_portable", oracle=_M13_PORTABLE_ORACLE)
 def m13_rarefaction_curve_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M13 — rarefaction curve via hash-rank draws: the per-individual
-    ranking is depth-independent, so the oracle replays all three depths
-    from one ranked CTE. Full value-hash parity for the curve."""
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.stats import rarefaction_curve_hash
+    """M13 — rarefaction/accumulation curve (bin/OpfRarefaction.R:12-18):
+    per-sample richness at depths 50/200/500 via hash-rank draws. The
+    per-individual ranking is depth-independent, so the oracle replays
+    all three depths from one ranked CTE. Full value-hash parity for
+    the curve."""
+    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.stats import rarefaction_curve
 
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 50)
@@ -5338,37 +5307,11 @@ def m13_rarefaction_curve_portable(spark: SparkSession, sf_dir: str) -> DataFram
         )
         .agg(F.sum("l_quantity").cast("long").alias("count"))
     )
-    curve = rarefaction_curve_hash(ab, "sample", "item", "count", depths=[50, 200, 500], seed=42)
+    curve = rarefaction_curve(ab, "sample", "item", "count", depths=[50, 200, 500], seed=42)
     return curve.groupBy("depth").agg(
         F.count(F.lit(1)).alias("n_samples"),
         F.round(F.avg("richness"), 4).alias("mean_richness"),
     )
-
-
-def m4_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M4 — permutation test: does avg order value differ between two
-    mktsegments? (ANOSIM/permutest family, bin/CompareSkin.R:336-423).
-
-    Not registered: this computes the same statistic over the same
-    derivation as m4_permutation_portable — the two differ ONLY in the
-    hash family generating the null permutations (xxhash64 here, md5-60
-    there) — so the portable entry carries the registry row and the
-    family equivalence is pinned in pytest (tests/test_stats.py::
-    test_permutation_family_equivalence).  The builder stays
-    unregistered for tools/gen_fixture_oracles.py and the independent
-    xxhash-null replay (tests/test_fixture_independent.py), which keep
-    covering the xxhash64 family."""
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.stats import permutation_pvalue
-
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment").isin("BUILDING", "MACHINERY")
-    )
-    df = orders.join(
-        F.broadcast(cust.select("c_custkey", "c_mktsegment")),
-        orders.o_custkey == F.col("c_custkey"),
-    ).select(F.col("c_mktsegment").alias("grp"), F.col("o_totalprice").alias("val"))
-    return permutation_pvalue(df, "grp", "val", n_perm=199, seed=42)
 
 
 def _m4_portable_oracle(n_perm: int = 199, seed: int = 42) -> str:
@@ -5417,13 +5360,14 @@ def _m4_portable_oracle(n_perm: int = 199, seed: int = 42) -> str:
 
 @query("m4_permutation_portable", oracle=_m4_portable_oracle())
 def m4_permutation_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M4 — margin-preserving permutation test on integer order-value
-    cents with the portable md5 hash family: per permutation the n1
-    hash-lowest rows take group 1's observed size, and integral values
-    make every group sum exact, so per-permutation statistics are
-    bit-identical across engines and the oracle replays the full null
-    distribution, exceed count, and p-value with no tolerance."""
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.stats import permutation_pvalue_portable
+    """M4 — permutation test: does avg order value differ between two
+    mktsegments? (ANOSIM/permutest family, bin/CompareSkin.R:336-423).
+    Margin-preserving, on integer order-value cents: per permutation
+    the n1 hash-lowest rows take group 1's observed size, and integral
+    values make every group sum exact, so per-permutation statistics
+    are bit-identical across engines and the oracle replays the full
+    null distribution, exceed count, and p-value with no tolerance."""
+    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.stats import permutation_pvalue
 
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer").filter(
@@ -5436,7 +5380,7 @@ def m4_permutation_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_mktsegment").alias("grp"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("val_cents"),
     )
-    return permutation_pvalue_portable(df, "grp", "val_cents", n_perm=199, seed=42)
+    return permutation_pvalue(df, "grp", "val_cents", n_perm=199, seed=42)
 
 
 @query(

@@ -635,19 +635,19 @@ def test_mixture_weights_reshape_and_uniform(spark):
     assert all(abs(r.target_share - round(1 / 3, 6)) < 1e-9 for r in uni.values())
 
 
-def test_exact_k_sample_fallback_matches_main_path(spark):
+def test_exact_k_sample_fallback_matches_main_path(spark, monkeypatch):
     """Forcing margin=0 starves the candidate pool, so every stratum
     routes through the full-sort fallback — which must select exactly
     the same rows as the two-phase main path (exactness is
     unconditional, not probabilistic)."""
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators import corpus
+    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators import corpus, stats
 
     df = spark.range(0, 600).withColumnRenamed("id", "doc_id").withColumn(
         "lang", (F.col("doc_id") % 3).cast("string")
     )
     main = {r.doc_id for r in corpus.exact_k_sample(df, "lang", 12).collect()}
-    fb = {r.doc_id for r in corpus.exact_k_sample(
-        df, "lang", 12, _margin_override=0).collect()}
+    monkeypatch.setattr(stats, "_MARGIN", (0, 0, 0))
+    fb = {r.doc_id for r in corpus.exact_k_sample(df, "lang", 12).collect()}
     assert fb == main and len(main) == 36
 
 
@@ -668,25 +668,30 @@ def test_exact_k_sample_null_stratum_and_validation(spark):
         corpus.exact_k_sample(df, "lang", 0)
 
 
-def test_exact_k_sample_window_input_is_bounded_pool(spark):
+def test_exact_k_sample_window_input_is_bounded_pool(spark, monkeypatch):
     """Plan shape: the row_number window must rank the τ-filtered
     candidate pool, not the full stratum — the optimized plan has the
-    _h <= _tau filter below the Window, and the pool it admits is ~m
-    rows per stratum, far smaller than the stratum."""
+    _k <= _tau filter below the Window, and the pool it admits is ~m
+    rows per stratum, far smaller than the stratum.  localCheckpoint is
+    made transparent for the plan assertion: the shared selection
+    projects `_tau` away before checkpointing the pool (as
+    test_rarefy_hash_two_phase_filters_before_rank does for rarefy_hash)."""
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators import corpus
 
     df = spark.range(0, 20000).withColumnRenamed("id", "doc_id").withColumn(
         "lang", (F.col("doc_id") % 2).cast("string")
     )
-    out = corpus.exact_k_sample(df, "lang", 10)
+    with monkeypatch.context() as m:
+        m.setattr(type(df), "localCheckpoint", lambda self, eager=True: self)
+        out = corpus.exact_k_sample(df, "lang", 10)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "_tau" in plan and "row_number" in plan
-    # the main-path filter keeps ~(k + 10√k + 64) per stratum: with
-    # k=10 and n=10000 the pool is a few hundred rows, not 20000
+    # the main-path filter keeps ~(k + 6√k + 24) per stratum: with
+    # k=10 and n=10000 the pool is tens of rows, not 20000
     import math
 
     k = 10
-    m = int(k + 10 * math.sqrt(k)) + 64 + 1
+    m = k + math.ceil(6 * math.sqrt(k)) + 24
     pool_rows = df.withColumn(
         "_h", corpus.seeded_id_hash("doc_id", 42)
     ).filter(

@@ -150,14 +150,13 @@ def test_gk_betweenness_distributed_independent(con):
     assert set(top) == {tuple(r) for r in FX.GK_BETWEENNESS_DIST_SF001}
 
 
-def _abundance(con, where="TRUE"):
-    """(sample, item, count) table shared by the rarefaction entries."""
+def _abundance(con):
+    """(sample, item, count) table of the rarefaction entry."""
     return con.execute(
-        f"""
+        """
         SELECT 'C' || o_custkey AS sample, CAST(l_partkey AS VARCHAR) AS item,
                CAST(SUM(l_quantity) AS BIGINT) AS cnt
         FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        WHERE {where}
         GROUP BY 1, 2
         """
     ).fetchall()
@@ -181,79 +180,6 @@ def test_m1_rarefaction_independent(con):
         kept = I.rarefy_py(ic, depth, s)
         got.add((s, len(kept), sum(kept.values())))
     assert got == {tuple(r) for r in FX.M1_RAREFACTION_SF001}
-
-
-def test_m13_rarefaction_curve_independent(con):
-    """Rarefaction curve at depths 50/200/500 over o_custkey<50 samples;
-    per-depth (n_samples, mean_richness) must equal M13_CURVE_SF001."""
-    ab = _abundance(con, where="o_custkey < 50")
-    by_sample: dict[str, list[tuple[str, int]]] = {}
-    for s, i, c in ab:
-        by_sample.setdefault(s, []).append((i, int(c)))
-    got = set()
-    for depth in (50, 200, 500):
-        rich = []
-        for s, ic in by_sample.items():
-            if sum(c for _, c in ic) < depth:
-                continue
-            rich.append(len(I.rarefy_py(ic, depth, s)))
-        got.add(
-            (depth, len(rich), I.round_half_up(sum(rich) / len(rich), 4))
-        )
-    assert got == {tuple(r) for r in FX.M13_CURVE_SF001}
-
-
-def test_m4_permutation_test_independent(con):
-    """Margin-preserving permutation test replayed with the independent
-    XXH64: per permutation, rank pooled rows by xxhash64(rid, perm) and
-    label the n1 lowest as group 1.  p_value must match exactly (the
-    exceed count is integral); observed_diff within 1 ulp of the 6dp
-    rounding (float sum order differs from Spark's partition order)."""
-    rows = con.execute(
-        """
-        SELECT c_mktsegment AS g, o_totalprice AS v
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
-        """
-    ).fetchall()
-    g1 = "BUILDING"  # lexicographically first of the two
-    vals = np.array([v for _, v in rows], dtype=np.float64)
-    n1 = sum(1 for g, _ in rows if g == g1)
-    obs = vals[[g == g1 for g, _ in rows]].mean() - vals[
-        [g != g1 for g, _ in rows]
-    ].mean()
-
-    # rid = xxhash64(v double, tie_rank int, 42 int): tie ranks 1..k per
-    # distinct value (tied rows are exchangeable, any assignment yields
-    # the same rid multiset)
-    from collections import Counter
-
-    mult = Counter(float(v) for v in vals)
-    rids = []
-    rid_val = []
-    for v, k in mult.items():
-        for r in range(1, k + 1):
-            rid = I.spark_xxhash64(v, ("i4", r), ("i4", 42))
-            rids.append(rid)
-            rid_val.append(v)
-    rids = np.array(rids, dtype=np.int64)
-    rid_val = np.array(rid_val, dtype=np.float64)
-
-    n_perm, exceed = 199, 0
-    for p in range(1, n_perm + 1):
-        pk = np.array(
-            [I.spark_xxhash64(int(r), ("i4", p)) for r in rids], dtype=np.int64
-        )
-        order = np.lexsort((rids, pk))
-        in_g1 = np.zeros(len(rids), dtype=bool)
-        in_g1[order[:n1]] = True
-        diff = rid_val[in_g1].mean() - rid_val[~in_g1].mean()
-        if abs(diff) >= abs(obs):
-            exceed += 1
-    (e_obs, e_p, e_n) = FX.M4_PERMUTATION_SF001[0]
-    assert e_n == n_perm
-    assert math.isclose(e_obs, I.round_half_up(float(obs), 6), abs_tol=2e-6)
-    assert e_p == I.round_half_up((exceed + 1) / (n_perm + 1), 6)
 
 
 # --------------------------------------------------------------------------

@@ -1638,6 +1638,16 @@ def test_atomic_create_gate_refuses_unattested_s3(spark):
     with pytest.raises(RuntimeError, match="ATOMIC create-if-absent"):
         with GM.read_store(spark, "s3a://bucket/store"):
             raise AssertionError("must refuse before yielding")
+    # ...and the read-side entry points: the marker check, both stale
+    # sweeps and the stats snapshot refuse before touching the filesystem
+    with pytest.raises(RuntimeError, match="ATOMIC create-if-absent"):
+        GM.check_store_maintenance(spark, "s3a://bucket/store")
+    with pytest.raises(RuntimeError, match="ATOMIC create-if-absent"):
+        GM.sweep_stale_claims(spark, "s3a://bucket/store", max_age_s=3600)
+    with pytest.raises(RuntimeError, match="ATOMIC create-if-absent"):
+        SE.sweep_stale_log_claims(spark, "s3a://bucket/decisions", max_age_s=3600)
+    with pytest.raises(RuntimeError, match="ATOMIC create-if-absent"):
+        GM.store_stats(spark, "s3a://bucket/store")
 
     # the attestation unlocks the helper (conf is cleaned up after)
     hconf = spark._jsc.hadoopConfiguration()

@@ -105,12 +105,12 @@ def test_permutation_pvalue_null(spark):
 def test_permutation_portable_signal_and_null(spark):
     rows = [("a", v) for v in range(0, 20)] + [("b", v) for v in range(100, 120)]
     df = spark.createDataFrame(rows, "grp string, val long")
-    res = stats.permutation_pvalue_portable(df, "grp", "val", n_perm=199).collect()[0]
+    res = stats.permutation_pvalue(df, "grp", "val", n_perm=199).collect()[0]
     assert abs(res.observed_diff) == pytest.approx(100.0, abs=1e-6)
     assert res.p_value < 0.05
     null_rows = [("a", v % 10) for v in range(40)] + [("b", v % 10) for v in range(40)]
     ndf = spark.createDataFrame(null_rows, "grp string, val long")
-    nres = stats.permutation_pvalue_portable(ndf, "grp", "val", n_perm=199).collect()[0]
+    nres = stats.permutation_pvalue(ndf, "grp", "val", n_perm=199).collect()[0]
     assert nres.p_value > 0.2
 
 
@@ -150,7 +150,7 @@ def test_permutation_unbalanced_groups_null(spark):
     ldf = spark.createDataFrame(
         [(g, int(v)) for g, v in rows], "grp string, val long"
     )
-    lres = stats.permutation_pvalue_portable(ldf, "grp", "val", n_perm=199).collect()[0]
+    lres = stats.permutation_pvalue(ldf, "grp", "val", n_perm=199).collect()[0]
     assert lres.p_value > 0.2
 
 
@@ -200,237 +200,58 @@ def test_rarefy_hash_ignores_zero_count_rows(spark):
 def test_rarefaction_curve_rejects_empty_depths(spark):
     import pytest as _pytest
 
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.stats import (
-        rarefaction_curve,
-        rarefaction_curve_hash,
-    )
-
     df = spark.createDataFrame([("s", "i", 5)], "sample string, item string, count long")
-    for fn in (rarefaction_curve, rarefaction_curve_hash):
-        with _pytest.raises(ValueError, match="non-empty"):
-            fn(df, "sample", "item", "count", depths=[])
+    with _pytest.raises(ValueError, match="non-empty"):
+        stats.rarefaction_curve(df, "sample", "item", "count", depths=[])
 
 
-def test_permutation_family_equivalence(spark):
-    """Adjudication for the r08 retirement of the m4_permutation_test
-    registry entry: permutation_pvalue (xxhash64 family) and
-    permutation_pvalue_portable (md5-60 family) compute THE SAME
-    statistic over the same margin-preserving derivation — on integer
-    data they must agree exactly on observed_diff and n_perm, and on
-    the two inputs where the null distribution is determined regardless
-    of which uniform permutation family generated it (all-tied: every
-    permuted diff is 0, and fully-separated: no permuted diff reaches
-    the observed one), the p-values must be bit-identical too.  Only
-    the intermediate permutation draws may differ between families."""
-    import pytest as _pt
+def test_rarefaction_curve_richness_is_rarefy_hash_richness(spark):
+    """At every depth, the curve's per-sample richness is exactly the
+    richness of rarefy_hash at that depth (the curve reads all depths
+    off one ranked draw): same samples kept, same distinct-item counts,
+    and samples whose community is below the depth absent from both."""
+    rows = [(f"s{j}", f"i{v}", (v * 7 + j) % 9 + 1) for j in range(5) for v in range(3 + 4 * j)]
+    df = spark.createDataFrame(rows, "sample string, item string, count long")
+    depths = [5, 30, 60, 200]
+    curve = {}
+    for r in stats.rarefaction_curve(df, "sample", "item", "count", depths, seed=3).collect():
+        curve.setdefault(r.depth, {})[r["sample"]] = r.richness
+    for d in depths:
+        want = {r["sample"]: r.n for r in stats.rarefy_hash(df, "sample", "item", "count", d, seed=3)
+                .groupBy("sample").agg(F.count(F.lit(1)).alias("n")).collect()}
+        assert curve.get(d, {}) == want, d
+    assert curve[5] and 200 not in curve  # a kept depth and an all-dropped one
 
-    sep = [("a", v) for v in range(0, 20)] + [("b", v) for v in range(1000, 1020)]
-    tied = [("a", 5)] * 20 + [("b", 5)] * 20
-    for rows, exp_p in ((sep, 1.0 / 200.0), (tied, 1.0)):
-        df_d = spark.createDataFrame(
-            [(g, float(v)) for g, v in rows], "grp string, val double"
+
+def test_smallest_k_fallback_matches_main_path(spark, monkeypatch):
+    """A zero candidate margin starves every group's τ-filtered pool, so
+    rarefy_hash and exact_k_sample both select through the full-sort
+    fallback branch of the shared smallest-k selection — which must
+    keep exactly the main path's rows (the margin only buys speed).
+    NULL group keys are a group of their own on both paths."""
+    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators import corpus
+
+    ab = _abundance(spark).unionByName(spark.createDataFrame(
+        [(None, "a", 40), (None, "b", 2)], "sample string, item string, count long"))
+    docs = spark.range(0, 600).withColumnRenamed("id", "doc_id").withColumn(
+        "lang", F.when(F.col("doc_id") % 4 == 0, None).otherwise((F.col("doc_id") % 3).cast("string"))
+    )
+
+    def run():
+        return (
+            sorted(map(tuple, stats.rarefy_hash(ab, "sample", "item", "count", 30).collect()),
+                   key=repr),
+            sorted(r.doc_id for r in corpus.exact_k_sample(docs, "lang", 12).collect()),
         )
-        df_l = spark.createDataFrame(rows, "grp string, val long")
-        a = stats.permutation_pvalue(df_d, "grp", "val", n_perm=199, seed=42).collect()[0]
-        b = stats.permutation_pvalue_portable(df_l, "grp", "val", n_perm=199, seed=42).collect()[0]
-        assert a.observed_diff == b.observed_diff
-        assert a.n_perm == b.n_perm == 199
-        assert a.p_value == _pt.approx(exp_p, abs=1e-9)
-        assert b.p_value == _pt.approx(exp_p, abs=1e-9)
 
-
-def test_rarefaction_facade_routes_by_volume(spark):
-    """The auto-routing facade picks rarefy_hash below the per-core
-    explode budget and rarefy above it, and each route's output is
-    BIT-IDENTICAL to calling that route directly — route choice is
-    observable because the two draws use different RNG families."""
-    df = _abundance(spark)
-    via_hash = sorted(map(tuple, stats.rarefy_hash(df, "sample", "item", "count", 30).collect()))
-    via_arrow = sorted(map(tuple, stats.rarefy(df, "sample", "item", "count", 30).collect()))
-    assert via_hash != via_arrow  # distinguishable draws → route is observable
-
-    # Σ counts = 205 « budget → explode route
-    small = sorted(map(tuple, stats.rarefaction(df, "sample", "item", "count", 30).collect()))
-    assert small == via_hash
-    # budget forced to 0 per core → Arrow route
-    big = sorted(map(tuple, stats.rarefaction(
-        df, "sample", "item", "count", 30, explode_budget_per_core=0
-    ).collect()))
-    assert big == via_arrow
-
-
-def test_rarefaction_facade_hint_skips_the_counting_job(spark):
-    """`total_individuals` is trusted verbatim: a huge hint routes to
-    the Arrow path even though the actual Σ counts is tiny (and vice
-    versa), so callers that already know the volume pay zero extra
-    jobs and can pin a route."""
-    df = _abundance(spark)
-    via_arrow = sorted(map(tuple, stats.rarefy(df, "sample", "item", "count", 30).collect()))
-    hinted = sorted(map(tuple, stats.rarefaction(
-        df, "sample", "item", "count", 30, total_individuals=10**12
-    ).collect()))
-    assert hinted == via_arrow
-
-
-def test_rarefaction_facade_expression_depth_both_routes(spark):
-    """The "min(_t)" expression-depth form works on BOTH routes: the
-    facade translates it into a broadcast depth frame for the Arrow
-    route (which lacks the expression form natively).  min total here
-    is s3's 5, so every sample survives at depth 5."""
-    df = _abundance(spark)
-    for kw in ({}, {"explode_budget_per_core": 0}):
-        r = stats.rarefaction(df, "sample", "item", "count", "min(_t)", **kw)
-        sums = {x["sample"]: x["s"] for x in
-                r.groupBy("sample").agg(F.sum("count").alias("s")).collect()}
-        assert sums == {"s1": 5, "s2": 5, "s3": 5}
-
-
-def test_rarefaction_facade_single_scan_and_filtered_routing(spark):
-    """The r08 ADVICE item: when the facade must consume `df` more than
-    once (routing aggregate + route, or the `_t` depth translation), it
-    lazily localCheckpoints the frame FIRST, so a caller's expensive
-    upstream plan is scanned once — the returned plan must not
-    re-derive the upstream join.  And the routing aggregate + `_t`
-    totals apply the routes' count>0 filter, closing the
-    routing/depth asymmetry (zero/negative rows draw no individuals in
-    either route, so they must not steer route choice or depth)."""
-    df = _abundance(spark)
-    # an upstream plan with a join the facade must not re-run per consumer
-    dim = spark.createDataFrame(
-        [("s1",), ("s2",), ("s3",)], "sample string"
-    )
-    joined = df.join(dim, "sample")
-
-    # unhinted → routing aggregate + Arrow route: plan is checkpoint-fed
-    out = stats.rarefaction(joined, "sample", "item", "count", 5,
-                            explode_budget_per_core=0)
-    plan = out._jdf.queryExecution().explainString(
-        out._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "Join" not in plan, "facade re-derived the upstream join per consumer"
-    sums = {r["sample"]: r["s"] for r in
-            out.groupBy("sample").agg(F.sum("count").alias("s")).collect()}
-    assert sums == {"s1": 5, "s2": 5, "s3": 5}
-
-    # hinted + str depth on the Arrow route → the translation is the
-    # second consumer; same single-scan property
-    out2 = stats.rarefaction(joined, "sample", "item", "count", "min(_t)",
-                             total_individuals=10**12)
-    plan2 = out2._jdf.queryExecution().explainString(
-        out2._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    # the depth frame's broadcast crossJoin is part of the route; the
-    # UPSTREAM equi-join must not reappear (checkpoint-fed both times)
-    assert "BroadcastHashJoin" not in plan2 and "SortMergeJoin" not in plan2
-    sums2 = {r["sample"]: r["s"] for r in
-             out2.groupBy("sample").agg(F.sum("count").alias("s")).collect()}
-    assert sums2 == {"s1": 5, "s2": 5, "s3": 5}
-
-    # count<=0 rows must not steer the ROUTE: zeros and negatives are
-    # invisible to the routing sum, so the draw equals the clean
-    # frame's draw on the explode route (which filters them itself)
-    noisy = df.unionByName(spark.createDataFrame(
-        [("s1", "zzz", 0), ("s2", "yyy", -7)],
-        "sample string, item string, count long",
-    ))
-    clean = sorted(map(tuple, stats.rarefaction(
-        df, "sample", "item", "count", 5).collect()))
-    got = sorted(map(tuple, stats.rarefaction(
-        noisy, "sample", "item", "count", 5).collect()))
-    assert got == clean
-
-    # ...and not distort the `_t` totals behind an expression depth:
-    # with the negative row included s2's total would undercount and
-    # "min(_t)" would pick the wrong global depth
-    got_expr = sorted(map(tuple, stats.rarefaction(
-        noisy, "sample", "item", "count", "min(_t)").collect()))
-    clean_expr = sorted(map(tuple, stats.rarefaction(
-        df, "sample", "item", "count", "min(_t)").collect()))
-    assert got_expr == clean_expr
-
-
-def test_rarefaction_curve_family_equivalence(spark):
-    """Adjudication for the r09 retirement of the m13_rarefaction_curve
-    registry entry: rarefaction_curve (seeded-numpy draws via rarefy)
-    and rarefaction_curve_hash (md5 hash-rank draws) compute THE SAME
-    statistic — per-sample richness after an exact multivariate-
-    hypergeometric subsample to each depth, short samples dropped —
-    differing ONLY in the random draw family.  They must agree exactly
-    wherever the statistic is determined regardless of which uniform
-    draw realized it: (a) depth == community size keeps every
-    individual (richness = item count), (b) depth > community size
-    drops the sample, (c) a single-item community has richness 1 at
-    any feasible depth; and on a general frame the ELIGIBLE (sample,
-    depth) key set is draw-independent, as is the schema."""
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.stats import (
-        rarefaction_curve,
-        rarefaction_curve_hash,
-    )
-
-    det = spark.createDataFrame(
-        [
-            # s_full: total 10 → fully determined at depth 10, dropped at 12
-            ("s_full", "a", 4), ("s_full", "b", 5), ("s_full", "c", 1),
-            # s_one: single item, richness 1 at any depth <= 20
-            ("s_one", "x", 20),
-        ],
-        "sample string, item string, count long",
-    )
-    depths = [10, 12, 20]
-    a = {(r["sample"], r.depth): r.richness
-         for r in rarefaction_curve(det, "sample", "item", "count", depths).collect()}
-    b = {(r["sample"], r.depth): r.richness
-         for r in rarefaction_curve_hash(det, "sample", "item", "count", depths).collect()}
-    expected = {
-        ("s_full", 10): 3,           # every individual kept
-        ("s_one", 10): 1, ("s_one", 12): 1, ("s_one", 20): 1,
-    }                                # s_full dropped at 12 and 20
-    assert a == b == expected
-
-    gen = _abundance(spark)
-    ga = rarefaction_curve(gen, "sample", "item", "count", [5, 40]).collect()
-    gb = rarefaction_curve_hash(gen, "sample", "item", "count", [5, 40]).collect()
-    assert {(r["sample"], r.depth) for r in ga} == {(r["sample"], r.depth) for r in gb}
-    assert ga[0].asDict().keys() == gb[0].asDict().keys()
-    # only the intermediate draws may differ; richness stays in-bounds
-    n_items = {r["sample"]: r.n for r in
-               gen.groupBy("sample").agg(F.countDistinct("item").alias("n")).collect()}
-    for rows in (ga, gb):
-        for r in rows:
-            assert 1 <= r.richness <= n_items[r["sample"]]
-
-
-def test_rarefaction_facade_filters_routes_and_pins_one_copy(spark):
-    """Review fixes on the facade: (a) count<=0 rows are filtered out
-    of the frame handed to BOTH routes — previously a negative count
-    reached numpy's hypergeometric on the Arrow route and crashed the
-    task; (b) when the facade materializes the frame for routing, the
-    explode route recognizes the checkpointed input (_cheap_replay)
-    and skips its own internal checkpoint, so at most the facade copy
-    + the candidate pool are ever pinned — not a second full copy of
-    the abundance table."""
-    df = _abundance(spark)
-    noisy = df.unionByName(spark.createDataFrame(
-        [("s1", "zz", 0), ("s2", "neg", -7)],
-        "sample string, item string, count long",
-    ))
-    # Arrow route on the noisy frame: no crash, realization equals
-    # rarefy over the clean frame (the filter is the only difference)
-    got = sorted(map(tuple, stats.rarefaction(
-        noisy, "sample", "item", "count", 5, explode_budget_per_core=0
-    ).collect()))
-    want = sorted(map(tuple, stats.rarefy(df, "sample", "item", "count", 5).collect()))
-    assert got == want
-
-    # pinned-copy bound on the explode route (unhinted → facade
-    # checkpoint): materializing the result adds the facade frame + the
-    # candidate pool, NOT a third copy from rarefy_hash's internal
-    # checkpoint
-    jsc = spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
-    out = stats.rarefaction(df, "sample", "item", "count", 5)
-    assert out.count() > 0
-    assert jsc.getPersistentRDDs().size() - before <= 2
+    main = run()
+    monkeypatch.setattr(stats, "_MARGIN", (0, 0, 0))
+    assert run() == main
+    sums = {}
+    for s_, _, c in main[0]:
+        sums[s_] = sums.get(s_, 0) + c
+    assert sums == {"s1": 30, "s2": 30, None: 30}
+    assert len(main[1]) == 48  # 12 in each of three strata and the NULL one
 
 
 def test_rarefy_draw_matches_per_group_reference(spark):

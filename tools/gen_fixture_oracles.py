@@ -3,7 +3,7 @@ entries (deterministic non-SQL solvers).
 
 These queries are exact deterministic computations — CNM agglomeration
 with ordered tie-breaks, numpy dense solves, pandas Brandes, seeded
-hypergeometric draws, hash-keyed permutations — but their algorithms
+hypergeometric draws — but their algorithms
 are not SQL-expressible, so their DuckDB oracles are literal expected
 tables (the technique ss_srp_lsh_topk uses for its literal
 hyperplanes), compared at sf0.01 by tests/test_entry_sweep.py.  The
@@ -31,14 +31,16 @@ Usage: python tools/gen_fixture_oracles.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-OUT = "/root/repo/hannigan_conjunctisviribus_ploscompbio_2017_spark/oracle_fixtures.py"
+OUT = os.path.join(ROOT, "hannigan_conjunctisviribus_ploscompbio_2017_spark", "oracle_fixtures.py")
 
 # (query name, python variable) — schemas live at the @query site
 FIXTURES = [
@@ -48,19 +50,6 @@ FIXTURES = [
     ("gk_betweenness_distributed", "GK_BETWEENNESS_DIST_SF001"),
     ("gk_betweenness_stratified", "GK_BETWEENNESS_STRAT_SF001"),
     ("m1_rarefaction", "M1_RAREFACTION_SF001"),
-    # m4_permutation_test's REGISTRY entry was retired r08 (contained in
-    # m4_permutation_portable's oracle-bearing entry; family equivalence
-    # pinned in test_stats.py) — the fixture stays frozen because
-    # tests/test_fixture_independent.py replays the xxhash64 null
-    # against it; the builder resolves via the module fallback below.
-    ("m4_permutation_test", "M4_PERMUTATION_SF001"),
-    # m13_rarefaction_curve's REGISTRY entry was retired r09 (same
-    # statistic and derivation as m13_rarefaction_curve_portable, which
-    # keeps the oracle-bearing entry; draw-family equivalence pinned in
-    # test_stats.py) — the fixture stays frozen because
-    # tests/test_fixture_independent.py replays the numpy
-    # hypergeometric draw against it; builder via the module fallback.
-    ("m13_rarefaction_curve", "M13_CURVE_SF001"),
     ("pipeline_interpersonal_diversity", "PIPE_INTERPERSONAL_SF001"),
     ("pipeline_compare_skin", "PIPE_COMPARE_SKIN_SF001"),
     ("pipeline_altered_diet", "PIPE_ALTERED_DIET_SF001"),
@@ -100,17 +89,13 @@ def lit(v):
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark import queries_testdata as Q
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.queries_testdata import QUERIES
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.session import get_spark
 
     spark = get_spark("gen-fixture-oracles")
     blocks = [HEADER]
     for name, var in FIXTURES:
-        # registered entries first; retired-entry builders (kept as plain
-        # module functions for their independent fixture tests) fall back
-        # to module attribute lookup
-        fn = QUERIES.get(name) or getattr(Q, name)
+        fn = QUERIES[name]
         cols = None
         runs = []
         for _ in range(2):

@@ -21,11 +21,13 @@ Usage: python tools/gen_ml_probs.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-OUT = "/root/repo/tests/ml_frozen.py"
+OUT = os.path.join(ROOT, "tests", "ml_frozen.py")
 
 HEADER = '''"""Frozen per-row predicted probabilities + evaluate() metrics for the
 driver ML model fit (the ml_rf_interactions / ml_roc_points model) —
@@ -124,7 +126,7 @@ def compute(spark, sf_dir):
     evaluator = BinaryClassificationEvaluator(
         labelCol="label", rawPredictionCol="rawPrediction", metricName="areaUnderROC"
     )
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, os.path.join(ROOT, "tests"))
     from independent_impl import auc_trapezoid_py
 
     nested_rows = []
