@@ -5,6 +5,16 @@ JSON line:
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q1": sec, ...}, "sf": ...}
 
+Usage: python bench.py [name ...]
+  name: bench labels (q12) or registry names (dd_ingest_dedup); only those
+        are timed, same JSON shape, no extras.  Default: the full headline
+        suite plus the extras.
+
+This file holds the one in-process timer of bench.py and tools/:
+`min_of` (per-key min over interleaved passes).  The calibration probes,
+the headline rounds, the extras and tools/scale_check.py's probes all
+time through it.
+
 The headline set covers every operator family: TPC-H-style aggregation,
 the flagship 7-way graph join, the feature-merge edge build, the 2-hop
 closure self-join, Bray-Curtis pairwise stats, entropy aggregation,
@@ -25,6 +35,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.queries_testdata import QUERIES
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.session import get_spark
+
+# The data dir every tool reads; the extras run at its sf0.01 sibling.
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+EXTRAS_SF_DIR = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.01")
 
 # Label -> query-name map. FROZEN HISTORY: once a label has appeared in a
 # recorded BENCH_r{N}.json it must keep its query name forever — append new
@@ -109,19 +123,31 @@ MAX_ROUNDS = 3
 CALIB_SLEEP_SEC = 45.0
 
 
+def min_of(n: int, fns: dict, results: dict | None = None) -> dict:
+    """Per-key minimum wall seconds over `n` interleaved passes, a pass
+    calling every fn of `fns` once in order; each fn's last return value
+    goes into `results` when given.  Interleaving decorrelates co-tenant
+    bursts from keys: a burst poisons at most one sample of each."""
+    best: dict = {}
+    for _ in range(n):
+        for key, fn in fns.items():
+            t0 = time.time()
+            out = fn()
+            best[key] = min(best.get(key, float("inf")), time.time() - t0)
+            if results is not None:
+                results[key] = out
+    return best
+
+
 def calibration_sec(spark) -> float:
     """Min-of-3 timing of a fixed 200M-row arithmetic aggregation across
     32 fixed slices — pure whole-stage-codegen CPU, immune to parquet
     cache state.  Caller must have warmed it once (first execution pays
     codegen compilation)."""
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.time()
-        spark.range(0, 200_000_000, 1, 32).selectExpr(
-            "sum(id % 7 + id * 3)"
-        ).collect()
-        best = min(best, time.time() - t0)
-    return round(best, 3)
+    def q():
+        spark.range(0, 200_000_000, 1, 32).selectExpr("sum(id % 7 + id * 3)").collect()
+
+    return round(min_of(3, {"cpu": q})["cpu"], 3)
 
 
 def calibration_io_sec(spark, sf_dir: str) -> float:
@@ -137,25 +163,44 @@ def calibration_io_sec(spark, sf_dir: str) -> float:
     round's total by its io_after sample (total_norm = total x
     io_ref/io_round — the table lives in COVERAGE.md), and any claimed
     CODE-level regression or improvement must additionally be gated by
-    an interleaved same-session A/B of the two trees (best-of-3 per
-    variant), never by two raw totals from different windows."""
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.time()
+    an interleaved same-window A/B of the two trees
+    (tools/bench_replay.py), never by two raw totals from different
+    windows."""
+    def q():
         spark.read.parquet(f"{sf_dir}/lineitem.parquet").selectExpr(
             "sum(l_quantity)", "count(distinct l_partkey)"
         ).collect()
-        best = min(best, time.time() - t0)
-    return round(best, 3)
+
+    return round(min_of(3, {"io": q})["io"], 3)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def suite(names: list[str]) -> list[tuple[str, str]]:
+    """(label, registry name) pairs to time: HEADLINE, or the named bench
+    labels / registry names (a headline query keeps its label)."""
+    if not names:
+        return HEADLINE
+    by_label = dict(HEADLINE)
+    label_of = {n: lab for lab, n in HEADLINE}
+    unknown = [n for n in names if n not in by_label and n not in QUERIES]
+    if unknown:
+        sys.exit(f"bench: unknown labels or query names: {', '.join(unknown)}")
+    return [
+        (n, by_label[n]) if n in by_label else (label_of.get(n, n), n)
+        for n in names
+    ]
+
+
+def main(names: list[str]) -> None:
+    sf_dir = SF_DIR
     try:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     except ValueError:
         sf = -1.0
+    timed = suite(names)
     spark = get_spark("bench")
+
+    def run(name: str, at: str = sf_dir):
+        return lambda: QUERIES[name](spark, at).count()
 
     # warm the JVM + parquet footers once so timings measure the queries
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
@@ -166,23 +211,22 @@ def main() -> None:
     # swing individual queries 2-4x run-to-run. Warm each query once, then
     # measure the second execution — that's the per-query cost a cluster
     # actually pays when the query runs repeatedly.
-    for _, name in HEADLINE:
-        QUERIES[name](spark, sf_dir).count()
+    for _, name in timed:
+        run(name)()
 
     # warm both calibration queries' codegen before any timed use
     calibration_sec(spark)
     calibration_io_sec(spark, sf_dir)
 
-    # Best-of-3 INTERLEAVED passes: run the whole headline suite three
-    # full times and take each query's min ACROSS passes.  Timing one
+    # Best-of-3 INTERLEAVED passes: run the whole suite three full times
+    # and take each query's min ACROSS passes (min_of).  Timing one
     # query's three runs consecutively correlates all three samples with
     # whatever co-tenant burst is active at that moment — the r03 record
     # showed exactly that signature (q2-q5 spiked 2.7-4x while their
     # neighbors improved; idle re-runs reproduced r02-level numbers).
-    # Interleaving decorrelates bursts from queries: a burst now poisons
-    # at most one of each query's three samples.  Each measurement round
-    # is bracketed by the calibration sentinel; a dirty round re-runs
-    # (mins merge across rounds, so re-runs only tighten).
+    # Each measurement round is bracketed by the calibration sentinel; a
+    # dirty round re-runs (mins merge across rounds, so re-runs only
+    # tighten).
     best: dict[str, float] = {}
     rows_seen: dict[str, int] = {}
     calib_samples: list[dict] = []
@@ -207,14 +251,9 @@ def main() -> None:
             )
             time.sleep(CALIB_SLEEP_SEC)
             continue
-        for pass_i in range(3):
-            for label, name in HEADLINE:
-                t0 = time.time()
-                rows_seen[label] = QUERIES[name](spark, sf_dir).count()
-                dt = time.time() - t0
-                if dt < best.get(label, float("inf")):
-                    best[label] = dt
-            print(f"# pass {pass_i + 1}/3 done", file=sys.stderr)
+        passes = min_of(3, {label: run(name) for label, name in timed}, rows_seen)
+        for label, dt in passes.items():
+            best[label] = min(best.get(label, float("inf")), dt)
         calib_after = calibration_sec(spark)
         calib_samples.append(
             {
@@ -244,24 +283,19 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     total = 0.0
-    for label, name in HEADLINE:
+    for label, name in timed:
         dt = round(best[label], 3)
         timings[label] = dt
         total += dt
         print(f"# {label} {name}: {rows_seen[label]} rows in {dt}s", file=sys.stderr)
 
-    # Extras (not in the headline total): the two betweenness regimes at
-    # a FIXED sf0.01, documenting the r01-verdict watch item — the exact
-    # Brandes path vs the pivot-sampled distributed path with the
-    # small-graph fast-path default (was 189s before the fast path).
-    # Same interleaving rationale: two full passes over the pair.
-    EXTRAS = ("gk_betweenness", "gk_betweenness_distributed")
-    extras: dict[str, float] = {}
-    for _ in range(2):
-        for name in EXTRAS:
-            t0 = time.time()
-            QUERIES[name](spark, "/root/testdata/sf0.01").count()
-            extras[name] = min(extras.get(name, float("inf")), time.time() - t0)
+    # Extras (full run only, not in the headline total): the two
+    # betweenness regimes at the FIXED sf0.01 sibling of the data dir,
+    # documenting the r01-verdict watch item — the exact Brandes path vs
+    # the pivot-sampled distributed path with the small-graph fast-path
+    # default (was 189s before the fast path).  Two interleaved passes.
+    EXTRAS = () if names else ("gk_betweenness", "gk_betweenness_distributed")
+    extras = min_of(2, {n: run(n, EXTRAS_SF_DIR) for n in EXTRAS})
     for name in EXTRAS:
         extras[name] = round(extras[name], 3)
         print(f"# extra {name}: {extras[name]}s at sf0.01", file=sys.stderr)
@@ -273,7 +307,7 @@ def main() -> None:
                 "value": round(total, 3),
                 "unit": "sec",
                 "queries": timings,
-                "query_names": dict(HEADLINE),
+                "query_names": dict(timed),
                 "extras_sf001": extras,
                 "sf": sf,
                 "calibration": {
@@ -287,4 +321,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

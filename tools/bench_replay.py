@@ -1,198 +1,182 @@
-"""Same-window bench replay: the honest cross-round perf artifact.
+"""Same-window A/B runner: the one tool that runs a command in a
+subprocess and parses its last JSON line.
 
-This box's wall clock drifts 1.1-1.8x hour-to-hour in an I/O/scheduling
-class the bench's pure-CPU calibration cannot see (the r09 episode), so
-two raw BENCH_r{N}.json totals from different rounds — therefore
-different windows — do not support any code-level perf claim.  Rounds
-r09-r11 adjudicated this with ad-hoc interleaved A/Bs written up in
-COVERAGE.md prose; the r11 verdict (nit #2 / ask #4) asked for the
-replay to be a MACHINE-READABLE artifact committed next to the drifted
-raw series.  This tool is that:
+    python tools/bench_replay.py [--pairs N] SIDE SIDE [SIDE ...] [-- COMMAND ...]
 
-    python tools/bench_replay.py <baseline_ref> <round> [n_interleaves]
+COMMAND (default `python3 bench.py`) runs in full once per side per
+pair, all in one window; every other pair runs the sides in reverse
+order, so neither side always runs first.  A SIDE is a checkout plus
+optional environment assignments, comma-separated:
 
-checks the baseline ref out into a cached git worktree
-(/tmp/sg_replay_<sha>), then alternates FULL bench.py runs between the
-current tree and the baseline tree in one session window —
-current, baseline, current, baseline (n_interleaves of each; default 2)
-— and writes BENCH_REPLAY_r{round}.json at the repo root:
+    .                           the working tree
+    99764b8                     a git ref, extracted once (git archive)
+                                into the git-ignored .scratch/replay/<sha>
+    .,SPARK_GRAFT_CPUS=2        the working tree with SPARK_GRAFT_CPUS=2
 
-    {"round": ..., "current_commit": ..., "baseline_commit": ...,
-     "runs": [{"tree": ..., "total": ..., "io_before/io_after": ...}],
-     "current":  {"total_min": ..., "total_best_sum": ..., "queries": ...},
-     "baseline": {...},
-     "ratio_min_totals": current.total_min / baseline.total_min,
-     "per_query_ratio_worst": ...}
+Examples:
+    # parent vs this tree on the benchmark workload
+    python tools/bench_replay.py --pairs 5 HEAD~1 . -- \\
+        python3 perfbench/run.py --workload diversity_analysis --seed 101 --seconds 15
+    # an env-flag A/B, a core sweep, a data-dir pair
+    python tools/bench_replay.py .,SPARK_GRAFT_AQE_COALESCE=false .,SPARK_GRAFT_AQE_COALESCE=true -- python3 bench.py q5 q14
+    python tools/bench_replay.py .,SPARK_GRAFT_CPUS=1 .,SPARK_GRAFT_CPUS=2 .,SPARK_GRAFT_CPUS=4
 
-`total_min` is the best full-run total per tree (the judge's best-of-N
-method); `total_best_sum` sums each query's min across that tree's runs
-(tighter — a co-tenant burst poisons at most one run's sample of each
-query).  The headline ratio uses total_min.  Each run's io_before /
-io_after calibration samples are carried so a reader can confirm both
-trees saw the same window; interleaving is what makes the RATIO
-trustworthy even when the window itself is dirty.
+Sides are labelled A, B, ...  The per-pair table has one row per numeric
+field of the last line (nested keys dotted: bench.py's `value` and
+`queries.q1`, perfbench's `metrics.run_s`), one column per run, the
+median per side and each side's median over A's.  The JSON record is the
+last line of stdout.
 
-Every run is a separate subprocess in its own tree, so each tree's own
-bench.py and engine code run unmixed; the parquet inputs and
-$SPARK_GRAFT_SF_DIR are shared.
+A run mixing the working tree with a git ref refuses an uncommitted tree,
+since the record names HEAD's commit for it; SG_REPLAY_ALLOW_DIRTY=1
+runs it anyway and the record carries "dirty": true.
 """
 
 from __future__ import annotations
 
+import argparse
+import io
 import json
 import os
+import statistics
 import subprocess
 import sys
+import tarfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _sha(ref: str) -> str:
+def _git(repo: str, *args: str) -> str:
     return subprocess.run(
-        ["git", "-C", REPO, "rev-parse", ref],
-        check=True,
-        capture_output=True,
-        text=True,
+        ["git", "-C", repo, *args], check=True, capture_output=True, text=True
     ).stdout.strip()
 
 
-def _ensure_worktree(sha: str) -> str:
-    path = f"/tmp/sg_replay_{sha[:12]}"
+def _checkout(repo: str, sha: str) -> str:
+    """The cached extraction of commit `sha` under .scratch/replay/."""
+    path = os.path.join(repo, ".scratch", "replay", sha[:12])
     if not os.path.isdir(path):
-        subprocess.run(
-            ["git", "-C", REPO, "worktree", "add", "--detach", path, sha],
-            check=True,
-        )
+        tar = subprocess.run(
+            ["git", "-C", repo, "archive", sha], check=True, capture_output=True
+        ).stdout
+        with tarfile.open(fileobj=io.BytesIO(tar)) as t:
+            t.extractall(path + ".part", filter="data")
+        os.rename(path + ".part", path)
     return path
 
 
-def _run_bench(tree: str) -> dict:
-    """One full bench.py run in `tree`; returns its JSON record plus the
-    flattened io/calibration samples this artifact carries."""
-    proc = subprocess.run(
-        [sys.executable, "bench.py"],
-        cwd=tree,
-        capture_output=True,
-        text=True,
-    )
-    if proc.returncode != 0:
-        raise RuntimeError(
-            f"bench.py failed in {tree} (exit {proc.returncode}):\n"
-            f"{proc.stderr[-2000:]}"
-        )
-    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
-    if not lines:
-        raise RuntimeError(
-            f"bench.py in {tree} exited 0 but printed no JSON line; "
-            f"stdout tail:\n{proc.stdout[-2000:]}\n"
-            f"stderr tail:\n{proc.stderr[-1000:]}"
-        )
-    rec = json.loads(lines[-1])
-    samples = rec.get("calibration", {}).get("samples", [])
-    last = samples[-1] if samples else {}
-    return {
-        "total": rec["value"],
-        "queries": rec["queries"],
-        "io_before": last.get("io_before"),
-        "io_after": last.get("io_after"),
-        "calib_before": last.get("before"),
-        "calib_after": last.get("after"),
-        "contaminated": rec.get("calibration", {}).get("contaminated"),
-    }
-
-
-def _tree_summary(runs: list[dict]) -> dict:
-    labels = runs[0]["queries"].keys()
-    best_q = {
-        lab: round(min(r["queries"][lab] for r in runs), 3) for lab in labels
-    }
-    return {
-        "total_min": round(min(r["total"] for r in runs), 3),
-        "total_best_sum": round(sum(best_q.values()), 3),
-        "queries": best_q,
-    }
-
-
-def main() -> None:
-    if len(sys.argv) < 3:
-        sys.exit("usage: bench_replay.py <baseline_ref> <round> [n_interleaves]")
-    baseline_ref, round_n = sys.argv[1], int(sys.argv[2])
-    n = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    cur_sha = _sha("HEAD")
-    # the artifact attributes the current tree's numbers to a commit
-    # SHA, so a dirty working tree would be silently mislabeled —
-    # refuse (SG_REPLAY_ALLOW_DIRTY=1 overrides; the artifact then
-    # carries current_tree_dirty: true so the mislabel is at least
-    # visible)
-    dirty = bool(
-        subprocess.run(
-            ["git", "-C", REPO, "status", "--porcelain"],
-            check=True,
-            capture_output=True,
-            text=True,
-        ).stdout.strip()
-    )
-    if dirty and os.environ.get("SG_REPLAY_ALLOW_DIRTY") != "1":
+def sides(specs: list[str], repo: str = REPO) -> tuple[list[dict], bool]:
+    """Resolve side specs to {spec, checkout, commit, env}; also returns
+    whether the working tree is dirty."""
+    head = _git(repo, "rev-parse", "HEAD")
+    dirty = bool(_git(repo, "status", "--porcelain"))
+    out = []
+    for spec in specs:
+        ref, *assigns = spec.split(",")
+        env = dict(a.split("=", 1) for a in assigns)
+        local = ref in ("", ".")
+        sha = head if local else _git(repo, "rev-parse", "--verify", f"{ref}^{{commit}}")
+        out.append({"spec": spec, "checkout": repo if local else None,
+                    "commit": sha, "env": env})
+    mixed = len({s["checkout"] is None for s in out}) > 1
+    if dirty and mixed and os.environ.get("SG_REPLAY_ALLOW_DIRTY") != "1":
         sys.exit(
-            "bench_replay: working tree has uncommitted changes — the "
-            "artifact would attribute them to HEAD's SHA. Commit first, "
-            "or set SG_REPLAY_ALLOW_DIRTY=1 to record anyway (the "
-            "artifact then carries current_tree_dirty: true)"
+            "bench_replay: the working tree has uncommitted changes and is "
+            "compared with a git ref, so the record would name HEAD's commit "
+            "for them. Commit first, or set SG_REPLAY_ALLOW_DIRTY=1."
         )
-    base_sha = _sha(baseline_ref)
-    base_tree = _ensure_worktree(base_sha)
+    for s in out:
+        s["checkout"] = s["checkout"] or _checkout(repo, s["commit"])
+    return out, dirty
 
-    runs: list[dict] = []
-    for i in range(n):
-        for tree_name, tree in (("current", REPO), ("baseline", base_tree)):
-            print(
-                f"# interleave {i + 1}/{n}: {tree_name} ({tree})",
-                file=sys.stderr,
-            )
-            rec = _run_bench(tree)
-            rec["tree"] = tree_name
-            runs.append(rec)
-            print(
-                f"#   total {rec['total']}s  io {rec['io_before']}/"
-                f"{rec['io_after']}  contaminated={rec['contaminated']}",
-                file=sys.stderr,
-            )
 
-    cur = _tree_summary([r for r in runs if r["tree"] == "current"])
-    base = _tree_summary([r for r in runs if r["tree"] == "baseline"])
-    shared = set(cur["queries"]) & set(base["queries"])
-    worst_lab = max(
-        shared, key=lambda lab: cur["queries"][lab] / base["queries"][lab]
-    )
-    out = {
-        "round": round_n,
-        "current_commit": cur_sha,
-        "current_tree_dirty": dirty,
-        "baseline_commit": base_sha,
-        "baseline_ref": baseline_ref,
-        "sf_dir": os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-        "n_interleaves": n,
+def numeric_fields(rec: dict, prefix: str = "") -> dict:
+    """The int/float leaves of a JSON object, nested keys dotted."""
+    out = {}
+    for k, v in rec.items():
+        if isinstance(v, dict):
+            out.update(numeric_fields(v, f"{prefix}{k}."))
+        elif isinstance(v, (int, float)) and not isinstance(v, bool):
+            out[f"{prefix}{k}"] = v
+    return out
+
+
+def _last_json(cmd: list[str], cwd: str, env: dict) -> dict:
+    proc = subprocess.run(cmd, cwd=cwd, env={**os.environ, **env},
+                          stdout=subprocess.PIPE, text=True)
+    lines = proc.stdout.strip().splitlines()
+    if proc.returncode or not lines or not lines[-1].startswith("{"):
+        raise RuntimeError(
+            f"{' '.join(cmd)} in {cwd} with {env} exited {proc.returncode}; "
+            f"last stdout line: {lines[-1:]}"
+        )
+    return json.loads(lines[-1])
+
+
+def replay(specs: list[str], cmd: list[str], pairs: int, repo: str = REPO) -> dict:
+    """Run `cmd` once per side per pair, reversing the side order on
+    every other pair; returns the record."""
+    resolved, dirty = sides(specs, repo)
+    labels = [chr(ord("A") + i) for i in range(len(resolved))]
+    runs = []
+    for p in range(pairs):
+        order = range(len(resolved)) if p % 2 == 0 else reversed(range(len(resolved)))
+        for i in order:
+            side = resolved[i]
+            print(f"# pair {p + 1}/{pairs}: {labels[i]} = {side['spec']}", file=sys.stderr)
+            fields = numeric_fields(_last_json(cmd, side["checkout"], side["env"]))
+            runs.append({"pair": p + 1, "side": labels[i], "fields": fields})
+    median = {}
+    for lab in labels:
+        mine = [r["fields"] for r in runs if r["side"] == lab]
+        keys = dict.fromkeys(f for m in mine for f in m)
+        median[lab] = {f: statistics.median(m[f] for m in mine if f in m) for f in keys}
+    return {
+        "command": cmd,
+        "pairs": pairs,
+        "dirty": dirty,
+        "sides": dict(zip(labels, resolved)),
         "runs": runs,
-        "current": cur,
-        "baseline": base,
-        "ratio_min_totals": round(cur["total_min"] / base["total_min"], 3),
-        "per_query_ratio_worst": {
-            "label": worst_lab,
-            "ratio": round(
-                cur["queries"][worst_lab] / base["queries"][worst_lab], 3
-            ),
-        },
+        "median": median,
     }
-    path = os.path.join(REPO, f"BENCH_REPLAY_r{round_n}.json")
-    with open(path, "w") as f:
-        json.dump(out, f, indent=1)
-        f.write("\n")
-    print(json.dumps({k: out[k] for k in (
-        "round", "ratio_min_totals", "per_query_ratio_worst",
-        "current_commit", "baseline_commit",
-    )}))
-    print(f"# wrote {path}", file=sys.stderr)
+
+
+def table(rec: dict) -> str:
+    """Per-pair values, per-side medians and median ratios over side A."""
+    labels = list(rec["sides"])
+    runs = rec["runs"]
+    cols = [f"p{r['pair']}{r['side']}" for r in runs]
+    cols += [f"med{lab}" for lab in labels]
+    cols += [f"{lab}/A" for lab in labels[1:]]
+    fields = dict.fromkeys(f for r in runs for f in r["fields"])
+    width = max(len(f) for f in fields)
+    lines = [f"# {lab} = {s['spec']} ({s['commit'][:12]})" for lab, s in rec["sides"].items()]
+    lines.append(f"{'field':{width}s} " + " ".join(f"{c:>10s}" for c in cols))
+
+    def cell(v) -> str:
+        return f"{v:10.4g}" if v is not None else f"{'-':>10s}"
+
+    for f in fields:
+        med = [rec["median"][lab].get(f) for lab in labels]
+        vals = [r["fields"].get(f) for r in runs] + med
+        vals += [m / med[0] if m is not None and med[0] else None for m in med[1:]]
+        lines.append(f"{f:{width}s} " + " ".join(cell(v) for v in vals))
+    return "\n".join(lines)
+
+
+def main(argv: list[str]) -> None:
+    cut = argv.index("--") if "--" in argv else len(argv)
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--pairs", type=int, default=2)
+    ap.add_argument("side", nargs="+")
+    args = ap.parse_args(argv[:cut])
+    if len(args.side) < 2:
+        ap.error("give at least two sides")
+    cmd = argv[cut + 1:] or ["python3", "bench.py"]
+    rec = replay(args.side, cmd, args.pairs)
+    print(table(rec))
+    print(json.dumps(rec))
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

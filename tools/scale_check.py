@@ -1,36 +1,67 @@
-"""Scale validation: replicate sf0.1 K times with disjoint key spaces,
-run the headline bench queries on both, and report per-query scaling
-factors.
+"""Scale validation: replicate the data dir ($SPARK_GRAFT_SF_DIR, default
+sf0.1) K times with disjoint key spaces, run bench.py on both in one
+window (tools/bench_replay.py, sides SPARK_GRAFT_SF_DIR=base and =scaled),
+and report per-query scaling factors.
 
 A query whose wall-clock grows faster than data (factor >> K) has a
 scale bug — e.g. a fact table sliding under the broadcast threshold, a
 driver-side collect, or an output-quadratic join. This caught the
 64 MB-threshold orders-broadcast regression (factor ~10x at K=8).
 
-Usage: python tools/scale_check.py [K]   (default 8; writes the scaled
-dataset to .scratch/sfX once and reuses it)
+Usage: python tools/scale_check.py [K] [name ...]
+  K:     replication factor (default 8); the scaled dataset is written
+         once to .scratch/<data dir name>x<K> (e.g. .scratch/sf0.1x8) and
+         reused
+  name:  bench labels (q12) or registry names (dd_ingest_dedup) to time;
+         default every headline query
 
-Subset mode (r05 verdict ask #4 — probe the next scale decade):
-    python tools/scale_check.py 64 --subset [name ...]
-times only the named queries (bench labels like q12 or raw registry
-names like dd_ingest_dedup) in-process with interleaved best-of-2
-passes, base vs K-replicated, and reports per-query factors.  Default
-subset: the corpus/ANN paths whose sublinearity claims matter most at
-scale (q8 LSH, q12 rarefaction, q17-q20 ANN tiers, q21 TF-IDF,
-dd_ingest_dedup store maintenance).
+Probes (one JSON line each):
+  --betweenness              pivot-Brandes base vs K-replicated
+  --compaction[-versioned|-semantic|-banded] [N]
+                             gate time on a store fragmented by N
+                             appends (default 64), then compacted
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
+import shutil
 import sys
-import time
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-SRC = "/root/testdata/sf0.1"
+from pyspark.sql import functions as F  # noqa: E402
+
+from bench import HEADLINE, SF_DIR, min_of  # noqa: E402
+from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators import kernels  # noqa: E402
+from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.dedup import (  # noqa: E402
+    fingerprint_store,
+    ingest_dedup,
+    minhash_ingest_dedup,
+    minhash_store,
+    portable_token_hash,
+)
+from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.gate_maintenance import (  # noqa: E402
+    compact_store,
+    convert_store_to_versioned,
+    derive_minhash_partition,
+    resolve_store,
+)
+from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.similarity import (  # noqa: E402
+    sampled_centroids,
+    semantic_ingest_dedup,
+    semantic_store,
+)
+from hannigan_conjunctisviribus_ploscompbio_2017_spark.plans.testdata_graph import (  # noqa: E402
+    infects_edges,
+)
+from hannigan_conjunctisviribus_ploscompbio_2017_spark.session import get_spark  # noqa: E402
+from tools.bench_replay import replay  # noqa: E402
+
+SRC = os.path.abspath(SF_DIR)
 BIG = 10_000_000
 SHIFTS = {
     "lineitem": ["l_orderkey", "l_partkey", "l_suppkey"],
@@ -44,10 +75,6 @@ COPY = ["region", "nation"]
 
 
 def build(dst: str, k: int) -> None:
-    from pyspark.sql import functions as F
-
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.session import get_spark
-
     spark = get_spark("scale-build")
     for t, shifts in SHIFTS.items():
         src = spark.read.parquet(f"{SRC}/{t}.parquet")
@@ -88,54 +115,6 @@ def build(dst: str, k: int) -> None:
     spark.stop()
 
 
-def bench(sf_dir: str) -> dict:
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
-    out = subprocess.run(
-        [sys.executable, "bench.py"],
-        env=env,
-        capture_output=True,
-        text=True,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        check=True,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
-
-
-# The corpus/ANN paths whose sublinearity claims matter most at scale,
-# plus (r07) the three batch admission gates — near-flat by design —
-# and the hypergeometric rarefaction route (m1_rarefaction, the
-# at-scale default measured against the explode-based q12 twin).
-SUBSET_DEFAULT = [
-    "q8", "q12", "q17", "q18", "q19", "q20", "q21", "q22",
-    "dd_ingest_dedup", "dd_minhash_ingest", "m1_rarefaction",
-]
-
-
-def bench_subset(sf_dir: str, names: list[str]) -> dict:
-    """In-process timing of a named query subset at sf_dir: warm each
-    query once (codegen/broadcast spin-up), then two interleaved passes,
-    per-query min.  Accepts bench labels (q12) or registry names."""
-    from bench import HEADLINE
-
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.queries_testdata import QUERIES
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.session import get_spark
-
-    label_map = dict(HEADLINE)
-    resolved = [(n, label_map.get(n, n)) for n in names]
-    spark = get_spark("scale-subset")
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    for _lbl, qname in resolved:
-        QUERIES[qname](spark, sf_dir).count()
-    best: dict[str, float] = {}
-    for _ in range(2):
-        for lbl, qname in resolved:
-            t0 = time.time()
-            QUERIES[qname](spark, sf_dir).count()
-            best[lbl] = min(best.get(lbl, float("inf")), time.time() - t0)
-    spark.stop()
-    return {lbl: round(v, 3) for lbl, v in best.items()}
-
-
 def bench_betweenness(k: int, dst: str) -> dict:
     """Scale-probe the distributed pivot-Brandes paths (r07 verdict ask
     #5): run approx_betweenness on the base vs K-replicated Infects
@@ -155,14 +134,6 @@ def bench_betweenness(k: int, dst: str) -> dict:
     kernels._LOCAL_BRANDES_NODES = 0 forces the 2·diameter-superstep
     engine on BOTH sides so the probe times the distributed path, not
     the small-graph single-task short-circuit."""
-    from pyspark.sql import functions as F
-
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators import kernels
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.plans.testdata_graph import (
-        infects_edges,
-    )
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.session import get_spark
-
     spark = get_spark("scale-betweenness")
     kernels._LOCAL_BRANDES_NODES = 0
     out: dict = {"k": k, "probes": {}}
@@ -176,17 +147,17 @@ def bench_betweenness(k: int, dst: str) -> dict:
             ("scaled", dst, base_pivots * k),
         ]:
             e = infects_edges(spark, sf_dir).select("src", "dst")
-            t0 = time.time()
-            bc = kernels.approx_betweenness(
-                e,
-                n_pivots=pivots,
-                max_depth=8,
-                stratify_components=strat,
-            )
-            n = bc.agg(F.count(F.lit(1))).first()[0]
-            times[side] = round(time.time() - t0, 1)
+
+            def probe():
+                bc = kernels.approx_betweenness(
+                    e, n_pivots=pivots, max_depth=8, stratify_components=strat
+                )
+                return bc.agg(F.count(F.lit(1))).first()[0]
+
+            n = {}
+            times[side] = round(min_of(1, {side: probe}, n)[side], 1)
             print(
-                f"# {name} {side}: {times[side]}s ({n} nodes, "
+                f"# {name} {side}: {times[side]}s ({n[side]} nodes, "
                 f"{pivots} pivots)",
                 file=sys.stderr,
             )
@@ -200,7 +171,34 @@ def bench_betweenness(k: int, dst: str) -> dict:
     return out
 
 
-def bench_compaction(n_appends: int = 64) -> dict:
+def _compaction_probe(spark, store, gate, n_appends, partition_by=None, read=None) -> dict:
+    """Time `gate(store frame)` (min of 3) against the store fragmented by
+    n_appends appends, compact it with the layout kept, assert identical
+    rows, re-time.  `read` reads the live store (default: the path)."""
+    read = read or (lambda: spark.read.parquet(store))
+
+    def gate_s() -> float:
+        def once():
+            gate(read()).agg(F.count(F.lit(1))).first()
+
+        return round(min_of(3, {"gate": once})["gate"], 3)
+
+    pre_rows = read().count()
+    frag_s = gate_s()
+    files_before, files_after = compact_store(spark, store, partition_by=partition_by)
+    assert read().count() == pre_rows, "compaction changed rows"
+    compact_s = gate_s()
+    return {
+        "n_appends": n_appends,
+        "files_before": files_before,
+        "files_after": files_after,
+        "gate_fragmented_s": frag_s,
+        "gate_compacted_s": compact_s,
+        "speedup": round(frag_s / max(compact_s, 1e-9), 2),
+    }
+
+
+def bench_compaction(n_appends: int = 64, versioned: bool = False) -> dict:
     """Measure what compact_store buys back after a long append-only
     crawl loop (r08 verdict ask #2): accumulate a fingerprint store
     over n_appends maintenance runs — each a pure parquet append of a
@@ -211,156 +209,40 @@ def bench_compaction(n_appends: int = 64) -> dict:
     the delta is footer resolution + per-file scan overhead, i.e. the
     cost class the append-only lifecycle defers to compaction.  Store
     content is identical pre/post (asserted), so the ratio isolates
-    the file-count effect."""
-    import shutil
-    import tempfile
+    the file-count effect.
 
-    from pyspark.sql import functions as F
-
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.dedup import (
-        fingerprint_store,
-        ingest_dedup,
-    )
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.gate_maintenance import (
-        compact_store,
-    )
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.session import get_spark
-
+    versioned=True runs the identical probe on the VERSIONED
+    (manifest/pointer-swap) layout: the store is converted first, every
+    read resolves the live version, and the compaction is the rename-free
+    manifest flip (write v2 fully, create _MANIFEST-v2, GC v1).  It
+    establishes that the object-store-safe mode buys the same file-count
+    reduction and gate speedup as the rename swap, i.e. choosing it costs
+    nothing but the one extra listStatus per resolve."""
     spark = get_spark("scale-compaction")
     tmp = tempfile.mkdtemp(prefix="sg_compact_probe_")
     store = f"{tmp}/fp_store"
+    if versioned:
+        convert_store_to_versioned(spark, store)  # versioned from day one
+
+    def live() -> str:
+        return resolve_store(spark, store) if versioned else store
+
     docs = spark.read.parquet(f"{SRC}/documents.parquet").select("doc_id", "text")
     d = F.col("doc_id")
     for i in range(n_appends):
         fingerprint_store(docs.filter(d % n_appends == i)).write.mode(
             "append"
-        ).parquet(store)
+        ).parquet(live())
     delta = docs.filter(d % 7 == 3).select((d + 10_000_000).alias("doc_id"), "text")
-
-    def gate_pass() -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            ingest_dedup(delta, spark.read.parquet(store)).agg(
-                F.count(F.lit(1))
-            ).first()
-            best = min(best, time.time() - t0)
-        return round(best, 3)
-
-    pre_rows = spark.read.parquet(store).count()
-    frag_s = gate_pass()
-    files_before, files_after = compact_store(spark, store)
-    assert spark.read.parquet(store).count() == pre_rows, "compaction changed rows"
-    compact_s = gate_pass()
+    out = _compaction_probe(
+        spark, store, lambda st: ingest_dedup(delta, st), n_appends,
+        read=lambda: spark.read.parquet(live()),
+    )
+    if versioned:
+        assert live().endswith("/v2"), "manifest flip did not advance the version"
     shutil.rmtree(tmp, ignore_errors=True)
     spark.stop()
-    return {
-        "n_appends": n_appends,
-        "files_before": files_before,
-        "files_after": files_after,
-        "gate_fragmented_s": frag_s,
-        "gate_compacted_s": compact_s,
-        "speedup": round(frag_s / max(compact_s, 1e-9), 2),
-    }
-
-
-def bench_compaction_versioned(n_appends: int = 64) -> dict:
-    """The VERSIONED (manifest/pointer-swap) layout run through the
-    identical probe as bench_compaction: same appends, same gate, same
-    content assertion — but the store is converted to the versioned
-    layout first, so the compaction is the rename-free manifest flip
-    (write v2 fully, create _MANIFEST-v2, GC v1).  Establishes that the
-    object-store-safe mode buys the same file-count reduction and gate
-    speedup as the rename swap, i.e. choosing it costs nothing but the
-    one extra listStatus per resolve."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.dedup import (
-        fingerprint_store,
-        ingest_dedup,
-    )
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.gate_maintenance import (
-        compact_store,
-        convert_store_to_versioned,
-        resolve_store,
-    )
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.session import get_spark
-
-    spark = get_spark("scale-compaction-versioned")
-    tmp = tempfile.mkdtemp(prefix="sg_compact_ver_probe_")
-    store = f"{tmp}/fp_store"
-    convert_store_to_versioned(spark, store)  # versioned from day one
-    docs = spark.read.parquet(f"{SRC}/documents.parquet").select("doc_id", "text")
-    d = F.col("doc_id")
-    for i in range(n_appends):
-        fingerprint_store(docs.filter(d % n_appends == i)).write.mode(
-            "append"
-        ).parquet(resolve_store(spark, store))
-    delta = docs.filter(d % 7 == 3).select((d + 10_000_000).alias("doc_id"), "text")
-
-    def gate_pass() -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            ingest_dedup(
-                delta, spark.read.parquet(resolve_store(spark, store))
-            ).agg(F.count(F.lit(1))).first()
-            best = min(best, time.time() - t0)
-        return round(best, 3)
-
-    pre_rows = spark.read.parquet(resolve_store(spark, store)).count()
-    frag_s = gate_pass()
-    files_before, files_after = compact_store(spark, store)
-    live = resolve_store(spark, store)
-    assert live.endswith("/v2"), "manifest flip did not advance the version"
-    assert spark.read.parquet(live).count() == pre_rows, "compaction changed rows"
-    compact_s = gate_pass()
-    shutil.rmtree(tmp, ignore_errors=True)
-    spark.stop()
-    return {
-        "n_appends": n_appends,
-        "files_before": files_before,
-        "files_after": files_after,
-        "gate_fragmented_s": frag_s,
-        "gate_compacted_s": compact_s,
-        "speedup": round(frag_s / max(compact_s, 1e-9), 2),
-    }
-
-
-def _compaction_probe(spark, store, partition_by, gate_pass_fn, n_appends) -> dict:
-    """Shared tail of the partitioned compaction probes: time the gate
-    against the fragmented store, compact (layout-preserving), assert
-    identical rows, re-time."""
-    import time as _t
-
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.gate_maintenance import (
-        compact_store,
-    )
-
-    def best_of_3() -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = _t.time()
-            gate_pass_fn()
-            best = min(best, _t.time() - t0)
-        return round(best, 3)
-
-    pre_rows = spark.read.parquet(store).count()
-    frag_s = best_of_3()
-    files_before, files_after = compact_store(spark, store, partition_by=partition_by)
-    assert spark.read.parquet(store).count() == pre_rows, "compaction changed rows"
-    compact_s = best_of_3()
-    return {
-        "n_appends": n_appends,
-        "files_before": files_before,
-        "files_after": files_after,
-        "gate_fragmented_s": frag_s,
-        "gate_compacted_s": compact_s,
-        "speedup": round(frag_s / max(compact_s, 1e-9), 2),
-    }
+    return out
 
 
 def bench_compaction_semantic(n_appends: int = 64) -> dict:
@@ -373,18 +255,6 @@ def bench_compaction_semantic(n_appends: int = 64) -> dict:
     appends, time the DPP-pruned semantic gate against the fragmented
     store, compact with the layout preserved, re-time (r09 verdict ask
     #3 — the flat probe alone under-measures the win)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.similarity import (
-        sampled_centroids,
-        semantic_ingest_dedup,
-        semantic_store,
-    )
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.session import get_spark
-
     spark = get_spark("scale-compaction-semantic")
     tmp = tempfile.mkdtemp(prefix="sg_compact_sem_")
     store = f"{tmp}/sem_store"
@@ -401,12 +271,10 @@ def bench_compaction_semantic(n_appends: int = 64) -> dict:
         (v + 10_000_000).alias("vec_id"), "embedding"
     )
 
-    def gate_pass():
-        semantic_ingest_dedup(
-            delta, spark.read.parquet(store), cents, dim=64, tau=0.38
-        ).agg(F.count(F.lit(1))).first()
+    def gate(st):
+        return semantic_ingest_dedup(delta, st, cents, dim=64, tau=0.38)
 
-    out = _compaction_probe(spark, store, ("cell",), gate_pass, n_appends)
+    out = _compaction_probe(spark, store, gate, n_appends, ("cell",))
     shutil.rmtree(tmp, ignore_errors=True)
     spark.stop()
     return {"layout": "semantic partitionBy(cell)", **out}
@@ -418,21 +286,6 @@ def bench_compaction_banded(n_appends: int = 64) -> dict:
     (band, _part) directory).  Accumulate over n_appends appends using
     the same derived `_part` column the appends use, time the near-dup
     gate fragmented vs compacted."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.dedup import (
-        minhash_ingest_dedup,
-        minhash_store,
-        portable_token_hash,
-    )
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.gate_maintenance import (
-        derive_minhash_partition,
-    )
-    from hannigan_conjunctisviribus_ploscompbio_2017_spark.session import get_spark
-
     kw = dict(hash_fn=portable_token_hash, bucket_by_hash=False)
     spark = get_spark("scale-compaction-banded")
     tmp = tempfile.mkdtemp(prefix="sg_compact_band_")
@@ -445,27 +298,23 @@ def bench_compaction_banded(n_appends: int = 64) -> dict:
         ).coalesce(1).write.mode("append").partitionBy("band", "_part").parquet(store)
     delta = docs.filter(d % 7 == 3).select((d + 10_000_000).alias("doc_id"), "text")
 
-    def gate_pass():
-        minhash_ingest_dedup(delta, spark.read.parquet(store), **kw).agg(
-            F.count(F.lit(1))
-        ).first()
+    def gate(st):
+        return minhash_ingest_dedup(delta, st, **kw)
 
-    out = _compaction_probe(spark, store, ("band", "_part"), gate_pass, n_appends)
+    out = _compaction_probe(spark, store, gate, n_appends, ("band", "_part"))
     shutil.rmtree(tmp, ignore_errors=True)
     spark.stop()
     return {"layout": "minhash partitionBy(band, _part)", **out}
 
 
-def main() -> None:
-    args = sys.argv[1:]
-    subset = None
+def main(args: list[str]) -> None:
     betweenness = "--betweenness" in args
     if betweenness:
         args.remove("--betweenness")
     for flag, fn in (
         ("--compaction-semantic", bench_compaction_semantic),
         ("--compaction-banded", bench_compaction_banded),
-        ("--compaction-versioned", bench_compaction_versioned),
+        ("--compaction-versioned", lambda n: bench_compaction(n, versioned=True)),
         ("--compaction", bench_compaction),
     ):
         if flag in args:
@@ -473,47 +322,27 @@ def main() -> None:
             n = int(args[i + 1]) if len(args) > i + 1 and args[i + 1].isdigit() else 64
             print(json.dumps(fn(n)))
             return
-    if "--subset" in args:
-        i = args.index("--subset")
-        subset = args[i + 1 :] or SUBSET_DEFAULT
-        args = args[:i]
-    k = int(args[0]) if args else 8
-    dst = os.path.abspath(f".scratch/sf{k}x")
+    k = int(args.pop(0)) if args and args[0].isdigit() else 8
+    dst = os.path.join(REPO, ".scratch", f"{os.path.basename(SRC)}x{k}")
     if not os.path.exists(f"{dst}/lineitem.parquet"):
         print(f"# building {dst} (K={k})", file=sys.stderr)
-        t0 = time.time()
         build(dst, k)
-        print(f"# built in {time.time() - t0:.0f}s", file=sys.stderr)
     if betweenness:
         print(json.dumps(bench_betweenness(k, dst)))
         return
-    if subset is not None:
-        base_q = bench_subset(SRC, subset)
-        big_q = bench_subset(dst, subset)
-        factors = {
-            q: round(big_q[q] / max(base_q[q], 1e-9), 2) for q in base_q
-        }
-        print(
-            json.dumps(
-                {
-                    "k": k,
-                    "subset": subset,
-                    "base_s": base_q,
-                    "scaled_s": big_q,
-                    "per_query_factor": factors,
-                    "verdict": {
-                        q: ("OK" if f <= k * 1.5 else "SUPERLINEAR — investigate")
-                        for q, f in factors.items()
-                    },
-                }
-            )
-        )
-        return
-    base = bench(SRC)
-    big = bench(dst)
+    # naming the labels skips bench.py's extras, which read the sf0.01
+    # sibling of the data dir that a scaled dir does not have
+    labels = args or [lab for lab, _ in HEADLINE]
+    rec = replay(
+        [f".,SPARK_GRAFT_SF_DIR={SRC}", f".,SPARK_GRAFT_SF_DIR={dst}"],
+        [sys.executable, "bench.py", *labels],
+        pairs=1,
+    )
+    base, big = rec["median"]["A"], rec["median"]["B"]
     factors = {
-        q: round(big["queries"][q] / max(base["queries"][q], 1e-9), 2)
-        for q in base["queries"]
+        f.split(".", 1)[1]: round(big[f] / max(t, 1e-9), 2)
+        for f, t in base.items()
+        if f.startswith("queries.")
     }
     print(
         json.dumps(
@@ -532,4 +361,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
