@@ -192,12 +192,12 @@ def rarefy_hash(
     the plan (single Catalyst DAG — no driver-side collect), or a SQL
     aggregate expression over the per-sample total column `_t` (e.g.
     "min(_t)", "percentile(_t, 0.05)"). The expression form is the
-    cheapest: it is evaluated as a global window over the per-sample
-    aggregate THIS operator already computes, so the depth costs one
-    exchange of an n_samples-row frame — a caller-built depth DataFrame,
-    by contrast, re-derives the whole upstream plan a second time
-    (Catalyst does not reuse the identical subtree across the broadcast
-    boundary; measured one extra full scan+join per depth consumer).
+    cheapest: it is aggregated from the per-sample totals THIS operator
+    already computes over its checkpointed input — a caller-built depth
+    DataFrame, by contrast, re-derives the whole upstream plan a second
+    time (Catalyst does not reuse the identical subtree across the
+    broadcast boundary; measured one extra full scan+join per depth
+    consumer).
 
     The rank never sorts the full exploded community: see `_smallest_k`.
     """
@@ -208,12 +208,11 @@ def rarefy_hash(
     # this operator's wall-clock at sf0.1
     per_sample = typed.groupBy(sample_col).agg(F.sum(count_col).alias("_t"))
     if isinstance(depth, str):
-        # global window over the tiny per-sample aggregate: single
-        # partition is deliberate — n_samples rows, not the base table
-        per_sample = per_sample.withColumn(
-            "_depth", F.expr(depth).over(W.partitionBy()).cast("long")
-        )
-    elif isinstance(depth, DataFrame):
+        # a one-row aggregate of the per-sample totals, crossJoined like
+        # a depth frame: a window with no partition would pull every
+        # per-sample total into one task
+        depth = per_sample.agg(F.expr(depth))
+    if isinstance(depth, DataFrame):
         dcol = depth.columns[0]
         per_sample = per_sample.crossJoin(
             F.broadcast(depth.select(F.col(dcol).cast("long").alias("_depth")))

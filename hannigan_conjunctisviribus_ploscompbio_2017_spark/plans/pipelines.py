@@ -30,7 +30,10 @@ from pyspark.sql import functions as F
 
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.functions.scalar import edge_weight, length_normalize
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.kernels import _checkpoint, eigenvector_centrality
-from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.relational import anti_filter
+from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.relational import (
+    anti_filter,
+    rarefaction_depth,
+)
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.stats import bray_curtis, rarefy
 
 
@@ -109,11 +112,7 @@ def interpersonal_diversity(
     # A7 min depth stays IN the plan: the 1-row aggregate is broadcast
     # into the rarefaction (relational.py:129 pattern) — one lazy plan,
     # no driver-side collect between the stages.
-    depth_df = (
-        ab.groupBy("sample")
-        .agg(F.sum("phage_abundance").alias("t"))
-        .agg(F.min("t").alias("depth"))
-    )
+    depth_df = rarefaction_depth(ab, "sample", "phage_abundance")
     # rarefy (the Arrow hypergeometric draw), not rarefy_hash: this
     # pipeline's frozen oracle pins the numpy draw REALIZATION, and the
     # Arrow route is the at-scale default anyway.
@@ -213,9 +212,9 @@ def compare_skin(
     # dedup the subtree: ab feeds the depth percentile AND the draw
     # (see pipeline_interpersonal_diversity); values unchanged
     ).localCheckpoint(eager=False)
-    totals = ab.groupBy("skey").agg(F.sum("phage_abundance").alias("t"))
-    # A7 5th-percentile depth as an in-plan 1-row frame (no collect)
-    depth_df = totals.selectExpr("CAST(percentile(t, 0.05) AS LONG) AS d")
+    # A7 5th-percentile depth as an in-plan 1-row frame (no collect);
+    # rarefy truncates it to a long
+    depth_df = rarefaction_depth(ab, "skey", "phage_abundance", quantile=0.05)
     # route pinned to rarefy, not the auto-routing facade — frozen-
     # oracle realization stability (see pipeline_interpersonal_diversity)
     rarefied = rarefy(ab, "skey", "phage", "phage_abundance", depth=depth_df, seed=seed)

@@ -1,6 +1,7 @@
-"""SQL surface: register the engine's tables and canonical queries as
-temp views so the whole suite is reachable via spark.sql (SURVEY §7
-step 4 — Catalyst produces the same plans either way).
+"""SQL surface: register the engine's tables and graph as temp views so
+the whole suite is reachable via spark.sql (SURVEY §7 step 4 — Catalyst
+produces the same plans either way). The pattern queries themselves
+have one definition, in plans/queries.py.
 
 Usage:
     register_testdata_views(spark, sf_dir)   # raw tables
@@ -30,48 +31,6 @@ def register_graph_views(spark: SparkSession, sf_dir: str) -> None:
     TG.nodes(spark, sf_dir).createOrReplaceTempView("graph_nodes")
     TG.infects_edges(spark, sf_dir).createOrReplaceTempView("infects_edges")
     TG.sampled_edges(spark, sf_dir).createOrReplaceTempView("sampled_edges")
-
-
-# The canonical pattern queries as plain Spark SQL (same semantics as
-# plans/queries.py; parameterize by string formatting of the anchor).
-SQL_TEMPLATES = {
-    # Q1 — edge scan with scores (bin/CalculatePredModel.R:181-205)
-    "q1_interactions": """
-        SELECT e.src AS from_name, e.dst AS to_name,
-               e.interaction, e.crispr, e.blast, e.blastx, e.pfam
-        FROM infects_edges e
-        {where}
-    """,
-    # Q3 — triadic closure (bin/TriadicClosures.R:88-89): n != k with
-    # DISTINCT, BOTH orientations — same semantics as
-    # plans/queries.q3_triadic_closure and the symmetric Cypher
-    "q3_triadic": """
-        SELECT DISTINCT a.src AS n, b.src AS k
-        FROM infects_edges a JOIN infects_edges b
-          ON a.dst = b.dst AND a.src <> b.src
-    """,
-    # Q6 — label scan (bin/VisGraphByGroup.R:45-47)
-    "q6_label_scan": """
-        SELECT name FROM graph_nodes WHERE label = '{label}'
-    """,
-}
-
-
-def sql_q1(spark: SparkSession, interaction: int | None = None):
-    where = f"WHERE e.interaction = {int(interaction)}" if interaction is not None else ""
-    return spark.sql(SQL_TEMPLATES["q1_interactions"].format(where=where))
-
-
-def sql_q3(spark: SparkSession):
-    return spark.sql(SQL_TEMPLATES["q3_triadic"])
-
-
-def sql_q6(spark: SparkSession, label: str):
-    # a real raise, not assert: asserts vanish under python -O, which
-    # would let an arbitrary string flow into the SQL literal
-    if not (label.isidentifier() or label.replace("_", "").isalnum()):
-        raise ValueError(f"label must be a plain name, got {label!r}")
-    return spark.sql(SQL_TEMPLATES["q6_label_scan"].format(label=label))
 
 
 def register_corpus_views(spark: SparkSession, sf_dir: str) -> None:

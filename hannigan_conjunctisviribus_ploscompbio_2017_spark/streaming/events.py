@@ -148,16 +148,70 @@ def incremental_edge_upsert(
     )
 
 
-def _drain_max_ms(pdfs, ts_col: str, floor_ms: int) -> int:
-    """Drain a stateful operator's duplicate batches and return the max
-    event-time in ms, floored at `floor_ms` (the stored arming basis) —
-    shared by both first-seen dedup operators so their retention math
-    cannot diverge."""
-    out = floor_ms
-    for pdf in pdfs:
-        if len(pdf):
-            out = max(out, int(pdf[ts_col].max().timestamp() * 1000))
-    return out
+def _arm(state, ts, retention_ms: int, *fields) -> None:
+    """The one event-time arming rule of the stateful operators here.
+
+    Stores `(*fields, basis)` and arms eviction at basis + retention_ms,
+    where basis (the state's last field, ms) is the max of the stored
+    basis and this batch's max event time `ts.max()`. Spark resets a
+    GroupState timeout on every call, so each call must re-arm; taking
+    the max means an out-of-order delivery never moves eviction EARLIER
+    (and the timeout never falls below the watermark, which would throw
+    and kill the query)."""
+    basis = int(ts.max().timestamp() * 1000)
+    if state.exists:
+        basis = max(basis, int(state.get[-1]))
+    state.update((*fields, basis))
+    state.setTimeoutTimestamp(basis + retention_ms)
+
+
+def _first_seen_state(ts_col: str, retention_ms: int, admit):
+    """The state function of `_first_seen`: a timed-out key drops its
+    state and emits nothing; an already-seen key re-arms and emits
+    nothing; a key's first delivery arms and emits the one row
+    `admit(key, rows)` (a dict) over all of its rows in the batch."""
+    import pandas as pd
+
+    def fn(key, pdfs, state):
+        if state.hasTimedOut:
+            state.remove()
+            return
+        seen = state.exists
+        # concat BEFORE admit orders the rows: a key spanning several
+        # Arrow batches must be judged over all of them
+        rows = pd.concat(list(pdfs), ignore_index=True)
+        _arm(state, rows[ts_col], retention_ms)
+        if not seen:
+            yield pd.DataFrame([admit(key, rows)])
+
+    return fn
+
+
+def _first_seen(
+    rows: DataFrame,
+    key_cols: list[str],
+    ts_col: str,
+    watermark: str,
+    retention_ms: int,
+    out_schema: T.StructType,
+    admit,
+) -> DataFrame:
+    """Cross-batch first-seen state per `key_cols`: each key emits
+    `admit(key, rows)` once, on its first delivery; every later delivery
+    (same micro-batch or any later one) is suppressed. State per key is
+    its arming basis only, evicted `retention_ms` past the key's max
+    event time (`_arm`) — bounded state on an unbounded stream."""
+    return (
+        rows.withWatermark(ts_col, watermark)
+        .groupBy(*key_cols)
+        .applyInPandasWithState(
+            _first_seen_state(ts_col, retention_ms, admit),
+            out_schema,
+            T.StructType([T.StructField("max_ms", T.LongType())]),
+            "append",
+            "EventTimeTimeout",
+        )
+    )
 
 
 def streaming_first_seen(
@@ -166,19 +220,14 @@ def streaming_first_seen(
     watermark: str = "2 hours",
     retention_ms: int = 24 * 3600 * 1000,
 ) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: cross-batch
-    streaming dedup. Emits each key's FIRST event only; every later
-    occurrence — same micro-batch or any later one — is dropped. The
-    streaming twin of the batch exact-dedup operator (operators/dedup.py),
-    for ingest pipelines that must never admit a duplicate document twice.
+    """Cross-batch streaming dedup (`_first_seen`): emits each key's
+    FIRST event only; every later occurrence — same micro-batch or any
+    later one — is dropped. The streaming twin of the batch exact-dedup
+    operator (operators/dedup.py), for ingest pipelines that must never
+    admit a duplicate document twice.
 
-    State per key is one boolean, evicted by event-time timeout
-    `retention_ms` past the group's max event time — bounded state on an
-    unbounded stream, same discipline as the watermarked windows above.
     Output: (key, first_event_id, first_ts, n_dups) where n_dups counts
     suppressed duplicates in the first-seen batch."""
-    import pandas as pd
-
     out_schema = T.StructType(
         [
             T.StructField("key", T.StringType()),
@@ -187,47 +236,19 @@ def streaming_first_seen(
             T.StructField("n_dups", T.LongType()),
         ]
     )
-    state_schema = T.StructType([T.StructField("max_ms", T.LongType())])
 
-    def dedup(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-        elif state.exists:
-            # Spark RESETS a GroupState timeout on every invocation, so
-            # the timer must be re-armed here — but from the MAX of the
-            # stored arming basis and this batch (an out-of-order
-            # duplicate must never move eviction EARLIER, and monotone
-            # timestamps also can't fall below the watermark, which
-            # would throw and kill the query). Duplicates extend
-            # retention; the arming basis lives in the state.
-            state.update(
-                (_drain_max_ms(pdfs, "ts", int(state.get[0])),)
-            )
-            state.setTimeoutTimestamp(int(state.get[0]) + retention_ms)
-        else:
-            rows = pd.concat(list(pdfs), ignore_index=True)
-            first = rows.sort_values(["ts", "event_id"]).iloc[0]
-            max_ms = int(rows["ts"].max().timestamp() * 1000)
-            state.update((max_ms,))
-            state.setTimeoutTimestamp(max_ms + retention_ms)
-            yield pd.DataFrame(
-                [
-                    {
-                        "key": key[0],
-                        "first_event_id": int(first["event_id"]),
-                        "first_ts": first["ts"],
-                        "n_dups": int(len(rows) - 1),
-                    }
-                ]
-            )
+    def admit(key, rows):
+        first = rows.sort_values(["ts", "event_id"]).iloc[0]
+        return {
+            "key": key[0],
+            "first_event_id": int(first["event_id"]),
+            "first_ts": first["ts"],
+            "n_dups": len(rows) - 1,
+        }
 
-    return (
-        events.withColumn("key", F.col(key_col))
-        .withWatermark("ts", watermark)
-        .groupBy("key")
-        .applyInPandasWithState(
-            dedup, out_schema, state_schema, "append", "EventTimeTimeout"
-        )
+    return _first_seen(
+        events.withColumn("key", F.col(key_col)),
+        ["key"], "ts", watermark, retention_ms, out_schema, admit,
     )
 
 
@@ -262,6 +283,49 @@ def minhash_sig_cols(text_col, k: int = 3, num_hashes: int = 16, seed: int = 42)
     return cols
 
 
+def _bucket_probe(max_ids_per_bucket: int, retention_ms: int):
+    """The state function of `streaming_near_dup_candidates`, per
+    (band, bucket): each new document pairs with every id the bucket
+    already holds, then joins the (bounded) id list; the state is
+    (ids, max_ms), armed by `_arm`. A timed-out bucket drops its state."""
+    import pandas as pd
+
+    def probe(key, pdfs, state):
+        if state.hasTimedOut:
+            state.remove()
+            return
+        ids = list(state.get[0]) if state.exists else []
+        out = []
+        # concat BEFORE sorting: a bucket spanning multiple Arrow
+        # batches must process in global (ts, event_id) order, not
+        # per-chunk order (chunk arrival order is nondeterministic) —
+        # same discipline as the first-seen operators
+        allrows = pd.concat(list(pdfs), ignore_index=True)
+        # itertuples, not iterrows: same traversal, no per-row Series
+        # construction (the ids-list state evolves row to row, so the
+        # loop itself cannot vectorize)
+        for r in allrows.sort_values(["ts", "event_id"]).itertuples(index=False):
+            doc = int(r.event_id)
+            for prior in ids:
+                if prior != doc:
+                    out.append(
+                        {
+                            "doc_id": doc,
+                            "candidate_id": prior,
+                            "band": int(key[0]),
+                            "bucket": int(key[1]),
+                            "ts": r.ts,
+                        }
+                    )
+            if len(ids) < max_ids_per_bucket and doc not in ids:
+                ids.append(doc)
+        _arm(state, allrows["ts"], retention_ms, ids)
+        if out:
+            yield pd.DataFrame(out)
+
+    return probe
+
+
 def streaming_near_dup_candidates(
     events: DataFrame,
     text_col: str = "props",
@@ -281,12 +345,11 @@ def streaming_near_dup_candidates(
 
     State per bucket is a bounded id list (max_ids_per_bucket — hot
     buckets degrade to sampling the earliest ids, never unbounded state)
-    with event-time eviction. Output: (doc_id, candidate_id, band,
-    bucket, ts) — pairs may repeat across bands; downstream dedup /
-    exact Jaccard verification is a batch join, as in the batch
-    pipeline."""
-    import pandas as pd
-
+    plus its arming basis, evicted by the gates' rule (`_arm`): a late
+    delivery never pulls a bucket's eviction earlier. Output: (doc_id,
+    candidate_id, band, bucket, ts) — pairs may repeat across bands;
+    downstream dedup / exact Jaccard verification is a batch join, as
+    in the batch pipeline."""
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.dedup import (
         _bands,
         validate_banding,
@@ -317,50 +380,22 @@ def streaming_near_dup_candidates(
             T.StructField("ts", T.TimestampType()),
         ]
     )
-    state_schema = T.StructType([T.StructField("ids", T.ArrayType(T.LongType()))])
-
-    def probe(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        ids = list(state.get[0]) if state.exists else []
-        out = []
-        max_ts = None
-        # concat BEFORE sorting: a bucket spanning multiple Arrow
-        # batches must process in global (ts, event_id) order, not
-        # per-chunk order (chunk arrival order is nondeterministic) —
-        # same discipline as the first-seen operators
-        allrows = pd.concat(list(pdfs), ignore_index=True)
-        # itertuples, not iterrows: same traversal, no per-row Series
-        # construction (the ids-list state evolves row to row, so the
-        # loop itself cannot vectorize)
-        for r in allrows.sort_values(["ts", "event_id"]).itertuples(index=False):
-            doc = int(r.event_id)
-            max_ts = r.ts if max_ts is None else max(max_ts, r.ts)
-            for prior in ids:
-                if prior != doc:
-                    out.append(
-                        {
-                            "doc_id": doc,
-                            "candidate_id": prior,
-                            "band": int(key[0]),
-                            "bucket": int(key[1]),
-                            "ts": r.ts,
-                        }
-                    )
-            if len(ids) < max_ids_per_bucket and doc not in ids:
-                ids.append(doc)
-        state.update((ids,))
-        if max_ts is not None:
-            state.setTimeoutTimestamp(int(max_ts.timestamp() * 1000) + retention_ms)
-        if out:
-            yield pd.DataFrame(out)
+    state_schema = T.StructType(
+        [
+            T.StructField("ids", T.ArrayType(T.LongType())),
+            T.StructField("max_ms", T.LongType()),
+        ]
+    )
 
     return (
         banded.withWatermark("ts", watermark)
         .groupBy("band", "bucket")
         .applyInPandasWithState(
-            probe, out_schema, state_schema, "append", "EventTimeTimeout"
+            _bucket_probe(max_ids_per_bucket, retention_ms),
+            out_schema,
+            state_schema,
+            "append",
+            "EventTimeTimeout",
         )
     )
 
@@ -388,17 +423,13 @@ def streaming_chunk_first_seen(
     """Streaming passage-level dedup — the streaming twin of
     operators.dedup.chunk_dedup: each incoming doc is split into
     16-token chunks (stateless Catalyst explode, same expression tree as
-    the batch operator), then a per-fingerprint applyInPandasWithState
-    admits only the FIRST occurrence of each passage across all
+    the batch operator), then per-fingerprint first-seen state admits
+    only the FIRST occurrence of each passage across all
     micro-batches. Ingest pipelines drop every later repeat before it
     reaches the corpus store.
 
-    State per fingerprint is one boolean with an event-time timeout
-    `retention_ms` past the group's max event time — bounded state, same
-    discipline as streaming_first_seen. Output: (fingerprint,
+    State and eviction are `_first_seen`'s. Output: (fingerprint,
     first_doc_id, first_chunk_idx, first_ts, n_dups)."""
-    import pandas as pd
-
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.dedup import doc_chunks
 
     ch = doc_chunks(
@@ -414,40 +445,19 @@ def streaming_chunk_first_seen(
             T.StructField("n_dups", T.LongType()),
         ]
     )
-    state_schema = T.StructType([T.StructField("max_ms", T.LongType())])
 
-    def dedup(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-        elif state.exists:
-            # re-arm from max(stored basis, batch) — see
-            # streaming_first_seen: monotone, never shrinks retention
-            state.update((_drain_max_ms(pdfs, ts_col, int(state.get[0])),))
-            state.setTimeoutTimestamp(int(state.get[0]) + retention_ms)
-        else:
-            rows = pd.concat(list(pdfs), ignore_index=True)
-            first = rows.sort_values([ts_col, "id", "chunk_idx"]).iloc[0]
-            max_ms = int(rows[ts_col].max().timestamp() * 1000)
-            state.update((max_ms,))
-            state.setTimeoutTimestamp(max_ms + retention_ms)
-            yield pd.DataFrame(
-                [
-                    {
-                        "fingerprint": key[0],
-                        "first_doc_id": int(first["id"]),
-                        "first_chunk_idx": int(first["chunk_idx"]),
-                        "first_ts": first[ts_col],
-                        "n_dups": int(len(rows) - 1),
-                    }
-                ]
-            )
+    def admit(key, rows):
+        first = rows.sort_values([ts_col, "id", "chunk_idx"]).iloc[0]
+        return {
+            "fingerprint": key[0],
+            "first_doc_id": int(first["id"]),
+            "first_chunk_idx": int(first["chunk_idx"]),
+            "first_ts": first[ts_col],
+            "n_dups": len(rows) - 1,
+        }
 
-    return (
-        ch.withWatermark(ts_col, watermark)
-        .groupBy("fingerprint")
-        .applyInPandasWithState(
-            dedup, out_schema, state_schema, "append", "EventTimeTimeout"
-        )
+    return _first_seen(
+        ch, ["fingerprint"], ts_col, watermark, retention_ms, out_schema, admit
     )
 
 
@@ -608,9 +618,9 @@ def streaming_ingest_dedup(
     counted in n_dups.  Appending the admitted fingerprints back to the
     store between runs closes the corpus-maintenance loop.
 
-    State cost is one boolean + timestamp per ADMITTED fingerprint,
-    evicted `retention_ms` past its event time — bounded on an
-    unbounded stream.  Output: (key=fingerprint, first_event_id,
+    State cost is one arming basis per ADMITTED fingerprint, evicted
+    `retention_ms` past its event time — bounded on an unbounded
+    stream.  Output: (key=fingerprint, first_event_id,
     first_ts, n_dups), as streaming_first_seen."""
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.dedup import fingerprint_expr
 
@@ -651,11 +661,9 @@ def streaming_semantic_ingest(
     there the store is the probe side and dynamic partition pruning
     bounds its scan to the probed cells),
     probed candidates score by exact cosine (both norms precomputed),
-    and a per-doc stateful reduce (applyInPandasWithState) emits the
-    best match + tau admission status EXACTLY ONCE per doc id —
-    a duplicate delivery in the same or any later micro-batch is
-    suppressed by first-seen state, evicted `retention_ms` past the
-    doc's event time.
+    and per-doc first-seen state (`_first_seen`) emits the best match +
+    tau admission status EXACTLY ONCE per doc id — a duplicate delivery
+    in the same or any later micro-batch is suppressed.
 
     The LEFT join is load-bearing: a doc whose probed cells hold no
     store rows must still reach the reduce (status 'new', NULL match),
@@ -672,8 +680,6 @@ def streaming_semantic_ingest(
     Output: (id, status ∈ {'dup_semantic', 'new', 'unusable'},
     match_id, cosine, first_ts) — id typed as the input id column,
     match_id as the store's id column."""
-    import pandas as pd
-
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.similarity import (
         _cell_exprs,
         _explode_probes,
@@ -716,55 +722,37 @@ def streaming_semantic_ingest(
             T.StructField("first_ts", T.TimestampType()),
         ]
     )
-    state_schema = T.StructType([T.StructField("max_ms", T.LongType())])
 
-    def reduce_best(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-        elif state.exists:
-            # duplicate delivery of an already-admitted doc id: emit
-            # nothing, extend retention (same arming discipline as
-            # streaming_first_seen — eviction must never move earlier)
-            state.update((_drain_max_ms(pdfs, "ts", int(state.get[0])),))
-            state.setTimeoutTimestamp(int(state.get[0]) + retention_ms)
-        else:
-            rows = pd.concat(list(pdfs), ignore_index=True)
-            max_ms = int(rows["ts"].max().timestamp() * 1000)
-            state.update((max_ms,))
-            state.setTimeoutTimestamp(max_ms + retention_ms)
-            out = {
-                "id": key[0],
-                "status": "new",
-                "match_id": None,
-                "cosine": None,
-                "first_ts": rows["ts"].min(),
-            }
-            if not bool(rows["_usable"].iloc[0]):
-                out["status"] = "unusable"
-            else:
-                cand = rows.dropna(subset=["cosine"])
-                if len(cand):
-                    best = cand.sort_values(
-                        ["cosine", "match_id"], ascending=[False, True]
-                    ).iloc[0]
-                    cos = float(best["cosine"])
-                    out["status"] = "dup_semantic" if cos >= tau else "new"
-                    out["cosine"] = cos
-                    # the left join floats integer store ids (NULL
-                    # padding) — restore the declared integral type
-                    out["match_id"] = (
-                        int(best["match_id"])
-                        if isinstance(match_type, int_types)
-                        else best["match_id"]
-                    )
-            yield pd.DataFrame([out])
+    def admit(key, rows):
+        out = {
+            "id": key[0],
+            "status": "new",
+            "match_id": None,
+            "cosine": None,
+            "first_ts": rows["ts"].min(),
+        }
+        if not bool(rows["_usable"].iloc[0]):
+            out["status"] = "unusable"
+            return out
+        cand = rows.dropna(subset=["cosine"])
+        if len(cand):
+            best = cand.sort_values(
+                ["cosine", "match_id"], ascending=[False, True]
+            ).iloc[0]
+            cos = float(best["cosine"])
+            out["status"] = "dup_semantic" if cos >= tau else "new"
+            out["cosine"] = cos
+            # the left join floats integer store ids (NULL padding) —
+            # restore the declared integral type
+            out["match_id"] = (
+                int(best["match_id"])
+                if isinstance(match_type, int_types)
+                else best["match_id"]
+            )
+        return out
 
-    return (
-        pairs.withWatermark("ts", watermark)
-        .groupBy("q_id")
-        .applyInPandasWithState(
-            reduce_best, out_schema, state_schema, "append", "EventTimeTimeout"
-        )
+    return _first_seen(
+        pairs, ["q_id"], "ts", watermark, retention_ms, out_schema, admit
     )
 
 

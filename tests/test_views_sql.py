@@ -1,8 +1,6 @@
 """SQL surface: views + spark.sql produce the same results as the
 DataFrame builders (Catalyst parity)."""
 
-from pyspark.sql import functions as F
-
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.plans import views as V
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.plans.testdata_graph import infects_edges
 from tests.conftest import SF0001
@@ -21,18 +19,12 @@ def test_graph_views_match_dataframe_builders(spark):
     assert sql_n == df_n
 
 
-def test_sql_q1_matches_filter(spark):
+def test_graph_views_study_label_scan(spark):
     V.register_graph_views(spark, SF0001)
-    pos_sql = V.sql_q1(spark, interaction=1).count()
-    pos_df = infects_edges(spark, SF0001).filter(F.col("interaction") == 1).count()
-    assert pos_sql == pos_df
-    assert V.sql_q1(spark).count() == infects_edges(spark, SF0001).count()
-
-
-def test_sql_q3_and_q6(spark):
-    V.register_graph_views(spark, SF0001)
-    assert V.sql_q3(spark).count() > 0
-    names = {r.name for r in V.sql_q6(spark, "StudyID").collect()}
+    names = {
+        r.name
+        for r in spark.sql("SELECT name FROM graph_nodes WHERE label = 'StudyID'").collect()
+    }
     assert len(names) == 5
 
 
