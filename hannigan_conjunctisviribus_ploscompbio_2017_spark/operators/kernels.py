@@ -141,8 +141,8 @@ def _checkpoint(df: DataFrame) -> DataFrame:
     input).  Every iterative loop in this module funnels through this
     one helper, so the switch covers power iteration, BFS frontiers,
     LPA, and the Brandes pivots alike, as well as the static graphs
-    built by _static_graph and the tables interpersonal_diversity
-    materializes.  Set
+    built by _static_graph and the tables the plans/pipelines.py
+    analyses materialize.  Set
     spark.cleaner.referenceTracking.cleanCheckpoints=true to have
     out-of-scope checkpoint files garbage-collected.
 

@@ -26,56 +26,13 @@ from pyspark.sql import functions as F
 # --- filters (P1-P10) ------------------------------------------------------
 
 
-def filter_positive(df: DataFrame, col: str) -> DataFrame:
-    """P3 — numeric predicate (reference: toInt(abundance) > 0,
-    bin/GetSkinGraphs.R:62-63)."""
-    return df.filter(F.col(col) > 0)
-
-
-def filter_any_positive(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """P6 — keep rows where ANY score > 0 (bin/PredictRelationships.R:68)."""
-    return df.filter(F.greatest(*[F.col(c) for c in cols]) > 0)
-
-
-def filter_length_range(df: DataFrame, col: str, lo: int, hi: int) -> DataFrame:
-    """P7 — sequence-length window (bin/LengthFilterSeqs.pl:44-61)."""
-    return df.filter(F.length(F.col(col)).between(lo, hi))
-
-
 def anti_filter(df: DataFrame, removal: DataFrame, on: str | list[str]) -> DataFrame:
     """P8 — drop rows whose key appears in a removal list
     (bin/interpersonaldiversity.R:49-53). Removal lists are small → broadcast."""
     return df.join(F.broadcast(removal), on, "left_anti")
 
 
-def semi_filter(df: DataFrame, keep: DataFrame, on: str | list[str]) -> DataFrame:
-    """P9 — keep rows whose key appears in a keep-list (bin/ApplySepAbund.R:38-39)."""
-    return df.join(F.broadcast(keep), on, "left_semi")
-
-
-def route_by_label(df: DataFrame, col: str, value: str) -> DataFrame:
-    """P10 — label-driven routing (bin/SepAbundanceTable.sh:44-60); one
-    filter per side. For a persistent split, prefer write.partitionBy(col)."""
-    return df.filter(F.col(col) == value)
-
-
 # --- joins (J1-J10) ---------------------------------------------------------
-
-
-def annotate(
-    df: DataFrame,
-    mapping: DataFrame,
-    on: str | list[str],
-    default: dict[str, str] | None = None,
-) -> DataFrame:
-    """J2 — broadcast map-side annotation with miss-default, mirroring the
-    awk `FNR==NR{a[$1]=$2}` idiom + NoClusterPhage fallback
-    (bin/ClusterContigScores.sh:29-35)."""
-    out = df.join(F.broadcast(mapping), on, "left")
-    if default:
-        for c, v in default.items():
-            out = out.withColumn(c, F.coalesce(F.col(c), F.lit(v)))
-    return out
 
 
 def feature_merge(
@@ -169,24 +126,9 @@ def feature_merge(
 # --- aggregations (A1-A12) --------------------------------------------------
 
 
-def collapse_sum(df: DataFrame, keys: Sequence[str], col: str, alias: str) -> DataFrame:
-    """A1 — group-by sum (bin/CollapseContigCounts.R:29)."""
-    return df.groupBy(*keys).agg(F.sum(col).alias(alias))
-
-
 def collapse_mean(df: DataFrame, keys: Sequence[str], col: str, alias: str) -> DataFrame:
     """A2 — group-by mean score per pair (bin/CollapseGeneScores.R:38)."""
     return df.groupBy(*keys).agg(F.avg(col).alias(alias))
-
-
-def collapse_min(df: DataFrame, keys: Sequence[str], col: str, alias: str) -> DataFrame:
-    """A3 — group-by min (bin/iteratePredictedRelationships.R:30-33)."""
-    return df.groupBy(*keys).agg(F.min(col).alias(alias))
-
-
-def degree_count(edges: DataFrame, node_col: str, alias: str = "degree") -> DataFrame:
-    """A4/G1 — edges per node (bin/GetNetworkLinkCounts.R:80,101)."""
-    return edges.groupBy(node_col).agg(F.count(F.lit(1)).alias(alias))
 
 
 def rarefaction_depth(
@@ -215,15 +157,6 @@ def best_hit(
         .filter(F.col("_rn") <= n)
         .drop("_rn")
     )
-
-
-def row_votes(df: DataFrame, cols: Sequence[str], alias: str = "votes") -> DataFrame:
-    """A12 — horizontal sum across feature columns
-    (bin/CalculateModelSpecSens.R:32)."""
-    expr = None
-    for c in cols:
-        expr = F.col(c) if expr is None else expr + F.col(c)
-    return df.withColumn(alias, expr)
 
 
 # --- reshape (R1-R7) --------------------------------------------------------

@@ -7,20 +7,28 @@ R; here it is one Spark job graph from the edge tables to the final
 statistics table, and only the final small stats frame ever reaches the
 driver.  Tables that more than one later stage or caller reads (the
 normalized edge table, the rarefied abundances, the kernel's static
-graph, the class-labelled Bray-Curtis distances) are materialized once,
-so no stage recomputes the Q5 join or the distances.
+graph, the labelled Bray-Curtis distances, compare_twins' input and
+merged importance) are materialized once, so no stage recomputes the
+Q5 join, the rarefaction draw or the distances.
 
-Stage trace (reference line cites):
- 1. Q5 sample-network join (bin/interpersonaldiversity.R:18-36)
+The two interpersonal-diversity entry points (interpersonal_diversity
+and compare_skin) share one per-sample network stage, _sample_networks,
+and one pair-stats table, _pair_stats.  Stage trace (reference line
+cites, bin/interpersonaldiversity.R; bin/CompareSkin.R in brackets):
+ 1. Q5 sample-network join (:18-36) [F4 composite key :92,123-129]
  2. length-normalize abundances — F6 (:41-42)
  3. anti-filter removal list — P8 (:49-53)
- 4. rarefaction depth = min per-sample total — A7 (:56-57)
- 5. seeded per-sample rarefaction — M1 (:60-76)
- 6. log10 edge weight — F7 (:78)
- 7. per-sample eigenvector centrality — G6, ALL samples jointly (:98-114)
+ 4. rarefaction depth — A7: min per-sample total (:56-57)
+    [5th percentile :55-59]
+ 5. seeded per-sample rarefaction — M1 (:60-76) [:63-117]
+ 6. log10 edge weight — F7 (:78) [:142]
+ 7. per-sample eigenvector centrality — G6, ALL samples jointly
+    (:98-114) [+ eigenvector and degree centralization :175-189]
  8. sample×node centrality matrix — R2 (:116-120)
- 9. Bray-Curtis sample distances — M2 (:122)
+ 9. Bray-Curtis sample distances — M2 (:122) [:292-302]
 10. intra/inter-class labeling — F8 (:130) + grouped means (:132-147)
+    [F5 dim recovery + intra/inter-patient :144-148]
+Stages 1-3 and 10 are each pipeline's own; 4-9 are _sample_networks.
 """
 
 from __future__ import annotations
@@ -35,6 +43,77 @@ from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.relational impo
     rarefaction_depth,
 )
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.stats import bray_curtis, rarefy
+
+
+def _sample_networks(
+    e: DataFrame, key: str, quantile: float | None, seed: int, eigen_iter: int
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
+    """Stages 4-9 for edges (key, phage, host, phage_abundance,
+    host_abundance, ...): rarefy each `key`'s phage abundances to the
+    A7 depth (the min per-key total, or its `quantile`), weight the
+    edges by log10 co-abundance, run eigenvector centrality on every
+    per-key subgraph jointly and take Bray-Curtis between keys.
+
+    Returns (e, rarefied, weighted, centrality, distances): `e` and
+    `rarefied` materialized, `weighted` and `centrality` lazy over
+    checkpoints, `distances` the lazy unlabelled (sample_a, sample_b,
+    bray_curtis) frame."""
+    # e feeds the abundances, the weighted join and the caller's labels:
+    # materialize it once, or each branch recomputes the whole upstream
+    # (the Q5 join)
+    e = _checkpoint(e)
+    # deterministic canonical abundance per (key, phage): the edge
+    # expansion repeats the phage row once per host, and dropDuplicates
+    # would keep whichever copy the shuffle ordered first — if copies
+    # ever disagree, the rarefaction draw would silently depend on
+    # partition layout (this made compare_skin drift 2.5e-05 between
+    # 12- and 32-core sessions)
+    ab = e.groupBy(key, "phage").agg(
+        F.max("phage_abundance").alias("phage_abundance")
+    # ab feeds BOTH the depth aggregate and the draw, and Catalyst does
+    # not dedupe the subtree — dedup it or the whole upstream edge
+    # expansion re-runs inside the broadcast depth branch (measured
+    # 1.32x on the m1_rarefaction twin of this exact shape); values
+    # are unchanged, the draw depends only on (seed, key, items)
+    ).localCheckpoint(eager=False)
+    # A7 depth stays IN the plan: the 1-row aggregate is broadcast into
+    # the rarefaction — no driver-side collect between the stages;
+    # rarefy truncates a percentile depth to a long
+    depth_df = rarefaction_depth(ab, key, "phage_abundance", quantile=quantile)
+    # rarefy (the Arrow hypergeometric draw), not rarefy_hash: the
+    # pipelines' frozen oracles pin the numpy draw REALIZATION.
+    # Materialized once: the weighted join, degree centralization and
+    # callers all read it
+    rarefied = _checkpoint(
+        rarefy(ab, key, "phage", "phage_abundance", depth=depth_df, seed=seed)
+    )
+    # F7: join the rarefied phage abundance back to the host side of
+    # each edge
+    weighted = (
+        e.select(key, "phage", "host", "host_abundance")
+        .join(rarefied, [key, "phage"])
+        .withColumn(
+            "weight",
+            edge_weight(F.col("phage_abundance") + 1, F.col("host_abundance") + 1),
+        )
+        .select(key, F.col("phage").alias("src"), F.col("host").alias("dst"), "weight")
+    )
+    centrality = eigenvector_centrality(
+        weighted, group_cols=[key], weight_col="weight", max_iter=eigen_iter
+    )
+    # R2+M2: bray_curtis consumes the long form directly — the pivot
+    # matrix is implicit (sparse), never materialized densely
+    distances = bray_curtis(centrality, key, "node", "centrality")
+    return e, rarefied, weighted, centrality, distances
+
+
+def _pair_stats(distances: DataFrame, by: list[str]) -> DataFrame:
+    """Mean, sd and count of the Bray-Curtis distances per `by` class."""
+    return distances.groupBy(*by).agg(
+        F.round(F.avg("bray_curtis"), 6).alias("mean_distance"),
+        F.round(F.stddev_pop("bray_curtis"), 6).alias("sd_distance"),
+        F.count(F.lit(1)).alias("n_pairs"),
+    )
 
 
 def interpersonal_diversity(
@@ -91,57 +170,10 @@ def interpersonal_diversity(
     # 3. anti-filter (P8)
     if removal_list is not None:
         e = anti_filter(e, removal_list, "phage")
-    # e feeds both the rarefaction and the weighted join: materialize it
-    # once, or each branch recomputes the whole upstream (the Q5 join)
-    e = _checkpoint(e)
 
-    # 4-5. rarefy per-sample phage abundances to the global min depth (A7+M1)
-    # deterministic canonical abundance per (sample, phage): the edge
-    # expansion repeats the phage row once per host, and dropDuplicates
-    # would keep whichever copy the shuffle ordered first — if copies
-    # ever disagree, the rarefaction draw would silently depend on
-    # partition layout
-    ab = e.groupBy("sample", "phage").agg(
-        F.max("phage_abundance").alias("phage_abundance")
-    # ab feeds BOTH the depth aggregate and the draw, and Catalyst does
-    # not dedupe the subtree — dedup it or the whole upstream edge
-    # expansion re-runs inside the broadcast depth branch (measured
-    # 1.32x on the m1_rarefaction twin of this exact shape); values
-    # are unchanged, the draw depends only on (seed, sample, items)
-    ).localCheckpoint(eager=False)
-    # A7 min depth stays IN the plan: the 1-row aggregate is broadcast
-    # into the rarefaction (relational.py:129 pattern) — one lazy plan,
-    # no driver-side collect between the stages.
-    depth_df = rarefaction_depth(ab, "sample", "phage_abundance")
-    # rarefy (the Arrow hypergeometric draw), not rarefy_hash: this
-    # pipeline's frozen oracle pins the numpy draw REALIZATION, and the
-    # Arrow route is the at-scale default anyway.
-    # materialized once: it feeds the weighted join and is returned
-    rarefied = _checkpoint(
-        rarefy(ab, "sample", "phage", "phage_abundance", depth=depth_df, seed=seed)
+    _, rarefied, _, centrality, distances = _sample_networks(
+        e, "sample", None, seed, eigen_iter
     )
-
-    # 6. weighted per-sample interaction graph (F7): join rarefied phage
-    # abundance back to the host side of each edge
-    weighted = (
-        e.select("sample", "phage", "host", "host_abundance")
-        .join(rarefied, ["sample", "phage"])
-        .withColumn(
-            "weight",
-            edge_weight(F.col("phage_abundance") + 1, F.col("host_abundance") + 1),
-        )
-        .select("sample", F.col("phage").alias("src"), F.col("host").alias("dst"), "weight")
-    )
-
-    # 7. eigenvector centrality for EVERY per-sample subgraph in one job (G6)
-    centrality = eigenvector_centrality(
-        weighted, group_cols=["sample"], weight_col="weight", max_iter=eigen_iter
-    )
-
-    # 8-9. Bray-Curtis over the sample×node centrality vectors (R2+M2):
-    # bray_curtis consumes the long form directly — the pivot matrix is
-    # implicit (sparse), never materialized densely.
-    distances = bray_curtis(centrality, "sample", "node", "centrality")
 
     # 10. class labeling + grouped stats (F8 + A2)
     by = []
@@ -159,17 +191,11 @@ def interpersonal_diversity(
         )
         by = ["pair_class"]
     distances = _checkpoint(distances)
-    stats = distances.groupBy(*by).agg(
-        F.round(F.avg("bray_curtis"), 6).alias("mean_distance"),
-        F.round(F.stddev_pop("bray_curtis"), 6).alias("sd_distance"),
-        F.count(F.lit(1)).alias("n_pairs"),
-    )
-
     return {
         "rarefied": rarefied,
         "centrality": centrality,
         "distances": distances,
-        "stats": stats,
+        "stats": _pair_stats(distances, by),
     }
 
 
@@ -184,52 +210,24 @@ def compare_skin(
     Input: (patient, location, timepoint, phage, host, phage_abundance,
     host_abundance) — the Q5 output with skin-site dims.
 
-    Stage trace (reference line cites):
-     1. F4 composite sample key patient__location__timepoint (:92,123-129)
-     2. A7 depth = 5th percentile of per-key phage totals (:55-59)
-     3. M1 seeded rarefaction per key (:63-117)
-     4. F7 log10 co-abundance weights (:142)
-     5. G6 per-key eigenvector centrality + Freeman centralization and
-        degree centralization (:175-189)
-     6. M2 Bray-Curtis between keys over centrality vectors (:292-302)
-     7. F5 dim recovery (broadcast skey→dims map, separator-safe) + F8
-        intra/inter-patient class (:144-148)
+    Stages (the module's trace, bracketed cites): F4 composite key
+    patient__location__timepoint, then _sample_networks with the A7
+    5th-percentile depth, eigenvector and degree centralization per key,
+    and F5 dim recovery (a broadcast skey→dims map, separator-safe) +
+    F8 intra/inter-patient class.
 
-    Returns dict of lazy frames: centrality, centralization, distances,
-    stats.
+    Returns a dict: `distances` materialized (`stats` and callers read
+    it), `centrality`, `centralization` and `stats` lazy over
+    checkpoints.
     """
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.kernels import centralization, degrees
 
-    e = site_edges.withColumn(
-        "skey", F.concat_ws("__", "patient", "location", "timepoint")
-    )
-    # deterministic canonical abundance per (skey, phage) — NOT
-    # dropDuplicates, which keeps a shuffle-order-dependent copy (this
-    # exact line made compare_skin's output drift 2.5e-05 between
-    # 12- and 32-core sessions)
-    ab = e.groupBy("skey", "phage").agg(
-        F.max("phage_abundance").alias("phage_abundance")
-    # dedup the subtree: ab feeds the depth percentile AND the draw
-    # (see pipeline_interpersonal_diversity); values unchanged
-    ).localCheckpoint(eager=False)
-    # A7 5th-percentile depth as an in-plan 1-row frame (no collect);
-    # rarefy truncates it to a long
-    depth_df = rarefaction_depth(ab, "skey", "phage_abundance", quantile=0.05)
-    # route pinned to rarefy, not the auto-routing facade — frozen-
-    # oracle realization stability (see pipeline_interpersonal_diversity)
-    rarefied = rarefy(ab, "skey", "phage", "phage_abundance", depth=depth_df, seed=seed)
-
-    weighted = (
-        e.select("skey", "phage", "host", "host_abundance")
-        .join(rarefied, ["skey", "phage"])
-        .withColumn(
-            "weight",
-            edge_weight(F.col("phage_abundance") + 1, F.col("host_abundance") + 1),
-        )
-        .select("skey", F.col("phage").alias("src"), F.col("host").alias("dst"), "weight")
-    )
-    cent = eigenvector_centrality(
-        weighted, group_cols=["skey"], weight_col="weight", max_iter=eigen_iter
+    e, _, weighted, cent, distances = _sample_networks(
+        site_edges.withColumn("skey", F.concat_ws("__", "patient", "location", "timepoint")),
+        "skey",
+        0.05,
+        seed,
+        eigen_iter,
     )
     eig_cz = centralization(cent, "centrality", group_cols=["skey"]).withColumn(
         "measure", F.lit("eigenvector")
@@ -240,9 +238,7 @@ def compare_skin(
     deg_cz = centralization(deg, "degree", group_cols=["skey"]).withColumn(
         "measure", F.lit("degree")
     )
-    centzn = eig_cz.unionByName(deg_cz)
 
-    distances = bray_curtis(cent, "skey", "node", "centrality")
     # Recover the dims by joining the distinct skey→(patient, location)
     # map back — NOT by re-splitting the composite key, which silently
     # mis-parses any dimension value containing the separator.
@@ -261,7 +257,7 @@ def compare_skin(
             F.col("location").alias("location_b"),
         )
     )
-    distances = (
+    distances = _checkpoint(
         distances.join(da, "sample_a")
         .join(db, "sample_b")
         .withColumn(
@@ -270,16 +266,11 @@ def compare_skin(
             .otherwise("inter_patient"),
         )
     )
-    stats = distances.groupBy("pair_class").agg(
-        F.round(F.avg("bray_curtis"), 6).alias("mean_distance"),
-        F.round(F.stddev_pop("bray_curtis"), 6).alias("sd_distance"),
-        F.count(F.lit(1)).alias("n_pairs"),
-    )
     return {
         "centrality": cent,
-        "centralization": centzn,
+        "centralization": eig_cz.unionByName(deg_cz),
         "distances": distances,
-        "stats": stats,
+        "stats": _pair_stats(distances, ["pair_class"]),
     }
 
 
@@ -318,10 +309,10 @@ def altered_diet(
     )
 
     # the edge frame feeds four consumers per fraction (sizes, roots,
-    # BFS, centrality) across len(fractions) subgraphs — materialize the
-    # caller's upstream plan once; each fraction's hash-filter subgraph
-    # then reads the checkpointed rows
-    diet_edges = diet_edges.localCheckpoint(eager=False)
+    # BFS, centrality) across len(fractions) subgraphs, in many jobs —
+    # materialize the caller's upstream plan once; each fraction's
+    # hash-filter subgraph then reads the checkpointed rows
+    diet_edges = _checkpoint(diet_edges)
     out = None
     for frac in fractions:
         sub = diet_edges if frac >= 1.0 else sample_edges(diet_edges, frac, seed)
@@ -378,6 +369,8 @@ def compare_twins(
 
     Input: (sample, src, dst, weight). All three kernels run grouped —
     every per-sample subgraph in one job each, joined on (sample, node).
+    The input (read by all three kernels) and `importance` (read by
+    `summary` and callers) are materialized once each.
     """
     from hannigan_conjunctisviribus_ploscompbio_2017_spark.operators.kernels import (
         alpha_centrality,
@@ -386,6 +379,7 @@ def compare_twins(
         symmetrize,
     )
 
+    sample_edges = _checkpoint(sample_edges)
     pr = pagerank(
         sample_edges, group_cols=["sample"], weight_col="weight", max_iter=pr_iter
     )
@@ -411,7 +405,7 @@ def compare_twins(
         group_cols=["sample"],
         node_col="src",
     )
-    merged = (
+    merged = _checkpoint(
         pr.join(ac, ["sample", "node"], "full")
         .join(en, ["sample", "node"], "full")
     )

@@ -201,7 +201,3 @@ def load_table(spark, sf_dir: str, name: str):
             else:
                 spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_all(spark, sf_dir: str) -> dict:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}

@@ -1,5 +1,8 @@
 """Composed-lifecycle pipelines (SURVEY §3) on closed-form fixtures."""
 
+import ast
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from hannigan_conjunctisviribus_ploscompbio_2017_spark.plans import pipelines as P
@@ -216,12 +219,37 @@ def test_pretrain_pack_spancut_cuts_before_packing(spark):
 
 
 def test_interpersonal_diversity_distances_materialized(spark):
-    """`distances` comes back materialized: collecting `stats` and then
-    `distances` re-runs no centrality or Bray-Curtis stage (at most 2
-    jobs each: an exchange and a result)."""
+    """The table that both a pipeline's summary and its callers read
+    comes back materialized: collecting the summary and then that table
+    re-runs no kernel, rarefaction or Bray-Curtis stage (at most 2 jobs
+    each: an exchange and a result).  Covers `distances` of both
+    diversity pipelines and compare_twins' `importance`."""
     cls = spark.createDataFrame(
         [("A1", "grpA"), ("A2", "grpA"), ("B1", "grpB")], "sample string, cls string"
     )
-    out = P.interpersonal_diversity(_q5_edges(spark), sample_class=cls, eigen_iter=4)
-    assert count_jobs(spark, out["stats"].collect) <= 2
-    assert count_jobs(spark, out["distances"].collect) <= 2
+    twins = spark.createDataFrame(
+        [(s, p, h, w) for s in ("tw1", "tw2")
+         for p, h, w in [("p1", "h1", 2.0), ("p1", "h2", 1.0), ("p2", "h1", 4.0)]],
+        "sample string, src string, dst string, weight double",
+    )
+    cases = [
+        (P.interpersonal_diversity(_q5_edges(spark), sample_class=cls, eigen_iter=4),
+         "stats", "distances"),
+        (P.compare_skin(_site_edges(spark), eigen_iter=4), "stats", "distances"),
+        (P.compare_twins(twins, pr_iter=6), "summary", "importance"),
+    ]
+    for out, summary, table in cases:
+        assert count_jobs(spark, out[summary].collect) <= 2, summary
+        assert count_jobs(spark, out[table].collect) <= 2, table
+
+
+def test_one_call_site_per_diversity_stage():
+    """Spark-free: the rarefy → Bray-Curtis chain is written once in
+    plans/pipelines.py (in _sample_networks), not once per pipeline."""
+    tree = ast.parse(Path(P.__file__).read_text())
+    calls = [
+        n.func.id for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+    ]
+    for name in ("rarefy", "rarefaction_depth", "bray_curtis"):
+        assert calls.count(name) == 1, name
